@@ -65,24 +65,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // lazy keyed point reads keep exact OR-of-eq parquet pushdown for
-      // their sorted 512-key IN chunks, and their explicit leaf-file
-      // lists stat serially instead of paying a listing job per read
-      // (see KeyedReads/Tables.session)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        sources.KeyedReads.PruneChunk.toString)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sources.KeyedReads.ListSerialThreshold.toString)
-      // one wave per first take/limit attempt — kills the 4-job
-      // executeTake ramp under bounded key collects (see Tables.session)
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .getOrCreate()
+    val spark = Tables.session("graft-bench", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // reference-style e2e throughput scenarios (stderr lines)

@@ -74,7 +74,7 @@ object Maintain {
     val spark = Tables.session("graft-maintain",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    args(0) match {
+    if (!storeVerb(spark, args)) args(0) match {
       case "compact" =>
         if (args.length < 3) usage()
         val target = args(2).toLong
@@ -114,26 +114,12 @@ object Maintain {
         println(s"[maintain] deleted ${r.rowsDeleted} rows: " +
           s"${r.filesRewritten} files rewritten, ${r.filesUntouched} untouched")
       case "annindex" =>
-        // annindex compact   <indexRoot> <targetBytes>
-        // annindex recluster <indexRoot>
         if (args.length < 3) usage()
         args(1) match {
           case "compact" if args.length >= 4 =>
             val r = pipeline.AnnIndex.compact(spark, args(2), args(3).toLong)
             println(s"[maintain] ann index compacted ${r.groupsCompacted} groups: " +
               s"${r.filesRemoved} files -> ${r.filesCreated}")
-          case "recluster" =>
-            pipeline.AnnIndex.recluster(spark, args(2))
-            println(s"[maintain] ann index re-clustered at ${args(2)}")
-          case "minorcompact" =>
-            // annindex minorcompact <indexRoot> — fold only the override
-            // tier (I/O ∝ override bytes; see AnnIndex.compactOverrides)
-            pipeline.AnnIndex.compactOverrides(spark, args(2))
-            println(s"[maintain] ann index override tier folded at ${args(2)}")
-          case "autocompact" if args.length >= 4 =>
-            pipeline.AnnIndex.setAutoCompact(spark, args(2), args(3).toInt)
-            println(s"[maintain] ann index auto-compact at ${args(2)}: " +
-              s"maxFiles=${args(3)}")
           case "rebuildids" =>
             pipeline.AnnIndex.rebuildIds(spark, args(2))
             println(s"[maintain] ann index id census rebuilt at ${args(2)}")
@@ -206,23 +192,8 @@ object Maintain {
           case _ => usage()
         }
       case "ndstore" =>
-        // ndstore create    <corpusDir> <idCol> <textCol> <storeDir>
-        // ndstore dedup     <batchDir>  <idCol> <textCol> <storeDir> <outDir> [advance]
-        // ndstore recluster <storeDir>
         if (args.length < 3) usage()
         args(1) match {
-          case "recluster" =>
-            pipeline.Dedup.NearDupStore.recluster(spark, args(2))
-            println(s"[maintain] near-dup store re-clustered at ${args(2)}")
-          case "minorcompact" =>
-            // ndstore minorcompact <storeDir> — fold only the staged
-            // override tier (I/O ∝ override bytes)
-            pipeline.Dedup.NearDupStore.compactOverrides(spark, args(2))
-            println(s"[maintain] near-dup store override tier folded at ${args(2)}")
-          case "autocompact" if args.length >= 4 =>
-            pipeline.Dedup.NearDupStore.setAutoCompact(spark, args(2), args(3).toInt)
-            println(s"[maintain] near-dup store auto-compact at ${args(2)}: " +
-              s"maxFiles=${args(3)}")
           case "forget" if args.length >= 4 =>
             val rs = pipeline.Dedup.NearDupStore.forget(spark, args(2),
               typedKeys(spark, s"${args(2)}/sigs", "id", args(3)))
@@ -249,25 +220,8 @@ object Maintain {
             System.err.println(s"[maintain] unknown ndstore command: $other"); usage()
         }
       case "lexindex" =>
-        // lexindex create  <corpusDir> <idCol> <textCol> <root>
-        // lexindex append  <batchDir> <idCol> <textCol> <root> <tag>
-        // lexindex search  <root> <queriesDir> <queryIdCol> <termCol> <k> <outDir>
-        // lexindex compact <root>
-        // lexindex forget  <root> <key>[,key...]
         if (args.length < 3) usage()
         args(1) match {
-          case "compact" =>
-            pipeline.LexIndex.compact(spark, args(2))
-            println(s"[maintain] lex index compacted at ${args(2)}")
-          case "minorcompact" =>
-            // lexindex minorcompact <root> — fold only the override
-            // tier (I/O ∝ override bytes; see LexIndex.compactOverrides)
-            pipeline.LexIndex.compactOverrides(spark, args(2))
-            println(s"[maintain] lex index override tier folded at ${args(2)}")
-          case "autocompact" if args.length >= 4 =>
-            pipeline.LexIndex.setAutoCompact(spark, args(2), args(3).toInt)
-            println(s"[maintain] lex index auto-compact at ${args(2)}: " +
-              s"maxFiles=${args(3)}")
           case "rebuildids" =>
             pipeline.LexIndex.rebuildSidecars(spark, args(2))
             println(s"[maintain] lex index sidecars rebuilt at ${args(2)}")
@@ -294,23 +248,8 @@ object Maintain {
             System.err.println(s"[maintain] unknown lexindex command: $other"); usage()
         }
       case "linecensus" =>
-        // linecensus create  <corpusDir> <idCol> <textCol> <censusDir> [minLineChars]
-        // linecensus dedup   <batchDir>  <idCol> <textCol> <censusDir> <outDir> [advance]
-        // linecensus compact <censusDir>
         if (args.length < 3) usage()
         args(1) match {
-          case "compact" =>
-            pipeline.Web.compactLineCensus(spark, args(2))
-            println(s"[maintain] line census compacted at ${args(2)}")
-          case "minorcompact" =>
-            // linecensus minorcompact <censusDir> — fold only the
-            // staged override deltas (I/O ∝ override bytes)
-            pipeline.Web.minorCompactLineCensus(spark, args(2))
-            println(s"[maintain] line census override tier folded at ${args(2)}")
-          case "autocompact" if args.length >= 4 =>
-            pipeline.Web.setLineCensusAutoCompact(spark, args(2), args(3).toInt)
-            println(s"[maintain] line census auto-compact at ${args(2)}: " +
-              s"maxFiles=${args(3)}")
           case _ if args.length < 6 => usage()
           case "create" =>
             pipeline.Web.createLineCensus(spark.read.parquet(args(2)),
@@ -333,16 +272,8 @@ object Maintain {
             System.err.println(s"[maintain] unknown linecensus command: $other"); usage()
         }
       case "linkgraph" =>
-        // linkgraph create   <edgesDir> <srcCol> <dstCol> <root> [iters] [dampingPct]
-        // linkgraph append   <edgesDir> <srcCol> <dstCol> <root> <tag>
-        // linkgraph rollback <root> <tag>
-        // linkgraph ranks    <root> <outDir>
-        // linkgraph compact  <root>
         if (args.length < 3) usage()
         args(1) match {
-          case "compact" =>
-            pipeline.LinkGraph.compact(spark, args(2))
-            println(s"[maintain] link graph compacted at ${args(2)}")
           case "components" =>
             // (re)build the maintained component labels from the
             // store's current edges; epochs maintain them afterwards
@@ -366,11 +297,6 @@ object Maintain {
               .write.mode("errorifexists").parquet(args(4))
             val n = spark.read.parquet(args(4)).count()
             println(s"[maintain] $n trust ranks written to ${args(4)}")
-          case "minorcompact" =>
-            // linkgraph minorcompact <root> — fold only the override
-            // tier (I/O ∝ override bytes; see LinkGraph.compactOverrides)
-            pipeline.LinkGraph.compactOverrides(spark, args(2))
-            println(s"[maintain] link graph override tier folded at ${args(2)}")
           case "trustregister" if args.length >= 4 =>
             // linkgraph trustregister <root> <seedsDir> — seal a seed
             // set for EXACT maintained TrustRank; epochs/forgets absorb
@@ -385,12 +311,6 @@ object Maintain {
               .write.mode("errorifexists").parquet(args(4))
             val n = spark.read.parquet(args(4)).count()
             println(s"[maintain] $n maintained trust ranks written to ${args(4)}")
-          case "autocompact" if args.length >= 4 =>
-            // pin the self-compact threshold (parquet files per table
-            // dir; 0 disables) — epochs/forgets fold past it
-            pipeline.LinkGraph.setAutoCompact(spark, args(2), args(3).toInt)
-            println(s"[maintain] link graph auto-compact at ${args(2)}: " +
-              s"maxFiles=${args(3)}")
           case "rollback" if args.length >= 4 =>
             pipeline.LinkGraph.rollbackEpoch(spark, args(2), args(3))
             println(s"[maintain] link graph epoch ${args(3)} rolled back at ${args(2)}")
@@ -432,31 +352,83 @@ object Maintain {
     spark.stop()
   }
 
+  /** The persisted stores' generic fold verbs, one registry: CLI store
+    * name → (its MAJOR-fold verb, its tables). Every store also takes
+    * `minorcompact <root>` (override-tier-only fold, I/O ∝ override
+    * bytes) and `autocompact <root> <maxFiles>` (pin the self-compact
+    * threshold; 0 = off) — see [[sources.StoreTables]].
+    */
+  private val stores: Seq[(String, String,
+      (org.apache.spark.sql.SparkSession, String) => sources.StoreTables.Store)] = Seq(
+    ("ndstore", "recluster", pipeline.Dedup.NearDupStore.tables),
+    ("annindex", "recluster", pipeline.AnnIndex.tables),
+    ("lexindex", "compact", pipeline.LexIndex.tables),
+    ("linecensus", "compact", (_, dir) => pipeline.Web.lineCensusTables(dir)),
+    ("linkgraph", "compact", pipeline.LinkGraph.tables))
+
+  /** Run a store-generic verb when `args` name one; false otherwise. */
+  private def storeVerb(spark: org.apache.spark.sql.SparkSession,
+                        args: Array[String]): Boolean =
+    stores.find(_._1 == args(0)).filter(_ => args.length >= 3).exists {
+      case (name, major, tables) =>
+        val root = args(2)
+        args(1) match {
+          case `major` =>
+            sources.StoreTables.recluster(spark, tables(spark, root))
+            println(s"[maintain] $name major fold ($major) done at $root"); true
+          case "minorcompact" =>
+            sources.StoreTables.foldOverrides(spark, tables(spark, root))
+            println(s"[maintain] $name override tier folded at $root"); true
+          case "autocompact" if args.length >= 4 =>
+            sources.AutoCompact.setPolicy(spark, root, args(3).toInt)
+            println(s"[maintain] $name auto-compact at $root: maxFiles=${args(3)}"); true
+          case _ => false
+        }
+    }
+
+  private val commands: Seq[String] = Seq(
+    "compact <dir> <targetBytes> [smallBytes]",
+    "stats <dir> <col>[,col...]",
+    "vacuum <versionedRoot> [keep] [minAgeMs]",
+    "delete <dir> <keyCol> <key>[,key...]",
+    "delete <dir> <keyCol> @<keyfile>   # one key per line",
+    "diff <versionedRoot> <vA> <vB> <pk>[,pk...]",
+    "ndstore create <corpusDir> <idCol> <textCol> <storeDir>",
+    "ndstore dedup <batchDir> <idCol> <textCol> <storeDir> <outDir> [advance]",
+    "ndstore forget <storeDir> <key>[,key...]",
+    "annindex compact <indexRoot> <targetBytes>",
+    "annindex forget <indexRoot> <key>[,key...]",
+    "annindex retrain <versionedRoot> <corpusDir> <idCol> <vecCol> <kIvf>",
+    "annindex rebuildids <indexRoot>",
+    "annindex tune <indexRoot> <corpusDir> <queriesDir> <idCol> <vecCol> <k> " +
+      "[nProbes] [--apply [recallTarget]]",
+    "annindex pin <indexRoot> <nProbe> [kCand]",
+    "annindex stats <indexRoot>",
+    "linecensus create <corpusDir> <idCol> <textCol> <censusDir> [minLineChars]",
+    "linecensus dedup <batchDir> <idCol> <textCol> <censusDir> <outDir> [advance]",
+    "lexindex create <corpusDir> <idCol> <textCol> <root>",
+    "lexindex append <batchDir> <idCol> <textCol> <root> <tag>",
+    "lexindex search <root> <queriesDir> <queryIdCol> <termCol> <k> <outDir>",
+    "lexindex rebuildids <root>",
+    "lexindex forget <root> <key>[,key...]",
+    "linkgraph create <edgesDir> <srcCol> <dstCol> <root> [iters] [dampingPct]",
+    "linkgraph append <edgesDir> <srcCol> <dstCol> <root> <tag>",
+    "linkgraph ranks <root> <outDir>",
+    "linkgraph forget <root> <key>[,key...]",
+    "linkgraph rollback <root> <tag>",
+    "linkgraph components <root>",
+    "linkgraph hits <root> <outDir> [iters]",
+    "linkgraph trustrank <root> <seedsDir> <outDir> [iters]",
+    "linkgraph trustregister <root> <seedsDir>",
+    "linkgraph trustranks <root> <digest> <outDir>") ++
+    stores.flatMap { case (name, major, _) => Seq(
+      s"$name $major <root>",
+      s"$name minorcompact <root>",
+      s"$name autocompact <root> <maxFiles>") }
+
   private def usage(): Nothing = {
-    System.err.println(
-      """usage: graft.Maintain compact <dir> <targetBytes> [smallBytes]
-        |       graft.Maintain stats <dir> <col>[,col...]
-        |       graft.Maintain vacuum <versionedRoot> [keep] [minAgeMs]
-        |       graft.Maintain delete <dir> <keyCol> <key>[,key...]
-        |       graft.Maintain delete <dir> <keyCol> @<keyfile>   # one key per line
-        |       graft.Maintain diff <versionedRoot> <vA> <vB> <pk>[,pk...]
-        |       graft.Maintain ndstore create <corpusDir> <idCol> <textCol> <storeDir>
-        |       graft.Maintain ndstore dedup <batchDir> <idCol> <textCol> <storeDir> <outDir> [advance]
-        |       graft.Maintain ndstore recluster <storeDir>
-        |       graft.Maintain ndstore forget <storeDir> <key>[,key...]
-        |       graft.Maintain annindex compact <indexRoot> <targetBytes>
-        |       graft.Maintain annindex recluster <indexRoot>
-        |       graft.Maintain annindex forget <indexRoot> <key>[,key...]
-        |       graft.Maintain annindex retrain <versionedRoot> <corpusDir> <idCol> <vecCol> <kIvf>
-        |       graft.Maintain annindex stats <indexRoot>
-        |       graft.Maintain linecensus create <corpusDir> <idCol> <textCol> <censusDir> [minLineChars]
-        |       graft.Maintain linecensus dedup <batchDir> <idCol> <textCol> <censusDir> <outDir> [advance]
-        |       graft.Maintain linecensus compact <censusDir>
-        |       graft.Maintain lexindex create <corpusDir> <idCol> <textCol> <root>
-        |       graft.Maintain lexindex append <batchDir> <idCol> <textCol> <root> <tag>
-        |       graft.Maintain lexindex search <root> <queriesDir> <queryIdCol> <termCol> <k> <outDir>
-        |       graft.Maintain lexindex compact <root>
-        |       graft.Maintain lexindex forget <root> <key>[,key...]""".stripMargin)
+    System.err.println(commands.map("graft.Maintain " + _)
+      .mkString("usage: ", "\n       ", ""))
     sys.exit(2)
   }
 

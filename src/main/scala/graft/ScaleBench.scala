@@ -465,7 +465,7 @@ object ScaleBench {
     },
     // the lex twin of graph_fold_io: each run appends a fresh
     // fixed-size epoch (auto-compact disabled so the fold is invoked —
-    // and metered — explicitly), then meters compactOverrides. A
+    // and metered — explicitly), then meters the minor fold. A
     // full-rewrite fold would read the whole postings table (≈10×
     // bytes at 10×); the minor fold must read only the override tier,
     // so bytes stay ~flat — fold I/O ∝ override bytes on the lexical
@@ -476,7 +476,7 @@ object ScaleBench {
           .resolve("ix").toString
         pipeline.LexIndex.create(Tables.load(s, dir, "documents"),
           "doc_id", "text", p, rowsPerFile = 65536L)
-        pipeline.LexIndex.setAutoCompact(s, p, 0)
+        sources.AutoCompact.setPolicy(s, p, 0)
         p
       })
       val k = lexFoldRuns.updateWith(dir)(n => Some(n.getOrElse(0) + 1)).get
@@ -488,7 +488,7 @@ object ScaleBench {
           .withColumn("doc_id", col("doc_id") + lit((30L + k) * Off)))
       pipeline.LexIndex.appendEpoch(delta, "doc_id", "text", root, s"fold$k")
       val (n, bytes) = withBytesRead(s) {
-        pipeline.LexIndex.compactOverrides(s, root); 1L
+        sources.StoreTables.foldOverrides(s, pipeline.LexIndex.tables(s, root)); 1L
       }
       lexFoldBytes(dir) = lexFoldBytes.get(dir).fold(bytes)(math.min(_, bytes))
       n
@@ -686,7 +686,7 @@ object ScaleBench {
     // the MINOR-fold I/O claim, measured directly: each run appends a
     // fresh fixed-size epoch (auto-compact disabled on this store so
     // the fold is invoked — and measured — explicitly), then times and
-    // meters compactOverrides. A full-rewrite fold would read the
+    // meters the minor fold. A full-rewrite fold would read the
     // whole store (≈10× bytes at 10×); the minor fold must read only
     // the override tier, so bytes stay ~flat — this is the probe that
     // pins fold I/O ∝ override bytes, the LSM discipline the
@@ -703,7 +703,7 @@ object ScaleBench {
           .unionAll(docs.select(col("doc_id").as("src"), blockDst(13, 11).as("dst")))
         pipeline.LinkGraph.create(edges, "src", "dst", p, iters = 3,
           rowsPerFile = 4096L)
-        pipeline.LinkGraph.setAutoCompact(s, p, 0)
+        sources.AutoCompact.setPolicy(s, p, 0)
         p
       })
       val k = graphFoldRuns.updateWith(dir)(n => Some(n.getOrElse(0) + 1)).get
@@ -712,7 +712,7 @@ object ScaleBench {
           .select(col("doc_id").as("src"), blockDst(17, 5L + k).as("dst")))
       pipeline.LinkGraph.appendEpoch(epoch, "src", "dst", root, s"fold$k")
       val (n, bytes) = withBytesRead(s) {
-        pipeline.LinkGraph.compactOverrides(s, root); 1L
+        sources.StoreTables.foldOverrides(s, pipeline.LinkGraph.tables(s, root)); 1L
       }
       graphFoldBytes(dir) = graphFoldBytes.get(dir).fold(bytes)(math.min(_, bytes))
       n

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,24 +8,9 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // lazy keyed point reads keep exact OR-of-eq parquet pushdown for
-      // their sorted 512-key IN chunks, and their explicit leaf-file
-      // lists stat serially instead of paying a listing job per read
-      // (see KeyedReads/Tables.session)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        sources.KeyedReads.PruneChunk.toString)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sources.KeyedReads.ListSerialThreshold.toString)
-      // one wave per first take/limit attempt — kills the 4-job
-      // executeTake ramp under bounded key collects (see Tables.session)
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .getOrCreate()
+    val spark = Tables.session("graft-verify", cpus.toInt)
+    // dumps carry micros timestamps, not Spark's INT96 default
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

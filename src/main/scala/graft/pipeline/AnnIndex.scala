@@ -33,54 +33,27 @@ object AnnIndex {
     def indexPath: String = s"$root/index"
   }
 
-  val DefaultRowsPerFile = 4000000L
+  val DefaultRowsPerFile: Long = graft.sources.StoreTables.DefaultRowsPerFile
 
   private def annMetaPath(root: String) = root + "/_ann.json"
 
-  /** The index frame's file-granularity policy (the [[LinkGraph.Meta]]
-    * `rowsPerFile` discipline): every index write splits output at
-    * this many rows per file under the bucket clustering, so a probed
-    * bucket's swept-in bytes are bounded by the granularity instead of
-    * growing with the corpus — session-width sharding alone is the
-    * mechanism that grew the graph store's probe bytes 4.5× at 10×
-    * before its policy existed. Pinned in `_ann.json` at build time;
-    * pre-policy stores keep the default.
+  /** The index frame's file-granularity policy, pinned in `_ann.json`
+    * at build time ([[graft.sources.StoreTables.rowsPerFileOf]]).
     */
-  def rowsPerFileOf(spark: SparkSession, root: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(annMetaPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return DefaultRowsPerFile
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    """"rowsPerFile":(\d+)""".r.findFirstMatchIn(body)
-      .map(_.group(1).toLong).getOrElse(DefaultRowsPerFile)
-  }
+  def rowsPerFileOf(spark: SparkSession, root: String): Long =
+    graft.sources.StoreTables.rowsPerFileOf(spark, annMetaPath(root))
 
-  private def writeAnnMeta(spark: SparkSession, root: String,
-                           body: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(annMetaPath(root))
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.mkdirs(dst.getParent) || fs.exists(dst.getParent),
-      s"cannot create ${dst.getParent}")
-    val tmp = new org.apache.hadoop.fs.Path(dst.getParent, s".tmp-${dst.getName}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"atomic write failed for ${annMetaPath(root)}")
-  }
-
-  private def annMetaField(spark: SparkSession, root: String,
-                           field: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(annMetaPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    ("\"" + field + "\":(\\d+)").r.findFirstMatchIn(body)
-      .map(_.group(1).toLong)
+  /** The index's store tables ([[graft.sources.StoreTables]]): the
+    * bucket-clustered code frame and the id census, both folded at the
+    * pinned granularity. Rows are delta-unique across tags (the census
+    * anti-join), so both resolve by identity.
+    */
+  def tables(spark: SparkSession, root: String): graft.sources.StoreTables.Store = {
+    val g = rowsPerFileOf(spark, root)
+    graft.sources.StoreTables.Store(root, Seq(
+      graft.sources.StoreTables.Table(s"$root/index", "bucket",
+        rowsPerFile = g, shardRows = g),
+      graft.sources.IdCensus.table(root, g)))
   }
 
   /** Pin the tuner's chosen serve-time operating point into the index
@@ -98,17 +71,19 @@ object AnnIndex {
     kCand.foreach(kc => require(kc >= 1, s"kCand must be >= 1, got $kc"))
     val g = rowsPerFileOf(spark, root)
     val kc = kCand.map(v => s""","tunedKCand":$v""").getOrElse("")
-    writeAnnMeta(spark, root,
+    graft.sources.StoreTables.writeSmall(spark, annMetaPath(root),
       s"""{"rowsPerFile":$g,"tunedNProbe":$nProbe$kc}""")
   }
 
   /** The pinned serve-time probe width, when [[applyTuning]] ran. */
   def tunedNProbe(spark: SparkSession, root: String): Option[Int] =
-    annMetaField(spark, root, "tunedNProbe").map(_.toInt)
+    graft.sources.StoreTables.metaField(spark, annMetaPath(root), "tunedNProbe")
+      .map(_.toInt)
 
   /** The pinned rerank over-fetch, when [[applyTuning]] pinned one. */
   def tunedKCand(spark: SparkSession, root: String): Option[Int] =
-    annMetaField(spark, root, "tunedKCand").map(_.toInt)
+    graft.sources.StoreTables.metaField(spark, annMetaPath(root), "tunedKCand")
+      .map(_.toInt)
 
   private def requireTuned(spark: SparkSession, root: String): Int =
     tunedNProbe(spark, root).getOrElse(throw new IllegalArgumentException(
@@ -146,7 +121,8 @@ object AnnIndex {
     val pq = Pq.train(trainSet, idCol, vecCol, m, ksub, iters)
     Ivf.save(ivf, spark, s"$root/ivf_model")
     Pq.save(pq, spark, s"$root/pq_model")
-    writeAnnMeta(spark, root, s"""{"rowsPerFile":$rowsPerFile}""")
+    graft.sources.StoreTables.writeSmall(spark, annMetaPath(root),
+      s"""{"rowsPerFile":$rowsPerFile}""")
     encoded(corpus, idCol, vecCol, ivf, pq)
       .repartition(col("bucket")).sortWithinPartitions("bucket")
       .write.option("maxRecordsPerFile", rowsPerFile)
@@ -258,10 +234,7 @@ object AnnIndex {
     val spark = rows.sparkSession
     // complete any interrupted auto-compact BEFORE retiring (the
     // half-folded-tables hazard — see graft.sources.AutoCompact)
-    graft.sources.AutoCompact.recover(spark, handle.root,
-      Seq(handle.indexPath, graft.sources.IdCensus.rowsDir(handle.root))) {
-      foldAll(spark, handle.root)
-    }
+    graft.sources.StoreTables.recover(spark, tables(spark, handle.root))
     graft.sources.EpochFiles.retire(spark, handle.indexPath, tag)
     graft.sources.IdCensus.retireEpoch(spark, handle.root, tag)
     graft.sources.IdCensus.ensureFrom(spark, handle.root, indexIds(spark, handle.root))
@@ -298,65 +271,10 @@ object AnnIndex {
       // marker, so a tag loses ALL its names in a table or none); a
       // replay after the fold is a clean no-op because the census
       // still knows every id.
-      graft.sources.AutoCompact.maybe(spark, handle.root,
-        Seq(handle.indexPath, graft.sources.IdCensus.rowsDir(handle.root))) {
-        foldAll(spark, handle.root)
-      }
+      graft.sources.StoreTables.autoCompact(spark, tables(spark, handle.root))
       n
     } finally { fresh.unpersist(); () }
   }
-
-  /** The auto-compact fold — the MINOR tier: override files only,
-    * I/O ∝ override bytes (see [[compactOverrides]]).
-    */
-  private def foldAll(spark: SparkSession, root: String): Unit =
-    compactOverrides(spark, root)
-
-  /** MINOR fold — the LSM memtable-merge tier auto-compact runs (the
-    * [[LinkGraph.compactOverrides]] discipline): only the accumulated
-    * per-tag OVERRIDE files of the index frame (and the id census)
-    * merge into bucket-clustered, granule-respecting runs, so fold I/O
-    * is ∝ the override bytes — never the store — and lifetime fold I/O
-    * stays linear where a full-rewrite-per-trigger is quadratic. Rows
-    * are delta-unique across tags (the census anti-join), so both
-    * folds resolve by identity (pure re-shard). What a minor fold does
-    * NOT restore: global bucket clustering across base + folded runs —
-    * each folded run is bucket-contiguous within itself, so a probed
-    * bucket opens at most one extra run per fold; run a major
-    * [[recluster]] at operator cadence to re-merge. Tag-name
-    * discipline holds unchanged ([[graft.sources.TargetedDelete
-    * .foldFiles]]'s roll-forward marker makes each subset swap
-    * all-or-nothing per table).
-    */
-  def compactOverrides(spark: SparkSession, root: String): Unit = {
-    val dir = s"$root/index"
-    val g = rowsPerFileOf(spark, root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tagged = graft.sources.ParquetSource.listParquetFiles(dir, conf)
-      .filter(f => graft.sources.EpochFiles.isTagged(
-        new org.apache.hadoop.fs.Path(f).getName))
-    val ran = graft.sources.TargetedDelete.foldFiles(spark, dir, tagged, identity,
-      (df, staging) => {
-        val shards = math.max(1L, math.min(200L,
-          (df.count() - 1L) / math.max(1L, g) + 1L)).toInt
-        df.repartitionByRange(shards, col("bucket"))
-          .sortWithinPartitions("bucket")
-          .write.option("maxRecordsPerFile", g)
-          .mode("overwrite").parquet(staging)
-      })
-    if (ran) {
-      graft.sources.FileStatsIndex.update(spark, dir, Seq("bucket"))
-      spark.catalog.refreshByPath(dir)
-    }
-    if (graft.sources.IdCensus.exists(spark, root))
-      graft.sources.IdCensus.compactOverrides(spark, root, g)
-  }
-
-  /** Pin the index's auto-compact threshold (parquet files in the
-    * index frame or census dir; 0 disables) — epochs fold past it.
-    */
-  def setAutoCompact(spark: SparkSession, root: String, maxFiles: Int): Unit =
-    graft.sources.AutoCompact.setPolicy(spark, root, maxFiles)
 
   /** Defragment an append-heavy index frame: every epoch appends a few
     * small files, and after thousands the probe-join's scan cost is
@@ -534,20 +452,11 @@ object AnnIndex {
   def rebuildIds(spark: SparkSession, root: String): Unit =
     graft.sources.IdCensus.create(spark, root, indexIds(spark, root))
 
-  def recluster(spark: SparkSession, root: String): Unit = {
-    val dir = s"$root/index"
-    spark.catalog.refreshByPath(dir)
-    // the fold honors the granularity policy: without maxRecordsPerFile
-    // a session-width range shuffle writes files whose bucket span
-    // grows with the corpus, and every probed bucket sweeps that
-    // growth in
-    graft.streaming.SwapStore.swapWrite(
-      spark.read.parquet(dir)
-        .repartitionByRange(col("bucket")).sortWithinPartitions("bucket"),
-      dir, maxRecordsPerFile = rowsPerFileOf(spark, root))
-    graft.sources.FileStatsIndex.buildAndSave(spark, dir, Seq("bucket"))
-    spark.catalog.refreshByPath(dir)
-  }
+  /** MAJOR fold: restore global bucket clustering (and the census's id
+    * clustering) after ingest epochs — see [[graft.sources.StoreTables]].
+    */
+  def recluster(spark: SparkSession, root: String): Unit =
+    graft.sources.StoreTables.recluster(spark, tables(spark, root))
 
   private def encoded(rows: DataFrame, idCol: String, vecCol: String,
                       ivf: Ivf.Model, pq: Pq.Model): DataFrame =

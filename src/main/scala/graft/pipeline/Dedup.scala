@@ -454,14 +454,8 @@ object Dedup {
       * knob existed.
       */
     private[pipeline] def rowsPerFileOf(spark: org.apache.spark.sql.SparkSession,
-                                        path: String): Long = {
-      val fs = metaPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(metaPath(path))) return 4000000L
-      val in = fs.open(metaPath(path))
-      val body = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-      Option(node.get("rowsPerFile")).map(_.asLong()).getOrElse(4000000L)
-    }
+                                        path: String): Long =
+      graft.sources.StoreTables.rowsPerFileOf(spark, metaPath(path).toString)
 
     /** Band a new batch with the INDEX's layout and append its rows. */
     def append(df: DataFrame, idCol: String, signatureCol: String, path: String,
@@ -551,23 +545,22 @@ object Dedup {
     private def sub(path: String, name: String) =
       new org.apache.hadoop.fs.Path(path, name).toString
 
-    // _stats maintenance for the id-clustered side tables: the file-
-    // level half of the probe's two-layer pruning (KeyedReads) — a
-    // probe then OPENS only candidate-touched files instead of paying
-    // a footer read per store file. update() stats fresh files only
-    // and drops entries for files a rewrite removed; the artifact is
-    // advisory (unknown files always kept), so every path below stays
-    // correct even if a crash lands between a table write and its
-    // stats advance.
-    private def statsUpdate(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, key: String): Unit = {
-      graft.sources.FileStatsIndex.update(spark, dir, Seq(key))
-      ()
-    }
-    private def statsRebuild(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, key: String): Unit = {
-      graft.sources.FileStatsIndex.buildAndSave(spark, dir, Seq(key))
-      ()
+    /** The store's three tables ([[graft.sources.StoreTables]]), each
+      * key-clustered at the store's file granularity with a `_stats`
+      * artifact — the file-level half of the probe's two-layer pruning
+      * (a probe OPENS only candidate-touched files). Rows are
+      * append-only across tags (a survivor advances once), so every
+      * table resolves by identity.
+      */
+    def tables(spark: org.apache.spark.sql.SparkSession,
+               path: String): graft.sources.StoreTables.Store = {
+      val g = BandIndex.rowsPerFileOf(spark, sub(path, "bands"))
+      def table(dir: String, key: String) =
+        graft.sources.StoreTables.Table(dir, key, rowsPerFile = g, shardRows = g)
+      graft.sources.StoreTables.Store(path, Seq(
+        table(sub(path, "bands") + "/rows", "bucket"),
+        table(sub(path, "sigs"), "id"),
+        table(sub(path, "shingles"), "id")))
     }
 
     private def framed(df: DataFrame, idCol: String, textCol: String,
@@ -593,13 +586,15 @@ object Dedup {
           clusteredOn(f.select("id", "sig"), "id")
             .write.option("maxRecordsPerFile", rowsPerFile)
             .mode("errorifexists").parquet(sub(path, "sigs"))
-          statsRebuild(df.sparkSession, sub(path, "sigs"), "id")
+          graft.sources.FileStatsIndex.buildAndSave(df.sparkSession,
+            sub(path, "sigs"), Seq("id"))
         },
         () => {
           clusteredOn(f.select("id", "sh"), "id")
             .write.option("maxRecordsPerFile", rowsPerFile)
             .mode("errorifexists").parquet(sub(path, "shingles"))
-          statsRebuild(df.sparkSession, sub(path, "shingles"), "id")
+          graft.sources.FileStatsIndex.buildAndSave(df.sparkSession,
+            sub(path, "shingles"), Seq("id"))
         })
       ()
     }
@@ -707,10 +702,9 @@ object Dedup {
         // advances carry no tag protocol, and a replayed batch re-drops
         // its rows as near-dups of their stored copies (self-delta), so
         // a crash anywhere just re-runs.
-        graft.sources.AutoCompact.maybe(spark, path,
-          Seq(sub(path, "bands") + "/rows", sub(path, "sigs"),
-            sub(path, "shingles"))) {
-          recluster(spark, path)
+        val store = tables(spark, path)
+        graft.sources.AutoCompact.maybe(spark, path, store.dirs) {
+          graft.sources.StoreTables.recluster(spark, store)
         }
         ()
       }
@@ -728,104 +722,36 @@ object Dedup {
       * versioned store would publish instead).
       */
     def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-                targetBytes: Long): Seq[graft.sources.Compaction.Result] = {
-      val rs = Seq((sub(path, "bands") + "/rows", "bucket"),
-        (sub(path, "sigs"), "id"), (sub(path, "shingles"), "id")).map {
-        case (d, key) =>
-          val r = graft.sources.Compaction.compact(spark, d, targetBytes)
-          spark.catalog.refreshByPath(d)
-          // re-stat the merged files, drop the compacted-away entries
-          statsUpdate(spark, d, key)
-          r
+                targetBytes: Long): Seq[graft.sources.Compaction.Result] =
+      tables(spark, path).tables.map { t =>
+        val r = graft.sources.Compaction.compact(spark, t.dir, targetBytes)
+        spark.catalog.refreshByPath(t.dir)
+        // re-stat the merged files, drop the compacted-away entries
+        graft.sources.FileStatsIndex.update(spark, t.dir, Seq(t.key))
+        r
       }
-      rs
-    }
 
-    /** Pin the store's auto-compact threshold (parquet files in any of
-      * the three table dirs; 0 disables) — advancing dedups
-      * self-recluster past it.
-      */
-    def setAutoCompact(spark: org.apache.spark.sql.SparkSession, path: String,
-                       maxFiles: Int): Unit =
-      graft.sources.AutoCompact.setPolicy(spark, path, maxFiles)
-
-    /** MINOR fold — the LSM memtable-merge tier the streaming path's
-      * auto-compact runs (the [[LinkGraph.compactOverrides]]
-      * discipline): only the accumulated per-tag OVERRIDE files of the
-      * three tables ([[advanceStaged]]'s published epochs) merge into
-      * key-clustered, granule-respecting runs, so fold I/O is ∝ the
-      * override bytes — never the store. Rows are append-only across
-      * tags (a survivor advances once), so every fold resolves by
-      * identity (pure re-shard). Plain (untagged) `advance` appends
-      * are already granule-capped and clustered within themselves;
-      * they fold at [[recluster]]'s operator cadence, not here.
-      * Tag-name discipline holds unchanged ([[graft.sources
-      * .TargetedDelete.foldFiles]]'s roll-forward marker makes each
-      * subset swap all-or-nothing per table).
+    /** MINOR fold of the staged override tier ([[advanceStaged]]'s
+      * published epochs — [[graft.sources.StoreTables.foldOverrides]]):
+      * I/O ∝ override bytes. Plain (untagged) `advance` appends are
+      * already granule-capped and clustered within themselves; they
+      * fold at [[recluster]]'s operator cadence, not here.
       */
     def compactOverrides(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Unit = {
-      val g = BandIndex.rowsPerFileOf(spark, sub(path, "bands"))
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq((sub(path, "bands") + "/rows", "bucket"),
-          (sub(path, "sigs"), "id"),
-          (sub(path, "shingles"), "id")).foreach { case (dir, key) =>
-        // recover a crashed MAJOR swap first: foldFiles recovers its
-        // own rewrite protocol, not SwapStore's aside-dir
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p) || fs.exists(new org.apache.hadoop.fs.Path(dir + "__old"))) {
-          graft.streaming.SwapStore.readCurrent(spark, dir,
-            new org.apache.spark.sql.types.StructType())
-          val tagged = graft.sources.ParquetSource.listParquetFiles(dir, conf)
-            .filter(f => graft.sources.EpochFiles.isTagged(
-              new org.apache.hadoop.fs.Path(f).getName))
-          val ran = graft.sources.TargetedDelete.foldFiles(spark, dir, tagged,
-            identity,
-            (df, staging) => {
-              val shards = math.max(1L, math.min(200L,
-                (df.count() - 1L) / math.max(1L, g) + 1L)).toInt
-              df.repartitionByRange(shards, col(key))
-                .sortWithinPartitions(col(key))
-                .write.option("maxRecordsPerFile", g)
-                .mode("overwrite").parquet(staging)
-            })
-          if (ran) {
-            statsUpdate(spark, dir, key)
-            spark.catalog.refreshByPath(dir)
-          }
-        }
-      }
-    }
+                         path: String): Unit =
+      graft.sources.StoreTables.foldOverrides(spark, tables(spark, path))
 
     /** Restore the key-clustered layout the pruned probes skip
       * against: thousands of `advance` appends (each clustered only
       * within itself) and in-place compactions (row-preserving but
       * order-mixing) gradually spread every key range across every
       * file, degrading [[prunedRead]]'s row-group skipping back
-      * toward full scans. Rewrites each table globally re-clustered
-      * on its lookup key under the crash-safe read-modify-swap
-      * discipline ([[graft.streaming.SwapStore]] — a crash leaves the
-      * old or new table intact, never neither). Row-identical, so
-      * probe decisions cannot change; run it between batches, like
-      * [[compact]].
+      * toward full scans ([[graft.sources.StoreTables.recluster]]:
+      * crash-safe swap per table, row-identical, so probe decisions
+      * cannot change). Run it between batches, like [[compact]].
       */
-    def recluster(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-      val g = BandIndex.rowsPerFileOf(spark, sub(path, "bands"))
-      Seq((sub(path, "bands") + "/rows", "bucket"),
-          (sub(path, "sigs"), "id"),
-          (sub(path, "shingles"), "id")).foreach { case (dir, key) =>
-        spark.catalog.refreshByPath(dir)
-        // swapWrite writes to <dir>__tmp BEFORE touching the live dir,
-        // so the lazy self-read drains the old files safely; the fold
-        // preserves the store's file-granularity policy
-        graft.streaming.SwapStore.swapWrite(
-          clusteredOn(spark.read.parquet(dir), key), dir, maxRecordsPerFile = g)
-        // every file changed — rebuild the artifact against the fresh
-        // globally-clustered layout (its tightest possible ranges)
-        statsRebuild(spark, dir, key)
-      }
-    }
+    def recluster(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+      graft.sources.StoreTables.recluster(spark, tables(spark, path))
 
     /** Exactly-once advance: append `survivors`' three table deltas
       * under DETERMINISTIC per-tag file names
@@ -888,9 +814,8 @@ object Dedup {
       // drop the retired files' (now-stale) stats entries while here —
       // harmless if left (survivingFiles intersects with the on-disk
       // listing) but dead weight in every future probe's stats read
-      statsUpdate(spark, sub(path, "bands") + "/rows", "bucket")
-      statsUpdate(spark, sub(path, "sigs"), "id")
-      statsUpdate(spark, sub(path, "shingles"), "id")
+      tables(spark, path).tables.foreach(t =>
+        graft.sources.FileStatsIndex.update(spark, t.dir, Seq(t.key)))
       val st = new org.apache.hadoop.fs.Path(sub(path, s"_stage/$tag"))
       val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(st, true)
@@ -957,13 +882,13 @@ object Dedup {
               "bucket", "id", pairs.toSeq.map(r => (r.get(0), r.get(1))))
         }
       spark.catalog.refreshByPath(bandsDir)
-      statsUpdate(spark, bandsDir, "bucket")
+      graft.sources.FileStatsIndex.update(spark, bandsDir, Seq("bucket"))
       bandsResult +: Seq(sub(path, "sigs"), sub(path, "shingles")).map { dir =>
         val r = graft.sources.TargetedDelete.deleteAuto(spark, dir, "id", ids,
           stats = loadStats(dir))
         spark.catalog.refreshByPath(dir)
         // stat the rewritten files, drop the rewritten-away entries
-        statsUpdate(spark, dir, "id")
+        graft.sources.FileStatsIndex.update(spark, dir, Seq("id"))
         r
       }
     }

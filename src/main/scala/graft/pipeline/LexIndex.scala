@@ -61,18 +61,9 @@ object LexIndex {
     * over all files under `_corpus/` is the live (N, Σdl).
     */
   private def writeCorpusStats(spark: SparkSession, root: String, name: String,
-                               n: Long, sumdl: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(corpusDir(root))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.mkdirs(dir) || fs.exists(dir), s"cannot create $dir")
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".tmp-$name")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"n":$n,"sumdl":$sumdl}""".getBytes("UTF-8"))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"$name.json")
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"corpus stats rename failed for $name")
-  }
+                               n: Long, sumdl: Long): Unit =
+    graft.sources.StoreTables.writeSmall(spark, s"${corpusDir(root)}/$name.json",
+      s"""{"n":$n,"sumdl":$sumdl}""")
 
   private def deleteCorpusStats(spark: SparkSession, root: String,
                                 name: String): Unit = {
@@ -124,12 +115,8 @@ object LexIndex {
           .foldLeft((0L, 0L)) { case ((a, s), p) =>
             val (pn, ps) = readStatsFile(fs, p); (a + pn, s + ps)
           }
-        val tmp = new org.apache.hadoop.fs.Path(dir, ".tmp-fold")
-        val out = fs.create(tmp, true)
-        try out.write(s"""{"n":${total._1},"sumdl":${total._2}}""".getBytes("UTF-8"))
-        finally out.close()
-        fs.delete(staging, false)
-        require(fs.rename(tmp, staging), s"stats fold staging rename failed in $dir")
+        graft.sources.StoreTables.writeSmall(spark, staging.toString,
+          s"""{"n":${total._1},"sumdl":${total._2}}""")
         total
       }
     fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".json"))
@@ -192,42 +179,36 @@ object LexIndex {
       .agg(max(col("dl")).as("dl"), count(lit(1)).as("tf"))
       .select(col("term"), col("id"), col("dl"), col("tf"))
 
-  private def clustered(p: DataFrame): DataFrame =
-    p.repartitionByRange(col("term")).sortWithinPartitions(col("term"), col("id"))
-
-  /** The store's file-granularity policy (the [[LinkGraph.Meta]]
-    * `rowsPerFile` discipline, applied to the postings table): every
-    * postings write splits output at this many rows per file under the
-    * term-range sort, so split files stay term-contiguous and a
-    * pushed-IN term probe's swept-in bytes are bounded by the
-    * granularity instead of growing with the corpus — sharding folds
-    * by session shuffle width alone is exactly the mechanism that grew
-    * the graph store's probe bytes 4.5× at 10× before its policy
-    * existed. Pinned in `_lex.json` at create time; pre-policy stores
-    * keep the default.
+  /** The postings' file-granularity policy, pinned in `_lex.json` at
+    * create time ([[graft.sources.StoreTables.rowsPerFileOf]]).
     */
-  def rowsPerFileOf(spark: SparkSession, root: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return DefaultRowsPerFile
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    """"rowsPerFile":(\d+)""".r.findFirstMatchIn(body)
-      .map(_.group(1).toLong).getOrElse(DefaultRowsPerFile)
+  def rowsPerFileOf(spark: SparkSession, root: String): Long =
+    graft.sources.StoreTables.rowsPerFileOf(spark, metaPath(root))
+
+  val DefaultRowsPerFile: Long = graft.sources.StoreTables.DefaultRowsPerFile
+
+  /** Postings as a store table: term-clustered, sorted `(term, id)`,
+    * capped at the pinned granularity, minor folds sharded at 2M rows.
+    * Postings rows never span epochs, so the resolve is identity.
+    */
+  private def postingsTable(root: String, g: Long) =
+    graft.sources.StoreTables.Table(postingsDir(root), "term",
+      sortBy = Seq("term", "id"), rowsPerFile = g, shardRows = 2000000L)
+
+  /** The index's store tables ([[graft.sources.StoreTables]]): postings
+    * and the id census, with the per-epoch corpus-stats contributions
+    * folding into base on the same cadence — once a tag's postings
+    * names are gone, a replayed tag's `deleteCorpusStats` must find
+    * nothing to delete, or the replay silently drops an absorbed
+    * contribution from the live (N, Σdl).
+    */
+  def tables(spark: SparkSession, root: String): graft.sources.StoreTables.Store = {
+    requireIndex(spark, root)
+    val g = rowsPerFileOf(spark, root)
+    graft.sources.StoreTables.Store(root,
+      Seq(postingsTable(root, g), graft.sources.IdCensus.table(root, g)),
+      foldCorpusStats(_, root))
   }
-
-  val DefaultRowsPerFile = 4000000L
-
-  /** Epoch-delta shard count (the [[LinkGraph]] `partsFor` shape): a
-    * batch's postings published through the session's default shuffle
-    * width would land a handful of rows as MANY near-empty files —
-    * LSM file-count growth every later stats-pruned search pays in
-    * footer opens. One file per ~2M delta rows; small epochs land ONE
-    * file, large ones still shard.
-    */
-  private def partsFor(nRows: Long): Int =
-    math.max(1L, math.min(200L, (nRows - 1L) / 2000000L + 1L)).toInt
 
   /** Validated, de-nulled (queryId, term) pairs: the term column must
     * be StringType up front (a non-string column would otherwise fail
@@ -249,7 +230,7 @@ object LexIndex {
              rowsPerFile: Long = DefaultRowsPerFile): Unit = {
     val spark = docs.sparkSession
     require(rowsPerFile >= 1L, "rowsPerFile must be >= 1")
-    clustered(postingsOf(docs, idCol, textCol))
+    postingsTable(root, rowsPerFile).clustered(postingsOf(docs, idCol, textCol))
       .write.option("maxRecordsPerFile", rowsPerFile)
       .mode("errorifexists").parquet(postingsDir(root))
     // term stats artifact: planning-time file pruning for forget's
@@ -261,11 +242,8 @@ object LexIndex {
       censusOf(spark.read.parquet(postingsDir(root))))
     val (n, sumdl) = statsFromCensus(spark, root)
     writeCorpusStats(spark, root, "base", n, sumdl)
-    val p = new org.apache.hadoop.fs.Path(metaPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write(s"""{"analyzer":"ws","rowsPerFile":$rowsPerFile}""".getBytes("UTF-8"))
-    out.close()
+    graft.sources.StoreTables.writeSmall(spark, metaPath(root),
+      s"""{"analyzer":"ws","rowsPerFile":$rowsPerFile}""")
   }
 
   private def requireIndex(spark: SparkSession, root: String): Unit = {
@@ -284,15 +262,11 @@ object LexIndex {
   def appendEpoch(batch: DataFrame, idCol: String, textCol: String,
                   root: String, tag: String): Unit = {
     val spark = batch.sparkSession
-    requireIndex(spark, root)
     // complete any interrupted auto-compact BEFORE retiring: a crash
     // mid-fold leaves tables half-folded, and retiring a completed
     // epoch's surviving per-tag files would lose rows the folded
     // tables keep (see graft.sources.AutoCompact)
-    graft.sources.AutoCompact.recover(spark, root,
-      Seq(postingsDir(root), graft.sources.IdCensus.rowsDir(root))) {
-      compactOverrides(spark, root)
-    }
+    graft.sources.StoreTables.recover(spark, tables(spark, root))
     graft.sources.EpochFiles.retire(spark, postingsDir(root), tag)
     graft.sources.IdCensus.retireEpoch(spark, root, tag)
     deleteCorpusStats(spark, root, s"epoch-$tag")
@@ -309,10 +283,9 @@ object LexIndex {
       // delta-sized shards at the store's pinned granularity: batch
       // rows land in few term-contiguous files, each split at
       // rowsPerFile so later probes never sweep more than a granule
-      val g = rowsPerFileOf(spark, root)
-      delta.repartitionByRange(partsFor(delta.count()), col("term"))
-        .sortWithinPartitions(col("term"), col("id"))
-        .write.option("maxRecordsPerFile", g)
+      val t = postingsTable(root, rowsPerFileOf(spark, root))
+      t.clustered(delta, graft.sources.StoreTables.shardsFor(delta.count(), t.shardRows))
+        .write.option("maxRecordsPerFile", t.rowsPerFile)
         .mode("overwrite").parquet(stage)
       val published = graft.sources.EpochFiles.publish(spark, stage,
         postingsDir(root), tag)
@@ -337,10 +310,7 @@ object LexIndex {
     // override bytes) without violating the per-tag-name caveat; a
     // replay after the fold is a clean no-op because the census still
     // knows every id and the stats contribution is absorbed into base
-    graft.sources.AutoCompact.maybe(spark, root,
-      Seq(postingsDir(root), graft.sources.IdCensus.rowsDir(root))) {
-      compactOverrides(spark, root)
-    }
+    graft.sources.StoreTables.autoCompact(spark, tables(spark, root))
     ()
   }
 
@@ -357,80 +327,13 @@ object LexIndex {
     ()
   }
 
-  /** Pin the index's auto-compact threshold (parquet files in the
-    * postings or census dir; 0 disables) — epochs fold past it.
+  /** MAJOR fold: postings and census back into one globally clustered
+    * table each, stats contributions into one base
+    * ([[graft.sources.StoreTables.recluster]]; search-invariant —
+    * LexIndexSpec pins it).
     */
-  def setAutoCompact(spark: SparkSession, root: String, maxFiles: Int): Unit =
-    graft.sources.AutoCompact.setPolicy(spark, root, maxFiles)
-
-  /** Fold accumulated epoch files back into one term-clustered table
-    * (crash-safe swap; search-invariant — LexIndexSpec pins it). Same
-    * between-epochs caveat as every compact: the swap renames files,
-    * destroying per-tag names an in-flight replay would retire —
-    * which is why the auto-compact policy triggers it only at the
-    * settled end of an epoch, under [[graft.sources.AutoCompact]]'s
-    * marker.
-    */
-  def compact(spark: SparkSession, root: String): Unit = {
-    requireIndex(spark, root)
-    val cur = graft.streaming.SwapStore.readCurrent(spark, postingsDir(root),
-      new org.apache.spark.sql.types.StructType())
-    // the fold honors the granularity policy: without maxRecordsPerFile
-    // a session-width range shuffle writes files whose term span grows
-    // with the corpus, and every pushed-IN probe sweeps that growth in
-    graft.streaming.SwapStore.swapWrite(clustered(cur), postingsDir(root),
-      maxRecordsPerFile = rowsPerFileOf(spark, root))
-    graft.sources.FileStatsIndex.buildAndSave(spark, postingsDir(root), Seq("term"))
-    spark.catalog.refreshByPath(postingsDir(root))
-    // fold the sidecars on the same cadence: census epoch files merge
-    // into one clustered table, stats contributions into one base —
-    // via the staged protocol (a read-delete-write order here used to
-    // lose contributions to a crash between the deletes and the write)
-    graft.sources.IdCensus.compact(spark, root)
-    foldCorpusStats(spark, root)
-  }
-
-  /** MINOR fold — the LSM memtable-merge tier auto-compact runs (the
-    * [[LinkGraph.compactOverrides]] discipline): only the accumulated
-    * per-tag OVERRIDE files merge into term-clustered,
-    * granule-respecting runs, so fold I/O is ∝ the override bytes —
-    * never the store — and lifetime fold I/O stays linear where a
-    * full-rewrite-per-trigger is quadratic. Postings rows never span
-    * epochs and ids are delta-unique across tags, so both folds
-    * resolve by identity (pure re-shard). The per-tag stats
-    * contributions fold into base on the same cadence: once a tag's
-    * postings names are gone, a replayed tag's `deleteCorpusStats`
-    * must find nothing to delete, or the replay silently drops an
-    * absorbed contribution from the live (N, Σdl). What a minor fold
-    * does NOT restore: global term clustering across base + folded
-    * runs — each folded run is term-contiguous within itself, so
-    * pushed-IN probes open at most one extra run per fold; run a major
-    * [[compact]] at operator cadence to re-merge. Tag-name discipline
-    * holds unchanged ([[graft.sources.TargetedDelete.foldFiles]]'s
-    * roll-forward marker makes each subset swap all-or-nothing per
-    * table).
-    */
-  def compactOverrides(spark: SparkSession, root: String): Unit = {
-    requireIndex(spark, root)
-    val g = rowsPerFileOf(spark, root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = postingsDir(root)
-    val tagged = graft.sources.ParquetSource.listParquetFiles(dir, conf)
-      .filter(f => graft.sources.EpochFiles.isTagged(
-        new org.apache.hadoop.fs.Path(f).getName))
-    val ran = graft.sources.TargetedDelete.foldFiles(spark, dir, tagged, identity,
-      (df, staging) => df
-        .repartitionByRange(partsFor(df.count()), col("term"))
-        .sortWithinPartitions(col("term"), col("id"))
-        .write.option("maxRecordsPerFile", g)
-        .mode("overwrite").parquet(staging))
-    if (ran) {
-      graft.sources.FileStatsIndex.update(spark, dir, Seq("term"))
-      spark.catalog.refreshByPath(dir)
-    }
-    graft.sources.IdCensus.compactOverrides(spark, root, g)
-    foldCorpusStats(spark, root)
-  }
+  def compact(spark: SparkSession, root: String): Unit =
+    graft.sources.StoreTables.recluster(spark, tables(spark, root))
 
   /** Re-derive both sidecars (id census, corpus stats) from the
     * postings' ground truth — the repair arm for out-of-protocol

@@ -84,36 +84,13 @@ object LinkGraph {
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def writeSmallFile(spark: SparkSession, path: String, body: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.mkdirs(dst.getParent) || fs.exists(dst.getParent),
-      s"cannot create ${dst.getParent}")
-    val tmp = new org.apache.hadoop.fs.Path(dst.getParent, s".tmp-${dst.getName}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"atomic write failed for $path")
-  }
-
-  private def readSmallFile(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
   def readMeta(spark: SparkSession, root: String): Meta = {
     val pat = """\{"iters":(\d+),"dampingPct":(\d+),"scale":(\d+)\}""".r
     // pre-policy stores carry the three-field meta: they keep the
     // default granularity (their files were written before the knob)
     val patG =
       """\{"iters":(\d+),"dampingPct":(\d+),"scale":(\d+),"rowsPerFile":(\d+)\}""".r
-    readSmallFile(spark, metaPath(root)).map(_.trim) match {
+    graft.sources.StoreTables.readSmall(spark, metaPath(root)).map(_.trim) match {
       case Some(patG(i, d, s, g)) => Meta(i.toInt, d.toInt, s.toLong, g.toLong)
       case Some(pat(i, d, s)) => Meta(i.toInt, d.toInt, s.toLong)
       case Some(other) =>
@@ -133,7 +110,8 @@ object LinkGraph {
     */
   private def seqFor(spark: SparkSession, root: String, tag: String): Long = {
     val pat = """\{"seq":(\d+)\}""".r
-    readSmallFile(spark, s"${epochsDir(root)}/$tag.json").map(_.trim) match {
+    graft.sources.StoreTables.readSmall(spark, s"${epochsDir(root)}/$tag.json")
+        .map(_.trim) match {
       case Some(pat(n)) => n.toLong
       case Some(other) => throw new IllegalStateException(
         s"malformed epoch record for $tag: $other")
@@ -145,12 +123,12 @@ object LinkGraph {
           else fs.listStatus(dir).map(_.getPath.getName)
             .filter(_.endsWith(".json"))
             .flatMap { n =>
-              readSmallFile(spark, s"${epochsDir(root)}/$n").map(_.trim).collect {
-                case pat(v) => v.toLong
-              }
+              graft.sources.StoreTables.readSmall(spark, s"${epochsDir(root)}/$n")
+                .map(_.trim).collect { case pat(v) => v.toLong }
             }.foldLeft(0L)(math.max)
         val seq = max + 1
-        writeSmallFile(spark, s"${epochsDir(root)}/$tag.json", s"""{"seq":$seq}""")
+        graft.sources.StoreTables.writeSmall(spark, s"${epochsDir(root)}/$tag.json",
+          s"""{"seq":$seq}""")
         seq
     }
   }
@@ -171,16 +149,14 @@ object LinkGraph {
     df.sparkSession.catalog.refreshByPath(dir)
   }
 
-  /** Override-publish shard count from a known delta size: a crawl
-    * epoch's overrides are batch-bounded, and publishing them through
-    * the session's default shuffle width would flush a handful of rows
-    * as MANY near-empty files per table per epoch — LSM file-count
-    * growth that every later stats-pruned read pays in footer opens.
-    * One file per ~2M override rows is the memtable-flush shape:
+  /** Override-publish shard count from a known delta size: one file
+    * per ~2M override rows ([[graft.sources.StoreTables.shardsFor]]) —
     * small epochs land ONE file per table, large ones still shard.
     */
   private def partsFor(nRows: Long): Int =
-    math.max(1L, math.min(200L, (nRows - 1L) / 2000000L + 1L)).toInt
+    graft.sources.StoreTables.shardsFor(nRows, ShardRows)
+
+  private val ShardRows = 2000000L
 
   private def publishClustered(spark: SparkSession, df: DataFrame, root: String,
                                table: String, dir: String, keyCol: String,
@@ -271,7 +247,7 @@ object LinkGraph {
         graft.operators.Graphs.pageRankLevels(e, "src", "dst", iters, dampingPct, scale)
           .withColumn("seq", lit(0L)),
         levelsDir(root), "id", rowsPerFile))
-    writeSmallFile(spark, metaPath(root),
+    graft.sources.StoreTables.writeSmall(spark, metaPath(root),
       s"""{"iters":$iters,"dampingPct":$dampingPct,"scale":$scale,""" +
         s""""rowsPerFile":$rowsPerFile}""")
   }
@@ -296,7 +272,7 @@ object LinkGraph {
     // keep theirs. Completing the fold restores the invariant (all
     // names gone, all rows present), and the delta anti-join below
     // then makes the replay a clean no-op.
-    recoverAutoCompact(spark, root)
+    graft.sources.StoreTables.recover(spark, tables(spark, root))
     rollbackFiles(spark, root, tag)
     val seq = seqFor(spark, root, tag)
     val cand0 = canon(newEdges, srcCol, dstCol)
@@ -400,7 +376,7 @@ object LinkGraph {
     // the epoch is SETTLED here (every table published under the tag's
     // recorded seq) — the one point the auto-compact policy may fold
     // accumulated overrides without violating the per-tag-name caveat
-    maybeAutoCompact(spark, root)
+    graft.sources.StoreTables.autoCompact(spark, tables(spark, root))
     nDelta
   }
 
@@ -714,7 +690,7 @@ object LinkGraph {
   def registerTrustRank(spark: SparkSession, root: String, seeds: DataFrame,
                         seedCol: String = "id"): String = {
     val meta = readMeta(spark, root)
-    recoverAutoCompact(spark, root)
+    graft.sources.StoreTables.recover(spark, tables(spark, root))
     val s = seeds.select(col(seedCol).as("id"))
       .filter(col("id").isNotNull).distinct()
     val vals = s.limit(MaxTrustSeeds + 1).collect()
@@ -906,7 +882,7 @@ object LinkGraph {
     require(ids.nonEmpty, "empty id list — nothing to forget")
     require(!ids.contains(null), "null ids cannot be forgotten")
     val meta = readMeta(spark, root)
-    recoverAutoCompact(spark, root)
+    graft.sources.StoreTables.recover(spark, tables(spark, root))
     def digestWith(sep: String) = java.security.MessageDigest.getInstance("SHA-1")
       .digest(ids.map(String.valueOf).sorted.mkString(sep).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
@@ -1098,169 +1074,48 @@ object LinkGraph {
     fs.delete(new org.apache.hadoop.fs.Path(snap), true)
     // settled (snapshot gone, a re-run is a no-op) — the auto-compact
     // policy may fold here, same as the epoch path
-    maybeAutoCompact(spark, root)
+    graft.sources.StoreTables.autoCompact(spark, tables(spark, root))
     ()
   }
 
-  /** Pin the store's auto-compact threshold (`maxFiles` parquet files
-    * in any table dir triggers a fold at the next settled epoch /
-    * forget; 0 disables the policy). Absent sidecar = the
-    * [[graft.sources.AutoCompact.DefaultMaxFiles]] default.
+  /** The store's tables ([[graft.sources.StoreTables]]): edges
+    * clustered both ways plus the LSM override tables, each resolving
+    * the latest seq per key (edges are append-only and unique across
+    * tags by the delta discipline, so they resolve by identity).
+    * Every table keeps a `_stats` artifact on its cluster key, caps
+    * files at the pinned granularity, and minor-folds at ~2M rows per
+    * shard. The optional component-label pair and every registered
+    * trust set join when present.
     */
-  def setAutoCompact(spark: SparkSession, root: String, maxFiles: Int): Unit =
-    graft.sources.AutoCompact.setPolicy(spark, root, maxFiles)
-
-  private def tableDirs(spark: SparkSession, root: String): Seq[String] =
-    Seq(outDir(root), inDir(root), degDir(root), levelsDir(root)) ++
-      (if (labelsExist(spark, root)) Seq(labIdDir(root), labRepDir(root))
+  def tables(spark: SparkSession, root: String): graft.sources.StoreTables.Store = {
+    val g = readMeta(spark, root).rowsPerFile
+    def latest(keys: Seq[String], v: String): DataFrame => DataFrame = df => df
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(struct(col(v), col("seq")), col("seq")).as("v"))
+      .select(keys.map(col) ++ Seq(col(s"v.$v").as(v), col("v.seq").as("seq")): _*)
+    def table(dir: String, key: String,
+              resolve: DataFrame => DataFrame = identity) =
+      graft.sources.StoreTables.Table(dir, key, resolve = resolve,
+        rowsPerFile = g, shardRows = ShardRows)
+    val levels = latest(Seq("id", "iter"), "rank")
+    graft.sources.StoreTables.Store(root, Seq(
+      table(outDir(root), "src"),
+      table(inDir(root), "dst"),
+      table(degDir(root), "src", latest(Seq("src"), "deg")),
+      table(levelsDir(root), "id", levels)) ++
+      (if (labelsExist(spark, root)) Seq(
+        table(labIdDir(root), "id", latest(Seq("id"), "rep")),
+        table(labRepDir(root), "rep", latest(Seq("id"), "rep")))
        else Seq.empty) ++
-      trustSets(spark, root).map(trustLevelsDir(root, _))
-
-  /** The auto-compact cadence ([[graft.sources.AutoCompact]] — the
-    * savepoint-housekeeping discipline applied to the LSM tables):
-    * called at the SETTLED end of [[appendEpoch]]/[[forget]], folds
-    * when any table dir's parquet file count exceeds the policy
-    * threshold — without it every epoch adds override files per table
-    * and serve-read planning cost grows with EPOCH COUNT, not data,
-    * until an operator remembers the manual CLI arm. Crash-safe: an
-    * intent marker brackets the fold, and both mutation entry points
-    * complete an interrupted fold before retiring anything
-    * ([[recoverAutoCompact]]) — otherwise a replayed tag could retire
-    * a completed epoch's rows from the not-yet-folded tables while the
-    * folded ones keep theirs.
-    */
-  private def maybeAutoCompact(spark: SparkSession, root: String): Boolean =
-    graft.sources.AutoCompact.maybe(spark, root, tableDirs(spark, root)) {
-      compactOverrides(spark, root)
-    }
-
-  /** Complete an interrupted auto-compact: the fold is idempotent (it
-    * re-clusters whatever each table currently holds), so re-running
-    * it restores the all-or-nothing invariant the marker protects —
-    * every table folded, every per-tag name gone, every row present.
-    */
-  private def recoverAutoCompact(spark: SparkSession, root: String): Unit =
-    graft.sources.AutoCompact.recover(spark, root, tableDirs(spark, root)) {
-      compactOverrides(spark, root)
-    }
-
-  /** MINOR fold — the LSM memtable-merge tier auto-compact runs: each
-    * table's accumulated per-tag OVERRIDE files (and only those) merge
-    * into granule-respecting clustered runs, resolving supersessions
-    * WITHIN the override set (max seq per key). Fold I/O is ∝ the
-    * override bytes — never the store, which is what keeps lifetime
-    * fold I/O linear where a full-rewrite-per-trigger is quadratic
-    * (any table past `threshold × rowsPerFile` rows would otherwise
-    * rewrite wholly on every fold). What a minor fold does NOT
-    * reclaim: a BASE row superseded by an override survives until a
-    * MAJOR [[compact]] — bounded at one stale version per (key, table)
-    * because the override set itself is resolved, so reads stay
-    * max-seq-correct and the dead-row tail never grows past the base's
-    * own key count. Run a major [[compact]] at operator cadence
-    * (weekly, or after heavy forgets) to reclaim it and restore global
-    * clustering. Tag-name discipline: every folded tag loses ALL its
-    * names in a table or none ([[graft.sources.TargetedDelete
-    * .foldFiles]]'s marker makes the subset swap roll-forward
-    * all-or-nothing), so the auto-compact crash protocol holds
-    * unchanged.
-    */
-  def compactOverrides(spark: SparkSession, root: String): Unit = {
-    val rowsPerFile = readMeta(spark, root).rowsPerFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    def overrides(dir: String): Seq[String] =
-      graft.sources.ParquetSource.listParquetFiles(dir, conf)
-        .filter(f => graft.sources.EpochFiles.isTagged(
-          new org.apache.hadoop.fs.Path(f).getName))
-    def fold(dir: String, keyCol: String,
-             resolve: DataFrame => DataFrame): Unit = {
-      val ran = graft.sources.TargetedDelete.foldFiles(spark, dir,
-        overrides(dir), resolve,
-        (df, staging) => df
-          .repartitionByRange(partsFor(df.count()), col(keyCol))
-          .sortWithinPartitions(col(keyCol))
-          .write.option("maxRecordsPerFile", rowsPerFile)
-          .mode("overwrite").parquet(staging))
-      if (ran) {
-        graft.sources.FileStatsIndex.update(spark, dir, Seq(keyCol))
-        spark.catalog.refreshByPath(dir)
-      }
-    }
-    val degResolve: DataFrame => DataFrame = df => df
-      .groupBy(col("src"))
-      .agg(max_by(struct(col("deg"), col("seq")), col("seq")).as("v"))
-      .select(col("src"), col("v.deg").as("deg"), col("v.seq").as("seq"))
-    val levelResolve: DataFrame => DataFrame = df => df
-      .groupBy(col("id"), col("iter"))
-      .agg(max_by(struct(col("rank"), col("seq")), col("seq")).as("v"))
-      .select(col("id"), col("iter"), col("v.rank").as("rank"),
-        col("v.seq").as("seq"))
-    val labResolve: DataFrame => DataFrame = df => df
-      .groupBy(col("id"))
-      .agg(max_by(struct(col("rep"), col("seq")), col("seq")).as("v"))
-      .select(col("id"), col("v.rep").as("rep"), col("v.seq").as("seq"))
-    // edges are append-only and unique across tags by the delta
-    // discipline — the merge is a pure re-shard
-    fold(outDir(root), "src", identity)
-    fold(inDir(root), "dst", identity)
-    fold(degDir(root), "src", degResolve)
-    fold(levelsDir(root), "id", levelResolve)
-    if (labelsExist(spark, root)) {
-      fold(labIdDir(root), "id", labResolve)
-      fold(labRepDir(root), "rep", labResolve)
-    }
-    for (dg <- trustSets(spark, root))
-      fold(trustLevelsDir(root, dg), "id", levelResolve)
+      trustSets(spark, root).map(dg => table(trustLevelsDir(root, dg), "id", levels)))
   }
 
-  /** Fold accumulated LSM overrides back into one clustered table per
-    * dir (edges just recluster — they are append-only and unique by
-    * the delta discipline). Crash-safe swap per table; destroys
-    * per-tag names, so compact only between settled epochs — the
-    * auto-compact policy ([[maybeAutoCompact]]) triggers it exactly
-    * there, and its marker protocol covers a crash mid-fold.
+  /** MAJOR fold of every table ([[graft.sources.StoreTables.recluster]]):
+    * reclaims the base rows overrides superseded and restores global
+    * clustering. Destroys per-tag names, so compact only between
+    * settled epochs — the auto-compact policy runs the MINOR tier
+    * ([[graft.sources.StoreTables.foldOverrides]]) there instead.
     */
-  def compact(spark: SparkSession, root: String): Unit = {
-    val rowsPerFile = readMeta(spark, root).rowsPerFile
-    def swapClustered(dir: String, df: DataFrame, keyCol: String): Unit = {
-      graft.streaming.SwapStore.swapWrite(
-        df.repartitionByRange(col(keyCol)).sortWithinPartitions(col(keyCol)), dir,
-        maxRecordsPerFile = rowsPerFile)
-      graft.sources.FileStatsIndex.buildAndSave(spark, dir, Seq(keyCol))
-      spark.catalog.refreshByPath(dir)
-    }
-    swapClustered(outDir(root), readTable(spark,outDir(root)), "src")
-    swapClustered(inDir(root), readTable(spark,inDir(root)), "dst")
-    swapClustered(degDir(root),
-      readTable(spark,degDir(root))
-        .groupBy(col("src"))
-        .agg(max_by(struct(col("deg"), col("seq")), col("seq")).as("v"))
-        .select(col("src"), col("v.deg").as("deg"), col("v.seq").as("seq")),
-      "src")
-    swapClustered(levelsDir(root),
-      readTable(spark,levelsDir(root))
-        .groupBy(col("id"), col("iter"))
-        .agg(max_by(struct(col("rank"), col("seq")), col("seq")).as("v"))
-        .select(col("id"), col("iter"), col("v.rank").as("rank"),
-          col("v.seq").as("seq")),
-      "id")
-    if (labelsExist(spark, root)) {
-      def folded = readTable(spark,labIdDir(root))
-        .groupBy(col("id"))
-        .agg(max_by(struct(col("rep"), col("seq")), col("seq")).as("v"))
-        .select(col("id"), col("v.rep").as("rep"), col("v.seq").as("seq"))
-      swapClustered(labIdDir(root), folded, "id")
-      swapClustered(labRepDir(root), folded, "rep")
-    }
-    // the trust level tables fold like levels/ (same LSM shape)
-    for (dg <- trustSets(spark, root)) {
-      val tl = trustLevelsDir(root, dg)
-      swapClustered(tl,
-        readTable(spark,tl)
-          .groupBy(col("id"), col("iter"))
-          .agg(max_by(struct(col("rank"), col("seq")), col("seq")).as("v"))
-          .select(col("id"), col("iter"), col("v.rank").as("rank"),
-            col("v.seq").as("seq")),
-        "id")
-    }
-  }
+  def compact(spark: SparkSession, root: String): Unit =
+    graft.sources.StoreTables.recluster(spark, tables(spark, root))
 }

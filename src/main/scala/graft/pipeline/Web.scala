@@ -341,13 +341,9 @@ object Web {
   private def censusMeta(dir: String) = dir + "/_census.json"
 
   private def writeCensusMeta(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, minLineChars: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(censusMeta(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write(s"""{"minLineChars":$minLineChars}""".getBytes("UTF-8"))
-    out.close()
-  }
+                              dir: String, minLineChars: Int): Unit =
+    graft.sources.StoreTables.writeSmall(spark, censusMeta(dir),
+      s"""{"minLineChars":$minLineChars}""")
 
   /** The census's pinned eligibility parameter. The probe/advance MUST
     * run under the SAME `minLineChars` the census was built with (a
@@ -357,14 +353,9 @@ object Web {
     */
   private def readCensusMinChars(spark: org.apache.spark.sql.SparkSession,
                                  dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(censusMeta(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no line census at $dir (missing ${censusMeta(dir)})")
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(body).get("minLineChars").asInt()
+    val v = graft.sources.StoreTables.metaField(spark, censusMeta(dir), "minLineChars")
+    require(v.isDefined, s"no line census at $dir (missing ${censusMeta(dir)})")
+    v.get.toInt
   }
 
   /** Build a persisted line census at `dir` from a corpus snapshot:
@@ -377,9 +368,7 @@ object Web {
   def createLineCensus(df: DataFrame, idCol: String, textCol: String,
                        dir: String, minLineChars: Int = 2): Unit = {
     val spark = df.sparkSession
-    lineStats(df, idCol, textCol, minLineChars)
-      .repartitionByRange(col("line_hash"))
-      .sortWithinPartitions(col("line_hash"))
+    censusTable(dir).clustered(lineStats(df, idCol, textCol, minLineChars))
       .write.mode("errorifexists").parquet(censusRows(dir))
     writeCensusMeta(spark, dir, minLineChars)
   }
@@ -396,16 +385,10 @@ object Web {
     val minChars = readCensusMinChars(spark, dir)
     val cur = graft.streaming.SwapStore.readCurrent(spark, censusRows(dir),
       lineStats(batch, idCol, textCol, minChars).schema)
-    val merged = cur.unionByName(lineStats(batch, idCol, textCol, minChars))
-      .groupBy(col("line_hash"))
-      .agg(sum(col("occ")).as("occ"),
-        min(struct(col("first_id"), col("first_no"))).as("first_at"))
-      .select(col("line_hash"), col("occ"),
-        col("first_at.first_id").as("first_id"),
-        col("first_at.first_no").as("first_no"))
-      .repartitionByRange(col("line_hash"))
-      .sortWithinPartitions(col("line_hash"))
-    graft.streaming.SwapStore.swapWrite(merged, censusRows(dir))
+    val merged = foldCensusRows(
+      cur.unionByName(lineStats(batch, idCol, textCol, minChars)))
+    graft.streaming.SwapStore.swapWrite(censusTable(dir).clustered(merged),
+      censusRows(dir))
   }
 
   /** Epoch-staged census advance for EXACTLY-ONCE streaming: the
@@ -423,9 +406,7 @@ object Web {
     val spark = batch.sparkSession
     val minChars = readCensusMinChars(spark, dir)
     val stage = dir + s"/_stage/$tag"
-    lineStats(batch, idCol, textCol, minChars)
-      .repartitionByRange(col("line_hash"))
-      .sortWithinPartitions(col("line_hash"))
+    censusTable(dir).clustered(lineStats(batch, idCol, textCol, minChars))
       .write.mode("overwrite").parquet(stage)
     graft.sources.EpochFiles.publish(spark, stage, censusRows(dir), tag)
   }
@@ -443,95 +424,51 @@ object Web {
     ()
   }
 
-  /** Fold accumulated epoch deltas into one hash-clustered table
-    * (crash-safe swap) — probe results are identical before and after
-    * (the probe aggregates at read time); this only buys back file
-    * count and clustering. Same caveat as the near-dup store's
-    * compact: the swap renames files, destroying the per-tag names an
-    * IN-FLIGHT epoch replay would need to retire — run it between
-    * epochs.
+  /** The census as a one-table store ([[graft.sources.StoreTables]]):
+    * hash-clustered, no file cap, no stats artifact, minor folds
+    * sharded at 2M rows. Unlike the append-only stores the resolve is
+    * NOT identity: rows for one `line_hash` may appear in several
+    * deltas, and the read-time fold contract (occ sums, first-locator
+    * mins — a commutative monoid) makes any subset's aggregate exactly
+    * equivalent, so probe results are identical before and after
+    * either fold.
     */
-  /** Pin the census's auto-compact threshold (parquet files under
-    * rows/; 0 disables) — committed streaming epochs fold past it
-    * (StreamingWeb, strictly after the epoch marker).
-    */
-  def setLineCensusAutoCompact(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, maxFiles: Int): Unit =
-    graft.sources.AutoCompact.setPolicy(spark, dir, maxFiles)
+  def lineCensusTables(dir: String): graft.sources.StoreTables.Store =
+    graft.sources.StoreTables.Store(dir, Seq(censusTable(dir)))
 
-  /** MINOR fold — the tier the streaming path's auto-compact runs:
-    * only the accumulated per-tag OVERRIDE deltas
-    * ([[advanceStagedLineCensus]]'s published epochs) merge, so fold
-    * I/O is ∝ the override bytes — never the census. Unlike the
-    * append-only stores this resolve is NOT identity: census rows for
-    * one `line_hash` may appear in several deltas, and the read-time
-    * fold contract (occ sums, first-locator mins — a commutative
-    * monoid) makes the within-subset aggregate exactly equivalent, so
-    * probe results are identical before and after. What it does NOT
-    * reclaim: a hash present in base AND overrides keeps two rows
-    * until a major [[compactLineCensus]] — bounded at one extra row
-    * per (hash, fold-run tier), and probes aggregate at read time
-    * regardless. Tag-name discipline holds unchanged
-    * ([[graft.sources.TargetedDelete.foldFiles]]'s roll-forward
-    * marker makes the subset swap all-or-nothing).
-    */
-  def minorCompactLineCensus(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Unit = {
-    val rows = censusRows(dir)
-    val p = new org.apache.hadoop.fs.Path(rows)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(rows + "__old")))
-      return
-    // recover a crashed MAJOR swap first: foldFiles recovers its own
-    // rewrite protocol, not SwapStore's aside-dir
-    graft.streaming.SwapStore.readCurrent(spark, rows,
-      new org.apache.spark.sql.types.StructType())
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tagged = graft.sources.ParquetSource.listParquetFiles(rows, conf)
-      .filter(f => graft.sources.EpochFiles.isTagged(
-        new org.apache.hadoop.fs.Path(f).getName))
-    val ran = graft.sources.TargetedDelete.foldFiles(spark, rows, tagged,
-      df => df.groupBy(col("line_hash"))
-        .agg(sum(col("occ")).as("occ"),
-          min(struct(col("first_id"), col("first_no"))).as("first_at"))
-        .select(col("line_hash"), col("occ"),
-          col("first_at.first_id").as("first_id"),
-          col("first_at.first_no").as("first_no")),
-      (df, staging) => {
-        val shards = math.max(1L, math.min(200L,
-          (df.count() - 1L) / 2000000L + 1L)).toInt
-        df.repartitionByRange(shards, col("line_hash"))
-          .sortWithinPartitions(col("line_hash"))
-          .write.mode("overwrite").parquet(staging)
-      })
-    if (ran) spark.catalog.refreshByPath(rows)
-  }
+  private def censusTable(dir: String) = graft.sources.StoreTables.Table(
+    censusRows(dir), "line_hash", resolve = foldCensusRows,
+    shardRows = 2000000L, stats = false)
 
-  def compactLineCensus(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Unit = {
-    val rows = new org.apache.hadoop.fs.Path(censusRows(dir))
-    val fs = rows.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // nothing to fold (and no schema to guess) on an absent census;
-    // the stored id type is whatever the corpus used, so never invent
-    // an empty frame here
-    if (!fs.exists(rows) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(censusRows(dir) + "__old")))
-      return
-    // readCurrent for its crash recovery (restores a swapped-aside
-    // __old); the empty-schema arm is unreachable past the guard
-    val cur = graft.streaming.SwapStore.readCurrent(spark, censusRows(dir),
-      new org.apache.spark.sql.types.StructType())
-    val merged = cur.groupBy(col("line_hash"))
+  private def foldCensusRows(df: DataFrame): DataFrame =
+    df.groupBy(col("line_hash"))
       .agg(sum(col("occ")).as("occ"),
         min(struct(col("first_id"), col("first_no"))).as("first_at"))
       .select(col("line_hash"), col("occ"),
         col("first_at.first_id").as("first_id"),
         col("first_at.first_no").as("first_no"))
-      .repartitionByRange(col("line_hash"))
-      .sortWithinPartitions(col("line_hash"))
-    graft.streaming.SwapStore.swapWrite(merged, censusRows(dir))
-  }
+
+  /** MINOR fold — the tier the streaming path's auto-compact runs:
+    * only the per-tag override deltas ([[advanceStagedLineCensus]]'s
+    * published epochs) merge, so fold I/O is ∝ the override bytes. A
+    * hash present in base AND overrides keeps two rows until a major
+    * [[compactLineCensus]]; probes aggregate at read time regardless.
+    */
+  def minorCompactLineCensus(spark: org.apache.spark.sql.SparkSession,
+                             dir: String): Unit =
+    graft.sources.StoreTables.foldOverrides(spark, lineCensusTables(dir))
+
+  /** Fold accumulated epoch deltas into one hash-clustered table
+    * (crash-safe swap) — probe results are identical before and after
+    * (the probe aggregates at read time); this only buys back file
+    * count and clustering. Same caveat as the near-dup store's
+    * recluster: the swap renames files, destroying the per-tag names
+    * an IN-FLIGHT epoch replay would need to retire — run it between
+    * epochs. An absent census is left alone.
+    */
+  def compactLineCensus(spark: org.apache.spark.sql.SparkSession,
+                        dir: String): Unit =
+    graft.sources.StoreTables.recluster(spark, lineCensusTables(dir))
 
   /** Incremental line dedup of a NEW batch against a persisted census:
     * output over the batch's documents is IDENTICAL to running

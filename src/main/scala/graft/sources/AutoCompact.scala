@@ -62,37 +62,20 @@ object AutoCompact {
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def writeSmall(spark: SparkSession, path: String, body: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.mkdirs(dst.getParent) || fs.exists(dst.getParent),
-      s"cannot create ${dst.getParent}")
-    val tmp = new org.apache.hadoop.fs.Path(dst.getParent, s".tmp-${dst.getName}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"atomic write failed for $path")
-  }
-
   /** Pin the store's threshold (`maxFiles` parquet files in any table
     * dir triggers a fold at the next settled mutation; 0 disables).
     */
   def setPolicy(spark: SparkSession, root: String, maxFiles: Int): Unit = {
     require(maxFiles >= 0, "maxFiles must be >= 0 (0 disables)")
-    writeSmall(spark, policyPath(root), s"""{"autoCompactFiles":$maxFiles}""")
+    StoreTables.writeSmall(spark, policyPath(root), s"""{"autoCompactFiles":$maxFiles}""")
   }
 
   def threshold(spark: SparkSession, root: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(policyPath(root))
-    val fs = fsOf(spark, root)
-    if (!fs.exists(p)) return DefaultMaxFiles
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
     val pat = """\{"autoCompactFiles":(\d+)\}""".r
-    body.trim match {
-      case pat(n) => n.toInt
-      case other => throw new IllegalStateException(
+    StoreTables.readSmall(spark, policyPath(root)).map(_.trim) match {
+      case None => DefaultMaxFiles
+      case Some(pat(n)) => n.toInt
+      case Some(other) => throw new IllegalStateException(
         s"malformed ${policyPath(root)}: $other")
     }
   }
@@ -102,14 +85,9 @@ object AutoCompact {
     * dirs from `root`). A dir absent from the sidecar baselines at 0.
     */
   def baseline(spark: SparkSession, root: String): Map[String, Int] = {
-    val p = new org.apache.hadoop.fs.Path(baselinePath(root))
-    val fs = fsOf(spark, root)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
     val pair = """"([^"]+)":(\d+)""".r
-    pair.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toInt).toMap
+    StoreTables.readSmall(spark, baselinePath(root)).toSeq.flatMap(b =>
+      pair.findAllMatchIn(b).map(m => m.group(1) -> m.group(2).toInt)).toMap
   }
 
   /** Record the just-folded state: current file count per dir, written
@@ -123,7 +101,7 @@ object AutoCompact {
     val body = dirs.map(d =>
       s""""$d":${ParquetSource.listParquetFiles(d, conf).size}""")
       .mkString("{", ",", "}")
-    writeSmall(spark, baselinePath(root), body)
+    StoreTables.writeSmall(spark, baselinePath(root), body)
   }
 
   /** Fold now iff any of `dirs` has grown more than the policy
@@ -139,7 +117,7 @@ object AutoCompact {
     val over = dirs.exists(d =>
       ParquetSource.listParquetFiles(d, conf).size - base.getOrElse(d, 0) > thr)
     if (!over) return false
-    writeSmall(spark, markerPath(root), """{"compacting":1}""")
+    StoreTables.writeSmall(spark, markerPath(root), """{"compacting":1}""")
     fold
     writeBaseline(spark, root, dirs)
     fsOf(spark, root).delete(new org.apache.hadoop.fs.Path(markerPath(root)), false)

@@ -48,14 +48,23 @@ object IdCensus {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def clustered(df: DataFrame): DataFrame =
-    df.repartitionByRange(col("id")).sortWithinPartitions(col("id"))
+  /** The census as a store table: id-clustered with a `_stats`
+    * artifact. Ids are unique across tags by the delta discipline, so
+    * the resolve is identity. Folds cap files (and shard the minor
+    * fold) at the owning index's `rowsPerFile`; `rowsPerFile ≤ 0`
+    * leaves sizing to the shard count alone — one minor-fold shard,
+    * no cap (the standalone [[compact]]).
+    */
+  def table(root: String, rowsPerFile: Long): StoreTables.Table =
+    StoreTables.Table(rowsDir(root), "id",
+      rowsPerFile = math.max(0L, rowsPerFile),
+      shardRows = if (rowsPerFile > 0L) rowsPerFile else Long.MaxValue)
 
   /** Overwrite the census with `rows` (column `id` + optional payload)
     * and build its stats artifact.
     */
   def create(spark: SparkSession, root: String, rows: DataFrame): Unit = {
-    clustered(rows).write.mode("overwrite").parquet(rowsDir(root))
+    table(root, 0L).clustered(rows).write.mode("overwrite").parquet(rowsDir(root))
     FileStatsIndex.buildAndSave(spark, rowsDir(root), Seq("id"))
     spark.catalog.refreshByPath(rowsDir(root))
   }
@@ -75,7 +84,7 @@ object IdCensus {
   def appendEpoch(spark: SparkSession, root: String, rows: DataFrame,
                   tag: String): Unit = {
     val stage = stageDir(root, tag)
-    clustered(rows).write.mode("overwrite").parquet(stage)
+    table(root, 0L).clustered(rows).write.mode("overwrite").parquet(stage)
     val published = EpochFiles.publish(spark, stage, rowsDir(root), tag)
     // stats advance over EXACTLY the published files — one small job
     // (the write-pass discipline), never an artifact diff per epoch
@@ -89,7 +98,7 @@ object IdCensus {
   def appendPlain(spark: SparkSession, root: String, rows: DataFrame): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val before = ParquetSource.listParquetFiles(rowsDir(root), conf).toSet
-    clustered(rows).write.mode("append").parquet(rowsDir(root))
+    table(root, 0L).clustered(rows).write.mode("append").parquet(rowsDir(root))
     spark.catalog.refreshByPath(rowsDir(root))
     val fresh = ParquetSource.listParquetFiles(rowsDir(root), conf)
       .filterNot(before.contains)
@@ -140,49 +149,12 @@ object IdCensus {
     ()
   }
 
-  /** MINOR fold: merge only the accumulated per-tag OVERRIDE files
-    * into id-clustered runs at the caller's granularity — I/O ∝
-    * override bytes, never the census ([[TargetedDelete.foldFiles]]'s
-    * roll-forward marker keeps the subset swap all-or-nothing, so
-    * every folded tag loses ALL its names or none). Ids are unique
-    * across tags by the delta discipline, so the resolve is identity.
-    * `rowsPerFile ≤ 0` leaves file sizing to the shard count alone
-    * (pre-policy stores).
-    */
-  def compactOverrides(spark: SparkSession, root: String,
-                       rowsPerFile: Long): Unit = {
-    if (!exists(spark, root)) return
-    val dir = rowsDir(root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tagged = ParquetSource.listParquetFiles(dir, conf)
-      .filter(f => EpochFiles.isTagged(new org.apache.hadoop.fs.Path(f).getName))
-    val ran = TargetedDelete.foldFiles(spark, dir, tagged, identity,
-      (df, staging) => {
-        val shards = math.max(1L, math.min(200L,
-          if (rowsPerFile > 0) (df.count() - 1L) / rowsPerFile + 1L else 1L)).toInt
-        val w = df.repartitionByRange(shards, col("id"))
-          .sortWithinPartitions(col("id")).write
-        (if (rowsPerFile > 0) w.option("maxRecordsPerFile", rowsPerFile) else w)
-          .mode("overwrite").parquet(staging)
-      })
-    if (ran) {
-      FileStatsIndex.update(spark, dir, Seq("id"))
-      spark.catalog.refreshByPath(dir)
-    }
-  }
-
   /** Fold accumulated epoch files back into a globally id-clustered
     * layout (crash-safe swap) and rebuild the stats artifact. Same
     * between-epochs caveat as every store compact: the swap renames
     * files, destroying the per-tag names an in-flight replay would
     * retire.
     */
-  def compact(spark: SparkSession, root: String): Unit = {
-    if (!exists(spark, root)) return
-    val cur = graft.streaming.SwapStore.readCurrent(spark, rowsDir(root),
-      new org.apache.spark.sql.types.StructType())
-    graft.streaming.SwapStore.swapWrite(clustered(cur), rowsDir(root))
-    FileStatsIndex.buildAndSave(spark, rowsDir(root), Seq("id"))
-    spark.catalog.refreshByPath(rowsDir(root))
-  }
+  def compact(spark: SparkSession, root: String): Unit =
+    StoreTables.recluster(spark, StoreTables.Store(root, Seq(table(root, 0L))))
 }

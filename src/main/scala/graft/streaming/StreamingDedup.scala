@@ -175,17 +175,15 @@ object StreamingDedup {
     // committed — the auto-compact policy may fold accumulated advance
     // files HERE, strictly after the marker. The fold is MINOR
     // (per-tag override files only, I/O ∝ override bytes — see
-    // NearDupStore.compactOverrides): row-preserving and
+    // graft.sources.StoreTables.foldOverrides): row-preserving and
     // all-or-nothing per table (foldFiles' roll-forward marker), so a
     // crash anywhere inside leaves a consistent store, this epoch's
     // replay short-circuits on the marker, and the only tag names the
     // fold destroys belong to COMMITTED epochs no replay will retire.
     // (Folding inside advanceStaged would sit BEFORE the marker — a
     // crash there would let a replay double-append the epoch.)
-    graft.sources.AutoCompact.maybe(sess, storePath, Seq(
-      s"$storePath/bands/rows", s"$storePath/sigs", s"$storePath/shingles")) {
-      Dedup.NearDupStore.compactOverrides(sess, storePath)
-    }
+    graft.sources.StoreTables.autoCompact(sess,
+      Dedup.NearDupStore.tables(sess, storePath))
     ()
   }
 }

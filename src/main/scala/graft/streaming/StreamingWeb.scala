@@ -75,10 +75,7 @@ object StreamingWeb {
     // the read-time fold contract, a replay of THIS epoch
     // short-circuits on its marker, and the only per-tag names
     // destroyed belong to COMMITTED epochs no replay will retire.
-    graft.sources.AutoCompact.maybe(sess, censusDir,
-      Seq(censusDir + "/rows")) {
-      Web.minorCompactLineCensus(sess, censusDir)
-    }
+    graft.sources.StoreTables.autoCompact(sess, Web.lineCensusTables(censusDir))
     ()
   }
 }

@@ -20,7 +20,16 @@ private[graft] object SwapStore {
     * (corrupt footer, transient IO) fails loudly instead of silently
     * resetting accumulated state.
     */
-  def readCurrent(sess: SparkSession, path: String, emptySchema: StructType): DataFrame = {
+  def readCurrent(sess: SparkSession, path: String, emptySchema: StructType): DataFrame =
+    if (recover(sess, path)) sess.read.parquet(path)
+    else sess.createDataFrame(
+      sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
+
+  /** The crash-recovery half of [[readCurrent]]: restore a swapped-aside
+    * `<path>__old` and refresh the session's listing. Returns whether
+    * the table exists.
+    */
+  def recover(sess: SparkSession, path: String): Boolean = {
     val dst = new org.apache.hadoop.fs.Path(path)
     val fs = dst.getFileSystem(sess.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(path + "__old")
@@ -31,9 +40,7 @@ private[graft] object SwapStore {
     // refresh a long-lived session can list a PREVIOUS swap's files
     // and silently read stale state
     sess.catalog.refreshByPath(path)
-    if (fs.exists(dst)) sess.read.parquet(path)
-    else sess.createDataFrame(
-      sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
+    fs.exists(dst)
   }
 
   def swapWrite(merged: DataFrame, path: String,

@@ -46,6 +46,14 @@ object GraftColumnBridge {
   def analyzed(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
+  /** Drain the async listener bus — measurement code that sums task
+    * metrics via a SparkListener must flush pending events before
+    * reading its accumulator (the bus delivers on its own thread).
+    * `listenerBus` is private[spark]; this package can reach it.
+    */
+  def waitForListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Release the executor storage blocks behind a `localCheckpoint()`ed
     * frame (Dataset.unpersist only touches the cache manager, not the
     * checkpoint RDD). Iterative algorithms that checkpoint per round
@@ -62,14 +70,6 @@ object GraftColumnBridge {
     * RDDs (the per-round superseded-label pattern in
     * pipeline/Dedup.scala is the intended shape).
     */
-  /** Drain the async listener bus — measurement code that sums task
-    * metrics via a SparkListener must flush pending events before
-    * reading its accumulator (the bus delivers on its own thread).
-    * `listenerBus` is private[spark]; this package can reach it.
-    */
-  def waitForListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
-
   def unpersistLocalCheckpoint(df: Dataset[_], blocking: Boolean = false): Unit =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

@@ -426,7 +426,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-ann-ac").toString + "/idx"
     val h = AnnIndex.build(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
       root, kIvf = 8, m = 16, ksub = 16, iters = 2)
-    AnnIndex.setAutoCompact(spark, root, 2)
+    graft.sources.AutoCompact.setPolicy(spark, root, 2)
     assert(AnnIndex.appendEpoch(h,
       emb.filter(col("vec_id") >= 300 && col("vec_id") < 350),
       "vec_id", "embedding", "ac1") === 50L)
@@ -464,7 +464,7 @@ class AnnIndexSpec extends AnyFunSuite {
     }
     val baseIdx = names(h.indexPath)
     val baseCen = names(graft.sources.IdCensus.rowsDir(root))
-    AnnIndex.setAutoCompact(spark, root, 1)
+    graft.sources.AutoCompact.setPolicy(spark, root, 1)
     assert(AnnIndex.appendEpoch(h,
       emb.filter(col("vec_id") >= 300 && col("vec_id") < 350),
       "vec_id", "embedding", "mf1") === 50L)

@@ -163,7 +163,7 @@ class LexIndexSpec extends AnyFunSuite {
   test("auto-compact: epochs past the threshold fold the index; search invariant; replay no-ops") {
     val r = root()
     LexIndex.create(corpus, "id", "text", r)
-    LexIndex.setAutoCompact(spark, r, 1)
+    graft.sources.AutoCompact.setPolicy(spark, r, 1)
     LexIndex.appendEpoch(Seq((9L, "spark extra")).toDF("id", "text"),
       "id", "text", r, "ac1")
     val got = hits(r)
@@ -193,7 +193,7 @@ class LexIndexSpec extends AnyFunSuite {
     }
     val basePost = names(r + "/postings")
     val baseCen = names(graft.sources.IdCensus.rowsDir(r))
-    LexIndex.setAutoCompact(spark, r, 1)
+    graft.sources.AutoCompact.setPolicy(spark, r, 1)
     LexIndex.appendEpoch(Seq((9L, "spark extra")).toDF("id", "text"),
       "id", "text", r, "mf1")
     // the fold ran (no tagged names anywhere) and it was MINOR: every

@@ -228,7 +228,7 @@ class LinkGraphSpec extends AnyFunSuite {
   test("auto-compact: threshold trigger folds the LSM, reads invariant, replay no-ops") {
     val r = root()
     LinkGraph.create(edgesDf(e1), "src", "dst", r, iters = 3)
-    LinkGraph.setAutoCompact(spark, r, 1)
+    graft.sources.AutoCompact.setPolicy(spark, r, 1)
     LinkGraph.appendEpoch(edgesDf(e2), "src", "dst", r, "e1")
     val expect = fullLevels(edgesDf(e1 ++ e2))
     assert(sortedLevels(LinkGraph.levels(spark, r)) === expect)
@@ -260,7 +260,7 @@ class LinkGraphSpec extends AnyFunSuite {
     // whole-store rewrite on every subsequent mutation (quadratic
     // lifetime I/O) — the growth trigger must not
     LinkGraph.create(edgesDf(e1), "src", "dst", r, iters = 3, rowsPerFile = 1L)
-    LinkGraph.setAutoCompact(spark, r, 6)
+    graft.sources.AutoCompact.setPolicy(spark, r, 6)
     LinkGraph.appendEpoch(edgesDf(e2), "src", "dst", r, "e1")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(r)

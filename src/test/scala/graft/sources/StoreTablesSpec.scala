@@ -1,0 +1,165 @@
+package graft.sources
+
+import java.nio.file.Files
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.{Tables, TestSpark}
+import graft.pipeline.{AnnIndex, Dedup, LexIndex, LinkGraph, Web}
+
+/** The one described fold, driven over every store's own table list:
+  * each store is built with at least two tagged epochs, then folded
+  * MINOR ([[StoreTables.foldOverrides]]) and MAJOR
+  * ([[StoreTables.recluster]]). After each step every table must keep
+  * its resolved row multiset, hold no tagged file name, respect its
+  * file cap, and (where it keeps one) carry a `_stats` artifact naming
+  * exactly its live files.
+  */
+class StoreTablesSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).resolve("store").toString
+
+  private def files(dir: String): Seq[String] =
+    ParquetSource.listParquetFiles(dir, spark.sparkContext.hadoopConfiguration)
+
+  private def resolved(t: StoreTables.Table): Seq[String] = {
+    spark.catalog.refreshByPath(t.dir)
+    t.resolve(spark.read.parquet(t.dir)).collect().map(_.toString).sorted.toSeq
+  }
+
+  private def tags(store: StoreTables.Store): Set[String] =
+    store.tables.flatMap(t => files(t.dir)).map(new Path(_).getName)
+      .filter(EpochFiles.isTagged).map(_.stripPrefix("part-").split("__")(0)).toSet
+
+  private def checkInvariants(store: StoreTables.Store, step: String,
+                              before: Seq[Seq[String]], prior: Set[String]): Unit =
+    store.tables.zip(before).foreach { case (t, rows) =>
+      val names = files(t.dir).map(new Path(_).getName)
+      assert(resolved(t) === rows, s"$step changed the resolved rows of ${t.dir}")
+      assert(!names.exists(EpochFiles.isTagged), s"$step left tagged files in ${t.dir}")
+      // the cap binds what the fold wrote (a census base is written
+      // uncapped at create; only folds cap it)
+      if (t.rowsPerFile > 0L) files(t.dir).filterNot(prior).foreach { f =>
+        val n = spark.read.parquet(f).count()
+        assert(n <= t.rowsPerFile, s"$step wrote a $n-row file past the cap: $f")
+      }
+      if (t.stats) {
+        val stats = new Path(t.dir, "_stats").toString
+        spark.catalog.refreshByPath(stats)
+        val statted = spark.read.parquet(stats).select("file").as[String].collect()
+          .map(f => new Path(f).getName).toSet
+        assert(statted === names.toSet, s"$step left _stats out of step in ${t.dir}")
+      }
+    }
+
+  /** Build, then fold minor and major, checking after each step. */
+  private def foldBoth(store: () => StoreTables.Store): Unit = {
+    val s = store()
+    assert(tags(s).size >= 2, s"expected >= 2 tagged epochs, got ${tags(s)}")
+    val before = s.tables.map(resolved)
+    def all() = s.tables.flatMap(t => files(t.dir)).toSet
+    val preMinor = all()
+    StoreTables.foldOverrides(spark, s)
+    checkInvariants(store(), "minor fold", before, preMinor)
+    val preMajor = all()
+    StoreTables.recluster(spark, s)
+    checkInvariants(store(), "major fold", before, preMajor)
+  }
+
+  private val docs = Seq(
+    (1L, "the quick brown fox jumps"), (2L, "a lazy dog sleeps all day"),
+    (3L, "spark reads parquet files"), (4L, "the quick brown cat naps"),
+    (5L, "parquet files carry footers"), (6L, "dogs and foxes never rest"))
+  private def batch(ids: Long*) = ids.map(i => (i, s"doc $i words of doc ${i % 3}"))
+    .toDF("id", "text")
+
+  test("NearDupStore: three bucket/id-clustered tables fold both tiers") {
+    val p = tmp("st-ndstore")
+    Dedup.NearDupStore.create(docs.toDF("id", "text"), "id", "text", p,
+      bands = 4, rowsPerBand = 2, rowsPerFile = 5L)
+    Dedup.NearDupStore.advanceStaged(batch(10, 11, 12), "id", "text", p, "e1")
+    Dedup.NearDupStore.advanceStaged(batch(13, 14), "id", "text", p, "e2")
+    foldBoth(() => Dedup.NearDupStore.tables(spark, p))
+  }
+
+  test("AnnIndex: code frame and id census fold both tiers") {
+    val p = tmp("st-ann")
+    val emb = Tables.load(spark, TestSpark.sf, "embeddings").filter(col("vec_id") < 120)
+    val h = AnnIndex.build(emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
+      p, kIvf = 4, m = 16, ksub = 16, iters = 2, rowsPerFile = 16L)
+    AnnIndex.appendEpoch(h, emb.filter(col("vec_id") % 4 === 0 && col("vec_id") < 60),
+      "vec_id", "embedding", "e1")
+    AnnIndex.appendEpoch(h, emb.filter(col("vec_id") % 4 === 0 && col("vec_id") >= 60),
+      "vec_id", "embedding", "e2")
+    foldBoth(() => AnnIndex.tables(spark, p))
+  }
+
+  test("LexIndex: postings and id census fold both tiers; corpus stats fold along") {
+    val p = tmp("st-lex")
+    LexIndex.create(docs.toDF("id", "text"), "id", "text", p, rowsPerFile = 2L)
+    LexIndex.appendEpoch(batch(10, 11), "id", "text", p, "e1")
+    LexIndex.appendEpoch(batch(12, 13), "id", "text", p, "e2")
+    val stats = LexIndex.readCorpusStats(spark, p)
+    foldBoth(() => LexIndex.tables(spark, p))
+    assert(LexIndex.readCorpusStats(spark, p) === stats)
+    val corpus = new Path(p, "_corpus")
+    assert(corpus.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(corpus).map(_.getPath.getName).filter(_.endsWith(".json"))
+      .toSeq === Seq("base.json"))
+  }
+
+  test("LinkGraph: edges, LSM overrides, labels and trust levels fold both tiers") {
+    val p = tmp("st-graph")
+    LinkGraph.create(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 1L).toDF("src", "dst"),
+      "src", "dst", p, iters = 3, rowsPerFile = 2L)
+    LinkGraph.createComponents(spark, p)
+    LinkGraph.registerTrustRank(spark, p, Seq(1L).toDF("id"))
+    LinkGraph.appendEpoch(Seq(2L -> 4L, 5L -> 1L).toDF("src", "dst"), "src", "dst", p, "e1")
+    LinkGraph.appendEpoch(Seq(5L -> 6L, 6L -> 2L).toDF("src", "dst"), "src", "dst", p, "e2")
+    val s = LinkGraph.tables(spark, p)
+    assert(s.tables.size === 7, "out, in, deg, levels, labid, labrep, one trust set")
+    foldBoth(() => LinkGraph.tables(spark, p))
+  }
+
+  test("IdCensus: rowsPerFile <= 0 and a positive cap both fold") {
+    val p = tmp("st-ids")
+    IdCensus.create(spark, p, spark.range(20).toDF("id"))
+    IdCensus.appendEpoch(spark, p, spark.range(20, 27).toDF("id"), "e1")
+    IdCensus.appendEpoch(spark, p, spark.range(27, 30).toDF("id"), "e2")
+    foldBoth(() => StoreTables.Store(p, Seq(IdCensus.table(p, 0L))))
+    IdCensus.appendEpoch(spark, p, spark.range(30, 37).toDF("id"), "e3")
+    IdCensus.appendEpoch(spark, p, spark.range(37, 40).toDF("id"), "e4")
+    foldBoth(() => StoreTables.Store(p, Seq(IdCensus.table(p, 3L))))
+  }
+
+  test("IdCensus: the uncapped minor fold merges all overrides into one file") {
+    val p = tmp("st-ids-one")
+    IdCensus.create(spark, p, spark.range(20).toDF("id"))
+    IdCensus.appendEpoch(spark, p, spark.range(20, 27).toDF("id"), "e1")
+    IdCensus.appendEpoch(spark, p, spark.range(27, 30).toDF("id"), "e2")
+    val base = files(IdCensus.rowsDir(p)).toSet
+    StoreTables.foldOverrides(spark, StoreTables.Store(p, Seq(IdCensus.table(p, 0L))))
+    val after = files(IdCensus.rowsDir(p)).toSet
+    assert(base.filterNot(f => EpochFiles.isTagged(new Path(f).getName)).subsetOf(after))
+    assert((after -- base).size === 1, "one shard for 10 override rows, no cap")
+  }
+
+  test("Web line census: the non-identity resolve keeps occ sums through both tiers") {
+    val p = tmp("st-lines")
+    val lines = Seq((1L, "alpha line\nbeta line\ngamma"), (2L, "beta line\ndelta"))
+    Web.createLineCensus(lines.toDF("id", "text"), "id", "text", p)
+    Web.advanceStagedLineCensus(Seq((3L, "alpha line\nepsilon")).toDF("id", "text"),
+      "id", "text", p, "e1")
+    Web.advanceStagedLineCensus(Seq((4L, "beta line\nalpha line")).toDF("id", "text"),
+      "id", "text", p, "e2")
+    val t = Web.lineCensusTables(p).tables.head
+    assert(!t.stats && t.rowsPerFile === 0L)
+    val occ = t.resolve(spark.read.parquet(t.dir))
+      .filter(col("line_hash") === md5(lit("alpha line"))).select("occ").as[Long].head()
+    assert(occ === 3L)
+    foldBoth(() => Web.lineCensusTables(p))
+  }
+}

@@ -153,7 +153,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
         .toDF("doc_id", "text"),
       "doc_id", "text", store)
-    NearDupStore.setAutoCompact(spark, store, 1)
+    graft.sources.AutoCompact.setPolicy(spark, store, 1)
     def run(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamingDedup.processEpoch(batch, id, "doc_id", "text", store, out, 9, 10)
     run(Seq(

@@ -89,7 +89,7 @@ class StreamingWebSpec extends AnyFunSuite {
 
   test("post-marker auto-compact folds the census without changing probes or replay safety") {
     val (census, out) = setup()
-    Web.setLineCensusAutoCompact(spark, census, 1)
+    graft.sources.AutoCompact.setPolicy(spark, census, 1)
     StreamingWeb.processEpoch(b0.toDF("id", "text"), 0L, "id", "text", census, out, 2)
     StreamingWeb.processEpoch(b1.toDF("id", "text"), 1L, "id", "text", census, out, 2)
     val whole = Web.lineDedup((b0 ++ b1).toDF("id", "text"), "id", "text")
