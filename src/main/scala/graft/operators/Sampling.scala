@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Prefix60
 
 /** Deterministic sampling and dataset splitting for training corpora.
   *
@@ -19,16 +20,28 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Stable bucket in [0, buckets) from the key column. NULL keys map
-    * to the empty string's bucket, so `deterministicSample` and `split`
-    * treat them identically (dropping them in one and labelling them in
-    * the other would break rate composition).
+  /** The top 60 bits of md5(key as a string) as a non-negative long —
+    * the first 15 hex chars of `md5(key)` read as a number, computed
+    * straight from the digest bytes by the codegen'd
+    * [[graft.functions.Md5Prefix60]] kernel (one MD5 engine per
+    * partition, no hex string, substring or base conversion). NULL keys
+    * hash as the empty string.
+    */
+  private def keyHash(key: Column): Column =
+    GraftColumnBridge.column(Md5Prefix60(GraftColumnBridge.expression(
+      coalesce(key.cast("string"), lit("")))))
+
+  /** Stable bucket in [0, buckets) from the key column: [[keyHash]]
+    * mod `buckets`, bit-identical to the portable formula
+    * `pmod(conv(substring(md5(coalesce(cast(key as string), '')), 1, 15),
+    * 16, 10), buckets)` any engine can evaluate. NULL keys map to the
+    * empty string's bucket, so `deterministicSample` and `split` treat
+    * them identically (dropping them in one and labelling them in the
+    * other would break rate composition).
     */
   def bucketOf(key: Column, buckets: Int): Column = {
     require(buckets > 0, "buckets must be positive")
-    // 15 hex chars = 60 bits, fits a positive long exactly
-    pmod(conv(substring(md5(coalesce(key.cast("string"), lit(""))), 1, 15), 16, 10).cast("long"),
-      lit(buckets.toLong))
+    pmod(keyHash(key), lit(buckets.toLong))
   }
 
   /** Keep rows whose bucket falls in [0, rateNum) of `rateDenom`
@@ -198,8 +211,7 @@ object Sampling {
       .select(col(groupCol).as("__grp_key"), col("__grp_n"),
         floor(col("__grp_w") * col("__t_max") / lit(wDenom.toLong)).cast("long")
           .as("__grp_quota"))
-    val h = conv(substring(md5(coalesce(col(keyCol).cast("string"), lit(""))), 1, 15), 16, 10)
-      .cast("long")
+    val h = keyHash(col(keyCol))
     df.join(broadcast(quotas), col(groupCol) <=> col("__grp_key"))
       .filter(pmod(h, col("__grp_n")) < col("__grp_quota"))
       .drop("__grp_key", "__grp_n", "__grp_quota")
@@ -239,8 +251,7 @@ object Sampling {
     require(!df.columns.exists(reserved.contains),
       s"input may not use reserved columns ${reserved.mkString(", ")}")
     import org.apache.spark.sql.expressions.Window
-    val h = conv(substring(md5(coalesce(col(keyCol).cast("string"), lit(""))), 1, 15), 16, 10)
-      .cast("long") // 60 bits: exact in a long, never negative
+    val h = keyHash(col(keyCol)) // 60 bits: exact in a long, never negative
     val shiftBits = 60 - Integer.numberOfTrailingZeros(shards)
     val t = greatest(coalesce(col(tokenCol).cast("long"), lit(0L)), lit(0L))
     val rows = df.withColumn("__h", h)

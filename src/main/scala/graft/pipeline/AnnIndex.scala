@@ -133,7 +133,7 @@ object AnnIndex {
     graft.sources.FileStatsIndex.buildAndSave(spark, s"$root/index", Seq("bucket"))
     // id census sidecar: the summary the delta anti-join probes instead
     // of the full index id column (IdCensus's batch-proportional read)
-    graft.sources.IdCensus.create(spark, root, indexIds(spark, root))
+    graft.sources.IdCensus.create(spark, root, indexIds(spark, root), rowsPerFile)
     Handle(root, ivf, pq)
   }
 
@@ -178,9 +178,10 @@ object AnnIndex {
     val conf = spark.sparkContext.hadoopConfiguration
     val before = graft.sources.ParquetSource
       .listParquetFiles(handle.indexPath, conf).toSet
+    val g = rowsPerFileOf(spark, handle.root)
     encoded(newRows, idCol, vecCol, handle.ivf, handle.pq)
       .repartition(col("bucket")).sortWithinPartitions("bucket")
-      .write.option("maxRecordsPerFile", rowsPerFileOf(spark, handle.root))
+      .write.option("maxRecordsPerFile", g)
       .mode("append").parquet(handle.indexPath)
     spark.catalog.refreshByPath(handle.indexPath)
     // stats advance over EXACTLY the appended files (listing diff →
@@ -190,7 +191,7 @@ object AnnIndex {
         .filterNot(before.contains))
     if (graft.sources.IdCensus.exists(spark, handle.root))
       graft.sources.IdCensus.appendPlain(spark, handle.root,
-        censusRows(newRows, idCol, vecCol, handle.ivf))
+        censusRows(newRows, idCol, vecCol, handle.ivf), g)
   }
 
   /** Delta-detecting append (the Dedup.newAgainst shape): rows whose id
@@ -204,7 +205,8 @@ object AnnIndex {
     */
   def appendNew(handle: Handle, rows: DataFrame, idCol: String, vecCol: String): Long = {
     val spark = rows.sparkSession
-    graft.sources.IdCensus.ensureFrom(spark, handle.root, indexIds(spark, handle.root))
+    graft.sources.IdCensus.ensureFrom(spark, handle.root, indexIds(spark, handle.root),
+      rowsPerFileOf(spark, handle.root))
     val known = graft.sources.IdCensus.known(spark, handle.root, rows, idCol)
       .select(col("id").as(idCol))
     val fresh = rows.join(known, Seq(idCol), "left_anti").persist()
@@ -237,7 +239,8 @@ object AnnIndex {
     graft.sources.StoreTables.recover(spark, tables(spark, handle.root))
     graft.sources.EpochFiles.retire(spark, handle.indexPath, tag)
     graft.sources.IdCensus.retireEpoch(spark, handle.root, tag)
-    graft.sources.IdCensus.ensureFrom(spark, handle.root, indexIds(spark, handle.root))
+    val g = rowsPerFileOf(spark, handle.root)
+    graft.sources.IdCensus.ensureFrom(spark, handle.root, indexIds(spark, handle.root), g)
     // membership via the census sidecar: a stats-pruned point-lookup
     // read whose cost follows the BATCH (flat under index growth) —
     // never the full index id column + distinct this path used to pay
@@ -251,7 +254,7 @@ object AnnIndex {
         val stage = s"${handle.root}/_stage/$tag"
         encoded(fresh, idCol, vecCol, handle.ivf, handle.pq)
           .repartition(col("bucket")).sortWithinPartitions("bucket")
-          .write.option("maxRecordsPerFile", rowsPerFileOf(spark, handle.root))
+          .write.option("maxRecordsPerFile", g)
           .mode("overwrite").parquet(stage)
         val published = graft.sources.EpochFiles.publish(spark, stage,
           handle.indexPath, tag)
@@ -263,7 +266,7 @@ object AnnIndex {
         // the two publishes is repaired by replaying the tag (both
         // retires above restore the pre-epoch pair)
         graft.sources.IdCensus.appendEpoch(spark, handle.root,
-          censusRows(fresh, idCol, vecCol, handle.ivf), tag)
+          censusRows(fresh, idCol, vecCol, handle.ivf), tag, g)
       }
       // settled — the auto-compact policy may run the MINOR fold
       // (override files only, I/O ∝ override bytes; each subset swap
@@ -292,7 +295,7 @@ object AnnIndex {
     graft.sources.FileStatsIndex.update(spark, s"$root/index", Seq("bucket"))
     // the census accretes one small file per epoch just like the index
     // — fold it (and rebuild its stats artifact) on the same cadence
-    graft.sources.IdCensus.compact(spark, root)
+    graft.sources.IdCensus.compact(spark, root, rowsPerFileOf(spark, root))
     r
   }
 
@@ -450,7 +453,8 @@ object AnnIndex {
     * itself.
     */
   def rebuildIds(spark: SparkSession, root: String): Unit =
-    graft.sources.IdCensus.create(spark, root, indexIds(spark, root))
+    graft.sources.IdCensus.create(spark, root, indexIds(spark, root),
+      rowsPerFileOf(spark, root))
 
   /** MAJOR fold: restore global bucket clustering (and the census's id
     * clustering) after ingest epochs — see [[graft.sources.StoreTables]].

@@ -138,7 +138,7 @@ object LexIndex {
     */
   private def ensureSidecars(spark: SparkSession, root: String): Unit = {
     graft.sources.IdCensus.ensureFrom(spark, root,
-      censusOf(spark.read.parquet(postingsDir(root))))
+      censusOf(spark.read.parquet(postingsDir(root))), rowsPerFileOf(spark, root))
     val dir = new org.apache.hadoop.fs.Path(corpusDir(root))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) {
@@ -239,7 +239,7 @@ object LexIndex {
     // sidecars from the WRITTEN postings (the ground truth): id census
     // for batch-proportional delta checks, pinned (N, Σdl) for BM25
     graft.sources.IdCensus.create(spark, root,
-      censusOf(spark.read.parquet(postingsDir(root))))
+      censusOf(spark.read.parquet(postingsDir(root))), rowsPerFile)
     val (n, sumdl) = statsFromCensus(spark, root)
     writeCorpusStats(spark, root, "base", n, sumdl)
     graft.sources.StoreTables.writeSmall(spark, metaPath(root),
@@ -300,7 +300,7 @@ object LexIndex {
       try {
         val r = cen.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).collect()(0)
         if (r.getLong(0) > 0) {
-          graft.sources.IdCensus.appendEpoch(spark, root, cen, tag)
+          graft.sources.IdCensus.appendEpoch(spark, root, cen, tag, t.rowsPerFile)
           writeCorpusStats(spark, root, s"epoch-$tag", r.getLong(0), r.getLong(1))
         }
       } finally { cen.unpersist(); () }
@@ -343,7 +343,7 @@ object LexIndex {
   def rebuildSidecars(spark: SparkSession, root: String): Unit = {
     requireIndex(spark, root)
     graft.sources.IdCensus.create(spark, root,
-      censusOf(spark.read.parquet(postingsDir(root))))
+      censusOf(spark.read.parquet(postingsDir(root))), rowsPerFileOf(spark, root))
     val dir = new org.apache.hadoop.fs.Path(corpusDir(root))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir)) fs.delete(dir, true)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /** Small-file compaction (the OPTIMIZE maintenance op): streaming
   * sinks and per-batch appends (CdcApply targets, SketchMaintenance
@@ -25,41 +25,45 @@ import org.apache.hadoop.fs.Path
   * without concurrent READERS (concurrent writers are out of contract,
   * as for any in-place maintenance op).
   *
-  * Row-count verified: each group's replacement is re-read and counted
-  * against the originals before anything is deleted.
+  * Row-count verified: each group's replacement footer is counted
+  * against the originals' footers before anything is deleted.
+  *
+  * Mixed-schema groups keep every column: each group's footers are
+  * read once on the driver; one shared schema is pinned, differing
+  * ones are merged (a type conflict aborts before the swap).
   */
 object Compaction {
 
-  final case class Plan(groups: Seq[Seq[String]], untouched: Seq[String])
+  /** Files by their listing status: groups to merge, files left alone. */
+  final case class Plan(groups: Seq[Seq[FileStatus]], untouched: Seq[FileStatus])
   final case class Result(groupsCompacted: Int, filesRemoved: Int,
                           filesCreated: Int, rowsMoved: Long)
 
   /** Bin-pack files smaller than `smallBytes` into groups of at most
     * `targetBytes`, in NAME order (sorted layouts keep their
     * clustering: adjacent files merge with adjacent key ranges).
-    * Single-file groups stay untouched — nothing to gain.
+    * Single-file groups stay untouched — nothing to gain. Lengths come
+    * from the listing itself, with no second stat per file.
     */
   def plan(spark: SparkSession, dir: String, targetBytes: Long,
            smallBytes: Long): Plan = {
     require(targetBytes > 0 && smallBytes > 0 && smallBytes <= targetBytes)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    val sized = ParquetSource.listParquetFiles(dir, conf)
-      .map(f => f -> fs.getFileStatus(new Path(f)).getLen)
-    val (small, big) = sized.partition(_._2 < smallBytes)
-    val groups = scala.collection.mutable.ListBuffer[Seq[String]]()
-    var cur = scala.collection.mutable.ListBuffer[String]()
+    val (small, big) = ParquetSource
+      .listParquetStatuses(dir, spark.sparkContext.hadoopConfiguration)
+      .partition(_.getLen < smallBytes)
+    val groups = scala.collection.mutable.ListBuffer[Seq[FileStatus]]()
+    var cur = scala.collection.mutable.ListBuffer[FileStatus]()
     var curBytes = 0L
-    small.foreach { case (f, len) =>
-      if (cur.nonEmpty && curBytes + len > targetBytes) {
-        groups += cur.toSeq; cur = scala.collection.mutable.ListBuffer[String]()
+    small.foreach { f =>
+      if (cur.nonEmpty && curBytes + f.getLen > targetBytes) {
+        groups += cur.toSeq; cur = scala.collection.mutable.ListBuffer[FileStatus]()
         curBytes = 0L
       }
-      cur += f; curBytes += len
+      cur += f; curBytes += f.getLen
     }
     if (cur.nonEmpty) groups += cur.toSeq
     val (real, lone) = groups.toSeq.partition(_.size >= 2)
-    Plan(real, big.map(_._1) ++ lone.flatten)
+    Plan(real, big ++ lone.flatten)
   }
 
   /** Complete or roll back any interrupted group swaps (see object
@@ -106,21 +110,32 @@ object Compaction {
               smallBytes: Long = 0L): Result = {
     val small = if (smallBytes > 0) smallBytes else targetBytes / 2
     recover(spark, dir)
-    val p = plan(spark, dir, targetBytes, small)
+    val groups = plan(spark, dir, targetBytes, small).groups
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dir).getFileSystem(conf)
     var removed = 0
     var rows = 0L
-    p.groups.zipWithIndex.foreach { case (group, i) =>
-      val expected = spark.read.parquet(group: _*).count()
+    groups.zipWithIndex.foreach { case (statuses, i) =>
+      val group = statuses.map(_.getPath.toString)
+      // the footers give the row counts and the schemas with no job; a
+      // schema-less read would take the FIRST file's schema and silently
+      // drop the columns only later files carry
+      val footers = statuses.map(ParquetSource.footer(conf, _))
+      val expected = footers.map(_.rows).sum
+      val reader = footers.map(_.schema).distinct match {
+        case Seq(Some(s)) => spark.read.schema(s)
+        // differing (or foreign) schemas: merge them; a type conflict
+        // fails here, before anything is swapped
+        case _ => spark.read.option("mergeSchema", "true")
+      }
       // one replacement file per group, staged then sworn in
       val staging = new Path(dir, s"_compact_staging_$i")
-      spark.read.parquet(group: _*).coalesce(1)
+      reader.parquet(group: _*).coalesce(1)
         .write.mode("overwrite").parquet(staging.toString)
       val part = fs.listStatus(staging)
-        .map(_.getPath).find(_.getName.endsWith(".parquet"))
+        .find(_.getPath.getName.endsWith(".parquet"))
         .getOrElse(throw new IllegalStateException(s"no parquet written under $staging"))
-      val got = spark.read.parquet(part.toString).count()
+      val got = ParquetSource.footer(conf, part).rows
       require(got == expected,
         s"compaction group $i row mismatch: $got != $expected — aborting, originals kept")
       val target = new Path(dir, s"part-compacted-$i-${java.util.UUID.randomUUID()}.parquet")
@@ -136,8 +151,8 @@ object Compaction {
       // returning false, and deleting the originals after a failed move
       // would destroy the only copy — abort with originals intact (the
       // next recover() drops the marker since the target never appeared)
-      require(fs.rename(part, target),
-        s"rename $part -> $target failed — aborting swap, originals kept")
+      require(fs.rename(part.getPath, target),
+        s"rename ${part.getPath} -> $target failed — aborting swap, originals kept")
       group.foreach(o => fs.delete(new Path(o), false))
       fs.delete(marker, false)
       fs.delete(staging, true)
@@ -150,7 +165,7 @@ object Compaction {
     // the swap replaced files wholesale: evict this session's listing
     // cache (never expires by default) so subsequent reads of `dir`
     // can't serve the pre-compaction file list — see SwapStore
-    if (p.groups.nonEmpty) spark.catalog.refreshByPath(dir)
-    Result(p.groups.size, removed, p.groups.size, rows)
+    if (groups.nonEmpty) spark.catalog.refreshByPath(dir)
+    Result(groups.size, removed, groups.size, rows)
   }
 }

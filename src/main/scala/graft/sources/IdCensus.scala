@@ -53,7 +53,7 @@ object IdCensus {
     * the resolve is identity. Folds cap files (and shard the minor
     * fold) at the owning index's `rowsPerFile`; `rowsPerFile ≤ 0`
     * leaves sizing to the shard count alone — one minor-fold shard,
-    * no cap (the standalone [[compact]]).
+    * no cap (a census no index owns).
     */
   def table(root: String, rowsPerFile: Long): StoreTables.Table =
     StoreTables.Table(rowsDir(root), "id",
@@ -61,10 +61,14 @@ object IdCensus {
       shardRows = if (rowsPerFile > 0L) rowsPerFile else Long.MaxValue)
 
   /** Overwrite the census with `rows` (column `id` + optional payload)
-    * and build its stats artifact.
+    * and build its stats artifact. Every writer here takes the owning
+    * index's `rowsPerFile` and caps its files at it (≤ 0: no cap), so a
+    * probe never sweeps more than a granule, folded or not.
     */
-  def create(spark: SparkSession, root: String, rows: DataFrame): Unit = {
-    table(root, 0L).clustered(rows).write.mode("overwrite").parquet(rowsDir(root))
+  def create(spark: SparkSession, root: String, rows: DataFrame,
+             rowsPerFile: Long = 0L): Unit = {
+    val t = table(root, rowsPerFile)
+    t.capped(t.clustered(rows)).mode("overwrite").parquet(rowsDir(root))
     FileStatsIndex.buildAndSave(spark, rowsDir(root), Seq("id"))
     spark.catalog.refreshByPath(rowsDir(root))
   }
@@ -73,8 +77,9 @@ object IdCensus {
     * index's ground truth iff no census exists yet. `derive` is only
     * evaluated (and only pays its scan) on that first touch.
     */
-  def ensureFrom(spark: SparkSession, root: String, derive: => DataFrame): Unit =
-    if (!exists(spark, root)) create(spark, root, derive)
+  def ensureFrom(spark: SparkSession, root: String, derive: => DataFrame,
+                 rowsPerFile: Long = 0L): Unit =
+    if (!exists(spark, root)) create(spark, root, derive, rowsPerFile)
 
   /** Publish an epoch's new ids under the tag's deterministic file
     * names (the [[EpochFiles]] discipline — re-publishing a tag
@@ -82,9 +87,10 @@ object IdCensus {
     * artifact over the fresh files only (batch-proportional).
     */
   def appendEpoch(spark: SparkSession, root: String, rows: DataFrame,
-                  tag: String): Unit = {
+                  tag: String, rowsPerFile: Long = 0L): Unit = {
     val stage = stageDir(root, tag)
-    table(root, 0L).clustered(rows).write.mode("overwrite").parquet(stage)
+    val t = table(root, rowsPerFile)
+    t.capped(t.clustered(rows)).mode("overwrite").parquet(stage)
     val published = EpochFiles.publish(spark, stage, rowsDir(root), tag)
     // stats advance over EXACTLY the published files — one small job
     // (the write-pass discipline), never an artifact diff per epoch
@@ -95,10 +101,12 @@ object IdCensus {
   /** Plain (non-tagged) append for the plain index-append path: same
     * clustered layout and stats advance, no replay protocol.
     */
-  def appendPlain(spark: SparkSession, root: String, rows: DataFrame): Unit = {
+  def appendPlain(spark: SparkSession, root: String, rows: DataFrame,
+                  rowsPerFile: Long = 0L): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val before = ParquetSource.listParquetFiles(rowsDir(root), conf).toSet
-    table(root, 0L).clustered(rows).write.mode("append").parquet(rowsDir(root))
+    val t = table(root, rowsPerFile)
+    t.capped(t.clustered(rows)).mode("append").parquet(rowsDir(root))
     spark.catalog.refreshByPath(rowsDir(root))
     val fresh = ParquetSource.listParquetFiles(rowsDir(root), conf)
       .filterNot(before.contains)
@@ -155,6 +163,6 @@ object IdCensus {
     * files, destroying the per-tag names an in-flight replay would
     * retire.
     */
-  def compact(spark: SparkSession, root: String): Unit =
-    StoreTables.recluster(spark, StoreTables.Store(root, Seq(table(root, 0L))))
+  def compact(spark: SparkSession, root: String, rowsPerFile: Long = 0L): Unit =
+    StoreTables.recluster(spark, StoreTables.Store(root, Seq(table(root, rowsPerFile))))
 }

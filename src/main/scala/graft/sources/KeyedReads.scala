@@ -145,42 +145,19 @@ object KeyedReads {
     * version.
     */
   def schemaFor(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
-    val files = ParquetSource
-      .listParquetFiles(path, spark.sparkContext.hadoopConfiguration)
-    val names = files.map(pathOf).sorted.mkString("|")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = ParquetSource.listParquetStatuses(path, conf)
+    val names = files.map(f => pathOf(f.getPath.toString)).sorted.mkString("|")
     schemaCache.get(path) match {
       case Some((sig, s)) if sig == names => s
       case _ =>
-        val s = embeddedSchema(spark, files)
+        val s = ParquetSource.firstFileSchema(conf, files)
           .getOrElse(spark.read.parquet(path).schema)
         if (schemaCache.size > 256) schemaCache.clear()
         schemaCache(path) = (names, s)
         s
     }
   }
-
-  /** The Spark StructType embedded in the first file's footer metadata,
-    * read driver-side (one footer, ~ms, no job) — None when the file
-    * was not written by Spark. All files of one engine-published table
-    * share a writer and therefore a schema, so one footer suffices;
-    * mixed-schema stores go through mergeSchema reads, which never call
-    * this.
-    */
-  private def embeddedSchema(spark: SparkSession, files: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] =
-    files.headOption.flatMap { f =>
-      try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata"))
-          .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
 
   // refcounted raise of the read-shaping confs (exact-IN pushdown +
   // serial-listing threshold): concurrent pruned reads (Par-fanned

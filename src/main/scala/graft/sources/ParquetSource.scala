@@ -1,8 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet source with resumable file-level progress (reference:
   * readers/Parquet.scala:40-170 + readers/ParquetSavepointsManager).
@@ -18,7 +21,13 @@ object ParquetSource {
   /** Recursive listing of .parquet files under a root, sorted for
     * determinism (reference: readers/Parquet.scala:148-170).
     */
-  def listParquetFiles(root: String, conf: Configuration): Seq[String] = {
+  def listParquetFiles(root: String, conf: Configuration): Seq[String] =
+    listParquetStatuses(root, conf).map(_.getPath.toString)
+
+  /** [[listParquetFiles]] with each file's status as the listing
+    * returned it — lengths and footers need no second stat per file.
+    */
+  def listParquetStatuses(root: String, conf: Configuration): Seq[FileStatus] = {
     val path = new Path(root)
     val fs = path.getFileSystem(conf)
     // metadata conventions shared with Spark's own FileIndex: _- and
@@ -27,16 +36,45 @@ object ParquetSource {
     // Spark's hidden-path filter, so the listing must apply it itself
     def hidden(p: Path): Boolean =
       p.getName.startsWith("_") || p.getName.startsWith(".")
-    def walk(p: Path, isRoot: Boolean): Seq[String] = {
-      if (!isRoot && hidden(p)) return Seq.empty
-      val status = fs.getFileStatus(p)
-      if (status.isDirectory)
-        fs.listStatus(p).toIndexedSeq.flatMap(s => walk(s.getPath, isRoot = false))
-      else if (p.getName.endsWith(".parquet")) Seq(p.toString)
+    def walk(status: FileStatus, isRoot: Boolean): Seq[FileStatus] = {
+      val p = status.getPath
+      if (!isRoot && hidden(p)) Seq.empty
+      else if (status.isDirectory)
+        fs.listStatus(p).toIndexedSeq.flatMap(walk(_, isRoot = false))
+      else if (p.getName.endsWith(".parquet")) Seq(status)
       else Seq.empty
     }
-    walk(path, isRoot = true).sorted
+    walk(fs.getFileStatus(path), isRoot = true).sortBy(_.getPath.toString)
   }
+
+  /** What one parquet footer says about its file: the row count (the
+    * metadata a parquet `count(*)` reads) and the Spark schema every
+    * Spark writer embeds (`org.apache.spark.sql.parquet.row.metadata`)
+    * — None for files Spark did not write.
+    */
+  final case class Footer(rows: Long, schema: Option[StructType])
+
+  /** Read one footer on the driver: no Spark job. */
+  def footer(conf: Configuration, file: FileStatus): Footer = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try Footer(r.getRecordCount,
+      Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
+    finally r.close()
+  }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark infers for a schema-less, non-merging read of
+    * `files`: the first file's embedded schema (Spark's own choice),
+    * found from one footer. None when that file was not written by
+    * Spark — the caller then lets Spark infer.
+    */
+  def firstFileSchema(conf: Configuration, files: Seq[FileStatus]): Option[StructType] =
+    files.headOption.flatMap { f =>
+      try footer(conf, f).schema
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
 
   /** Result of a driver-side small-parquet read ([[localRows]]). */
   sealed trait LocalRead
@@ -145,8 +183,9 @@ object ParquetSource {
   def processInBatches(spark: SparkSession, root: String, skipFiles: Set[String],
                        batchSize: Int, mergeSchema: Boolean = false)(
       process: DataFrame => Unit)(onBatchDone: Seq[String] => Unit): Unit = {
-    val all = listParquetFiles(root, spark.sparkContext.hadoopConfiguration)
-    val remaining = all.filterNot(skipFiles.contains)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val all = listParquetStatuses(root, conf)
+    val remaining = all.filterNot(st => skipFiles.contains(st.getPath.toString))
     // Schema-evolved tables: union the per-file schemas ONCE across EVERY
     // listed file — including already-skipped ones (footer reads only —
     // no data scan) — then pin that schema on each batch read. Without
@@ -157,14 +196,19 @@ object ParquetSource {
     // remaining-only union would append a NARROWER schema than the
     // pre-crash batches did, leaving the target mixed-schema (a plain
     // read of it then nondeterministically drops the evolved column).
-    val pinned: Option[org.apache.spark.sql.types.StructType] =
+    val pinned: Option[StructType] =
       if (mergeSchema && all.nonEmpty)
-        Some(spark.read.option("mergeSchema", "true").parquet(all: _*).schema)
+        Some(spark.read.option("mergeSchema", "true")
+          .parquet(all.map(_.getPath.toString): _*).schema)
       else None
     remaining.grouped(batchSize).foreach { batch =>
-      val reader = pinned.fold(spark.read)(s => spark.read.schema(s))
-      process(reader.parquet(batch: _*))
-      onBatchDone(batch)
+      // without merging, pin what Spark would infer anyway — the first
+      // file's embedded schema — and skip its footer-inference job
+      val reader = pinned.orElse(firstFileSchema(conf, batch))
+        .fold(spark.read)(s => spark.read.schema(s))
+      val files = batch.map(_.getPath.toString)
+      process(reader.parquet(files: _*))
+      onBatchDone(files)
     }
   }
 }

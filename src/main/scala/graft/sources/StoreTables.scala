@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The one fold every persisted LSM store runs (NearDupStore, AnnIndex,
@@ -63,6 +63,10 @@ object StoreTables {
     /** Range-clustered on `key` into `shards` partitions. */
     def clustered(df: DataFrame, shards: Int): DataFrame =
       df.repartitionByRange(shards, col(key)).sortWithinPartitions(sortCols: _*)
+
+    /** `df`'s writer under this table's file cap. */
+    def capped(df: DataFrame): DataFrameWriter[Row] =
+      if (rowsPerFile > 0L) df.write.option("maxRecordsPerFile", rowsPerFile) else df.write
   }
 
   /** A store: its table-dir root (where the auto-compact policy, marker
@@ -83,12 +87,6 @@ object StoreTables {
   def shardsFor(nRows: Long, shardRows: Long): Int =
     math.max(1L, math.min(200L, (nRows - 1L) / math.max(1L, shardRows) + 1L)).toInt
 
-  private def write(df: DataFrame, dir: String, rowsPerFile: Long): Unit = {
-    val w = df.write
-    (if (rowsPerFile > 0L) w.option("maxRecordsPerFile", rowsPerFile) else w)
-      .mode("overwrite").parquet(dir)
-  }
-
   /** MINOR fold of every table, then the store's sidecar fold. */
   def foldOverrides(spark: SparkSession, store: Store): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -96,9 +94,8 @@ object StoreTables {
       val tagged = ParquetSource.listParquetFiles(t.dir, conf)
         .filter(f => EpochFiles.isTagged(new Path(f).getName))
       val ran = TargetedDelete.foldFiles(spark, t.dir, tagged, t.resolve,
-        (df, staging) =>
-          write(t.clustered(df, shardsFor(df.count(), t.shardRows)), staging,
-            t.rowsPerFile))
+        (df, staging) => t.capped(t.clustered(df, shardsFor(df.count(), t.shardRows)))
+          .mode("overwrite").parquet(staging))
       if (ran) {
         if (t.stats) FileStatsIndex.update(spark, t.dir, Seq(t.key))
         spark.catalog.refreshByPath(t.dir)

@@ -94,4 +94,44 @@ class CompactionSpec extends AnyFunSuite {
     assert(Compaction.recover(spark, dir) == 1)
     assert(spark.read.parquet(dir).count() == before)
   }
+
+  /** Write `df` as ONE parquet file named `dir/<name>`. */
+  private def placeAs(df: org.apache.spark.sql.DataFrame, dir: String, name: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stage = Files.createTempDirectory("graft-cmp-stage").resolve("s").toString
+    df.coalesce(1).write.parquet(stage)
+    val fs = new Path(dir).getFileSystem(conf)
+    fs.mkdirs(new Path(dir))
+    val part = fs.listStatus(new Path(stage)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    assert(fs.rename(part, new Path(dir, name)))
+  }
+
+  test("a narrower file sorting first does not drop the wider file's columns") {
+    val dir = Files.createTempDirectory("graft-cmp-mixed").resolve("t").toString
+    placeAs(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir, "part-a.parquet")
+    placeAs(Seq((3L, "c", 30), (4L, "d", 40)).toDF("k", "v", "w"), dir, "part-b.parquet")
+    val res = Compaction.compact(spark, dir, targetBytes = 1024 * 1024)
+    assert(res.groupsCompacted === 1 && res.filesRemoved === 2 && res.rowsMoved === 4L)
+    val files = ParquetSource.listParquetFiles(dir, spark.sparkContext.hadoopConfiguration)
+    assert(files.size === 1)
+    val out = spark.read.parquet(files.head)
+    assert(out.columns.toSeq === Seq("k", "v", "w"))
+    assert(out.orderBy("k").collect().map(_.toString).toSeq ===
+      Seq("[1,a,null]", "[2,b,null]", "[3,c,30]", "[4,d,40]"))
+  }
+
+  test("conflicting column types abort before the swap and keep the originals") {
+    val dir = Files.createTempDirectory("graft-cmp-conflict").resolve("t").toString
+    placeAs(Seq((1L, "a")).toDF("k", "v"), dir, "part-a.parquet")
+    placeAs(Seq((2L, 7)).toDF("k", "v"), dir, "part-b.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val before = ParquetSource.listParquetFiles(dir, conf)
+    intercept[Exception](Compaction.compact(spark, dir, targetBytes = 1024 * 1024))
+    assert(ParquetSource.listParquetFiles(dir, conf) === before)
+    val fs = new Path(dir).getFileSystem(conf)
+    assert(!fs.exists(new Path(dir, "_compaction")))
+    assert(spark.read.parquet(before.head).count() === 1L)
+    assert(spark.read.parquet(before(1)).count() === 1L)
+  }
 }
