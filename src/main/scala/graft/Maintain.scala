@@ -97,19 +97,7 @@ object Maintain {
           s"current = ${sources.Versioned.latestVersion(spark, args(1)).getOrElse("-")}")
       case "delete" =>
         if (args.length < 4) usage()
-        // parse keys to the TABLE's key-column type — guessing from the
-        // literal's shape would silently miss string keys that look
-        // numeric ("042") through the IN filter's type coercion
-        val keyType = spark.read.parquet(args(1)).schema(args(2)).dataType
-        import org.apache.spark.sql.types._
-        val parse: String => Any = keyType match {
-          case LongType | IntegerType | ShortType | ByteType => _.toLong
-          case StringType => identity
-          case other =>
-            System.err.println(s"[maintain] unsupported key type $other for delete")
-            sys.exit(2)
-        }
-        val keys = rawKeys(args(3)).map(parse(_): Any)
+        val keys = typedKeys(spark, args(1), args(2), args(3))
         val r = sources.TargetedDelete.deleteAuto(spark, args(1), args(2), keys)
         println(s"[maintain] deleted ${r.rowsDeleted} rows: " +
           s"${r.filesRewritten} files rewritten, ${r.filesUntouched} untouched")
@@ -123,11 +111,6 @@ object Maintain {
           case "rebuildids" =>
             pipeline.AnnIndex.rebuildIds(spark, args(2))
             println(s"[maintain] ann index id census rebuilt at ${args(2)}")
-          case "forget" if args.length >= 4 =>
-            val r = pipeline.AnnIndex.forget(spark, args(2),
-              typedKeys(spark, s"${args(2)}/index", "neighbor_id", args(3)))
-            println(s"[maintain] ann index forgot ${r.rowsDeleted} vectors: " +
-              s"${r.filesRewritten} files rewritten, ${r.filesUntouched} untouched")
           case "retrain" if args.length >= 7 =>
             // annindex retrain <versionedRoot> <corpusDir> <idCol> <vecCol> <kIvf>
             val (v, _) = pipeline.AnnIndex.buildVersioned(
@@ -194,12 +177,6 @@ object Maintain {
       case "ndstore" =>
         if (args.length < 3) usage()
         args(1) match {
-          case "forget" if args.length >= 4 =>
-            val rs = pipeline.Dedup.NearDupStore.forget(spark, args(2),
-              typedKeys(spark, s"${args(2)}/sigs", "id", args(3)))
-            println(s"[maintain] near-dup store forgot: " +
-              s"${rs.map(_.rowsDeleted).sum} rows across 3 tables " +
-              s"(${rs.map(_.filesRewritten).sum} files rewritten)")
           case _ if args.length < 6 => usage()
           case "create" =>
             pipeline.Dedup.NearDupStore.create(
@@ -225,11 +202,6 @@ object Maintain {
           case "rebuildids" =>
             pipeline.LexIndex.rebuildSidecars(spark, args(2))
             println(s"[maintain] lex index sidecars rebuilt at ${args(2)}")
-          case "forget" if args.length >= 4 =>
-            val r = pipeline.LexIndex.forget(spark, args(2),
-              typedKeys(spark, s"${args(2)}/postings", "id", args(3)))
-            println(s"[maintain] lex index forgot ${r.rowsDeleted} postings " +
-              s"(${r.filesRewritten} files rewritten)")
           case "create" if args.length >= 6 =>
             pipeline.LexIndex.create(spark.read.parquet(args(2)),
               args(3), args(4), args(5))
@@ -311,13 +283,6 @@ object Maintain {
               .write.mode("errorifexists").parquet(args(4))
             val n = spark.read.parquet(args(4)).count()
             println(s"[maintain] $n maintained trust ranks written to ${args(4)}")
-          case "rollback" if args.length >= 4 =>
-            pipeline.LinkGraph.rollbackEpoch(spark, args(2), args(3))
-            println(s"[maintain] link graph epoch ${args(3)} rolled back at ${args(2)}")
-          case "forget" if args.length >= 4 =>
-            val keys = typedKeys(spark, s"${args(2)}/out", "src", args(3))
-            pipeline.LinkGraph.forget(spark, args(2), keys)
-            println(s"[maintain] link graph forgot ${keys.size} vertices at ${args(2)}")
           case "ranks" if args.length >= 4 =>
             pipeline.LinkGraph.ranks(spark, args(2))
               .write.mode("errorifexists").parquet(args(3))
@@ -352,38 +317,82 @@ object Maintain {
     spark.stop()
   }
 
-  /** The persisted stores' generic fold verbs, one registry: CLI store
-    * name → (its MAJOR-fold verb, its tables). Every store also takes
-    * `minorcompact <root>` (override-tier-only fold, I/O ∝ override
-    * bytes) and `autocompact <root> <maxFiles>` (pin the self-compact
-    * threshold; 0 = off) — see [[sources.StoreTables]].
+  private type Spark = org.apache.spark.sql.SparkSession
+
+  /** A store's right-to-be-forgotten arm: its name as a pipeline
+    * `forget` stage spells it, the table and column whose type CLI keys
+    * parse to, and the purge (returning its CLI summary).
     */
-  private val stores: Seq[(String, String,
-      (org.apache.spark.sql.SparkSession, String) => sources.StoreTables.Store)] = Seq(
-    ("ndstore", "recluster", pipeline.Dedup.NearDupStore.tables),
-    ("annindex", "recluster", pipeline.AnnIndex.tables),
-    ("lexindex", "compact", pipeline.LexIndex.tables),
-    ("linecensus", "compact", (_, dir) => pipeline.Web.lineCensusTables(dir)),
-    ("linkgraph", "compact", pipeline.LinkGraph.tables))
+  private[graft] final case class Forget(stage: String, keyDir: String, keyCol: String,
+                                         run: (Spark, String, Seq[Any]) => String)
+
+  /** A persisted store's generic verbs: CLI name, MAJOR-fold verb, its
+    * tables, and — where it has them — its forget and rollback.
+    */
+  private final case class StoreVerbs(name: String, major: String,
+                                      tables: (Spark, String) => sources.StoreTables.Store,
+                                      forget: Option[Forget] = None,
+                                      rollback: Option[(Spark, String, String) => Unit] = None)
+
+  private def summary(r: sources.TargetedDelete.Result): String =
+    s"${r.rowsDeleted} rows: ${r.filesRewritten} files rewritten, ${r.filesUntouched} untouched"
+
+  /** The persisted stores' generic verbs, one registry. Every store
+    * takes its MAJOR-fold verb, `minorcompact <root>` (override-tier-
+    * only fold, I/O ∝ override bytes) and `autocompact <root>
+    * <maxFiles>` (pin the self-compact threshold; 0 = off) — see
+    * [[sources.StoreTables]]; stores with a forget take `forget <root>
+    * <key>[,key...]`, and a rollback `rollback <root> <tag>`.
+    */
+  private val stores: Seq[StoreVerbs] = Seq(
+    StoreVerbs("ndstore", "recluster", pipeline.Dedup.NearDupStore.tables,
+      Some(Forget("nearDupStore", "sigs", "id", (spark, root, ids) => {
+        val rs = pipeline.Dedup.NearDupStore.forget(spark, root, ids)
+        s"${rs.map(_.rowsDeleted).sum} rows across 3 tables " +
+          s"(${rs.map(_.filesRewritten).sum} files rewritten)"
+      }))),
+    StoreVerbs("annindex", "recluster", pipeline.AnnIndex.tables,
+      Some(Forget("annIndex", "index", "neighbor_id",
+        (spark, root, ids) => summary(pipeline.AnnIndex.forget(spark, root, ids))))),
+    StoreVerbs("lexindex", "compact", pipeline.LexIndex.tables,
+      Some(Forget("lexIndex", "postings", "id",
+        (spark, root, ids) => summary(pipeline.LexIndex.forget(spark, root, ids))))),
+    StoreVerbs("linecensus", "compact", (_, dir) => pipeline.Web.lineCensusTables(dir)),
+    StoreVerbs("linkgraph", "compact", pipeline.LinkGraph.tables,
+      Some(Forget("linkGraph", "out", "src", (spark, root, ids) => {
+        pipeline.LinkGraph.forget(spark, root, ids)
+        s"${ids.size} vertices"
+      })),
+      Some(pipeline.LinkGraph.rollbackEpoch)))
+
+  /** The pipeline `forget` stage's routing: its store name → the
+    * store's forget (the same arms the CLI runs).
+    */
+  private[graft] val forgets: Map[String, (Spark, String, Seq[Any]) => String] =
+    stores.flatMap(_.forget).map(f => f.stage -> f.run).toMap
 
   /** Run a store-generic verb when `args` name one; false otherwise. */
-  private def storeVerb(spark: org.apache.spark.sql.SparkSession,
-                        args: Array[String]): Boolean =
-    stores.find(_._1 == args(0)).filter(_ => args.length >= 3).exists {
-      case (name, major, tables) =>
-        val root = args(2)
-        args(1) match {
-          case `major` =>
-            sources.StoreTables.recluster(spark, tables(spark, root))
-            println(s"[maintain] $name major fold ($major) done at $root"); true
-          case "minorcompact" =>
-            sources.StoreTables.foldOverrides(spark, tables(spark, root))
-            println(s"[maintain] $name override tier folded at $root"); true
-          case "autocompact" if args.length >= 4 =>
-            sources.AutoCompact.setPolicy(spark, root, args(3).toInt)
-            println(s"[maintain] $name auto-compact at $root: maxFiles=${args(3)}"); true
-          case _ => false
-        }
+  private def storeVerb(spark: Spark, args: Array[String]): Boolean =
+    stores.find(_.name == args(0)).filter(_ => args.length >= 3).exists { s =>
+      val root = args(2)
+      (args(1), s.forget, s.rollback) match {
+        case (s.major, _, _) =>
+          sources.StoreTables.recluster(spark, s.tables(spark, root))
+          println(s"[maintain] ${s.name} major fold (${s.major}) done at $root"); true
+        case ("minorcompact", _, _) =>
+          sources.StoreTables.foldOverrides(spark, s.tables(spark, root))
+          println(s"[maintain] ${s.name} override tier folded at $root"); true
+        case ("autocompact", _, _) if args.length >= 4 =>
+          sources.AutoCompact.setPolicy(spark, root, args(3).toInt)
+          println(s"[maintain] ${s.name} auto-compact at $root: maxFiles=${args(3)}"); true
+        case ("forget", Some(f), _) if args.length >= 4 =>
+          val keys = typedKeys(spark, s"$root/${f.keyDir}", f.keyCol, args(3))
+          println(s"[maintain] ${s.name} at $root forgot ${f.run(spark, root, keys)}"); true
+        case ("rollback", _, Some(rollback)) if args.length >= 4 =>
+          rollback(spark, root, args(3))
+          println(s"[maintain] ${s.name} epoch ${args(3)} rolled back at $root"); true
+        case _ => false
+      }
     }
 
   private val commands: Seq[String] = Seq(
@@ -395,9 +404,7 @@ object Maintain {
     "diff <versionedRoot> <vA> <vB> <pk>[,pk...]",
     "ndstore create <corpusDir> <idCol> <textCol> <storeDir>",
     "ndstore dedup <batchDir> <idCol> <textCol> <storeDir> <outDir> [advance]",
-    "ndstore forget <storeDir> <key>[,key...]",
     "annindex compact <indexRoot> <targetBytes>",
-    "annindex forget <indexRoot> <key>[,key...]",
     "annindex retrain <versionedRoot> <corpusDir> <idCol> <vecCol> <kIvf>",
     "annindex rebuildids <indexRoot>",
     "annindex tune <indexRoot> <corpusDir> <queriesDir> <idCol> <vecCol> <k> " +
@@ -410,21 +417,20 @@ object Maintain {
     "lexindex append <batchDir> <idCol> <textCol> <root> <tag>",
     "lexindex search <root> <queriesDir> <queryIdCol> <termCol> <k> <outDir>",
     "lexindex rebuildids <root>",
-    "lexindex forget <root> <key>[,key...]",
     "linkgraph create <edgesDir> <srcCol> <dstCol> <root> [iters] [dampingPct]",
     "linkgraph append <edgesDir> <srcCol> <dstCol> <root> <tag>",
     "linkgraph ranks <root> <outDir>",
-    "linkgraph forget <root> <key>[,key...]",
-    "linkgraph rollback <root> <tag>",
     "linkgraph components <root>",
     "linkgraph hits <root> <outDir> [iters]",
     "linkgraph trustrank <root> <seedsDir> <outDir> [iters]",
     "linkgraph trustregister <root> <seedsDir>",
     "linkgraph trustranks <root> <digest> <outDir>") ++
-    stores.flatMap { case (name, major, _) => Seq(
-      s"$name $major <root>",
-      s"$name minorcompact <root>",
-      s"$name autocompact <root> <maxFiles>") }
+    stores.flatMap(s => Seq(
+      s"${s.name} ${s.major} <root>",
+      s"${s.name} minorcompact <root>",
+      s"${s.name} autocompact <root> <maxFiles>") ++
+      s.forget.map(_ => s"${s.name} forget <root> <key>[,key...]") ++
+      s.rollback.map(_ => s"${s.name} rollback <root> <tag>"))
 
   private def usage(): Nothing = {
     System.err.println(commands.map("graft.Maintain " + _)
@@ -456,7 +462,7 @@ object Maintain {
         case LongType | IntegerType | ShortType | ByteType => _.toLong
         case StringType => identity
         case other =>
-          System.err.println(s"[maintain] unsupported key type $other for forget")
+          System.err.println(s"[maintain] unsupported key type $other for $keyCol")
           sys.exit(2)
       }
     rawKeys(arg).map(parse(_): Any)

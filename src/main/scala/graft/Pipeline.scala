@@ -602,14 +602,8 @@ object Pipeline {
       require(keyRows.length <= cap,
         s"forget stage caps at $cap ids per run — split the RTBF batch")
       val ids: Seq[Any] = keyRows.toIndexedSeq.map(_.get(0))
-      val spark = df.sparkSession
-      store match {
-        case "annIndex" => graft.pipeline.AnnIndex.forget(spark, root, ids)
-        case "lexIndex" => graft.pipeline.LexIndex.forget(spark, root, ids)
-        case "nearDupStore" =>
-          graft.pipeline.Dedup.NearDupStore.forget(spark, root, ids)
-        case "linkGraph" => graft.pipeline.LinkGraph.forget(spark, root, ids)
-      }
+      // the same store -> forget registry as the CLI's forget verbs
+      graft.Maintain.forgets(store)(df.sparkSession, root, ids)
       df
     case graft.config.TransformConfig.RfmStage(key, ts, value, asOf, buckets) =>
       graft.operators.Rfm.scores(df, key, ts, value, to_date(lit(asOf)), buckets)

@@ -788,7 +788,7 @@ object ScaleBench {
     "phash_neardup" -> { (s, dir) =>
       val g = floor(col("doc_id") / 8).cast("long")
       val m = pmod(col("doc_id"), lit(8L))
-      val baseHash = conv(substring(md5(g.cast("string")), 1, 15), 16, 10).cast("long")
+      val baseHash = graft.functions.md5Prefix60(g.cast("string"))
       val mask = when(m === 7, lit(0x0101010101010101L))
         .otherwise(pmod(m, lit(2L)) * 1 +
           pmod(floor(m / 2).cast("long"), lit(2L)) * 256 +

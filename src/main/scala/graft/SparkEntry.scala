@@ -2327,13 +2327,13 @@ object SparkEntry {
         kIvf = 10, m = 16, ksub = 16, iters = 2)
       val delta = emb.filter(col("vec_id") >= 350)
       // mid-publish crash: a 3-row partial attempt lands under the tag
-      val stage = s"$root/_stage/e1"
-      delta.limit(3)
-        .select(col("vec_id").as("neighbor_id"),
-          graft.pipeline.Ivf.assignment(col("embedding"), built.ivf).as("bucket"),
-          graft.pipeline.Pq.encode(col("embedding"), built.pq).as("codes"))
-        .write.mode("overwrite").parquet(stage)
-      graft.sources.EpochFiles.publish(s, stage, built.indexPath, "e1")
+      val store = graft.pipeline.AnnIndex.tables(s, root)
+      graft.sources.StoreTables.publishWith(s, store, store.tables.head, "e1")(
+        delta.limit(3)
+          .select(col("vec_id").as("neighbor_id"),
+            graft.pipeline.Ivf.assignment(col("embedding"), built.ivf).as("bucket"),
+            graft.pipeline.Pq.encode(col("embedding"), built.pq).as("codes"))
+          .write.mode("overwrite").parquet(_))
       // the replay retires the partial files and lands the full delta;
       // a second replay (re-delivered committed epoch) redoes it
       // identically — end-state idempotent either way
@@ -3073,7 +3073,7 @@ object SparkEntry {
   private def qPhashNeardup(s: SparkSession, d: String): DataFrame = {
     val g = floor(col("doc_id") / 8).cast("long")
     val m = pmod(col("doc_id"), lit(8L))
-    val baseHash = conv(substring(md5(g.cast("string")), 1, 15), 16, 10).cast("long")
+    val baseHash = graft.functions.md5Prefix60(g.cast("string"))
     val mask = when(m === 7, lit(0x0101010101010101L))
       .otherwise(pmod(m, lit(2L)) * 1 +
         pmod(floor(m / 2).cast("long"), lit(2L)) * 256 +

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.Md5Prefix60
+import graft.functions.md5Prefix60
 
 /** Deterministic sampling and dataset splitting for training corpora.
   *
@@ -28,8 +28,7 @@ object Sampling {
     * hash as the empty string.
     */
   private def keyHash(key: Column): Column =
-    GraftColumnBridge.column(Md5Prefix60(GraftColumnBridge.expression(
-      coalesce(key.cast("string"), lit("")))))
+    md5Prefix60(coalesce(key.cast("string"), lit("")))
 
   /** Stable bucket in [0, buckets) from the key column: [[keyHash]]
     * mod `buckets`, bit-identical to the portable formula

@@ -175,23 +175,16 @@ object AnnIndex {
     */
   def append(handle: Handle, newRows: DataFrame, idCol: String, vecCol: String): Unit = {
     val spark = newRows.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val before = graft.sources.ParquetSource
-      .listParquetFiles(handle.indexPath, conf).toSet
-    val g = rowsPerFileOf(spark, handle.root)
-    encoded(newRows, idCol, vecCol, handle.ivf, handle.pq)
-      .repartition(col("bucket")).sortWithinPartitions("bucket")
-      .write.option("maxRecordsPerFile", g)
-      .mode("append").parquet(handle.indexPath)
-    spark.catalog.refreshByPath(handle.indexPath)
-    // stats advance over EXACTLY the appended files (listing diff →
-    // one small job), not an artifact diff + rewrite per append
-    graft.sources.FileStatsIndex.appendFor(spark, handle.indexPath, Seq("bucket"),
-      graft.sources.ParquetSource.listParquetFiles(handle.indexPath, conf)
-        .filterNot(before.contains))
+    val Seq(index, census) = tables(spark, handle.root).tables
+    graft.sources.StoreTables.appendWith(spark, index) {
+      encoded(newRows, idCol, vecCol, handle.ivf, handle.pq)
+        .repartition(col("bucket")).sortWithinPartitions("bucket")
+        .write.option("maxRecordsPerFile", index.rowsPerFile)
+        .mode("append").parquet(handle.indexPath)
+    }
     if (graft.sources.IdCensus.exists(spark, handle.root))
-      graft.sources.IdCensus.appendPlain(spark, handle.root,
-        censusRows(newRows, idCol, vecCol, handle.ivf), g)
+      graft.sources.StoreTables.append(spark, census,
+        censusRows(newRows, idCol, vecCol, handle.ivf))
   }
 
   /** Delta-detecting append (the Dedup.newAgainst shape): rows whose id
@@ -234,13 +227,13 @@ object AnnIndex {
   def appendEpoch(handle: Handle, rows: DataFrame, idCol: String, vecCol: String,
                   tag: String): Long = {
     val spark = rows.sparkSession
-    // complete any interrupted auto-compact BEFORE retiring (the
-    // half-folded-tables hazard — see graft.sources.AutoCompact)
-    graft.sources.StoreTables.recover(spark, tables(spark, handle.root))
-    graft.sources.EpochFiles.retire(spark, handle.indexPath, tag)
-    graft.sources.IdCensus.retireEpoch(spark, handle.root, tag)
-    val g = rowsPerFileOf(spark, handle.root)
-    graft.sources.IdCensus.ensureFrom(spark, handle.root, indexIds(spark, handle.root), g)
+    // restore the pre-epoch index and census (an interrupted
+    // auto-compact completes first — see StoreTables.rollback)
+    val store = tables(spark, handle.root)
+    graft.sources.StoreTables.rollback(spark, store, tag, redo = true)
+    val Seq(index, census) = store.tables
+    graft.sources.IdCensus.ensureFrom(spark, handle.root, indexIds(spark, handle.root),
+      index.rowsPerFile)
     // membership via the census sidecar: a stats-pruned point-lookup
     // read whose cost follows the BATCH (flat under index growth) —
     // never the full index id column + distinct this path used to pay
@@ -251,22 +244,15 @@ object AnnIndex {
     try {
       val n = fresh.count()
       if (n > 0) {
-        val stage = s"${handle.root}/_stage/$tag"
-        encoded(fresh, idCol, vecCol, handle.ivf, handle.pq)
-          .repartition(col("bucket")).sortWithinPartitions("bucket")
-          .write.option("maxRecordsPerFile", g)
-          .mode("overwrite").parquet(stage)
-        val published = graft.sources.EpochFiles.publish(spark, stage,
-          handle.indexPath, tag)
-        // stats advance over EXACTLY the published files — one small
-        // job (the write-pass discipline), not an artifact diff
-        graft.sources.FileStatsIndex.appendFor(spark, handle.indexPath,
-          Seq("bucket"), published)
+        // delta-sized, bucket-range-clustered shards at the pinned
+        // granularity
+        graft.sources.StoreTables.publish(spark, store, index,
+          encoded(fresh, idCol, vecCol, handle.ivf, handle.pq), tag, Some(n))
         // census publishes second, under the SAME tag: a crash between
-        // the two publishes is repaired by replaying the tag (both
-        // retires above restore the pre-epoch pair)
-        graft.sources.IdCensus.appendEpoch(spark, handle.root,
-          censusRows(fresh, idCol, vecCol, handle.ivf), tag, g)
+        // the two publishes is repaired by replaying the tag (the
+        // rollback above restores the pre-epoch pair)
+        graft.sources.StoreTables.publish(spark, store, census,
+          censusRows(fresh, idCol, vecCol, handle.ivf), tag, Some(n))
       }
       // settled — the auto-compact policy may run the MINOR fold
       // (override files only, I/O ∝ override bytes; each subset swap
@@ -274,7 +260,7 @@ object AnnIndex {
       // marker, so a tag loses ALL its names in a table or none); a
       // replay after the fold is a clean no-op because the census
       // still knows every id.
-      graft.sources.StoreTables.autoCompact(spark, tables(spark, handle.root))
+      graft.sources.StoreTables.autoCompact(spark, store)
       n
     } finally { fresh.unpersist(); () }
   }
@@ -383,7 +369,6 @@ object AnnIndex {
     */
   def forget(spark: SparkSession, root: String,
              ids: Seq[Any]): graft.sources.TargetedDelete.Result = {
-    val dir = s"$root/index"
     // the frame clusters by BUCKET, so a plain id-delete scans — but
     // the census knows every indexed id's bucket: derive the doomed
     // (bucket, neighbor_id) pairs from a stats-pruned census point
@@ -396,48 +381,19 @@ object AnnIndex {
     // discipline): a pre-bucket census that later received
     // bucket-bearing epoch rows is a MIXED directory — per-ROW split,
     // ids whose row carries a bucket pair-delete, null-bucket rows
-    // route to the id-scan fallback instead of tripping deletePairs'
+    // route to the id scan instead of tripping the pair-delete's
     // null require. Bucket-less censuses and oversized batches take
     // the scan for everything.
-    val cap = graft.sources.TargetedDelete.InlineKeyCap
-    def scanAll() =
-      graft.sources.TargetedDelete.deleteAuto(spark, dir, "neighbor_id", ids)
-    val census =
+    val Seq(index, census) = tables(spark, root).tables
+    val cen =
       if (graft.sources.IdCensus.exists(spark, root))
-        Some(graft.sources.KeyedReads.prunedRead(spark,
-          graft.sources.IdCensus.rowsDir(root), "id", ids.toArray,
-          mergeSchema = true))
+        Some(graft.sources.KeyedReads.prunedRead(spark, census.dir, "id", ids.toArray,
+          mergeSchema = true)).filter(_.columns.contains("bucket"))
       else None
-    val r = census match {
-      case Some(cen) if cen.columns.contains("bucket") && ids.size <= cap =>
-        val bare = cen.filter(col("bucket").isNull)
-          .select(col("id")).distinct()
-          .limit(cap + 1).collect().map(_.get(0)).toSeq
-        val pairs = cen.filter(col("bucket").isNotNull)
-          .select(col("bucket"), col("id")).distinct()
-          .limit(cap + 1).collect()
-        if (pairs.length > cap || bare.size > cap) scanAll()
-        else {
-          val pr =
-            if (pairs.isEmpty)
-              graft.sources.TargetedDelete.Result(0, 0L,
-                graft.sources.ParquetSource.listParquetFiles(dir,
-                  spark.sparkContext.hadoopConfiguration).size)
-            else
-              graft.sources.TargetedDelete.deletePairs(spark, dir,
-                "bucket", "neighbor_id", pairs.toSeq.map(r => (r.get(0), r.get(1))))
-          if (bare.nonEmpty) {
-            val sr = graft.sources.TargetedDelete.deleteAuto(spark, dir,
-              "neighbor_id", bare)
-            graft.sources.TargetedDelete.Result(
-              pr.filesRewritten + sr.filesRewritten,
-              pr.rowsDeleted + sr.rowsDeleted, sr.filesUntouched)
-          } else pr
-        }
-      case _ => scanAll()
-    }
-    spark.catalog.refreshByPath(dir)
-    graft.sources.FileStatsIndex.update(spark, dir, Seq("bucket"))
+    val r = graft.sources.StoreTables.forget(spark, index, "neighbor_id", ids,
+      pairs = cen.map(_.filter(col("bucket").isNotNull)
+        .select(col("bucket"), col("id").as("neighbor_id")).distinct()),
+      bare = cen.map(_.filter(col("bucket").isNull).select(col("id")).distinct()))
     // census forgets SECOND (the pair derivation needed it) —
     // re-admission on legitimate reappearance is the delta check no
     // longer seeing the id, and the delta check IS the census

@@ -169,8 +169,7 @@ object Dedup {
                                seed: Long = 42L): Column = {
     val p = 2147483647L
     val (as, bs) = minHashCoefficients(numHashes, seed, p)
-    val base = transform(shingleCol, s =>
-      pmod(conv(substring(md5(s), 1, 15), 16, 10).cast("long"), lit(p)))
+    val base = transform(shingleCol, s => pmod(graft.functions.md5Prefix60(s), lit(p)))
     graft.functions.MinHash.mins(base, as, bs, p)
   }
 
@@ -375,28 +374,6 @@ object Dedup {
   private def clusteredOn(df: DataFrame, keyCol: String): DataFrame =
     df.repartitionByRange(col(keyCol)).sortWithinPartitions(keyCol)
 
-  /** Run `write` (a plain append to `dir`), refresh the session's
-    * listing cache, and advance the `_stats` artifact over EXACTLY the
-    * files the write created (listing diff →
-    * [[graft.sources.FileStatsIndex.appendFor]] — one small job). This
-    * replaces the per-table `FileStatsIndex.update` the advance paths
-    * used to pay: update re-reads the whole artifact, re-lists, and
-    * REWRITES it per call — a fixed cost per table per advance that a
-    * streaming curator pays per micro-batch and that grows with the
-    * STORE's file count instead of the batch.
-    */
-  private def appendWithStats(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, keyCol: String)(write: => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val before = graft.sources.ParquetSource.listParquetFiles(dir, conf).toSet
-    write
-    spark.catalog.refreshByPath(dir)
-    val fresh = graft.sources.ParquetSource.listParquetFiles(dir, conf)
-      .filterNot(before.contains)
-    graft.sources.FileStatsIndex.appendFor(spark, dir, Seq(keyCol), fresh)
-    ()
-  }
-
   object BandIndex {
     private def rowsPath(path: String) = new org.apache.hadoop.fs.Path(path, "rows")
     private def metaPath(path: String) = new org.apache.hadoop.fs.Path(path, "_banding.json")
@@ -462,16 +439,13 @@ object Dedup {
                maxBucketSize: Int = 10000): Unit = {
       val (bands, rowsPerBand) = layout(df.sparkSession, path)
       // the rows dir changes under this session's never-expiring
-      // file-status cache (see SwapStore) — the helper refreshes and
+      // file-status cache (see SwapStore) — the append refreshes and
       // advances the stats artifact over EXACTLY the appended files
       // (one small job, the write-pass discipline)
-      val g = rowsPerFileOf(df.sparkSession, path)
-      appendWithStats(df.sparkSession, rowsPath(path).toString, "bucket") {
-        clusteredOn(capped(df, idCol, signatureCol, bands, rowsPerBand, maxBucketSize),
-            "bucket")
-          .write.option("maxRecordsPerFile", g)
-          .mode("append").parquet(rowsPath(path).toString)
-      }
+      graft.sources.StoreTables.append(df.sparkSession,
+        graft.sources.StoreTables.Table(rowsPath(path).toString, "bucket",
+          rowsPerFile = rowsPerFileOf(df.sparkSession, path)),
+        capped(df, idCol, signatureCol, bands, rowsPerBand, maxBucketSize))
     }
 
     /** Candidate pairs of the NEW batch against the indexed corpus:
@@ -678,23 +652,16 @@ object Dedup {
         // appended files stay id-clustered so later probes' pushed-IN
         // pruning skips them like create()'s originals; each table's
         // stats artifact advances over exactly its appended files
-        // (appendWithStats — one small job per table, not an artifact
-        // rewrite per table per advance). The three tables are disjoint
-        // dirs fed by the one materialized kept frame — append them
-        // concurrently (guide §1: an advance's cost is its job chain)
-        val g = BandIndex.rowsPerFileOf(spark, sub(path, "bands"))
+        // (StoreTables.append — one small job per table, not an
+        // artifact rewrite per table per advance). The three tables are
+        // disjoint dirs fed by the one materialized kept frame — append
+        // them concurrently (guide §1: an advance's cost is its job chain)
+        val store = tables(spark, path)
+        val Seq(_, sigsT, shinglesT) = store.tables
         graft.Par.run(spark)(
           () => BandIndex.append(kept, "id", "sig", sub(path, "bands")),
-          () => appendWithStats(spark, sub(path, "sigs"), "id") {
-            clusteredOn(kept.select("id", "sig"), "id")
-              .write.option("maxRecordsPerFile", g)
-              .mode("append").parquet(sub(path, "sigs"))
-          },
-          () => appendWithStats(spark, sub(path, "shingles"), "id") {
-            clusteredOn(kept.select("id", "sh"), "id")
-              .write.option("maxRecordsPerFile", g)
-              .mode("append").parquet(sub(path, "shingles"))
-          })
+          () => graft.sources.StoreTables.append(spark, sigsT, kept.select("id", "sig")),
+          () => graft.sources.StoreTables.append(spark, shinglesT, kept.select("id", "sh")))
         // settled — the auto-compact policy (graft.sources.AutoCompact)
         // may restore the fully-clustered layout once advances have
         // accumulated enough files. recluster is an all-or-nothing
@@ -702,7 +669,6 @@ object Dedup {
         // advances carry no tag protocol, and a replayed batch re-drops
         // its rows as near-dups of their stored copies (self-delta), so
         // a crash anywhere just re-runs.
-        val store = tables(spark, path)
         graft.sources.AutoCompact.maybe(spark, path, store.dirs) {
           graft.sources.StoreTables.recluster(spark, store)
         }
@@ -768,75 +734,38 @@ object Dedup {
       val (bands, rowsPerBand) = BandIndex.layout(spark, sub(path, "bands"))
       val kept = framed(survivors, idCol, textCol, bands * rowsPerBand)
         .transform(graft.Checkpoints.materialize)
-      val stage = sub(path, s"_stage/$tag")
-      val g = BandIndex.rowsPerFileOf(spark, sub(path, "bands"))
-      clusteredOn(BandIndex.capped(kept, "id", "sig", bands, rowsPerBand,
-          maxBucketSize = 10000), "bucket")
-        .write.option("maxRecordsPerFile", g)
-        .mode("overwrite").parquet(s"$stage/bands")
-      clusteredOn(kept.select("id", "sig"), "id")
-        .write.option("maxRecordsPerFile", g)
-        .mode("overwrite").parquet(s"$stage/sigs")
-      clusteredOn(kept.select("id", "sh"), "id")
-        .write.option("maxRecordsPerFile", g)
-        .mode("overwrite").parquet(s"$stage/shingles")
-      // stats advance over EXACTLY the published per-tag files (one
-      // small job per table — the write-pass discipline); a replayed
-      // tag may leave duplicate artifact entries for its re-published
-      // names, which only ever under-prune (see appendFor)
-      val pubBands = graft.sources.EpochFiles.publish(spark, s"$stage/bands",
-        sub(path, "bands") + "/rows", tag)
-      val pubSigs = graft.sources.EpochFiles.publish(spark, s"$stage/sigs",
-        sub(path, "sigs"), tag)
-      val pubSh = graft.sources.EpochFiles.publish(spark, s"$stage/shingles",
-        sub(path, "shingles"), tag)
-      graft.sources.FileStatsIndex.appendFor(spark, sub(path, "bands") + "/rows",
-        Seq("bucket"), pubBands)
-      graft.sources.FileStatsIndex.appendFor(spark, sub(path, "sigs"),
-        Seq("id"), pubSigs)
-      graft.sources.FileStatsIndex.appendFor(spark, sub(path, "shingles"),
-        Seq("id"), pubSh)
-      val st = new org.apache.hadoop.fs.Path(sub(path, "_stage"))
-      val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(st, tag), true)
+      val store = tables(spark, path)
+      val Seq(bandsT, sigsT, shinglesT) = store.tables
+      graft.sources.StoreTables.publish(spark, store, bandsT,
+        BandIndex.capped(kept, "id", "sig", bands, rowsPerBand, maxBucketSize = 10000), tag)
+      graft.sources.StoreTables.publish(spark, store, sigsT, kept.select("id", "sig"), tag)
+      graft.sources.StoreTables.publish(spark, store, shinglesT, kept.select("id", "sh"), tag)
       ()
     }
 
     /** Remove every live-table file a tag's [[advanceStaged]] attempt
       * published (and its staging leftovers) — the store is back to
-      * its pre-epoch content no matter where the attempt died.
+      * its pre-epoch content no matter where the attempt died
+      * ([[graft.sources.StoreTables.rollback]]).
       */
     def rollbackAdvance(spark: org.apache.spark.sql.SparkSession, path: String,
-                        tag: String): Unit = {
-      graft.sources.EpochFiles.retire(spark, sub(path, "bands") + "/rows", tag)
-      graft.sources.EpochFiles.retire(spark, sub(path, "sigs"), tag)
-      graft.sources.EpochFiles.retire(spark, sub(path, "shingles"), tag)
-      // drop the retired files' (now-stale) stats entries while here —
-      // harmless if left (survivingFiles intersects with the on-disk
-      // listing) but dead weight in every future probe's stats read
-      tables(spark, path).tables.foreach(t =>
-        graft.sources.FileStatsIndex.update(spark, t.dir, Seq(t.key)))
-      val st = new org.apache.hadoop.fs.Path(sub(path, s"_stage/$tag"))
-      val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(st, true)
-      ()
-    }
+                        tag: String): Unit =
+      graft.sources.StoreTables.rollback(spark, tables(spark, path), tag)
 
     /** Right-to-be-forgotten across ALL THREE store tables: a
       * forgotten document must stop suppressing future near-dups of
       * itself — its band rows, signature, and shingle set all go, so
       * the store decides exactly as one created without the document
       * (row-identical to that store; ForgetSpec pins it). Each table
-      * goes through the crash-safe targeted rewrite
-      * ([[graft.sources.TargetedDelete]]: only files actually holding
-      * a forgotten id are rewritten, verify-all-before-any-swap, key
-      * sets past the inline cap route to the anti-join path). The
-      * id-clustered sigs/shingles detection scans skip on row-group
-      * stats; the bucket-clustered band index pays one metadata-tier
-      * scan — maintenance-rate cost, never probe-rate. Same
-      * between-epochs caveat as [[compact]]/[[recluster]]: the
-      * rewrite renames files, destroying the per-tag names an
-      * IN-FLIGHT [[advanceStaged]] replay would need to retire.
+      * goes through [[graft.sources.StoreTables.forget]] (only files
+      * actually holding a forgotten id are rewritten,
+      * verify-all-before-any-swap, key sets past the inline cap route
+      * to the scan path). The id-clustered sigs/shingles deletes
+      * prune on their stats; the bucket-clustered band index
+      * pair-deletes. Same between-epochs caveat as
+      * [[compact]]/[[recluster]]: the rewrite renames files,
+      * destroying the per-tag names an IN-FLIGHT [[advanceStaged]]
+      * replay would need to retire.
       */
     def forget(spark: org.apache.spark.sql.SparkSession, path: String,
                ids: Seq[Any]): Seq[graft.sources.TargetedDelete.Result] = {
@@ -854,43 +783,19 @@ object Dedup {
       // assumes the store's write protocol completed — sigs cover the
       // bands table's ids, which every create/advance write order
       // guarantees; recover half-written stores before forgetting.)
-      val bandsDir = sub(path, "bands") + "/rows"
-      val cap = graft.sources.TargetedDelete.InlineKeyCap
-      def loadStats(dir: String) = {
-        val p = new org.apache.hadoop.fs.Path(dir, "_stats")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-      }
-      val bandsResult =
-        if (ids.size > cap)
-          graft.sources.TargetedDelete.deleteAuto(spark, bandsDir, "id", ids)
+      val Seq(bandsT, sigsT, shinglesT) = tables(spark, path).tables
+      // past the inline cap no pairs are derived: the bands take the id scan
+      val pairs =
+        if (ids.size > graft.sources.TargetedDelete.InlineKeyCap) None
         else {
           val (bands, rowsPerBand) = BandIndex.layout(spark, sub(path, "bands"))
-          val sigRows = graft.sources.KeyedReads.prunedRead(
-            spark, sub(path, "sigs"), "id", ids.toArray)
-          val pairs = bandedFrame(sigRows, "id", "sig", bands, rowsPerBand)
-            .select(col("bucket"), col("id")).distinct()
-            .limit(cap + 1).collect()
-          if (pairs.isEmpty)
-            graft.sources.TargetedDelete.Result(0, 0L,
-              graft.sources.ParquetSource.listParquetFiles(bandsDir,
-                spark.sparkContext.hadoopConfiguration).size)
-          else if (pairs.length > cap)
-            graft.sources.TargetedDelete.deleteAuto(spark, bandsDir, "id", ids)
-          else
-            graft.sources.TargetedDelete.deletePairs(spark, bandsDir,
-              "bucket", "id", pairs.toSeq.map(r => (r.get(0), r.get(1))))
+          Some(bandedFrame(
+              graft.sources.KeyedReads.prunedRead(spark, sigsT.dir, "id", ids.toArray),
+              "id", "sig", bands, rowsPerBand)
+            .select(col("bucket"), col("id")).distinct())
         }
-      spark.catalog.refreshByPath(bandsDir)
-      graft.sources.FileStatsIndex.update(spark, bandsDir, Seq("bucket"))
-      bandsResult +: Seq(sub(path, "sigs"), sub(path, "shingles")).map { dir =>
-        val r = graft.sources.TargetedDelete.deleteAuto(spark, dir, "id", ids,
-          stats = loadStats(dir))
-        spark.catalog.refreshByPath(dir)
-        // stat the rewritten files, drop the rewritten-away entries
-        graft.sources.FileStatsIndex.update(spark, dir, Seq("id"))
-        r
-      }
+      graft.sources.StoreTables.forget(spark, bandsT, "id", ids, pairs) +:
+        Seq(sigsT, shinglesT).map(graft.sources.StoreTables.forget(spark, _, "id", ids))
     }
   }
 

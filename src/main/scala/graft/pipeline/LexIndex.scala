@@ -262,13 +262,11 @@ object LexIndex {
   def appendEpoch(batch: DataFrame, idCol: String, textCol: String,
                   root: String, tag: String): Unit = {
     val spark = batch.sparkSession
-    // complete any interrupted auto-compact BEFORE retiring: a crash
-    // mid-fold leaves tables half-folded, and retiring a completed
-    // epoch's surviving per-tag files would lose rows the folded
-    // tables keep (see graft.sources.AutoCompact)
-    graft.sources.StoreTables.recover(spark, tables(spark, root))
-    graft.sources.EpochFiles.retire(spark, postingsDir(root), tag)
-    graft.sources.IdCensus.retireEpoch(spark, root, tag)
+    // restore the pre-epoch postings, census and stats contribution
+    // (an interrupted auto-compact completes first — retiring a
+    // completed epoch's surviving per-tag files from half-folded
+    // tables would lose rows the folded tables keep)
+    graft.sources.StoreTables.rollback(spark, tables(spark, root), tag, redo = true)
     deleteCorpusStats(spark, root, s"epoch-$tag")
     ensureSidecars(spark, root)
     // membership via the census sidecar: stats-pruned point lookups,
@@ -278,29 +276,23 @@ object LexIndex {
       .select(col("id").as(idCol))
     val delta = postingsOf(batch.join(known, Seq(idCol), "left_anti"),
       idCol, textCol).persist()
+    val store = tables(spark, root)
+    val Seq(postings, census) = store.tables
     try {
-      val stage = root + s"/_stage/$tag"
       // delta-sized shards at the store's pinned granularity: batch
       // rows land in few term-contiguous files, each split at
       // rowsPerFile so later probes never sweep more than a granule
-      val t = postingsTable(root, rowsPerFileOf(spark, root))
-      t.clustered(delta, graft.sources.StoreTables.shardsFor(delta.count(), t.shardRows))
-        .write.option("maxRecordsPerFile", t.rowsPerFile)
-        .mode("overwrite").parquet(stage)
-      val published = graft.sources.EpochFiles.publish(spark, stage,
-        postingsDir(root), tag)
-      // stats advance over EXACTLY the published files — one small job
-      // (the write-pass discipline), not an artifact diff per epoch
-      graft.sources.FileStatsIndex.appendFor(spark, postingsDir(root),
-        Seq("term"), published)
+      graft.sources.StoreTables.publish(spark, store, postings, delta, tag,
+        Some(delta.count()))
       // census + stats publish second, under the SAME tag: a crash
-      // between publishes is repaired by replaying the tag (all three
-      // retires above restore the pre-epoch triple)
+      // between publishes is repaired by replaying the tag (the
+      // rollback above restores the pre-epoch triple)
       val cen = censusOf(delta).persist()
       try {
         val r = cen.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).collect()(0)
         if (r.getLong(0) > 0) {
-          graft.sources.IdCensus.appendEpoch(spark, root, cen, tag, t.rowsPerFile)
+          graft.sources.StoreTables.publish(spark, store, census, cen, tag,
+            Some(r.getLong(0)))
           writeCorpusStats(spark, root, s"epoch-$tag", r.getLong(0), r.getLong(1))
         }
       } finally { cen.unpersist(); () }
@@ -310,21 +302,17 @@ object LexIndex {
     // override bytes) without violating the per-tag-name caveat; a
     // replay after the fold is a clean no-op because the census still
     // knows every id and the stats contribution is absorbed into base
-    graft.sources.StoreTables.autoCompact(spark, tables(spark, root))
+    graft.sources.StoreTables.autoCompact(spark, store)
     ()
   }
 
-  /** Remove a tag's published postings, census rows, stats
-    * contribution, and staging leftovers.
+  /** Remove a tag's published postings, census rows and staging
+    * leftovers ([[graft.sources.StoreTables.rollback]]), then its
+    * corpus-stats contribution.
     */
   def rollbackEpoch(spark: SparkSession, root: String, tag: String): Unit = {
-    graft.sources.EpochFiles.retire(spark, postingsDir(root), tag)
-    graft.sources.IdCensus.retireEpoch(spark, root, tag)
+    graft.sources.StoreTables.rollback(spark, tables(spark, root), tag)
     deleteCorpusStats(spark, root, s"epoch-$tag")
-    val st = new org.apache.hadoop.fs.Path(root + s"/_stage/$tag")
-    val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(st, true)
-    ()
   }
 
   /** MAJOR fold: postings and census back into one globally clustered
@@ -378,43 +366,16 @@ object LexIndex {
     // (the silent-retention hole: postings that outlive their census
     // row are afterwards undetectable). Oversized batches/pair lists
     // take the scan for everything.
-    val cap = graft.sources.TargetedDelete.InlineKeyCap
     val census = graft.sources.KeyedReads.prunedRead(spark,
       graft.sources.IdCensus.rowsDir(root), "id", ids.toArray,
       mergeSchema = true)
-    val censusHasTerms = census.columns.contains("terms")
-    def scanAll() =
-      graft.sources.TargetedDelete.deleteAuto(spark, postingsDir(root), "id", ids)
-    val r =
-      if (censusHasTerms && ids.size <= cap) {
-        val bare = census.filter(col("terms").isNull)
-          .select(col("id")).distinct()
-          .limit(cap + 1).collect().map(_.get(0)).toSeq
-        val pairs = census.filter(col("terms").isNotNull)
-          .select(col("id"), explode(col("terms")).as("term"))
-          .select(col("term"), col("id")).distinct()
-          .limit(cap + 1).collect()
-        if (pairs.length > cap || bare.size > cap) scanAll()
-        else {
-          val pr =
-            if (pairs.isEmpty)
-              graft.sources.TargetedDelete.Result(0, 0L,
-                graft.sources.ParquetSource.listParquetFiles(postingsDir(root),
-                  spark.sparkContext.hadoopConfiguration).size)
-            else
-              graft.sources.TargetedDelete.deletePairs(spark, postingsDir(root),
-                "term", "id", pairs.toSeq.map(r => (r.get(0), r.get(1))))
-          if (bare.nonEmpty) {
-            val sr = graft.sources.TargetedDelete.deleteAuto(spark,
-              postingsDir(root), "id", bare)
-            graft.sources.TargetedDelete.Result(
-              pr.filesRewritten + sr.filesRewritten,
-              pr.rowsDeleted + sr.rowsDeleted, sr.filesUntouched)
-          } else pr
-        }
-      } else scanAll()
-    spark.catalog.refreshByPath(postingsDir(root))
-    graft.sources.FileStatsIndex.update(spark, postingsDir(root), Seq("term"))
+    val terms = Some(census).filter(_.columns.contains("terms"))
+    val r = graft.sources.StoreTables.forget(spark,
+      postingsTable(root, rowsPerFileOf(spark, root)), "id", ids,
+      pairs = terms.map(_.filter(col("terms").isNotNull)
+        .select(col("id"), explode(col("terms")).as("term"))
+        .select(col("term"), col("id")).distinct()),
+      bare = terms.map(_.filter(col("terms").isNull).select(col("id")).distinct()))
     graft.sources.IdCensus.forget(spark, root, ids)
     val (n, sumdl) = statsFromCensus(spark, root)
     val dir = new org.apache.hadoop.fs.Path(corpusDir(root))

@@ -60,8 +60,6 @@ object LinkGraph {
   private def labRepDir(root: String) = root + "/labrep"
   private def metaPath(root: String) = root + "/_graph.json"
   private def epochsDir(root: String) = root + "/_epochs"
-  private def stageDir(root: String, table: String, tag: String) =
-    root + s"/_stage/$tag/$table"
 
   /** `rowsPerFile` is the store's FILE-GRANULARITY policy: every table
     * write splits output at this many rows per file (Spark's
@@ -149,30 +147,17 @@ object LinkGraph {
     df.sparkSession.catalog.refreshByPath(dir)
   }
 
-  /** Override-publish shard count from a known delta size: one file
-    * per ~2M override rows ([[graft.sources.StoreTables.shardsFor]]) —
-    * small epochs land ONE file per table, large ones still shard.
-    */
-  private def partsFor(nRows: Long): Int =
-    graft.sources.StoreTables.shardsFor(nRows, ShardRows)
-
   private val ShardRows = 2000000L
 
-  private def publishClustered(spark: SparkSession, df: DataFrame, root: String,
-                               table: String, dir: String, keyCol: String,
-                               tag: String, parts: Int, rowsPerFile: Long): Unit = {
-    val stage = stageDir(root, table, tag)
-    df.repartitionByRange(parts, col(keyCol)).sortWithinPartitions(col(keyCol))
-      .write.option("maxRecordsPerFile", rowsPerFile)
-      .mode("overwrite").parquet(stage)
-    val published = graft.sources.EpochFiles.publish(spark, stage, dir, tag)
-    // stats advance over EXACTLY the published files — one small job
-    // per table (the write-pass discipline), never an artifact re-read
-    // + rewrite per publish (the old per-epoch cost that grew with the
-    // STORE's file count instead of the epoch's); the writer's schema
-    // rides along so the stats read skips footer inference
-    graft.sources.FileStatsIndex.appendFor(spark, dir, Seq(keyCol), published,
-      schema = Some(df.schema))
+  /** Publish `df` as the table at `dir`'s share of epoch `tag`
+    * ([[graft.sources.StoreTables.publish]]): override volume follows
+    * the epoch, so shards follow its `rows` — one file per ~2M override
+    * rows, small epochs land ONE file per table.
+    */
+  private def publish(spark: SparkSession, store: graft.sources.StoreTables.Store,
+                      dir: String, df: DataFrame, tag: String, rows: Long): Unit = {
+    graft.sources.StoreTables.publish(spark, store, store.tables.find(_.dir == dir).get,
+      df, tag, Some(rows))
     ()
   }
 
@@ -272,8 +257,8 @@ object LinkGraph {
     // keep theirs. Completing the fold restores the invariant (all
     // names gone, all rows present), and the delta anti-join below
     // then makes the replay a clean no-op.
-    graft.sources.StoreTables.recover(spark, tables(spark, root))
-    rollbackFiles(spark, root, tag)
+    val store = tables(spark, root)
+    graft.sources.StoreTables.rollback(spark, store, tag, redo = true)
     val seq = seqFor(spark, root, tag)
     val cand0 = canon(newEdges, srcCol, dstCol)
     // delta detection ∝ the batch's sources' existing out-edges; the
@@ -319,13 +304,10 @@ object LinkGraph {
         (coalesce(col("deg"), lit(0L)) + col("add")).as("deg"),
         lit(seq).as("seq"))
 
-    val parts = partsFor(nDelta)
-
     // labels absorb BEFORE the edge publishes (they need the PRE-epoch
     // endpoint labels; a replay's retire restored them above)
     if (labelsExist(spark, root))
-      boundedRun(
-        absorbLabels(spark, root, delta, seq, tag, parts, meta.rowsPerFile))
+      boundedRun(absorbLabels(spark, store, root, delta, seq, tag, nDelta))
 
     // edges + degrees publish FIRST: the frontier rounds below read
     // the union graph through the store's own tables. The three
@@ -333,12 +315,9 @@ object LinkGraph {
     // epoch's cost is its job CHAIN; independent publishes overlap
     // their range-sample + write + stats jobs)
     boundedRun(graft.Par.run(spark)(
-      () => publishClustered(spark, delta, root, "out", outDir(root), "src",
-        tag, parts, meta.rowsPerFile),
-      () => publishClustered(spark, delta, root, "in", inDir(root), "dst",
-        tag, parts, meta.rowsPerFile),
-      () => publishClustered(spark, newDeg, root, "deg", degDir(root), "src",
-        tag, parts, meta.rowsPerFile)))
+      () => publish(spark, store, outDir(root), delta, tag, nDelta),
+      () => publish(spark, store, inDir(root), delta, tag, nDelta),
+      () => publish(spark, store, degDir(root), newDeg, tag, nDelta)))
 
     // perturbation seeds: out-neighbors of every changed-degree source
     // (all delta sources — appends only increase degree) + new vertices.
@@ -364,19 +343,17 @@ object LinkGraph {
     // they fan out together.
     val trustDigests = trustSets(spark, root)
     boundedRun(graft.Par.run(spark)(
-      (() => publishClustered(spark, levelRows, root, "levels",
-        levelsDir(root), "id", tag, parts, meta.rowsPerFile)) +:
+      (() => publish(spark, store, levelsDir(root), levelRows, tag, nDelta)) +:
       trustDigests.map(dg => () => {
         val rows = frontierRounds(spark, root, meta, seeds, seq,
           trustLevelsDir(root, dg),
           Some(readTable(spark, trustSeedsDir(root, dg))))
-        publishClustered(spark, rows, root, s"trust_$dg",
-          trustLevelsDir(root, dg), "id", tag, parts, meta.rowsPerFile)
+        publish(spark, store, trustLevelsDir(root, dg), rows, tag, nDelta)
       }): _*))
     // the epoch is SETTLED here (every table published under the tag's
     // recorded seq) — the one point the auto-compact policy may fold
     // accumulated overrides without violating the per-tag-name caveat
-    graft.sources.StoreTables.autoCompact(spark, tables(spark, root))
+    graft.sources.StoreTables.autoCompact(spark, store)
     nDelta
   }
 
@@ -573,25 +550,12 @@ object LinkGraph {
     changedLevels.reduce(_.unionByName(_)).withColumn("seq", lit(seq))
   }
 
-  private def rollbackFiles(spark: SparkSession, root: String, tag: String): Unit = {
-    val labels =
-      if (labelsExist(spark, root)) Seq(labIdDir(root), labRepDir(root))
-      else Seq.empty
-    val trust = trustSets(spark, root).map(trustLevelsDir(root, _))
-    for (d <- Seq(outDir(root), inDir(root), degDir(root), levelsDir(root)) ++
-           labels ++ trust)
-      graft.sources.EpochFiles.retire(spark, d, tag)
-    val st = new org.apache.hadoop.fs.Path(root + s"/_stage/$tag")
-    val fs = hadoopFs(spark, root)
-    fs.delete(st, true)
-    ()
-  }
-
-  /** Remove everything a tag published (the epoch's seq record is
+  /** Remove everything a tag published
+    * ([[graft.sources.StoreTables.rollback]]; the epoch's seq record is
     * kept, so a later replay of the tag reuses its LSM position).
     */
   def rollbackEpoch(spark: SparkSession, root: String, tag: String): Unit =
-    rollbackFiles(spark, root, tag)
+    graft.sources.StoreTables.rollback(spark, tables(spark, root), tag)
 
   /** Current canonical edge set. */
   def edges(spark: SparkSession, root: String): DataFrame =
@@ -788,9 +752,9 @@ object LinkGraph {
     * contracted merge graph is ≤ 2·|delta| vertices; member relabels
     * read only CHANGED components through the rep-clustered table.
     */
-  private def absorbLabels(spark: SparkSession, root: String, delta: DataFrame,
-                           seq: Long, tag: String, parts: Int,
-                           rowsPerFile: Long): Unit = {
+  private def absorbLabels(spark: SparkSession, store: graft.sources.StoreTables.Store,
+                           root: String, delta: DataFrame, seq: Long, tag: String,
+                           rows: Long): Unit = {
     val endpoints = graft.Checkpoints.materialize(
       delta.select(col("src").as("id"))
         .unionAll(delta.select(col("dst").as("id"))).distinct())
@@ -827,10 +791,8 @@ object LinkGraph {
       .transform(graft.Checkpoints.materialize)
     // disjoint label tables — publish both clusterings concurrently
     graft.Par.run(spark)(
-      () => publishClustered(spark, overrides, root, "labid", labIdDir(root),
-        "id", tag, parts, rowsPerFile),
-      () => publishClustered(spark, overrides, root, "labrep", labRepDir(root),
-        "rep", tag, parts, rowsPerFile))
+      () => publish(spark, store, labIdDir(root), overrides, tag, rows),
+      () => publish(spark, store, labRepDir(root), overrides, tag, rows))
     ()
   }
 
@@ -882,7 +844,10 @@ object LinkGraph {
     require(ids.nonEmpty, "empty id list — nothing to forget")
     require(!ids.contains(null), "null ids cannot be forgotten")
     val meta = readMeta(spark, root)
-    graft.sources.StoreTables.recover(spark, tables(spark, root))
+    val store = tables(spark, root)
+    graft.sources.StoreTables.recover(spark, store)
+    def table(dir: String) = store.tables.find(_.dir == dir).get
+    val cap = math.min(inlineCap, graft.sources.TargetedDelete.InlineKeyCap)
     def digestWith(sep: String) = java.security.MessageDigest.getInstance("SHA-1")
       .digest(ids.map(String.valueOf).sorted.mkString(sep).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
@@ -929,13 +894,8 @@ object LinkGraph {
     val removed = readTable(spark,snap + "/removed")
     if (removed.isEmpty) {
       // edgeless ids: drop any stray level rows, nothing to maintain
-      graft.sources.TargetedDelete.deleteAuto(spark, levelsDir(root), "id", ids)
-      graft.sources.FileStatsIndex.update(spark, levelsDir(root), Seq("id"))
-      for (dg <- trustSets(spark, root)) {
-        val tl = trustLevelsDir(root, dg)
-        graft.sources.TargetedDelete.deleteAuto(spark, tl, "id", ids)
-        graft.sources.FileStatsIndex.update(spark, tl, Seq("id"))
-      }
+      for (dir <- levelsDir(root) +: trustSets(spark, root).map(trustLevelsDir(root, _)))
+        graft.sources.StoreTables.forget(spark, table(dir), "id", ids, cap = cap)
       fs.delete(new org.apache.hadoop.fs.Path(snap), true)
       return
     }
@@ -951,52 +911,24 @@ object LinkGraph {
     // from the sealed snapshot, so a replay after any crash deletes
     // the same pairs (no-ops where already gone); lists beyond the
     // driver-bounded cap fall back to the scan path.
-    def statsOf(dir: String) = {
-      val p = new org.apache.hadoop.fs.Path(dir, "_stats")
-      if (hadoopFs(spark, dir).exists(p)) Some(readTable(spark,p.toString))
-      else None
-    }
-    val cap = math.min(inlineCap, graft.sources.TargetedDelete.InlineKeyCap)
-    def crossDelete(dir: String, pruneCol: String, crossCol: String): Unit = {
+    def cross(pruneCol: String, crossCol: String) =
       // cross half only: pairs whose prune-side endpoint is itself
-      // forgotten are already gone — the keyed delete runs first
-      val rows = removed
+      // forgotten go with the keyed half of the same forget
+      Some(removed
         .join(idsDf.select(col("id").as(crossCol)), Seq(crossCol), "left_semi")
         .join(idsDf.select(col("id").as(pruneCol)), Seq(pruneCol), "left_anti")
-        .select(col(pruneCol), col(crossCol))
-        .limit(cap + 1).collect()
-      if (rows.isEmpty) ()
-      else if (rows.length > cap) {
-        graft.sources.TargetedDelete.deleteAuto(spark, dir, crossCol, ids)
-        ()
-      } else {
-        graft.sources.TargetedDelete.deletePairs(spark, dir, pruneCol, crossCol,
-          rows.toSeq.map(r => (r.get(0), r.get(1))))
-        ()
-      }
-    }
-    graft.sources.TargetedDelete.deleteAuto(spark, outDir(root), "src", ids,
-      stats = statsOf(outDir(root)))
-    crossDelete(outDir(root), "src", "dst")
-    graft.sources.FileStatsIndex.update(spark, outDir(root), Seq("src"))
-    graft.sources.TargetedDelete.deleteAuto(spark, inDir(root), "dst", ids,
-      stats = statsOf(inDir(root)))
-    crossDelete(inDir(root), "dst", "src")
-    graft.sources.FileStatsIndex.update(spark, inDir(root), Seq("dst"))
-    graft.sources.TargetedDelete.deleteAuto(spark, degDir(root), "src", ids,
-      stats = statsOf(degDir(root)))
-    graft.sources.FileStatsIndex.update(spark, degDir(root), Seq("src"))
-    graft.sources.TargetedDelete.deleteAuto(spark, levelsDir(root), "id", ids,
-      stats = statsOf(levelsDir(root)))
-    graft.sources.FileStatsIndex.update(spark, levelsDir(root), Seq("id"))
-    spark.catalog.refreshByPath(outDir(root))
-    spark.catalog.refreshByPath(inDir(root))
+        .select(col(pruneCol), col(crossCol)))
+    graft.sources.StoreTables.forget(spark, table(outDir(root)), "src", ids,
+      cross("src", "dst"), cap = cap)
+    graft.sources.StoreTables.forget(spark, table(inDir(root)), "dst", ids,
+      cross("dst", "src"), cap = cap)
+    for (dir <- Seq(degDir(root), levelsDir(root)))
+      graft.sources.StoreTables.forget(spark, table(dir), table(dir).key, ids, cap = cap)
 
     // corrected survivor degrees BEFORE any maintenance read; override
     // volume is bounded by the removal's reach — shard like an epoch
-    val parts = partsFor(removed.count())
-    publishClustered(spark, corrected, root, "deg", degDir(root), "src", tag, parts,
-      meta.rowsPerFile)
+    val nRemoved = removed.count()
+    publish(spark, store, degDir(root), corrected, tag, nRemoved)
 
     // orphans: removed-edge endpoints (not themselves forgotten) with
     // no remaining edge in either direction leave the node set — their
@@ -1013,7 +945,7 @@ object LinkGraph {
       ends.join(stillOut.unionAll(stillIn).distinct(), Seq("id"), "left_semi"))
     // `ends` is ≤ 2·|removed edges| — batch-proportional but NOT
     // driver-bounded (a hub vertex forgets millions of endpoints), so
-    // the orphan set follows the crossDelete discipline: inline up to
+    // the orphan set follows the cross-pair discipline: inline up to
     // the cap, past it a DISTRIBUTED anti-join delete keyed by the
     // orphan FRAME (the keys never touch the driver)
     val orphans = ends.join(living, Seq("id"), "left_anti")
@@ -1041,17 +973,15 @@ object LinkGraph {
 
     graft.sources.EpochFiles.retire(spark, levelsDir(root), tag)
     val levelRows = frontierRounds(spark, root, meta, seeds, seq)
-    publishClustered(spark, levelRows, root, "levels", levelsDir(root), "id", tag,
-      parts, meta.rowsPerFile)
-    // registered trust sets take the same repair: purge the forgotten
-    // ids + orphans from each seed-conditional level table, then
-    // re-absorb the removal's frontier through the personalized
-    // recurrence (all idempotent — a crash re-runs from the sealed
-    // snapshot like the main tables)
+    publish(spark, store, levelsDir(root), levelRows, tag, nRemoved)
+    // registered trust sets take the same repair: purge the orphans
+    // and the forgotten ids from each seed-conditional level table
+    // (the forget refreshes its stats once for both), then re-absorb
+    // the removal's frontier through the personalized recurrence (all
+    // idempotent — a crash re-runs from the sealed snapshot like the
+    // main tables)
     for (dg <- trustSets(spark, root)) {
       val tl = trustLevelsDir(root, dg)
-      graft.sources.TargetedDelete.deleteAuto(spark, tl, "id", ids,
-        stats = statsOf(tl))
       if (orphanRows.length > cap)
         graft.sources.TargetedDelete.deleteByAntiJoinDf(spark, tl, "id", orphans)
       else if (orphanRows.nonEmpty) {
@@ -1059,12 +989,11 @@ object LinkGraph {
           orphanRows.map(_.get(0)).toSeq)
         ()
       }
-      graft.sources.FileStatsIndex.update(spark, tl, Seq("id"))
+      graft.sources.StoreTables.forget(spark, table(tl), "id", ids, cap = cap)
       graft.sources.EpochFiles.retire(spark, tl, tag)
       val rows = frontierRounds(spark, root, meta, seeds, seq, tl,
         Some(readTable(spark,trustSeedsDir(root, dg))))
-      publishClustered(spark, rows, root, s"trust_$dg", tl, "id", tag,
-        parts, meta.rowsPerFile)
+      publish(spark, store, tl, rows, tag, nRemoved)
     }
     // maintained components REBUILD from the purged edges: removal can
     // split a component, and decremental connectivity has no exact
@@ -1073,7 +1002,8 @@ object LinkGraph {
     if (labelsExist(spark, root)) createComponents(spark, root)
     fs.delete(new org.apache.hadoop.fs.Path(snap), true)
     // settled (snapshot gone, a re-run is a no-op) — the auto-compact
-    // policy may fold here, same as the epoch path
+    // policy may fold here, same as the epoch path (the labels a
+    // rebuild just created join the store)
     graft.sources.StoreTables.autoCompact(spark, tables(spark, root))
     ()
   }

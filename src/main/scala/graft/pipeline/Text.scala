@@ -667,8 +667,7 @@ object Text {
     df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol), explode(concat(toks, bigrams)).as("__g"))
       .select(col(idCol),
-        pmod(conv(substring(md5(col("__g")), 1, 15), 16, 10).cast("long"),
-          lit(buckets.toLong)).as("bucket"))
+        pmod(graft.functions.md5Prefix60(col("__g")), lit(buckets.toLong)).as("bucket"))
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("n"))
   }
 

@@ -405,24 +405,20 @@ object Web {
                               textCol: String, dir: String, tag: String): Unit = {
     val spark = batch.sparkSession
     val minChars = readCensusMinChars(spark, dir)
-    val stage = dir + s"/_stage/$tag"
-    censusTable(dir).clustered(lineStats(batch, idCol, textCol, minChars))
-      .write.mode("overwrite").parquet(stage)
-    graft.sources.EpochFiles.publish(spark, stage, censusRows(dir), tag)
+    val store = lineCensusTables(dir)
+    graft.sources.StoreTables.publish(spark, store, store.tables.head,
+      lineStats(batch, idCol, textCol, minChars), tag)
+    ()
   }
 
   /** Remove everything a tag's [[advanceStagedLineCensus]] attempt
     * published (and staging leftovers) — the census is back to its
-    * pre-epoch content no matter where the attempt died.
+    * pre-epoch content no matter where the attempt died
+    * ([[graft.sources.StoreTables.rollback]]).
     */
   def rollbackLineAdvance(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, tag: String): Unit = {
-    graft.sources.EpochFiles.retire(spark, censusRows(dir), tag)
-    val st = new org.apache.hadoop.fs.Path(dir + s"/_stage/$tag")
-    val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(st, true)
-    ()
-  }
+                          dir: String, tag: String): Unit =
+    graft.sources.StoreTables.rollback(spark, lineCensusTables(dir), tag)
 
   /** The census as a one-table store ([[graft.sources.StoreTables]]):
     * hash-clustered, no file cap, no stats artifact, minor folds

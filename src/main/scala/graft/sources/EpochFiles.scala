@@ -71,15 +71,16 @@ object EpochFiles {
 
   /** Delete every file the tag ever published into `liveDir` —
     * complete rollback of a failed attempt, no-op if none exist.
+    * Returns whether any file was removed.
     */
-  def retire(spark: SparkSession, liveDir: String, tag: String): Unit = {
+  def retire(spark: SparkSession, liveDir: String, tag: String): Boolean = {
     val live = new Path(liveDir)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(live)) {
-      val had = fs.listStatus(live).map(_.getPath)
-        .filter(_.getName.startsWith(prefix(tag)))
-      had.foreach(fs.delete(_, false))
-      if (had.nonEmpty) spark.catalog.refreshByPath(liveDir)
-    }
+    val had =
+      if (!fs.exists(live)) Array.empty[Path]
+      else fs.listStatus(live).map(_.getPath).filter(_.getName.startsWith(prefix(tag)))
+    had.foreach(fs.delete(_, false))
+    if (had.nonEmpty) spark.catalog.refreshByPath(liveDir)
+    had.nonEmpty
   }
 }

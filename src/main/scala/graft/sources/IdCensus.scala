@@ -40,8 +40,6 @@ object IdCensus {
 
   def rowsDir(root: String): String =
     new org.apache.hadoop.fs.Path(root, "_ids/rows").toString
-  private def stageDir(root: String, tag: String): String =
-    new org.apache.hadoop.fs.Path(root, s"_ids/_stage/$tag").toString
 
   def exists(spark: SparkSession, root: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(rowsDir(root))
@@ -59,6 +57,13 @@ object IdCensus {
     StoreTables.Table(rowsDir(root), "id",
       rowsPerFile = math.max(0L, rowsPerFile),
       shardRows = if (rowsPerFile > 0L) rowsPerFile else Long.MaxValue)
+
+  /** The census alone as a store rooted at `root` — for a census no
+    * index owns; an owning index lists the same [[table]] in its own
+    * store, so the census shares that store's stage and rollback.
+    */
+  def store(root: String, rowsPerFile: Long = 0L): StoreTables.Store =
+    StoreTables.Store(root, Seq(table(root, rowsPerFile)))
 
   /** Overwrite the census with `rows` (column `id` + optional payload)
     * and build its stats artifact. Every writer here takes the owning
@@ -82,48 +87,21 @@ object IdCensus {
     if (!exists(spark, root)) create(spark, root, derive, rowsPerFile)
 
   /** Publish an epoch's new ids under the tag's deterministic file
-    * names (the [[EpochFiles]] discipline — re-publishing a tag
-    * retires its previous attempt first), then advance the stats
-    * artifact over the fresh files only (batch-proportional).
+    * names, stats advanced over the fresh files only
+    * ([[StoreTables.publish]]).
     */
   def appendEpoch(spark: SparkSession, root: String, rows: DataFrame,
                   tag: String, rowsPerFile: Long = 0L): Unit = {
-    val stage = stageDir(root, tag)
-    val t = table(root, rowsPerFile)
-    t.capped(t.clustered(rows)).mode("overwrite").parquet(stage)
-    val published = EpochFiles.publish(spark, stage, rowsDir(root), tag)
-    // stats advance over EXACTLY the published files — one small job
-    // (the write-pass discipline), never an artifact diff per epoch
-    FileStatsIndex.appendFor(spark, rowsDir(root), Seq("id"), published)
+    val s = store(root, rowsPerFile)
+    StoreTables.publish(spark, s, s.tables.head, rows, tag)
     ()
   }
 
-  /** Plain (non-tagged) append for the plain index-append path: same
-    * clustered layout and stats advance, no replay protocol.
+  /** Remove everything the tag published (plus staging leftovers) from
+    * a census no index owns ([[StoreTables.rollback]]).
     */
-  def appendPlain(spark: SparkSession, root: String, rows: DataFrame,
-                  rowsPerFile: Long = 0L): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val before = ParquetSource.listParquetFiles(rowsDir(root), conf).toSet
-    val t = table(root, rowsPerFile)
-    t.capped(t.clustered(rows)).mode("append").parquet(rowsDir(root))
-    spark.catalog.refreshByPath(rowsDir(root))
-    val fresh = ParquetSource.listParquetFiles(rowsDir(root), conf)
-      .filterNot(before.contains)
-    FileStatsIndex.appendFor(spark, rowsDir(root), Seq("id"), fresh)
-    ()
-  }
-
-  /** Remove everything the tag published (plus staging leftovers) —
-    * the census half of an epoch rollback/replay.
-    */
-  def retireEpoch(spark: SparkSession, root: String, tag: String): Unit = {
-    EpochFiles.retire(spark, rowsDir(root), tag)
-    val st = new org.apache.hadoop.fs.Path(stageDir(root, tag))
-    val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(st, true)
-    ()
-  }
+  def retireEpoch(spark: SparkSession, root: String, tag: String): Unit =
+    StoreTables.rollback(spark, store(root), tag)
 
   /** Census rows whose id appears in `probe.probeIdCol` — the
     * membership check behind delta detection. Bounded probes (≤
@@ -145,15 +123,11 @@ object IdCensus {
   def readAll(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(rowsDir(root))
 
-  /** Right-to-be-forgotten half for the census: crash-safe targeted
-    * rewrite of only the files holding a forgotten id, then a stats
-    * refresh (drops entries for rewritten-away files, stats the new
-    * ones).
+  /** Right-to-be-forgotten half for the census: the keyed, stats-pruned
+    * targeted rewrite ([[StoreTables.forget]]).
     */
   def forget(spark: SparkSession, root: String, ids: Seq[Any]): Unit = {
-    TargetedDelete.deleteAuto(spark, rowsDir(root), "id", ids)
-    spark.catalog.refreshByPath(rowsDir(root))
-    FileStatsIndex.update(spark, rowsDir(root), Seq("id"))
+    StoreTables.forget(spark, table(root, 0L), "id", ids)
     ()
   }
 
@@ -164,5 +138,5 @@ object IdCensus {
     * retire.
     */
   def compact(spark: SparkSession, root: String, rowsPerFile: Long = 0L): Unit =
-    StoreTables.recluster(spark, StoreTables.Store(root, Seq(table(root, rowsPerFile))))
+    StoreTables.recluster(spark, store(root, rowsPerFile))
 }

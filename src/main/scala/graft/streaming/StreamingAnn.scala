@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 import graft.pipeline.AnnIndex
+import graft.sources.StoreTables
 
 /** Continuous vector ingestion into a persisted [[graft.pipeline
   * .AnnIndex]] — the streaming face of `AnnIndex.appendNew`, for
@@ -17,7 +18,8 @@ import graft.pipeline.AnnIndex
   * [[graft.sources.EpochFiles]]), recomputes its delta against the
   * restored index ([[AnnIndex.appendEpoch]]'s anti-join — a pure
   * function of the restored index frame), publishes, then writes an
-  * atomic commit marker (`<root>/_epochs/<id>`, tmp+rename). A
+  * atomic commit marker (`<root>/_epochs/<id>`,
+  * [[graft.sources.StoreTables.commit]]). A
   * replayed committed epoch is a no-op; a crashed attempt is rolled
   * back and redone identically. The coarse/PQ models are loaded once
   * per query and reused across epochs — they are immutable between
@@ -63,19 +65,11 @@ object StreamingAnn {
                                       idCol: String, vecCol: String,
                                       handle: AnnIndex.Handle): Unit = {
     val sess = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(handle.root)
-      .getFileSystem(sess.sparkContext.hadoopConfiguration)
-    val epochs = new org.apache.hadoop.fs.Path(handle.root, "_epochs")
-    val marker = new org.apache.hadoop.fs.Path(epochs, batchId.toString)
-    if (fs.exists(marker) || batch.isEmpty) return
+    if (StoreTables.committed(sess, handle.root, batchId) || batch.isEmpty) return
     AnnIndex.appendEpoch(handle, batch, idCol, vecCol, s"e$batchId")
-    // commit point: tmp+rename — the marker exists only if the publish
-    // completed, so replays of anything earlier redo cleanly
-    require(fs.mkdirs(epochs) || fs.exists(epochs), s"cannot create $epochs")
-    val tmp = new org.apache.hadoop.fs.Path(epochs, s".tmp-$batchId")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"epoch":$batchId}""".getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, marker), s"epoch marker rename failed for $batchId")
+    // commit point: the marker exists only if the publish completed,
+    // so replays of anything earlier redo cleanly
+    StoreTables.commit(sess, handle.root, batchId)
     // foreachBatch runs on a CLONED session whose refresh does not
     // evict the outer session's listing cache; refresh so searches on
     // the outer session see the published files

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.pipeline.Dedup
+import graft.sources.StoreTables
 
 /** Online corpus deduplication — the streaming face of the batch dedup
   * tier in pipeline/Dedup.scala, for pipelines that admit documents
@@ -113,7 +114,8 @@ object StreamingDedup {
     * publish survivors and the store's three table deltas under
     * deterministic per-epoch file names
     * ([[graft.sources.EpochFiles]]), then write an atomic commit
-    * marker (`<outDir>/_epochs/<id>`, tmp+rename). A replayed epoch
+    * marker (`<outDir>/_epochs/<id>`,
+    * [[graft.sources.StoreTables.commit]]). A replayed epoch
     * whose marker exists is a no-op; one whose attempt died anywhere
     * mid-protocol is rolled back to the pre-epoch store/output state
     * and redone identically (the drop decision is deterministic given
@@ -143,31 +145,23 @@ object StreamingDedup {
                                       storePath: String, outDir: String,
                                       thresholdNum: Int, thresholdDenom: Int): Unit = {
     val sess = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(sess.sparkContext.hadoopConfiguration)
-    val epochs = new org.apache.hadoop.fs.Path(outDir, "_epochs")
-    val marker = new org.apache.hadoop.fs.Path(epochs, batchId.toString)
-    if (fs.exists(marker) || batch.isEmpty) return
+    if (StoreTables.committed(sess, outDir, batchId) || batch.isEmpty) return
     val tag = s"e$batchId"
+    val out = StoreTables.sink(outDir, idCol)
     // a previous attempt of this epoch may have died mid-publish:
     // restore the pre-epoch store and output before recomputing
     Dedup.NearDupStore.rollbackAdvance(sess, storePath, tag)
-    graft.sources.EpochFiles.retire(sess, outDir, tag)
+    StoreTables.rollback(sess, out, tag)
     val survivors = graft.Checkpoints.materialize(
       Dedup.NearDupStore.dropNearDups(batch, idCol, textCol, storePath,
         thresholdNum = thresholdNum, thresholdDenom = thresholdDenom,
         advance = false))
-    val stage = s"$outDir/_stage/$tag"
-    survivors.write.mode("overwrite").parquet(stage)
-    graft.sources.EpochFiles.publish(sess, stage, outDir, tag)
+    StoreTables.publishWith(sess, out, out.tables.head, tag)(
+      survivors.write.mode("overwrite").parquet(_))
     Dedup.NearDupStore.advanceStaged(survivors, idCol, textCol, storePath, tag)
-    // commit point: tmp+rename — the marker exists only if everything
-    // above completed, so replays of anything earlier redo cleanly
-    require(fs.mkdirs(epochs) || fs.exists(epochs), s"cannot create $epochs")
-    val tmp = new org.apache.hadoop.fs.Path(epochs, s".tmp-$batchId")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"epoch":$batchId}""".getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, marker), s"epoch marker rename failed for $batchId")
+    // commit point: the marker exists only if everything above
+    // completed, so replays of anything earlier redo cleanly
+    StoreTables.commit(sess, outDir, batchId)
     // foreachBatch runs on a CLONED session whose refresh does not
     // evict the outer session's listing cache; refresh so the NEXT
     // batch and outside readers of this session see the publish
@@ -182,8 +176,7 @@ object StreamingDedup {
     // fold destroys belong to COMMITTED epochs no replay will retire.
     // (Folding inside advanceStaged would sit BEFORE the marker — a
     // crash there would let a replay double-append the epoch.)
-    graft.sources.StoreTables.autoCompact(sess,
-      Dedup.NearDupStore.tables(sess, storePath))
+    StoreTables.autoCompact(sess, Dedup.NearDupStore.tables(sess, storePath))
     ()
   }
 }

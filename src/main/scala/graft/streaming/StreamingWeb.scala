@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 import graft.pipeline.Web
+import graft.sources.StoreTables
 
 /** Continuous line-level curation against the persisted line census —
   * the streaming twin of `transform.lineDedup.censusDir`: each
@@ -39,33 +40,24 @@ object StreamingWeb {
                                       censusDir: String, outDir: String,
                                       minDupCount: Int): Unit = {
     val sess = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(sess.sparkContext.hadoopConfiguration)
-    val epochs = new org.apache.hadoop.fs.Path(outDir, "_epochs")
-    val marker = new org.apache.hadoop.fs.Path(epochs, batchId.toString)
-    if (fs.exists(marker) || batch.isEmpty) return
+    if (StoreTables.committed(sess, outDir, batchId) || batch.isEmpty) return
     val tag = s"e$batchId"
+    val out = StoreTables.sink(outDir, idCol)
     // a previous attempt may have died mid-publish: retire its output
     // and census delta before recomputing — the probe is deterministic
     // given the restored census, so the redo is identical
     Web.rollbackLineAdvance(sess, censusDir, tag)
-    graft.sources.EpochFiles.retire(sess, outDir, tag)
+    StoreTables.rollback(sess, out, tag)
     // materialize BEFORE advancing (the lazy probe would otherwise
     // read the census after this epoch's delta landed and count the
     // batch against itself)
     val survivors = graft.Checkpoints.materialize(
       Web.lineDedupAgainst(censusDir, batch, idCol, textCol, minDupCount))
-    val stage = s"$outDir/_stage/$tag"
-    survivors.write.mode("overwrite").parquet(stage)
-    graft.sources.EpochFiles.publish(sess, stage, outDir, tag)
+    StoreTables.publishWith(sess, out, out.tables.head, tag)(
+      survivors.write.mode("overwrite").parquet(_))
     Web.advanceStagedLineCensus(batch, idCol, textCol, censusDir, tag)
-    // commit point: tmp+rename — the marker exists only if everything
-    // above completed
-    require(fs.mkdirs(epochs) || fs.exists(epochs), s"cannot create $epochs")
-    val tmp = new org.apache.hadoop.fs.Path(epochs, s".tmp-$batchId")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"epoch":$batchId}""".getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, marker), s"epoch marker rename failed for $batchId")
+    // commit point: the marker exists only if everything above completed
+    StoreTables.commit(sess, outDir, batchId)
     sess.catalog.refreshByPath(outDir)
     // committed — the auto-compact policy may fold accumulated census
     // epoch deltas HERE, strictly after the marker (the StreamingDedup
@@ -75,7 +67,7 @@ object StreamingWeb {
     // the read-time fold contract, a replay of THIS epoch
     // short-circuits on its marker, and the only per-tag names
     // destroyed belong to COMMITTED epochs no replay will retire.
-    graft.sources.StoreTables.autoCompact(sess, Web.lineCensusTables(censusDir))
+    StoreTables.autoCompact(sess, Web.lineCensusTables(censusDir))
     ()
   }
 }

@@ -151,12 +151,17 @@ class DigestExpressionsSpec extends AnyFunSuite {
         Seq("s", "i", "ts").map(c => coalesce(col(c).cast("string"), lit(""))): _*)
       val prefix = GraftColumnBridge.column(Md5Prefix60(GraftColumnBridge.expression(
         coalesce(col("s").cast("string"), lit("")))))
+      // lambda-variable input: the builder inside a higher-order function
+      val strings = array(col("s"), col("Zeta"), col("alpha"), lit(null).cast("string"))
       assertSame(df, (for (key <- Seq(col("s"), col("i"), col("L"), col("dec"), col("D"),
                                      col("ts"), col("bin"), lit(null).cast("string"), composite);
                            buckets <- Seq(1, 2, 8, 1000, Int.MaxValue))
         yield (s"$mode, key $key, $buckets buckets",
           Sampling.bucketOf(key, buckets), refBucket(key, buckets))) :+
-        ((s"$mode, raw 60-bit prefix", prefix, refPrefix(col("s")))))
+        ((s"$mode, raw 60-bit prefix", prefix, refPrefix(col("s")))) :+
+        ((s"$mode, md5Prefix60 over transform's lambda variable",
+          transform(strings, x => md5Prefix60(x)),
+          transform(strings, x => conv(substring(md5(x), 1, 15), 16, 10).cast("long")))))
     }
   }
 

@@ -14,6 +14,14 @@ import graft.pipeline.{AnnIndex, Dedup, LexIndex, LinkGraph, Web}
   * its resolved row multiset, hold no tagged file name, respect its
   * file cap, and (where it keeps one) carry a `_stats` artifact naming
   * exactly its live files.
+  *
+  * The epoch tier runs over the same table lists: a [[StoreTables
+  * .publish]] into every table then a [[StoreTables.rollback]] — and
+  * an attempt killed between stage and publish, then a rollback — must
+  * restore the exact pre-epoch file listing and row multiset, leave
+  * `_stats` naming exactly the live files and remove the tag's stage;
+  * [[StoreTables.forget]] must delete the same rows on the pair path
+  * and on the scan path (`cap = 0`).
   */
 class StoreTablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -28,6 +36,16 @@ class StoreTablesSpec extends AnyFunSuite {
   private def resolved(t: StoreTables.Table): Seq[String] = {
     spark.catalog.refreshByPath(t.dir)
     t.resolve(spark.read.parquet(t.dir)).collect().map(_.toString).sorted.toSeq
+  }
+
+  private def names(t: StoreTables.Table): Seq[String] =
+    files(t.dir).map(new Path(_).getName).sorted
+
+  private def statted(t: StoreTables.Table): Set[String] = {
+    val stats = new Path(t.dir, "_stats").toString
+    spark.catalog.refreshByPath(stats)
+    spark.read.parquet(stats).select("file").as[String].collect()
+      .map(f => new Path(f).getName).toSet
   }
 
   private def tags(store: StoreTables.Store): Set[String] =
@@ -45,13 +63,8 @@ class StoreTablesSpec extends AnyFunSuite {
         val n = spark.read.parquet(f).count()
         assert(n <= t.rowsPerFile, s"$step left a $n-row file past the cap: $f")
       }
-      if (t.stats) {
-        val stats = new Path(t.dir, "_stats").toString
-        spark.catalog.refreshByPath(stats)
-        val statted = spark.read.parquet(stats).select("file").as[String].collect()
-          .map(f => new Path(f).getName).toSet
-        assert(statted === names.toSet, s"$step left _stats out of step in ${t.dir}")
-      }
+      if (t.stats)
+        assert(statted(t) === names.toSet, s"$step left _stats out of step in ${t.dir}")
     }
 
   /** Build, then fold minor and major, checking after each step. */
@@ -160,5 +173,174 @@ class StoreTablesSpec extends AnyFunSuite {
       .filter(col("line_hash") === md5(lit("alpha line"))).select("occ").as[Long].head()
     assert(occ === 3L)
     foldBoth(() => Web.lineCensusTables(p))
+  }
+
+  // ---- the epoch tier ----
+
+  /** Rows rendered with their columns in name order: a rewrite may
+    * reorder a file's columns (the anti-join delete puts the key first).
+    */
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+
+  private def rawRows(t: StoreTables.Table): Seq[String] = {
+    spark.catalog.refreshByPath(t.dir)
+    rowSet(spark.read.parquet(t.dir))
+  }
+
+  /** `rows` of `t`'s own schema as a driver-local frame (no lazy read
+    * of a directory the test is about to mutate).
+    */
+  private def local(t: StoreTables.Table, rows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+    val df = rows(spark.read.parquet(t.dir))
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+  }
+
+  private def stageOf(s: StoreTables.Store, tag: String): Path = new Path(s.root, s"_stage/$tag")
+
+  private def exists(p: Path): Boolean =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+
+  /** Every table's listing, rows and stats are back to `before`, and
+    * the tag's stage is gone.
+    */
+  private def checkRestored(s: StoreTables.Store, step: String, tag: String,
+                            before: Seq[(Seq[String], Seq[String])]): Unit = {
+    s.tables.zip(before).foreach { case (t, (listed, rows)) =>
+      assert(names(t) === listed, s"$step changed the file listing of ${t.dir}")
+      assert(rawRows(t) === rows, s"$step changed the rows of ${t.dir}")
+      if (t.stats)
+        assert(statted(t) === listed.toSet, s"$step left _stats out of step in ${t.dir}")
+    }
+    assert(!exists(stageOf(s, tag)), s"$step left ${stageOf(s, tag)}")
+  }
+
+  /** (a) every table publishes a share of an epoch, then the store
+    * rolls it back; (b) an attempt dies between stage and publish —
+    * the first table published, the rest (or the only one) staged
+    * only — then the store rolls it back.
+    */
+  private def publishAndRollBack(store: () => StoreTables.Store): Unit = {
+    val s = store()
+    val before = s.tables.map(t => (names(t), rawRows(t)))
+    s.tables.foreach { t =>
+      val df = local(t, _.limit(3))
+      StoreTables.publish(spark, s, t, df, "x1", Some(df.count()))
+    }
+    assert(tags(store()).contains("x1"))
+    StoreTables.rollback(spark, s, "x1")
+    checkRestored(store(), "publish + rollback", "x1", before)
+
+    val staged = if (s.tables.size > 1) s.tables.tail else s.tables
+    if (s.tables.size > 1)
+      StoreTables.publish(spark, s, s.tables.head, local(s.tables.head, _.limit(2)), "x2")
+    staged.foreach { t =>
+      t.capped(t.clustered(local(t, _.limit(2)))).mode("overwrite")
+        .parquet(StoreTables.stageDir(s, t, "x2"))
+    }
+    assert(exists(stageOf(s, "x2")))
+    StoreTables.rollback(spark, s, "x2")
+    checkRestored(store(), "killed attempt + rollback", "x2", before)
+  }
+
+  /** (c) on two copies of the store, forget two ids from every table —
+    * the pair path (one id as pairs, one bare, where the id is not the
+    * cluster key; the keyed delete where it is) and the scan path
+    * (`cap = 0`) — and compare both against the rows left by a filter.
+    */
+  private def forgetBothPaths(root: String, store: String => StoreTables.Store): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    def copy(suffix: String): StoreTables.Store = {
+      val dst = new Path(root + suffix)
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, new Path(root), fs, dst, false, conf))
+      store(dst.toString)
+    }
+    val (viaPairs, viaScan) = (copy("-pairs"), copy("-scan"))
+    viaPairs.tables.zip(viaScan.tables).foreach { case (tp, ts) =>
+      val cols = spark.read.parquet(tp.dir).columns
+      val idCol = Seq("id", "neighbor_id").find(cols.contains).getOrElse(tp.key)
+      val ids = spark.read.parquet(tp.dir).select(idCol).distinct().orderBy(idCol)
+        .limit(2).collect().map(_.get(0)).toSeq
+      assert(ids.size === 2, s"${tp.dir} needs two ids")
+      val expected = rowSet(spark.read.parquet(tp.dir).filter(!col(idCol).isin(ids: _*)))
+      def run(t: StoreTables.Table, cap: Int): Unit =
+        if (idCol == t.key) StoreTables.forget(spark, t, idCol, ids, cap = cap)
+        else StoreTables.forget(spark, t, idCol, ids,
+          pairs = Some(local(t, _.filter(col(idCol) === ids.head)
+            .select(col(t.key), col(idCol)).distinct())),
+          bare = Some(local(t, _.filter(col(idCol) === ids(1)).select(col(idCol)).distinct())),
+          cap = cap)
+      run(tp, TargetedDelete.InlineKeyCap)
+      run(ts, 0)
+      for ((t, path) <- Seq(tp -> "pair", ts -> "scan")) {
+        assert(rawRows(t) === expected, s"the $path path of forget left other rows in ${t.dir}")
+        // _stats names no retired file, and every live file but the
+        // empty replacements of wholly deleted files (which have no
+        // rows for the artifact to stat)
+        if (t.stats) {
+          val (stats, live) = (statted(t), names(t).toSet)
+          assert(stats.subsetOf(live), s"the $path path left stale _stats entries in ${t.dir}")
+          assert((live -- stats).forall(f => spark.read.parquet(s"${t.dir}/$f").count() == 0L),
+            s"the $path path left rows unstatted in ${t.dir}")
+        }
+      }
+    }
+  }
+
+  test("NearDupStore: epoch publish/rollback, a killed attempt, and forget's two paths") {
+    val p = tmp("st-ndstore-epoch")
+    Dedup.NearDupStore.create(docs.toDF("id", "text"), "id", "text", p,
+      bands = 4, rowsPerBand = 2, rowsPerFile = 5L)
+    Dedup.NearDupStore.advanceStaged(batch(10, 11, 12), "id", "text", p, "e1")
+    publishAndRollBack(() => Dedup.NearDupStore.tables(spark, p))
+    forgetBothPaths(p, Dedup.NearDupStore.tables(spark, _))
+  }
+
+  test("AnnIndex: epoch publish/rollback, a killed attempt, and forget's two paths") {
+    val p = tmp("st-ann-epoch")
+    val emb = Tables.load(spark, TestSpark.sf, "embeddings").filter(col("vec_id") < 120)
+    val h = AnnIndex.build(emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
+      p, kIvf = 4, m = 16, ksub = 16, iters = 2, rowsPerFile = 16L)
+    AnnIndex.appendEpoch(h, emb.filter(col("vec_id") % 4 === 0), "vec_id", "embedding", "e1")
+    publishAndRollBack(() => AnnIndex.tables(spark, p))
+    forgetBothPaths(p, AnnIndex.tables(spark, _))
+  }
+
+  test("LexIndex: epoch publish/rollback, a killed attempt, and forget's two paths") {
+    val p = tmp("st-lex-epoch")
+    LexIndex.create(docs.toDF("id", "text"), "id", "text", p, rowsPerFile = 2L)
+    LexIndex.appendEpoch(batch(10, 11), "id", "text", p, "e1")
+    publishAndRollBack(() => LexIndex.tables(spark, p))
+    forgetBothPaths(p, LexIndex.tables(spark, _))
+  }
+
+  test("LinkGraph: epoch publish/rollback, a killed attempt, and forget's two paths") {
+    val p = tmp("st-graph-epoch")
+    LinkGraph.create(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 1L).toDF("src", "dst"),
+      "src", "dst", p, iters = 3, rowsPerFile = 2L)
+    LinkGraph.createComponents(spark, p)
+    LinkGraph.registerTrustRank(spark, p, Seq(1L).toDF("id"))
+    LinkGraph.appendEpoch(Seq(2L -> 4L, 5L -> 1L).toDF("src", "dst"), "src", "dst", p, "e1")
+    publishAndRollBack(() => LinkGraph.tables(spark, p))
+    forgetBothPaths(p, LinkGraph.tables(spark, _))
+  }
+
+  test("IdCensus: epoch publish/rollback, a killed attempt, and forget's two paths") {
+    val p = tmp("st-ids-epoch")
+    IdCensus.create(spark, p, spark.range(20).toDF("id"), rowsPerFile = 3L)
+    IdCensus.appendEpoch(spark, p, spark.range(20, 27).toDF("id"), "e1", rowsPerFile = 3L)
+    publishAndRollBack(() => IdCensus.store(p, 3L))
+    forgetBothPaths(p, IdCensus.store(_, 3L))
+  }
+
+  test("Web line census: epoch publish/rollback, a killed attempt, and forget's two paths") {
+    val p = tmp("st-lines-epoch")
+    Web.createLineCensus(Seq((1L, "alpha line\nbeta line\ngamma"), (2L, "beta line\ndelta"))
+      .toDF("id", "text"), "id", "text", p)
+    Web.advanceStagedLineCensus(Seq((3L, "alpha line\nepsilon")).toDF("id", "text"),
+      "id", "text", p, "e1")
+    publishAndRollBack(() => Web.lineCensusTables(p))
+    forgetBothPaths(p, Web.lineCensusTables)
   }
 }
