@@ -55,9 +55,10 @@ object CensusQ {
         val t0 = System.nanoTime()
         try {
           SparkEntry.queries(n)(spark, sfDir).count()
-          // drain listener-bus stragglers so counts land on this query
-          Thread.sleep(120)
+          // clock first, then drain the listener bus so every event of
+          // this query lands on its counts (the drain is not its time)
           val sec = (System.nanoTime() - t0) / 1e9
+          org.apache.spark.sql.GraftColumnBridge.waitForListenerBus(spark)
           println(f"$n%-24s $run%3d ${jobs.get}%6d ${stages.get}%7d ${tasks.get}%7d ${shuffleRead.get / 1024}%9d $sec%8.3f")
           if (detail) {
             import scala.jdk.CollectionConverters._

@@ -124,13 +124,15 @@ object Tables {
       // keyed point reads push sorted 512-key IN chunks into parquet;
       // exact OR-of-eq row-group pruning (vs the min/max collapse past
       // the default threshold of 10) is what keeps probe bytes batch-
-      // proportional — see KeyedReads. Session-wide so LAZY pruned
-      // frames (planned after the read call returns) keep it too.
+      // proportional — see KeyedReads. Set here, once, for the whole
+      // session: a LAZY pruned frame plans after the read call returns,
+      // so no per-read scope could cover it.
       .config("spark.sql.parquet.pushdown.inFilterThreshold",
         graft.sources.KeyedReads.PruneChunk.toString)
       // pruned point reads pass explicit leaf-file lists; stat-ing a
       // batch-bounded list serially on the driver beats launching a
-      // listing JOB per read (Spark's default threshold is 32 paths)
+      // listing JOB per read (Spark's default threshold is 32 paths).
+      // Session-wide for the same reason as the IN threshold.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         graft.sources.KeyedReads.ListSerialThreshold.toString)
       // first take/limit attempt covers one full wave of the session's

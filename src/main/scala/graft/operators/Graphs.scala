@@ -544,7 +544,7 @@ object Graphs {
       // the rescale's own materialize)
       val (raw, m) =
         if (boundedV) {
-          val rows = graft.sources.BoundedExec.run(spark)(raw0.collect())
+          val rows = graft.sources.BoundedExec.on(raw0).collect()
           val mx = rows.foldLeft(0L)((acc, r) =>
             if (r.isNullAt(1)) acc else math.max(acc, r.getLong(1)))
           (localFrame(spark, rows,

@@ -278,15 +278,16 @@ object LinkGraph {
     val deltaSrcKeys = graft.sources.KeyedReads
       .collectKeys(delta, "src", MaxInlineKeys)
     // inline-bounded epoch: every remaining action of this absorb works
-    // on the delta's reach through point reads — run each as ONE job
-    // (no AQE per-exchange fan-out, no broadcast jobs; the same
-    // boundedness evidence that admits inline keys gates entry, and the
-    // scale fallback below never comes through here). An epoch past the
-    // inline cap keeps the adaptive path: its publishes shuffle real
-    // volume.
-    def boundedRun[A](body: => A): A =
-      if (deltaSrcKeys.isDefined) graft.sources.BoundedExec.run(spark)(body)
-      else body
+    // on the delta's reach through point reads — run each as ONE job on
+    // the bounded child session (no AQE per-exchange fan-out, no
+    // broadcast jobs; the same boundedness evidence that admits inline
+    // keys gates entry, and the scale fallback below never comes through
+    // here). An epoch past the inline cap keeps the adaptive path: its
+    // publishes shuffle real volume. `bounded` re-binds a frame onto
+    // that session; frames built there never outlive their block.
+    val bspark =
+      if (deltaSrcKeys.isDefined) graft.sources.BoundedExec.session(spark) else spark
+    def bounded(df: DataFrame): DataFrame = graft.sources.BoundedExec.bind(df, bspark)
     def readByDeltaSrcs(dir: String, keyCol: String): DataFrame =
       deltaSrcKeys match {
         case Some(ks) => graft.sources.KeyedReads.prunedRead(spark, dir, keyCol,
@@ -307,17 +308,17 @@ object LinkGraph {
     // labels absorb BEFORE the edge publishes (they need the PRE-epoch
     // endpoint labels; a replay's retire restored them above)
     if (labelsExist(spark, root))
-      boundedRun(absorbLabels(spark, store, root, delta, seq, tag, nDelta))
+      absorbLabels(bspark, store, root, bounded(delta), seq, tag, nDelta)
 
     // edges + degrees publish FIRST: the frontier rounds below read
     // the union graph through the store's own tables. The three
     // publishes touch disjoint tables — fan them out (guide §1: the
     // epoch's cost is its job CHAIN; independent publishes overlap
     // their range-sample + write + stats jobs)
-    boundedRun(graft.Par.run(spark)(
-      () => publish(spark, store, outDir(root), delta, tag, nDelta),
-      () => publish(spark, store, inDir(root), delta, tag, nDelta),
-      () => publish(spark, store, degDir(root), newDeg, tag, nDelta)))
+    graft.Par.run(bspark)(
+      () => publish(bspark, store, outDir(root), bounded(delta), tag, nDelta),
+      () => publish(bspark, store, inDir(root), bounded(delta), tag, nDelta),
+      () => publish(bspark, store, degDir(root), bounded(newDeg), tag, nDelta))
 
     // perturbation seeds: out-neighbors of every changed-degree source
     // (all delta sources — appends only increase degree) + new vertices.
@@ -331,8 +332,10 @@ object LinkGraph {
     val newNodes = touchedNodes.join(knownIds, Seq("id"), "left_anti")
     val outOfDeltaSrcs = readByDeltaSrcs(outDir(root), "src")
       .select(col("dst").as("id"))
-    val seeds = boundedRun(graft.Checkpoints.materialize(
-      outOfDeltaSrcs.unionAll(newNodes).distinct()))
+    // materialized on the bounded session, served back on the caller's:
+    // the uniform rounds below are unbounded work
+    val seeds = graft.sources.BoundedExec.bind(graft.Checkpoints.materialize(
+      bounded(outOfDeltaSrcs.unionAll(newNodes).distinct())), spark)
 
     val levelRows = frontierRounds(spark, root, meta, seeds, seq)
     // level overrides are reach-bounded (≈ seeds × iters) — the delta-
@@ -342,14 +345,14 @@ object LinkGraph {
     // edge/degree tables and their own seed-conditional levels), so
     // they fan out together.
     val trustDigests = trustSets(spark, root)
-    boundedRun(graft.Par.run(spark)(
-      (() => publish(spark, store, levelsDir(root), levelRows, tag, nDelta)) +:
+    graft.Par.run(bspark)(
+      (() => publish(bspark, store, levelsDir(root), bounded(levelRows), tag, nDelta)) +:
       trustDigests.map(dg => () => {
-        val rows = frontierRounds(spark, root, meta, seeds, seq,
+        val rows = frontierRounds(bspark, root, meta, bounded(seeds), seq,
           trustLevelsDir(root, dg),
-          Some(readTable(spark, trustSeedsDir(root, dg))))
-        publish(spark, store, trustLevelsDir(root, dg), rows, tag, nDelta)
-      }): _*))
+          Some(readTable(bspark, trustSeedsDir(root, dg))))
+        publish(bspark, store, trustLevelsDir(root, dg), rows, tag, nDelta)
+      }): _*)
     // the epoch is SETTLED here (every table published under the tag's
     // recorded seq) — the one point the auto-compact policy may fold
     // accumulated overrides without violating the per-tag-name caveat
@@ -439,10 +442,10 @@ object LinkGraph {
           }
           val inlined = (seedKeys, chKeys) match {
             case (Some(sk), Some(ck)) =>
-              val dsts = graft.sources.BoundedExec.run(spark)(
+              val dsts = graft.sources.BoundedExec.on(
                 pruned(outDir(root), "src", ck)
                   .select(col("dst")).distinct()
-                  .limit(MaxInlineKeys + 1).collect())
+                  .limit(MaxInlineKeys + 1)).collect()
               if (dsts.length > MaxInlineKeys) None
               else {
                 val ks = (sk ++ dsts.map(_.get(0))).distinct
@@ -538,7 +541,7 @@ object LinkGraph {
           // inline round: the whole round runs as ONE job (no AQE
           // stage fan-out — the inputs are bounded point reads) and
           // `changed` comes back driver-side, cand-bounded
-          val rows = graft.sources.BoundedExec.run(spark)(freshChanged.collect())
+          val rows = graft.sources.BoundedExec.on(freshChanged).collect()
           changedRows = Some(rows)
           changed = localRanks(rows)
         case None =>

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 
 /** Run actions over CONTRACT-BOUNDED frames without AQE's per-stage
   * job fan-out (guide §1 — a job is a fixed scheduling quantum): under
@@ -8,19 +8,30 @@ import org.apache.spark.sql.SparkSession
   * (measured ~70-80 ms of pure scheduling each on this class of
   * driver), which is the right trade for warehouse-scale shuffles and
   * pure overhead for a frontier round whose inputs are inline-key
-  * bounded point reads. Inside `run`, adaptive execution is off and
-  * broadcast joins are disabled (a broadcast exchange is its own job
-  * too; a sort-merge join of bounded rows is trivially cheap), so one
-  * action = ONE job regardless of its exchange count.
+  * bounded point reads. A bounded action runs with adaptive execution
+  * off and broadcast joins disabled (a broadcast exchange is its own
+  * job too; a sort-merge join of bounded rows is trivially cheap), so
+  * one action = ONE job regardless of its exchange count.
   *
-  * Refcounted like [[KeyedReads]]' read-conf raise: concurrent bounded
-  * loops (Par-fanned per-trust-set rounds) must not restore the confs
-  * while a sibling is still planning under them. Callers gate entry on
-  * the SAME boundedness evidence that admits inline keys — the scale
-  * fallback (frame-path maintenance) never comes through here.
+  * Scoped, not swapped: the pins live on a CHILD session — a clone of
+  * the caller's session (its confs, experimental strategies and
+  * registered functions) with the pins set once at creation — and a
+  * bounded frame is the caller's analyzed plan re-bound onto that
+  * child. The caller's session is never mutated, so a query planned on
+  * it while a bounded action runs keeps AQE and the session's shuffle
+  * width, and there is nothing to restore. Children are cached per
+  * parent and parent conf snapshot: a fresh session re-builds its
+  * analyzer/optimizer/planner on first use, which costs more than the
+  * bounded action itself.
+  *
+  * Callers gate entry on the SAME boundedness evidence that admits
+  * inline keys — the scale fallback (frame-path maintenance) never
+  * comes through here — and keep child-bound frames inside the bounded
+  * call: anything that outlives it is re-bound to the caller's session
+  * ([[bind]]), or later unbounded work would silently inherit the pins.
   */
 object BoundedExec {
-  private val confKeys = Seq(
+  private val pins = Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     // a bounded round's `limit(cap).collect` must be ONE job — the
@@ -34,30 +45,34 @@ object BoundedExec {
     // wall until this pin). Bounded frames fit one partition by the
     // same evidence that admitted them here.
     "spark.sql.shuffle.partitions" -> "1")
-  private val users = new java.util.concurrent.atomic.AtomicInteger
-  @volatile private var saved: Seq[(String, Option[String])] = Nil
 
-  def run[A](spark: SparkSession)(body: => A): A = {
-    users.synchronized {
-      if (users.getAndIncrement() == 0) {
-        saved = confKeys.map { case (k, v) =>
-          val prev = spark.conf.getOption(k)
-          spark.conf.set(k, v)
-          k -> prev
-        }
-      }
+  /** Children keyed by (parent, its explicitly set confs, its
+    * experimental strategies and optimizations): a parent whose confs
+    * change gets a fresh child carrying them. Bounded like the other
+    * session-scoped caches (cleared wholesale past a handful).
+    */
+  private val children = scala.collection.concurrent.TrieMap[AnyRef, SparkSession]()
+
+  /** The bounded child of `spark` — `spark` itself when it already runs
+    * under the pins (nested use is a no-op).
+    */
+  def session(spark: SparkSession): SparkSession =
+    if (pins.forall { case (k, v) => spark.conf.getOption(k).contains(v) }) spark
+    else {
+      val key = (spark, spark.conf.getAll,
+        spark.experimental.extraStrategies, spark.experimental.extraOptimizations)
+      children.getOrElse(key, {
+        if (children.size > 8) children.clear()
+        val child = GraftColumnBridge.cloneSession(spark, pins)
+        children.putIfAbsent(key, child).getOrElse(child)
+      })
     }
-    try body
-    finally users.synchronized {
-      if (users.decrementAndGet() == 0) {
-        saved.foreach { case (k, prev) =>
-          prev match {
-            case Some(v) => spark.conf.set(k, v)
-            case None => spark.conf.unset(k)
-          }
-        }
-        saved = Nil
-      }
-    }
-  }
+
+  /** `df` as a bounded frame: its plan on the bounded child session. */
+  def on(df: DataFrame): DataFrame = bind(df, session(df.sparkSession))
+
+  /** `df`'s analyzed plan re-bound onto `spark` (as is when already there). */
+  def bind(df: DataFrame, spark: SparkSession): DataFrame =
+    if (df.sparkSession eq spark) df
+    else GraftColumnBridge.ofRows(spark, GraftColumnBridge.analyzed(df))
 }

@@ -59,15 +59,20 @@ object FileStatsIndex {
     // read pays a footer-inference job); others resolve through the
     // signature cache / embedded-footer path — also zero jobs for
     // Spark-written dirs
-    val df = spark.read
-      .schema(schema.getOrElse(KeyedReads.schemaFor(spark, dir))).parquet(dir)
-    val aggs = columns.flatMap { c =>
-      Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
-    }
-    df.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
+    fileStats(spark.read
+      .schema(schema.getOrElse(KeyedReads.schemaFor(spark, dir))).parquet(dir), columns)
   }
+
+  /** The artifact's rows over `df`'s files: `file, n_rows` and
+    * `<c>__min, <c>__max, <c>__nulls` per column. A file without rows
+    * yields no group — [[update]] records those from their footers.
+    */
+  private def fileStats(df: DataFrame, columns: Seq[String]): DataFrame =
+    df.groupBy(input_file_name().as("file"))
+      .agg(count(lit(1)).as("n_rows"), columns.flatMap { c =>
+        Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
+      }: _*)
 
   /** Build and persist next to the data (`<dir>/_stats`) — underscore
     * prefix keeps every parquet reader from picking it up as data.
@@ -246,17 +251,11 @@ object FileStatsIndex {
     if (!fs.exists(new org.apache.hadoop.fs.Path(statsPath)))
       return buildAndSave(spark, dir, columns)
     if (newFiles.isEmpty) return statsPath
-    val aggs = columns.flatMap { c =>
-      Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
-    }
     // writers that KNOW the written frame's schema pass it (a schema-
     // less read pays a footer-inference job per publish); others fall
     // back to the signature-cached table schema
-    spark.read.schema(schema.getOrElse(KeyedReads.schemaFor(spark, dir)))
-      .parquet(newFiles: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
+    fileStats(spark.read.schema(schema.getOrElse(KeyedReads.schemaFor(spark, dir)))
+        .parquet(newFiles: _*), columns)
       .coalesce(1)
       .write.mode("append").parquet(statsPath)
     statsPath
@@ -265,40 +264,50 @@ object FileStatsIndex {
   /** Incremental maintenance: stat ONLY the data files the artifact
     * has never seen and append them — the build never rescans indexed
     * files (at warehouse scale a day's append costs a day's scan, not
-    * the table's). No-op when nothing is new; a missing artifact
-    * falls back to a full [[buildAndSave]].
+    * the table's). Every fresh file gets an entry: one whose footer
+    * holds no rows (a wholly deleted file's replacement) is recorded
+    * from its footer as `n_rows = 0` with null bounds — the "empty
+    * file" every prune skips — instead of staying fresh and forcing a
+    * rewrite on every later call. The known-file list is decoded on the
+    * driver, so an update with nothing new or stale runs no Spark job;
+    * a missing artifact falls back to a full [[buildAndSave]].
     */
   def update(spark: SparkSession, dir: String, columns: Seq[String]): String = {
     val statsPath = new org.apache.hadoop.fs.Path(dir, "_stats").toString
-    val fs = new org.apache.hadoop.fs.Path(statsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(statsPath).getFileSystem(conf)
     if (!fs.exists(new org.apache.hadoop.fs.Path(statsPath)))
       return buildAndSave(spark, dir, columns)
-    val existing = spark.read.parquet(statsPath)
-    val knownRaw = existing.select("file").collect().map(_.getString(0))
-    val onDisk = ParquetSource
-      .listParquetFiles(dir, spark.sparkContext.hadoopConfiguration)
-    val diskSet = onDisk.map(pathOf).toSet
+    val knownRaw = ParquetSource.localRows(conf, statsPath, Seq("file")) match {
+      case ParquetSource.LocalRead.Rows(rs) => rs.map(_.getString(0))
+      case _ => spark.read.parquet(statsPath).select("file").collect().map(_.getString(0))
+    }
+    val onDisk = ParquetSource.listParquetStatuses(dir, conf)
+    val diskSet = onDisk.map(st => pathOf(st.getPath.toString)).toSet
     val known = knownRaw.map(pathOf).toSet
-    val fresh = onDisk.filterNot(f => known.contains(pathOf(f)))
+    val fresh = onDisk.filterNot(st => known.contains(pathOf(st.getPath.toString)))
     // entries for files compaction/cleanup removed are dead weight —
     // drop them while we're rewriting anyway
     val stale = knownRaw.filterNot(f => diskSet.contains(pathOf(f)))
     if (fresh.isEmpty && stale.isEmpty) return statsPath
+    val existing = spark.read.parquet(statsPath)
     val live =
       if (stale.isEmpty) existing
       else existing.filter(!col("file").isin(stale.toIndexedSeq: _*))
+    val (empty, filled) = fresh.partition(st => ParquetSource.footer(conf, st).rows == 0L)
+    // a row-less file forms no group in the aggregation: its entry (no
+    // rows, null bounds, no nulls) comes from the footer alone
+    val emptyEntries = spark.createDataFrame(java.util.Arrays.asList(empty.map(st =>
+      org.apache.spark.sql.Row(existing.columns.toIndexedSeq.map {
+        case "file" => st.getPath.toString
+        case "n_rows" => 0L
+        case c if c.endsWith("__nulls") => 0L
+        case _ => null
+      }: _*)): _*), existing.schema)
     val merged =
-      if (fresh.isEmpty) live
-      else {
-        val aggs = columns.flatMap { c =>
-          Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
-        }
-        live.unionByName(spark.read.parquet(fresh: _*)
-          .groupBy(input_file_name().as("file"))
-          .agg(count(lit(1)).as("n_rows"), aggs: _*))
-      }
+      if (filled.isEmpty) live.unionByName(emptyEntries)
+      else live.unionByName(emptyEntries).unionByName(
+        fileStats(spark.read.parquet(filled.map(_.getPath.toString): _*), columns))
     // materialize before overwriting the artifact being read; one file
     // (see buildAndSave — the artifact's own footer count is a
     // per-probe metadata tax)

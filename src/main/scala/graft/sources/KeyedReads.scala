@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *     per file (hundreds of thousands of S3 GETs at warehouse scale).
   *  2. **Row-group-level** (read time): the surviving files are read
   *     with the keys pushed as IN predicates in sorted contiguous
-  *     chunks, under a raised parquet `inFilterThreshold` so the
-  *     filter stays exact OR-of-eq pushdown instead of collapsing to a
+  *     chunks, under the session's parquet `inFilterThreshold` (pinned
+  *     to [[PruneChunk]] by [[graft.Tables.session]]) so the filter
+  *     stays exact OR-of-eq pushdown instead of collapsing to a
   *     min/max range — each row group's stats then reject chunks that
   *     merely straddle it.
   *
@@ -88,10 +89,11 @@ object KeyedReads {
     // `materialize = false` skips the eager checkpoint JOB for callers
     // that consume the read exactly once (or whose consumers all live
     // inside one downstream action): the pruned scan then runs lazily
-    // inside that action instead of paying its own driver job. Both
-    // read-shaping confs are raised refcounted (parallel maintenance
-    // reads share the session conf) and pinned session-wide by
-    // [[graft.Tables.session]] for frames planned after this returns:
+    // inside that action instead of paying its own driver job. Two
+    // read-shaping confs are set once, at session creation
+    // ([[graft.Tables.session]], from [[PruneChunk]] and
+    // [[ListSerialThreshold]]) — never raised per call, because a lazy
+    // read plans and executes after this returns:
     //  - exact-IN pushdown threshold (row-group pruning);
     //  - parallel-listing threshold: `reader.parquet(files…)` with more
     //    explicit paths than the default 32 launches a whole Spark JOB
@@ -101,17 +103,14 @@ object KeyedReads {
     //    serial listing is strictly cheaper than a cluster job at any
     //    scale the inline path admits (measured: 53 of q_cfg_graphrank's
     //    156 jobs were these listing jobs).
-    val prev = raiseReadConfs(spark)
-    try {
-      def read(): DataFrame = files match {
-        case Some(fs) => reader.parquet(fs: _*)
-        case None     => reader.parquet(path)
-      }
-      val df = sorted.grouped(PruneChunk)
-        .map(chunk => read().filter(col(keyCol).isInCollection(chunk)))
-        .reduce(_.unionByName(_))
-      if (materialize) graft.Checkpoints.materialize(df) else df
-    } finally restoreReadConfs(spark, prev)
+    def read(): DataFrame = files match {
+      case Some(fs) => reader.parquet(fs: _*)
+      case None     => reader.parquet(path)
+    }
+    val df = sorted.grouped(PruneChunk)
+      .map(chunk => read().filter(col(keyCol).isInCollection(chunk)))
+      .reduce(_.unionByName(_))
+    if (materialize) graft.Checkpoints.materialize(df) else df
   }
 
   /** Explicit-path listing budget for pruned reads: below this many
@@ -158,38 +157,6 @@ object KeyedReads {
         s
     }
   }
-
-  // refcounted raise of the read-shaping confs (exact-IN pushdown +
-  // serial-listing threshold): concurrent pruned reads (Par-fanned
-  // maintenance) must not restore the confs while a sibling is still
-  // planning under them
-  private val confKeys = Seq(
-    "spark.sql.parquet.pushdown.inFilterThreshold" -> PruneChunk.toString,
-    "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
-      ListSerialThreshold.toString)
-  private val raisers = new java.util.concurrent.atomic.AtomicInteger
-  @volatile private var savedConfs: Seq[(String, Option[String])] = Nil
-
-  private def raiseReadConfs(spark: SparkSession): Seq[(String, Option[String])] =
-    raisers.synchronized {
-      if (raisers.getAndIncrement() == 0) {
-        savedConfs = confKeys.map { case (k, v) =>
-          val prev = spark.conf.getOption(k)
-          spark.conf.set(k, v)
-          k -> prev
-        }
-      }
-      savedConfs
-    }
-
-  private def restoreReadConfs(spark: SparkSession,
-                               prev: Seq[(String, Option[String])]): Unit =
-    raisers.synchronized {
-      if (raisers.decrementAndGet() == 0) prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
 
   /** Session-scoped cache of collected stats-artifact rows, keyed by
     * `<table path>#<keyCol>` and validated against the artifact's

@@ -430,7 +430,10 @@ object TargetedDelete {
     val total = table.count()
     val matched = table.join(keysDf, Seq(keyCol), "left_semi").count()
     val staging = new Path(dir, "_rewrite_staging")
+    // the join moves the key column first; rewritten files keep the
+    // table's column order (a schema-less read takes it from any footer)
     table.join(keysDf, Seq(keyCol), "left_anti")
+      .select(table.columns.map(col).toIndexedSeq: _*)
       .write.mode("overwrite").parquet(staging.toString)
     val staged = spark.read.parquet(staging.toString).count()
     require(staged == total - matched,

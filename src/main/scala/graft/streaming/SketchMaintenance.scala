@@ -76,12 +76,9 @@ object SketchMaintenance {
       else sess.createDataFrame(
         sess.sparkContext.emptyRDD[org.apache.spark.sql.Row], batchPartials.schema)
     val merged = merge(current.unionByName(batchPartials), groups)
-    val prev = sess.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy(partitionCol).parquet(storePath)
-    finally prev match {
-      case Some(v) => sess.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => sess.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // dynamic overwrite as a per-write option, not a session conf: the
+    // file-source insert reads the write options before the session's
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(storePath)
   }
 }

@@ -46,6 +46,17 @@ object GraftColumnBridge {
   def analyzed(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
+  /** A child of `spark` (the sql-private `cloneSession`) with `confs`
+    * set before anyone else can see it. Unlike `newSession()`, a clone
+    * keeps the parent's SQL confs, experimental strategies/optimizations
+    * and registered functions; the parent is never touched.
+    */
+  def cloneSession(spark: SparkSession, confs: Seq[(String, String)]): SparkSession = {
+    val child = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    confs.foreach { case (k, v) => child.sessionState.conf.setConfString(k, v) }
+    child
+  }
+
   /** Drain the async listener bus — measurement code that sums task
     * metrics via a SparkListener must flush pending events before
     * reading its accumulator (the bus delivers on its own thread).
