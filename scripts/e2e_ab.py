@@ -18,6 +18,10 @@ prints each side's median and quartiles, the change/parent ratio of the
 medians, the parent's interquartile range relative to its median, and on
 how many seeds the change was better. Runs that fail or report failed
 iterations are listed and left out of the statistics.
+
+With --trace-seed N, one traced run per side and workload follows the
+pairs, at seed N; it prints every per-layer metric (BENCHMARK.json
+`per_layer`) whose value differs between the two sides.
 """
 
 import argparse
@@ -36,9 +40,9 @@ def git(*args, cwd=ROOT):
                           stdout=subprocess.PIPE).stdout.strip()
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     p = subprocess.run([sys.executable, "e2ebench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
@@ -67,10 +71,13 @@ def main():
                     help="comma-separated; default: every workload in BENCHMARK.json")
     ap.add_argument("--dir", default="", help="where the worktrees go")
     ap.add_argument("--keep", action="store_true", help="keep the worktrees")
+    ap.add_argument("--trace-seed", type=int, default=0,
+                    help="after the pairs, one traced run per side at this seed")
     a = ap.parse_args()
 
     bench = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
     metrics = [(m["name"], m["better"]) for m in bench["end_to_end"]]
+    layers = [m["name"] for m in bench["per_layer"]]
     workloads = [w for w in a.workloads.split(",") if w] or \
         [w["name"] for w in bench["workloads"]]
 
@@ -114,6 +121,19 @@ def main():
                 bad = [s for s, m in results[(w, side)] if not m]
                 if bad:
                     print(f"  {side}: failed seeds {bad}")
+        if a.trace_seed:
+            for w in workloads:
+                traced = {side: run(sides[side], w, a.trace_seed, a.seconds, trace=1)
+                          for side in sides}
+                print(f"{w} traced, seed {a.trace_seed}:")
+                if any(err for _, err in traced.values()):
+                    print("  " + " ".join(f"{side}: {err}" for side, (_, err) in traced.items()
+                                          if err))
+                    continue
+                p, c = traced["parent"][0], traced["change"][0]
+                for name in layers:
+                    if p.get(name) != c.get(name):
+                        print(f"  {name:44s} parent {p.get(name)}  change {c.get(name)}")
     finally:
         if not a.keep:
             for path in sides.values():

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 
 /** Loaders for the driver-provided parquet fixtures (TESTDATA.md).
   *
@@ -52,12 +53,16 @@ object Tables {
     }
   }
 
-  /** Splittable scan units (parquet row groups) a table's files offer —
-    * the ceiling on scan-side parallelism: Spark assigns a parquet row
-    * group to exactly one task, so a table with fewer row groups than
-    * the session has cores can never parallelize scan-side compute no
-    * matter how `maxPartitionBytes` splits the byte ranges. Driver-side
-    * footer reads, cached per (path, file signature).
+  /** Splittable scan units a table's files offer — the ceiling on
+    * scan-side parallelism: Spark assigns a parquet row group to exactly
+    * one task, so a table with fewer row groups than the session has
+    * cores can never parallelize scan-side compute no matter how
+    * `maxPartitionBytes` splits the byte ranges. A file counts its row
+    * groups, capped at the splits Spark cuts it into
+    * (`FilePartition.maxSplitBytes`): a compacted file that kept many
+    * small row groups is still read by as many tasks as it has splits,
+    * not row groups. Driver-side footer reads, cached per (path, file
+    * signature).
     */
   private val unitsCache = scala.collection.concurrent.TrieMap[String, (String, Int)]()
 
@@ -75,16 +80,19 @@ object Tables {
     val files = (if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
                  else Seq(fs.getFileStatus(p)))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    // the split size follows the session's width and file-size confs,
+    // so it is part of the cache signature
+    val split = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty, files.toArray)))
     val sig = files.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
+      .sorted.mkString("|") + s"@$split"
     val bytes = files.map(_.getLen).sum
     unitsCache.get(path) match {
       case Some((s, n)) if s == sig => (n, bytes)
       case _ =>
         val n = files.map { st =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRowGroups.size finally r.close()
+          val groups = graft.sources.ParquetSource.footerMeta(conf, st).getBlocks.size
+          math.min(groups.toLong, math.max(1L, (st.getLen + split - 1) / split)).toInt
         }.sum
         unitsCache(path) = (sig, n)
         (n, bytes)

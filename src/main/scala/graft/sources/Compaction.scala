@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.rewrite.{ParquetRewriter, RewriteOptions}
+import scala.jdk.CollectionConverters._
 
 /** Small-file compaction (the OPTIMIZE maintenance op): streaming
   * sinks and per-batch appends (CdcApply targets, SketchMaintenance
@@ -28,9 +31,22 @@ import org.apache.hadoop.fs.{FileStatus, Path}
   * Row-count verified: each group's replacement footer is counted
   * against the originals' footers before anything is deleted.
   *
-  * Mixed-schema groups keep every column: each group's footers are
-  * read once on the driver; one shared schema is pinned, differing
-  * ones are merged (a type conflict aborts before the swap).
+  * Splice versus rewrite: each group's footers are read once on the
+  * driver. A group whose files share one parquet schema and the same
+  * key-value metadata (the embedded Spark schema and the calendar-rebase
+  * keys among it; only the writer's version may differ, within the same
+  * side of 3.0) is SPLICED: parquet-mr's `ParquetRewriter` appends the
+  * originals' row groups in name order, copying column chunks byte for
+  * byte with their statistics, page indexes and codec — no row is
+  * decoded or encoded, and every spliced group is staged in ONE job,
+  * one task per group. The trade-off: a spliced file keeps its
+  * originals' row groups, so it still carries many small row groups (a
+  * reader's unit of work and of min/max skipping); Spark still reads
+  * it in as many tasks as it has splits, not row groups (see
+  * `Tables.scanLayout`). Any other group — mixed schemas, foreign or
+  * differing metadata — is REWRITTEN through a Spark read (one job per
+  * group): one shared schema is pinned, differing ones are merged (a
+  * type conflict aborts before the swap).
   */
 object Compaction {
 
@@ -106,6 +122,38 @@ object Compaction {
     } finally in.close()
   }
 
+  private val SparkVersionKey = "org.apache.spark.version"
+
+  /** A group splices when its files would decode identically from one
+    * footer: the same parquet schema and the same key-value metadata —
+    * the embedded Spark schema and the calendar-rebase keys
+    * (`legacyDateTime`, `legacyINT96`) among it — except the writer's
+    * Spark version, which decoding reads only as "before 3.0" or not.
+    */
+  private def spliceable(footers: Seq[ParquetSource.Footer]): Boolean = {
+    def decoding(kv: Map[String, String]) =
+      (kv - SparkVersionKey, kv.get(SparkVersionKey).map(_ < "3.0.0"))
+    footers.map(_.messageType).distinct.size == 1 &&
+      footers.map(f => decoding(f.keyValue)).distinct.size == 1
+  }
+
+  /** Stage every spliceable group in ONE job, one task per group: the
+    * rewriter appends each original's row groups in the listed (name)
+    * order, column chunks copied byte for byte with their statistics,
+    * column/offset indexes and bloom filters — no row is decoded.
+    */
+  private def splice(spark: SparkSession, jobs: Seq[(Seq[String], String)]): Unit =
+    if (jobs.nonEmpty) {
+      val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+      spark.sparkContext.parallelize(jobs, jobs.size).foreach { case (inputs, stage) =>
+        val out = new Path(stage)
+        out.getFileSystem(conf.value).delete(out, true)
+        val rewriter = new ParquetRewriter(new RewriteOptions.Builder(conf.value,
+          inputs.map(new Path(_)).asJava, new Path(out, "part-00000-spliced.parquet")).build())
+        try rewriter.processBlocks() finally rewriter.close()
+      }
+    }
+
   def compact(spark: SparkSession, dir: String, targetBytes: Long,
               smallBytes: Long = 0L): Result = {
     val small = if (smallBytes > 0) smallBytes else targetBytes / 2
@@ -113,28 +161,33 @@ object Compaction {
     val groups = plan(spark, dir, targetBytes, small).groups
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dir).getFileSystem(conf)
+    // the footers give the row counts, the schemas and the splice test
+    // with no job
+    val footers = groups.map(_.map(ParquetSource.footer(conf, _)))
+    val staging = groups.indices.map(i => new Path(dir, s"_compact_staging_$i"))
+    val spliced = groups.indices.filter(i => spliceable(footers(i)))
+    splice(spark, spliced.map(i => (groups(i).map(_.getPath.toString), staging(i).toString)))
     var removed = 0
     var rows = 0L
     groups.zipWithIndex.foreach { case (statuses, i) =>
       val group = statuses.map(_.getPath.toString)
-      // the footers give the row counts and the schemas with no job; a
-      // schema-less read would take the FIRST file's schema and silently
-      // drop the columns only later files carry
-      val footers = statuses.map(ParquetSource.footer(conf, _))
-      val expected = footers.map(_.rows).sum
-      val reader = footers.map(_.schema).distinct match {
-        case Seq(Some(s)) => spark.read.schema(s)
-        // differing (or foreign) schemas: merge them; a type conflict
-        // fails here, before anything is swapped
-        case _ => spark.read.option("mergeSchema", "true")
+      val expected = footers(i).map(_.rows).sum
+      if (!spliced.contains(i)) {
+        val reader = footers(i).map(_.schema).distinct match {
+          case Seq(Some(s)) => spark.read.schema(s)
+          // differing (or foreign) schemas: merge them — a schema-less
+          // read would take the FIRST file's schema and silently drop the
+          // columns only later files carry; a type conflict fails here,
+          // before anything is swapped
+          case _ => spark.read.option("mergeSchema", "true")
+        }
+        // one replacement file per group, staged then sworn in
+        reader.parquet(group: _*).coalesce(1)
+          .write.mode("overwrite").parquet(staging(i).toString)
       }
-      // one replacement file per group, staged then sworn in
-      val staging = new Path(dir, s"_compact_staging_$i")
-      reader.parquet(group: _*).coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val part = fs.listStatus(staging)
+      val part = fs.listStatus(staging(i))
         .find(_.getPath.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no parquet written under $staging"))
+        .getOrElse(throw new IllegalStateException(s"no parquet written under ${staging(i)}"))
       val got = ParquetSource.footer(conf, part).rows
       require(got == expected,
         s"compaction group $i row mismatch: $got != $expected — aborting, originals kept")
@@ -155,7 +208,7 @@ object Compaction {
         s"rename ${part.getPath} -> $target failed — aborting swap, originals kept")
       group.foreach(o => fs.delete(new Path(o), false))
       fs.delete(marker, false)
-      fs.delete(staging, true)
+      fs.delete(staging(i), true)
       removed += group.size
       rows += expected
     }

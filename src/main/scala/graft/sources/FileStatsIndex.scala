@@ -1,7 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnPath, ParquetMetadata}
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{ColumnOrder, LogicalTypeAnnotation, MessageType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** File-level min/max statistics index + pre-scan pruning — the
   * data-skipping layer table formats (Iceberg manifests, Delta
@@ -17,11 +25,22 @@ import org.apache.spark.sql.functions._
   * migrator skipped-file resume, SURVEY §2.4) — generalized to
   * content statistics over any parquet layout.
   *
-  * Build is ONE Spark pass grouping by `input_file_name()` — the same
-  * write-time-stats discipline as Delta (build right after the write,
-  * while the data is hot; see `target.statsIndex` in PipelineConfig).
-  * The artifact is itself parquet: `file, n_rows, <c>__min, <c>__max,
-  * <c>__nulls` per indexed column.
+  * Build reads each file's parquet footer on the driver — the same
+  * place the listing already reads every file's status — and folds its
+  * row-group statistics into the file's row: row count, min, max and
+  * null count per column (the file statistics Delta keeps as metadata).
+  * Driver-side footer reads scale like the listing itself (one small
+  * read per file; |files| is driver-sized in any Spark scan). Footer
+  * versus scan: integral, date, boolean, decimal and default-collation
+  * string columns fold when every chunk carries exact bounds; files
+  * with float/double columns (parquet-mr's NaN and ±0 bounds differ
+  * from Spark's min/max), binary bounds dropped at write time (over
+  * 4 KiB), INT96 or other types go through ONE Spark aggregation by
+  * `input_file_name()` over just those files. Either way the row is the
+  * aggregation's, value for value; an empty file gets `n_rows = 0` and
+  * null bounds. Build right after the write (see `target.statsIndex` in
+  * PipelineConfig). The artifact is itself parquet: `file, n_rows,
+  * <c>__min, <c>__max, <c>__nulls` per indexed column.
   *
   * Pruning contract (conservative, never wrong):
   *  - a file is kept unless its stats PROVE no row can match;
@@ -50,35 +69,152 @@ object FileStatsIndex {
   final case class IsNull(column: String) extends StatsPredicate
 
   /** Build the stats artifact for `columns` over every parquet file
-    * under `dir`: one distributed pass, |files| output rows.
+    * under `dir`: footers folded on the driver, plus one aggregation
+    * over just the files whose footers cannot answer.
     */
   def build(spark: SparkSession, dir: String, columns: Seq[String],
-            schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+            schema: Option[StructType] = None): DataFrame = {
     require(columns.nonEmpty, "index at least one column")
     // builders that just wrote the table pass its schema (a schema-less
     // read pays a footer-inference job); others resolve through the
     // signature cache / embedded-footer path — also zero jobs for
     // Spark-written dirs
-    fileStats(spark.read
-      .schema(schema.getOrElse(KeyedReads.schemaFor(spark, dir))).parquet(dir), columns)
+    fileStats(spark, ParquetSource.listParquetStatuses(dir, spark.sparkContext.hadoopConfiguration),
+      columns, schema.getOrElse(KeyedReads.schemaFor(spark, dir)))
   }
 
-  /** The artifact's rows over `df`'s files: `file, n_rows` and
-    * `<c>__min, <c>__max, <c>__nulls` per column. A file without rows
-    * yields no group — [[update]] records those from their footers.
+  /** The artifact's rows for `files`: `file, n_rows` and `<c>__min,
+    * <c>__max, <c>__nulls` per column, one row per file — a file
+    * without rows gets `n_rows = 0`, null bounds and no nulls, the
+    * "empty file" every prune skips. A file whose footer holds exact
+    * bounds for every column ([[footerRow]]) is folded on the driver;
+    * the rest go through one aggregation by `input_file_name()`, whose
+    * rows the fold reproduces value for value.
     */
-  private def fileStats(df: DataFrame, columns: Seq[String]): DataFrame =
+  private def fileStats(spark: SparkSession, files: Seq[FileStatus], columns: Seq[String],
+                        schema: StructType): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val folded = files.map(st =>
+      st -> footerRow(ParquetSource.footerMeta(conf, st), st, columns, schema))
+    val scan = folded.collect { case (st, None) => st.getPath.toString }
+    // the aggregation's own schema, from analysis alone
+    val statsSchema = scanStats(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema), columns).schema
+    val local = spark.createDataFrame(folded.flatMap(_._2).asJava, statsSchema)
+    if (scan.isEmpty) local
+    else local.union(scanStats(spark.read.schema(schema).parquet(scan: _*), columns))
+  }
+
+  /** The aggregation over rows: one group per file with rows. */
+  private def scanStats(df: DataFrame, columns: Seq[String]): DataFrame =
     df.groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"), columns.flatMap { c =>
         Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
           sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
       }: _*)
 
+  /** First Gregorian day (1582-10-15): dates from here on read the same
+    * under every calendar-rebase mode.
+    */
+  private val GregorianSwitchDay = -141427
+
+  /** One file's artifact row from its footer alone, or None when the
+    * footer cannot give Spark's exact `min`/`max`/null count for every
+    * column. Eligible: top-level integral, date, boolean, decimal and
+    * default-collation string columns stored as Spark writes them, with
+    * every row group's chunk carrying its null count and — when it
+    * holds a value — its bounds. Left to the aggregation: float and
+    * double (parquet-mr's NaN and ±0 bounds differ from Spark's
+    * min/max), columns without exact bounds (binary bounds over 4 KiB
+    * are dropped at write time; INT96 carries none), other types, and
+    * pre-Gregorian dates in a file that Spark rebases on read.
+    */
+  private def footerRow(meta: ParquetMetadata, st: FileStatus, columns: Seq[String],
+                        schema: StructType): Option[Row] = {
+    val blocks = meta.getBlocks.asScala.toSeq
+    val file = meta.getFileMetaData
+    val kv = file.getKeyValueMetaData
+    val rebased = !Option(kv.get("org.apache.spark.version")).exists(_ >= "3.0.0") ||
+      kv.containsKey("org.apache.spark.legacyDateTime")
+    val cells = columns.map { c =>
+      schema.find(_.name == c).flatMap(f => columnBounds(blocks, file.getSchema, c, f.dataType))
+        .filter {
+          case (lo: java.time.LocalDate, _, _) => !rebased || lo.toEpochDay >= GregorianSwitchDay
+          case _ => true
+        }
+    }
+    if (cells.exists(_.isEmpty)) None
+    else Some(Row.fromSeq(SparkPath.fromFileStatus(st).urlEncoded +:
+      blocks.map(_.getRowCount).sum +: cells.flatten.flatMap { case (lo, hi, n) => Seq(lo, hi, n) }))
+  }
+
+  /** (min, max, null count) of column `c` over the row groups, as
+    * Spark values of type `dt` — bounds null when no value is set.
+    */
+  private def columnBounds(blocks: Seq[BlockMetaData], ms: MessageType, c: String,
+                           dt: DataType): Option[(Any, Any, Long)] = {
+    import PrimitiveTypeName._
+    if (!ms.containsField(c)) return None
+    val t = ms.getType(ms.getFieldIndex(c))
+    if (!t.isPrimitive || t.isRepetition(Type.Repetition.REPEATED)) return None
+    val pt = t.asPrimitiveType
+    val ann = pt.getLogicalTypeAnnotation
+    def int(bits: Int, bare: Boolean) = ann match {
+      case null => bare
+      case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+        i.isSigned && i.getBitWidth == bits
+      case _ => false
+    }
+    def unscaled(v: Any): java.math.BigInteger = v match {
+      case i: java.lang.Integer => java.math.BigInteger.valueOf(i.longValue)
+      case l: java.lang.Long => java.math.BigInteger.valueOf(l)
+      case b: Binary => new java.math.BigInteger(b.getBytes)
+    }
+    val decode: Option[Any => Any] = (dt, pt.getPrimitiveTypeName, ann) match {
+      case (ByteType, INT32, _) if int(8, bare = false) =>
+        Some(v => v.asInstanceOf[java.lang.Integer].toByte)
+      case (ShortType, INT32, _) if int(16, bare = false) =>
+        Some(v => v.asInstanceOf[java.lang.Integer].toShort)
+      case (IntegerType, INT32, _) if int(32, bare = true) => Some(identity)
+      case (LongType, INT64, _) if int(64, bare = true) => Some(identity)
+      case (DateType, INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
+        Some(v => java.time.LocalDate.ofEpochDay(v.asInstanceOf[java.lang.Integer].longValue))
+      case (BooleanType, BOOLEAN, null) => Some(identity)
+      case (d: DecimalType, INT32 | INT64 | FIXED_LEN_BYTE_ARRAY | BINARY,
+            a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation)
+          if a.getPrecision == d.precision && a.getScale == d.scale =>
+        Some(v => new java.math.BigDecimal(unscaled(v), d.scale))
+      case (s: StringType, BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation)
+          if s.collationId == StringType.collationId &&
+            pt.columnOrder.getColumnOrderName == ColumnOrder.ColumnOrderName.TYPE_DEFINED_ORDER =>
+        Some(v => v.asInstanceOf[Binary].toStringUsingUTF8)
+      case _ => None
+    }
+    val path = ColumnPath.get(c)
+    val chunks = blocks.map(_.getColumns.asScala.find(_.getPath == path))
+    decode.filter(_ => chunks.forall(_.exists { ch =>
+      val s = ch.getStatistics
+      s != null && !s.isEmpty && s.isNumNullsSet &&
+        (s.hasNonNullValue || s.getNumNulls == ch.getValueCount)
+    })).map { f =>
+      val stats = chunks.flatten.map(_.getStatistics)
+      val set = stats.filter(_.hasNonNullValue)
+      val nulls = stats.map(_.getNumNulls).sum
+      if (set.isEmpty) (null, null, nulls)
+      else {
+        val ord = Ordering.comparatorToOrdering(
+          set.head.comparator.asInstanceOf[java.util.Comparator[Any]])
+        (f(set.map(s => s.genericGetMin: Any).min(ord)),
+          f(set.map(s => s.genericGetMax: Any).max(ord)), nulls)
+      }
+    }
+  }
+
   /** Build and persist next to the data (`<dir>/_stats`) — underscore
     * prefix keeps every parquet reader from picking it up as data.
     */
   def buildAndSave(spark: SparkSession, dir: String, columns: Seq[String],
-                   schema: Option[org.apache.spark.sql.types.StructType] = None): String = {
+                   schema: Option[StructType] = None): String = {
     val path = new org.apache.hadoop.fs.Path(dir, "_stats").toString
     // ONE artifact file: the frame is |files| rows (driver-sized by the
     // same argument as any FileIndex), but the groupBy's 32 shuffle
@@ -229,11 +365,11 @@ object FileStatsIndex {
 
   /** Advance the artifact over files the CALLER already knows are new
     * (an epoch publish returns its published names, an append can diff
-    * two listings) — one job reading exactly those files, appended to
+    * two listings) — their footers folded (or scanned, see the object
+    * doc), appended to
     * the artifact in place. This is the write-pass stats discipline:
     * where [[update]] pays an artifact read + listing diff + full
-    * rewrite per call (3+ jobs), this is one small aggregation and one
-    * appended parquet part, so per-epoch maintenance cost follows the
+    * rewrite per call (3+ jobs), this is one appended parquet part, so per-epoch maintenance cost follows the
     * EPOCH, not the artifact. Trade: entries for since-removed files
     * and duplicate entries for a replayed tag's re-published names can
     * accumulate until the next [[update]]/[[buildAndSave]] (compact /
@@ -244,7 +380,7 @@ object FileStatsIndex {
     */
   def appendFor(spark: SparkSession, dir: String, columns: Seq[String],
                 newFiles: Seq[String],
-                schema: Option[org.apache.spark.sql.types.StructType] = None): String = {
+                schema: Option[StructType] = None): String = {
     val statsPath = new org.apache.hadoop.fs.Path(dir, "_stats").toString
     val fs = new org.apache.hadoop.fs.Path(statsPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -254,8 +390,8 @@ object FileStatsIndex {
     // writers that KNOW the written frame's schema pass it (a schema-
     // less read pays a footer-inference job per publish); others fall
     // back to the signature-cached table schema
-    fileStats(spark.read.schema(schema.getOrElse(KeyedReads.schemaFor(spark, dir)))
-        .parquet(newFiles: _*), columns)
+    fileStats(spark, newFiles.map(f => fs.getFileStatus(fs.makeQualified(new org.apache.hadoop.fs.Path(f)))),
+        columns, schema.getOrElse(KeyedReads.schemaFor(spark, dir)))
       .coalesce(1)
       .write.mode("append").parquet(statsPath)
     statsPath
@@ -264,11 +400,9 @@ object FileStatsIndex {
   /** Incremental maintenance: stat ONLY the data files the artifact
     * has never seen and append them — the build never rescans indexed
     * files (at warehouse scale a day's append costs a day's scan, not
-    * the table's). Every fresh file gets an entry: one whose footer
-    * holds no rows (a wholly deleted file's replacement) is recorded
-    * from its footer as `n_rows = 0` with null bounds — the "empty
-    * file" every prune skips — instead of staying fresh and forcing a
-    * rewrite on every later call. The known-file list is decoded on the
+    * the table's). Every fresh file gets an entry, an empty one (a
+    * wholly deleted file's replacement) included, so it does not stay
+    * fresh and force a rewrite on every later call. The known-file list is decoded on the
     * driver, so an update with nothing new or stale runs no Spark job;
     * a missing artifact falls back to a full [[buildAndSave]].
     */
@@ -294,20 +428,8 @@ object FileStatsIndex {
     val live =
       if (stale.isEmpty) existing
       else existing.filter(!col("file").isin(stale.toIndexedSeq: _*))
-    val (empty, filled) = fresh.partition(st => ParquetSource.footer(conf, st).rows == 0L)
-    // a row-less file forms no group in the aggregation: its entry (no
-    // rows, null bounds, no nulls) comes from the footer alone
-    val emptyEntries = spark.createDataFrame(java.util.Arrays.asList(empty.map(st =>
-      org.apache.spark.sql.Row(existing.columns.toIndexedSeq.map {
-        case "file" => st.getPath.toString
-        case "n_rows" => 0L
-        case c if c.endsWith("__nulls") => 0L
-        case _ => null
-      }: _*)): _*), existing.schema)
-    val merged =
-      if (filled.isEmpty) live.unionByName(emptyEntries)
-      else live.unionByName(emptyEntries).unionByName(
-        fileStats(spark.read.parquet(filled.map(_.getPath.toString): _*), columns))
+    val merged = live.unionByName(
+      fileStats(spark, fresh, columns, KeyedReads.schemaFor(spark, dir)))
     // materialize before overwriting the artifact being read; one file
     // (see buildAndSave — the artifact's own footer count is a
     // per-probe metadata tax)

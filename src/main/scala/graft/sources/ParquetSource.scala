@@ -2,10 +2,14 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Parquet source with resumable file-level progress (reference:
   * readers/Parquet.scala:40-170 + readers/ParquetSavepointsManager).
@@ -48,19 +52,32 @@ object ParquetSource {
   }
 
   /** What one parquet footer says about its file: the row count (the
-    * metadata a parquet `count(*)` reads) and the Spark schema every
+    * metadata a parquet `count(*)` reads), the Spark schema every
     * Spark writer embeds (`org.apache.spark.sql.parquet.row.metadata`)
-    * — None for files Spark did not write.
+    * — None for files Spark did not write — and the parquet schema and
+    * key-value metadata [[Compaction]] compares before splicing files.
     */
-  final case class Footer(rows: Long, schema: Option[StructType])
+  final case class Footer(rows: Long, schema: Option[StructType],
+                          messageType: MessageType, keyValue: Map[String, String])
 
   /** Read one footer on the driver: no Spark job. */
   def footer(conf: Configuration, file: FileStatus): Footer = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    try Footer(r.getRecordCount,
-      Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
-    finally r.close()
+    val meta = footerMeta(conf, file)
+    val kv = meta.getFileMetaData.getKeyValueMetaData.asScala.toMap
+    Footer(meta.getBlocks.asScala.map(_.getRowCount).sum,
+      kv.get(SparkSchemaKey).map(j => DataType.fromJson(j).asInstanceOf[StructType]),
+      meta.getFileMetaData.getSchema, kv)
+  }
+
+  /** One file's full footer (row groups, chunk statistics), read with
+    * the caller's Hadoop conf: `ParquetFileReader.open(inputFile)` alone
+    * builds its read options over a fresh `Configuration`, which re-parses
+    * the Hadoop XML resources on every footer.
+    */
+  def footerMeta(conf: Configuration, file: FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf).build())
+    try r.getFooter finally r.close()
   }
 
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"

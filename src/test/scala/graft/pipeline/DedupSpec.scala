@@ -255,6 +255,28 @@ class DedupSpec extends AnyFunSuite {
     assert(result.passed, result.status.toString)
   }
 
+  test("cluster representatives: replayed 11- and 12-round graphs converge within 10 rounds") {
+    import spark.implicits._
+    // graphs of the seeded sweep's shape on which neighbour-only
+    // propagation needed 11 (21 nodes) and 12 (24 nodes) rounds
+    val graphs = Seq(
+      21 -> Seq((16, 14), (1, 18), (3, 7), (6, 19), (1, 8), (14, 3), (6, 19), (13, 20),
+        (4, 8), (5, 13), (19, 7), (18, 15), (13, 4), (0, 6), (14, 5), (13, 10), (6, 17)),
+      24 -> Seq((7, 22), (12, 9), (4, 3), (11, 8), (23, 22), (15, 3), (20, 21), (0, 6),
+        (3, 11), (16, 12), (10, 15), (21, 16), (18, 7), (11, 17), (6, 20), (18, 14),
+        (18, 10), (9, 7), (17, 2), (0, 5), (10, 15), (7, 4), (18, 14), (8, 4), (19, 18),
+        (8, 23)))
+    graphs.foreach { case (nNodes, edges) =>
+      val nodes = (0L until nNodes.toLong).map(Tuple1(_)).toDF("doc_id")
+      val pairs = edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("id_a", "id_b")
+      def run(threshold: Long) =
+        Dedup.clusterRepresentatives(nodes, pairs, "doc_id", maxIters = 10,
+            smallGraphThreshold = threshold)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(run(threshold = 0L) == run(threshold = 1000000L), s"$nNodes nodes")
+    }
+  }
+
   test("reliable-checkpoint mode yields identical labels on the distributed path") {
     // spark.graft.checkpoint.dir flips every iterative-tier checkpoint
     // from executor-local to reliable checkpoint(dir) — the 100-TB

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import scala.jdk.CollectionConverters._
 
 class CompactionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -133,5 +134,106 @@ class CompactionSpec extends AnyFunSuite {
     assert(!fs.exists(new Path(dir, "_compaction")))
     assert(spark.read.parquet(before.head).count() === 1L)
     assert(spark.read.parquet(before(1)).count() === 1L)
+  }
+
+  private def rowGroups(file: String): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(file).getFileSystem(conf)
+    ParquetSource.footerMeta(conf, fs.getFileStatus(new Path(file))).getBlocks.size
+  }
+
+  private def onlyFile(dir: String): String = {
+    val files = ParquetSource.listParquetFiles(dir, spark.sparkContext.hadoopConfiguration)
+    assert(files.size === 1)
+    files.head
+  }
+
+  test("a spliced group keeps every row in file-name order, the codec and the Spark schema") {
+    val dir = Files.createTempDirectory("graft-cmp-splice").resolve("t").toString
+    (0 until 5).foreach { i =>
+      placeAs(Seq.tabulate(30)(r => (i * 100L + r, s"v$i-$r")).toDF("k", "v")
+        .withColumn("k", when(col("k") % 7 === 0, lit(null)).otherwise(col("k"))),
+        dir, s"part-$i.parquet")
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val statuses = ParquetSource.listParquetStatuses(dir, conf)
+    val before = ParquetSource.listParquetFiles(dir, conf)
+      .flatMap(f => spark.read.parquet(f).collect().toSeq)
+    val codecs = statuses.map(st => ParquetSource.footerMeta(conf, st).getBlocks.get(0)
+      .getColumns.get(0).getCodec).distinct
+    val schema = ParquetSource.footer(conf, statuses.head).schema
+    val res = Compaction.compact(spark, dir, targetBytes = 1024 * 1024)
+    assert(res.groupsCompacted === 1 && res.filesRemoved === 5 && res.rowsMoved === 150L)
+    val out = onlyFile(dir)
+    // one row group per original: the column chunks were copied, not re-encoded
+    assert(rowGroups(out) === 5)
+    assert(spark.read.parquet(out).collect().toSeq === before)
+    val st = new Path(out).getFileSystem(conf).getFileStatus(new Path(out))
+    val meta = ParquetSource.footerMeta(conf, st)
+    assert(meta.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).distinct === codecs)
+    assert(ParquetSource.footer(conf, st).schema === schema)
+  }
+
+  test("INT96 timestamps and pre-1582 dates splice identically under LEGACY and CORRECTED") {
+    val rows = Seq(
+      ("0900-03-01", "0900-03-01 10:11:12"), ("1582-10-04", "1582-10-04 00:00:01"),
+      ("1582-10-15", "1582-10-15 23:59:59"), ("2021-06-30", "2021-06-30 12:00:00"))
+    Seq("LEGACY", "CORRECTED").foreach { mode =>
+      val dir = Files.createTempDirectory(s"graft-cmp-rebase-$mode").resolve("t").toString
+      val keys = Seq("spark.sql.parquet.datetimeRebaseModeInWrite",
+        "spark.sql.parquet.int96RebaseModeInWrite", "spark.sql.parquet.outputTimestampType")
+      keys.zip(Seq(mode, mode, "INT96")).foreach { case (k, v) => spark.conf.set(k, v) }
+      try rows.zipWithIndex.foreach { case ((d, t), i) =>
+        placeAs(Seq((i.toLong, d, t)).toDF("k", "d", "t")
+          .select(col("k"), to_date(col("d")).as("d"), to_timestamp(col("t")).as("t")),
+          dir, s"part-$i.parquet")
+      } finally keys.foreach(spark.conf.unset)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val before = spark.read.parquet(dir).orderBy("k").collect().toSeq
+      val kv = ParquetSource.footer(conf, ParquetSource.listParquetStatuses(dir, conf).head).keyValue
+      assert(kv.contains("org.apache.spark.legacyDateTime") === (mode == "LEGACY"))
+      assert(kv.contains("org.apache.spark.legacyINT96") === (mode == "LEGACY"))
+      Compaction.compact(spark, dir, targetBytes = 1024 * 1024)
+      val out = onlyFile(dir)
+      assert(rowGroups(out) === rows.size, s"$mode: the group was not spliced")
+      val outKv = ParquetSource.footer(conf,
+        new Path(out).getFileSystem(conf).getFileStatus(new Path(out))).keyValue
+      Seq("org.apache.spark.legacyDateTime", "org.apache.spark.legacyINT96",
+        "org.apache.spark.sql.parquet.row.metadata").foreach { key =>
+        assert(outKv.get(key) === kv.get(key), s"$mode: $key")
+      }
+      assert(spark.read.parquet(dir).orderBy("k").collect().toSeq === before, mode)
+    }
+  }
+
+  test("files written under different rebase modes merge through the rewrite") {
+    val dir = Files.createTempDirectory("graft-cmp-rebase-mixed").resolve("t").toString
+    val key = "spark.sql.parquet.datetimeRebaseModeInWrite"
+    Seq("LEGACY", "CORRECTED").zipWithIndex.foreach { case (mode, i) =>
+      spark.conf.set(key, mode)
+      try placeAs(Seq((i.toLong, "0900-03-01")).toDF("k", "d")
+          .select(col("k"), to_date(col("d")).as("d")), dir, s"part-$i.parquet")
+      finally spark.conf.unset(key)
+    }
+    val before = spark.read.parquet(dir).orderBy("k").collect().toSeq
+    assert(before.map(_.getDate(1).toString).distinct === Seq("0900-03-01"))
+    Compaction.compact(spark, dir, targetBytes = 1024 * 1024)
+    val out = onlyFile(dir)
+    assert(rowGroups(out) === 1, "differing rebase keys must not splice")
+    assert(spark.read.parquet(dir).orderBy("k").collect().toSeq === before)
+  }
+
+  test("a group of mixed MessageType still merges through the rewrite") {
+    val dir = Files.createTempDirectory("graft-cmp-mixed-mt").resolve("t").toString
+    placeAs(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir, "part-a.parquet")
+    placeAs(Seq((3L, "c")).toDF("k", "v"), dir, "part-b.parquet")
+    // a third file with another column: its parquet schema differs
+    placeAs(Seq((4L, 7)).toDF("k", "w"), dir, "part-c.parquet")
+    val res = Compaction.compact(spark, dir, targetBytes = 1024 * 1024)
+    assert(res.groupsCompacted === 1 && res.rowsMoved === 4L)
+    val out = onlyFile(dir)
+    assert(rowGroups(out) === 1)
+    assert(spark.read.parquet(out).orderBy("k").collect().map(_.toString).toSeq ===
+      Seq("[1,a,null]", "[2,b,null]", "[3,c,null]", "[4,null,7]"))
   }
 }

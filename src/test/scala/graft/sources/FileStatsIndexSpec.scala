@@ -256,4 +256,87 @@ class FileStatsIndexSpec extends AnyFunSuite {
          |""".stripMargin)
     assert(one.swap.exists(_.contains("at least two columns")))
   }
+
+  /** The aggregation the footer fold reproduces, over every file with
+    * rows; empty files get the fold's `n_rows = 0` entry.
+    */
+  private def aggregated(dir: String, columns: Seq[String],
+                         empty: Seq[String]): Seq[org.apache.spark.sql.Row] = {
+    val rows = spark.read.parquet(dir).groupBy(input_file_name().as("file"))
+      .agg(count(lit(1)).as("n_rows"), columns.flatMap { c =>
+        Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
+      }: _*).collect().toSeq
+    rows ++ empty.map(f => org.apache.spark.sql.Row.fromSeq(f +: 0L +:
+      columns.flatMap(_ => Seq(null, null, 0L))))
+  }
+
+  private def emptyFiles(dir: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    ParquetSource.listParquetStatuses(dir, conf)
+      .filter(st => ParquetSource.footer(conf, st).rows == 0L)
+      .map(st => org.apache.spark.paths.SparkPath.fromFileStatus(st).urlEncoded)
+  }
+
+  test("footer fold equals the aggregation on every folded type, all-null and empty files") {
+    val dir = Files.createTempDirectory("graft-fsi-fold").resolve("t").toString
+    val cols = Seq("b", "s", "i", "l", "d", "bo", "d1", "d2", "d3", "str")
+    def typed(df: org.apache.spark.sql.DataFrame) = df.select(
+      col("b").cast("byte").as("b"), col("s").cast("short").as("s"), col("i").cast("int").as("i"),
+      col("l").cast("long").as("l"), col("d").cast("date").as("d"), col("bo").cast("boolean").as("bo"),
+      col("d1").cast("decimal(9,2)").as("d1"), col("d2").cast("decimal(18,4)").as("d2"),
+      col("d3").cast("decimal(30,6)").as("d3"), col("str").cast("string").as("str"))
+    val base = spark.range(0, 3000).select(
+      when(col("id") % 11 === 3, lit(null)).otherwise(col("id") % 256 - 128).as("b"),
+      (col("id") * 37 % 65536 - 32768).as("s"),
+      when(col("id") % 13 === 0, lit(null)).otherwise(col("id") * 7919 % 100003 - 50000).as("i"),
+      (col("id") * 1000003L - 1500000000L).as("l"),
+      date_add(lit("1969-12-01").cast("date"), (col("id") % 400 - 200).cast("int")).as("d"),
+      (col("id") % 3 === 0).as("bo"),
+      (col("id") * 3.25 - 4000).as("d1"),
+      (col("id") * 12345.6789 - 1e7).as("d2"),
+      when(col("id") % 5 === 1, lit(null))
+        .otherwise(concat(lit("-"), col("id").cast("string"), lit("123456789012.345678"))).as("d3"),
+      concat(lit("k"), (col("id") * 7 % 1000).cast("string")).as("str"))
+    // several row groups per file: bounds fold across chunks
+    typed(base).repartition(3, col("l")).write.option("parquet.block.size", 4096L).parquet(dir)
+    typed(base.limit(40).select(base.columns.map(c => lit(null).as(c)): _*))
+      .coalesce(1).write.mode("append").parquet(dir)
+    typed(base.limit(0)).coalesce(1).write.mode("append").parquet(dir)
+    val empty = emptyFiles(dir)
+    assert(empty.size === 1)
+    val fold = FileStatsIndex.build(spark, dir, cols)
+    assert(fold.inputFiles.isEmpty, "every file must fold from its footer")
+    val want = aggregated(dir, cols, empty)
+    assert(fold.schema === spark.read.parquet(dir).groupBy(input_file_name().as("file"))
+      .agg(count(lit(1)).as("n_rows"), cols.flatMap { c =>
+        Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
+      }: _*).schema)
+    assert(fold.collect().map(_.toString).sorted.toSeq === want.map(_.toString).sorted)
+    // the saved artifact is the same rows in one file
+    val path = buildAndSave(spark, dir, cols)
+    assert(ParquetSource.listParquetFiles(path, spark.sparkContext.hadoopConfiguration).size === 1)
+    assert(spark.read.parquet(path).collect().map(_.toString).sorted.toSeq ===
+      want.map(_.toString).sorted)
+  }
+
+  test("a string over 4 KiB and a double column take the aggregation, with the same rows") {
+    val dir = Files.createTempDirectory("graft-fsi-scan").resolve("t").toString
+    Seq((1L, "a", 0.5), (2L, "b", -0.0)).toDF("k", "str", "x").coalesce(1).write.parquet(dir)
+    Seq((3L, "c" * 5000, Double.NaN), (4L, "d", 2.0)).toDF("k", "str", "x")
+      .coalesce(1).write.mode("append").parquet(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = ParquetSource.listParquetStatuses(dir, conf)
+    val long = files.filter(st => spark.read.parquet(st.getPath.toString)
+      .filter(length(col("str")) > 4096).count() > 0).map(_.getPath.toUri.getPath)
+    val byStr = FileStatsIndex.build(spark, dir, Seq("k", "str"))
+    assert(byStr.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSeq === long)
+    assert(byStr.collect().map(_.toString).sorted.toSeq ===
+      aggregated(dir, Seq("k", "str"), Nil).map(_.toString).sorted)
+    val byX = FileStatsIndex.build(spark, dir, Seq("x"))
+    assert(byX.inputFiles.length === files.size)
+    assert(byX.collect().map(_.toString).sorted.toSeq ===
+      aggregated(dir, Seq("x"), Nil).map(_.toString).sorted)
+  }
 }
