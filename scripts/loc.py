@@ -7,12 +7,17 @@ starts with `/*` and closes on the line holding `*/`; code after the
 closing `*/` on that line counts). Comments trailing code do not make
 a line a comment line.
 
-    python3 scripts/loc.py [dir]     # default: src/main/scala
+    python3 scripts/loc.py [dir]              # default: src/main/scala
+    python3 scripts/loc.py --rev REV [dir]    # REV's count, then the delta
 
-Prints one integer.
+Without --rev it prints one integer: the working tree's count. With
+--rev it also counts the tree at git revision REV, read with `git
+ls-tree`/`git show` (no checkout), and prints three lines: REV's
+count, the working tree's count, and the delta (working tree - REV).
 """
+import argparse
 import os
-import sys
+import subprocess
 
 
 def code_lines(text):
@@ -39,16 +44,44 @@ def code_lines(text):
     return n
 
 
-def main():
-    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "src", "main", "scala")
+def count_dir(root):
     total = 0
     for d, _, files in os.walk(root):
         for f in files:
             if f.endswith(".scala"):
                 with open(os.path.join(d, f), encoding="utf-8") as fh:
                     total += code_lines(fh.read())
-    print(total)
+    return total
+
+
+def count_rev(rev, root):
+    """Count the .scala files under `root` as they are at git `rev`."""
+    top = subprocess.run(["git", "rev-parse", "--show-toplevel"], cwd=root,
+                         check=True, capture_output=True, text=True).stdout.strip()
+
+    def git(*args):
+        return subprocess.run(["git", *args], cwd=top, check=True,
+                              capture_output=True).stdout
+    prefix = os.path.relpath(os.path.realpath(root), os.path.realpath(top))
+    names = git("ls-tree", "-r", "--name-only", rev, "--", prefix).decode().splitlines()
+    return sum(code_lines(git("show", f"{rev}:{n}").decode("utf-8"))
+               for n in names if n.endswith(".scala"))
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("dir", nargs="?", default=os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "..", "src", "main", "scala"))
+    ap.add_argument("--rev", help="git revision to count and compare against")
+    args = ap.parse_args()
+    now = count_dir(args.dir)
+    if args.rev is None:
+        print(now)
+        return
+    then = count_rev(args.rev, args.dir)
+    print(f"{args.rev}: {then}")
+    print(f"working tree: {now}")
+    print(f"delta: {now - then:+d}")
 
 
 if __name__ == "__main__":

@@ -811,6 +811,45 @@ object Pipeline {
       df.write.mode(mode).option("compression", compression).orc(path)
   }
 
+  /** The directory holding a parquet target's data: the just-published
+    * immutable version dir for versioned targets, the plain path
+    * otherwise.
+    */
+  private def resolvedDataDir(spark: SparkSession, p: TargetConfig.Parquet): String =
+    if (p.versioned)
+      graft.sources.Versioned.latestVersion(spark, p.path)
+        .map(n => new org.apache.hadoop.fs.Path(p.path, f"v_$n%010d").toString)
+        .getOrElse(p.path)
+    else p.path
+
+  /** The post-copy tail of [[run]] and [[runWithStageMetrics]], in
+    * order: compaction (the resumable loop's per-batch appends fragment
+    * the table), then the file-level stats index (built once over the
+    * whole copy, so it describes the files that will actually be read),
+    * then the validation diff. Versioned targets address the
+    * just-published immutable version directory.
+    */
+  private def afterCopy(spark: SparkSession, cfg: PipelineConfig): Option[DataFrame] =
+    cfg.target match {
+      case p: TargetConfig.Parquet =>
+        val dir = resolvedDataDir(spark, p)
+        if (p.compactTargetBytes > 0)
+          graft.sources.Compaction.compact(spark, dir, p.compactTargetBytes)
+        if (p.statsIndexColumns.nonEmpty)
+          graft.sources.FileStatsIndex.buildAndSave(spark, dir, p.statsIndexColumns)
+        cfg.validation.map { v =>
+          // validate against the FULL source: skipFiles marks files already
+          // copied by a previous run — their rows ARE in the target, so a
+          // skipping read would misreport them as extra_target on a correct
+          // resumed copy (and throw if every file was already copied)
+          val src = transform(read(spark, cfg.copy(skipFiles = Set.empty)), cfg)
+          Diff.fullDiff(src, sideInput(spark, dir), v.primaryKey, v.compareColumns)
+            .filter(col("diff_kind") =!= "match")
+            .limit(v.failuresToFetch)
+        }
+      case _ => None
+    }
+
   /** `run` plus a per-stage row-count report — the lineage question an
     * operator asks a curation pipeline ("which stage dropped 40% of
     * the corpus?") answered for FREE: each stage boundary carries an
@@ -820,18 +859,6 @@ object Pipeline {
     * order. Non-resumable configs only (the per-batch loop would need
     * one observation set per batch; use plain `run` there).
     */
-  /** The directory holding a parquet target's data: the just-published
-    * immutable version dir for versioned targets, the plain path
-    * otherwise. Shared by run() and runWithStageMetrics so post-write
-    * maintenance and validation always address the same files.
-    */
-  private def resolvedDataDir(spark: SparkSession, p: TargetConfig.Parquet): String =
-    if (p.versioned)
-      graft.sources.Versioned.latestVersion(spark, p.path)
-        .map(n => new org.apache.hadoop.fs.Path(p.path, f"v_$n%010d").toString)
-        .getOrElse(p.path)
-    else p.path
-
   def runWithStageMetrics(spark: SparkSession,
                           cfg: PipelineConfig): (Result, Seq[(String, Long)]) = {
     require(cfg.savepointsDir.isEmpty,
@@ -877,40 +904,9 @@ object Pipeline {
     val metrics = observations.toSeq.map { case (name, o) =>
       name -> o.get("n").asInstanceOf[Long]
     }
-    // post-write maintenance runs exactly as in run(): compaction first,
-    // then the stats index (it must describe the compacted files), then
-    // validation — silently skipping any of them would turn configured
-    // behavior into a no-op on this entry point
-    cfg.target match {
-      case p: TargetConfig.Parquet if p.compactTargetBytes > 0 =>
-        graft.sources.Compaction.compact(spark, resolvedDataDir(spark, p),
-          p.compactTargetBytes)
-        ()
-      case _ => ()
-    }
-    cfg.target match {
-      case p: TargetConfig.Parquet if p.statsIndexColumns.nonEmpty =>
-        graft.sources.FileStatsIndex.buildAndSave(spark,
-          resolvedDataDir(spark, p), p.statsIndexColumns)
-        ()
-      case _ => ()
-    }
-    val validation = (cfg.validation, cfg.target) match {
-      case (Some(v), pt: TargetConfig.Parquet) =>
-        val src = transform(read(spark, cfg), cfg)
-        val tgt = sideInput(spark, resolvedDataDir(spark, pt))
-        Some(Diff.fullDiff(src, tgt, v.primaryKey, v.compareColumns)
-          .filter(col("diff_kind") =!= "match")
-          .limit(v.failuresToFetch))
-      case _ => None
-    }
-    (Result(rows, Set.empty, validation), metrics)
+    (Result(rows, Set.empty, afterCopy(spark, cfg)), metrics)
   }
 
-  /** Copy with optional file-level resume (parquet sources) and a final
-    * validation diff. Batch writes append so each completed batch is
-    * durable before its savepoint is recorded.
-    */
   /** Continue a killed resumable run: load the completed-file set from
     * the NEWEST savepoint under `savepoints.dir` and re-enter [[run]]
     * with it merged into `skipFiles`. Already-copied batches are
@@ -933,6 +929,10 @@ object Pipeline {
     run(spark, cfg.copy(skipFiles = cfg.skipFiles ++ done), fileBatchSize)
   }
 
+  /** Copy with optional file-level resume (parquet sources) and a final
+    * validation diff. Batch writes append so each completed batch is
+    * durable before its savepoint is recorded.
+    */
   def run(spark: SparkSession, cfg: PipelineConfig, fileBatchSize: Int = 64,
           afterBatch: Int => Unit = _ => ()): Result = {
     val completed = new StringSetAccumulator
@@ -981,44 +981,6 @@ object Pipeline {
       }
     } finally manager.foreach(_.close())
 
-    // versioned targets: everything downstream (stats, validation)
-    // addresses the just-published immutable version directory
-    def dataDir(p: TargetConfig.Parquet): String = resolvedDataDir(spark, p)
-
-    // post-copy compaction BEFORE the stats index and validation: the
-    // resumable loop's per-batch appends fragment the table (one-plus
-    // files per batch), and the stats index must describe the files
-    // that will actually be read
-    cfg.target match {
-      case p: TargetConfig.Parquet if p.compactTargetBytes > 0 =>
-        graft.sources.Compaction.compact(spark, dataDir(p), p.compactTargetBytes)
-        ()
-      case _ => ()
-    }
-
-    // write-time stats: build the file-level min/max index ONCE after
-    // the whole copy (not per batch — build() groups the entire
-    // directory by file, so a per-batch rebuild would be quadratic)
-    cfg.target match {
-      case p: TargetConfig.Parquet if p.statsIndexColumns.nonEmpty =>
-        graft.sources.FileStatsIndex.buildAndSave(spark, dataDir(p), p.statsIndexColumns)
-        ()
-      case _ => ()
-    }
-
-    val validation = (cfg.validation, cfg.target) match {
-      case (Some(v), pt: TargetConfig.Parquet) =>
-        // validate against the FULL source: skipFiles marks files already
-        // copied by a previous run — their rows ARE in the target, so a
-        // skipping read would misreport them as extra_target on a correct
-        // resumed copy (and throw if every file was already copied)
-        val src = transform(read(spark, cfg.copy(skipFiles = Set.empty)), cfg)
-        val tgt = sideInput(spark, dataDir(pt))
-        Some(Diff.fullDiff(src, tgt, v.primaryKey, v.compareColumns)
-          .filter(col("diff_kind") =!= "match")
-          .limit(v.failuresToFetch))
-      case _ => None
-    }
-    Result(rows, completed.value, validation, outSchema)
+    Result(rows, completed.value, afterCopy(spark, cfg), outSchema)
   }
 }

@@ -15,34 +15,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Fixture schema per (path, file signature): a schema-less
-    * `spark.read.parquet` runs a footer-inference Spark JOB per call
-    * (~one scheduling quantum), and a bench sweep loads each fixture
-    * table hundreds of times — the schema is a pure function of the
-    * immutable file, so infer once per signature and pass it
-    * explicitly thereafter.
-    */
-  private val schemaCache = scala.collection.concurrent.TrieMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // Spark has no nanosecond TimestampType; read TIMESTAMP(NANOS) parquet
-    // columns as Long and truncate to microseconds (integer `div`, not
-    // floating division — epoch nanos exceed double's 2^53 exact range).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the fixture schema comes from KeyedReads.schemaFor (cached per
+    // file signature): a schema-less read would run a footer-inference
+    // job per call, and a bench sweep loads each table hundreds of times
     val path = s"$sfDir/$name.parquet"
-    val st = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(new org.apache.hadoop.fs.Path(path))
-    val sig = s"${st.getLen}:${st.getModificationTime}"
-    val schema = schemaCache.get(path) match {
-      case Some((s, sc)) if s == sig => sc
-      case _ =>
-        val sc = spark.read.parquet(path).schema
-        schemaCache(path) = (sig, sc)
-        sc
-    }
+    val schema = graft.sources.KeyedReads.schemaFor(spark, path)
     val df = spark.read.schema(schema).parquet(path)
+    // Spark has no nanosecond TimestampType: the session reads
+    // TIMESTAMP(NANOS) parquet columns as Long (nanosAsLong, set in
+    // [[session]]); truncate to microseconds with integer `div`, not
+    // floating division — epoch nanos exceed double's 2^53 exact range
     df.schema.fields.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType) match {
       case Some(_) => df.withColumn("ts",
         // NTZ to match how Spark infers the other parquet timestamp
@@ -152,6 +135,9 @@ object Tables {
       // with the session width, not a local constant.
       .config("spark.sql.limit.initialNumPartitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // Spark 4 refuses TIMESTAMP(NANOS) parquet (the events fixture's
+      // ts); read it as Long and let [[load]] rebuild the column
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

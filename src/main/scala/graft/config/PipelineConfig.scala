@@ -11,7 +11,10 @@ import graft.operators.Relational.Rename
   * Decoding: a dependency-free line-based `key: value` format (the
   * environment has no YAML library; the *validation* semantics —
   * eager cross-checks at load time, reference MigratorConfig.scala:59-107
-  * — are what matters and are preserved).
+  * — are what matters and are preserved). Each key is named once, in
+  * the section builder that reads it (`PipelineConfig.parse`): a key is
+  * known if and only if some section builder reads it, and a missing
+  * required value or a malformed one is a `Left`, never an exception.
   */
 final case class PipelineConfig(
     source: SourceConfig,
@@ -1294,6 +1297,7 @@ final case class StreamConfig(
     triggerMs: Long,
     changesSchema: Option[String] = None) // DDL string, e.g. "id LONG, v STRING, op STRING, seq LONG"
 
+
 object PipelineConfig {
 
   /** Load from any Hadoop-visible path (local, s3a://, gs:// — whatever
@@ -1312,7 +1316,11 @@ object PipelineConfig {
   }
 
   /** Parse the flat `section.key: value` line format. Unknown keys are
-    * errors (config typos must not silently change behavior).
+    * errors (config typos must not silently change behavior). A key is
+    * known if and only if some section builder below reads it: the
+    * known set is what the builders read over an empty map. A missing
+    * required or malformed value is a `Left` worded `<key> required` or
+    * `<key> not an int|a long|a double|a boolean`.
     */
   def parse(text: String): Either[String, PipelineConfig] = {
     val entries = text.linesIterator
@@ -1325,1092 +1333,346 @@ object PipelineConfig {
       }
       .toList
     val map = entries.toMap
-    if (map.size != entries.size) return Left("duplicate config key")
+    if (map.size != entries.size) Left("duplicate config key")
+    else map.keys.find(!knownKeys.contains(_)) match {
+      case Some(k) => Left(s"unknown config key: $k")
+      case None    => pipeline(new Fields(map, ""))
+    }
+  }
 
-    val known = Set(
-      "source.type", "source.path", "source.where", "source.columns",
-      "source.versioned", "source.versionAt", "source.mergeSchema",
-      "source.url", "source.table", "source.partitionColumn",
-      "source.numPartitions", "source.lowerBound", "source.upperBound",
-      "source.schema", "source.header", "source.delimiter", "source.inferSchema",
-      "target.type", "target.path", "target.mode", "target.compression",
-      "target.partitionBy", "target.sortBy", "target.header", "target.delimiter",
-      "target.maxRecordsPerFile", "target.globalSortBy", "target.statsIndex",
-      "target.versioned", "target.zorderBy", "target.zorderFiles",
-      "target.compactTargetBytes",
-      "target.keyColumn", "target.payloadColumn", "target.maxShardBytes",
-      "target.numShards", "target.suffix",
-      "renames", "savepoints.dir", "skipFiles",
-      "transforms",
-      "transform.dedupExact.idColumn", "transform.dedupExact.textColumn",
-      "transform.sourceCap.groupColumns", "transform.sourceCap.idColumn",
-      "transform.sourceCap.textColumn", "transform.sourceCap.k",
-      "transform.split.keyColumn", "transform.split.fractions",
-      "transform.split.denom",
-      "transform.normalize.textColumn",
-      "transform.spanDedup.idColumn", "transform.spanDedup.textColumn",
-      "transform.spanDedup.spanTokens", "transform.spanDedup.minDocs",
-      "transform.spanDedup.keepFirst",
-      "transform.dupSpanCut.idColumn", "transform.dupSpanCut.textColumn",
-      "transform.dupSpanCut.gramTokens", "transform.dupSpanCut.minCount",
-      "transform.minhashDedup.idColumn", "transform.minhashDedup.textColumn",
-      "transform.minhashDedup.shingleSize", "transform.minhashDedup.numHashes",
-      "transform.minhashDedup.bands", "transform.minhashDedup.rowsPerBand",
-      "transform.minhashDedup.thresholdNum", "transform.minhashDedup.thresholdDenom",
-      "transform.semanticDedup.idColumn", "transform.semanticDedup.vecColumn",
-      "transform.semanticDedup.numPlanes", "transform.semanticDedup.bandBits",
-      "transform.semanticDedup.threshold", "transform.semanticDedup.seed",
-      "transform.decontaminate.idColumn", "transform.decontaminate.textColumn",
-      "transform.decontaminate.referencePath", "transform.decontaminate.ngram",
-      "transform.decontaminate.minShared",
-      "transform.semanticDecontaminate.vecColumn",
-      "transform.semanticDecontaminate.referencePath",
-      "transform.semanticDecontaminate.minDot",
-      "transform.seqPack.idColumn", "transform.seqPack.textColumn",
-      "transform.seqPack.budget", "transform.seqPack.shardWidth",
-      "transform.piiScrub.textColumn",
-      "transform.dsirFilter.idColumn", "transform.dsirFilter.textColumn",
-      "transform.dsirFilter.targetPath", "transform.dsirFilter.targetTextColumn",
-      "transform.dsirFilter.buckets", "transform.dsirFilter.keepNum",
-      "transform.dsirFilter.keepDenom",
-      "transform.pplFilter.idColumn", "transform.pplFilter.textColumn",
-      "transform.pplFilter.langColumn", "transform.pplFilter.buckets",
-      "transform.pplFilter.keep", "transform.pplFilter.approx",
-      "transform.tokenBudget.groupColumn", "transform.tokenBudget.keyColumn",
-      "transform.tokenBudget.tokenColumn", "transform.tokenBudget.budget",
-      "transform.tokenBudget.shards",
-      "transform.incrDedup.idColumn", "transform.incrDedup.textColumn",
-      "transform.incrDedup.referencePath", "transform.incrDedup.referenceTextColumn",
-      "transform.mixToTarget.keyColumn", "transform.mixToTarget.groupColumn",
-      "transform.mixToTarget.weights", "transform.mixToTarget.wDenom",
-      "transform.outlierFilter.valueColumn", "transform.outlierFilter.groupColumn",
-      "transform.outlierFilter.z",
-      "transform.qualityFilter.textColumn", "transform.qualityFilter.minScore",
-      "transform.qualityFilter.bias", "transform.qualityFilter.wStop",
-      "transform.qualityFilter.wPunct", "transform.qualityFilter.wDigit",
-      "transform.qualityFilter.wTokLen",
-      "transform.gopherFilter.textColumn", "transform.gopherFilter.minWords",
-      "transform.gopherFilter.maxWords", "transform.gopherFilter.minMeanLen",
-      "transform.gopherFilter.maxMeanLen", "transform.gopherFilter.minAlphaPct",
-      "transform.gopherFilter.maxSymbolPct", "transform.gopherFilter.minStopHits",
-      "transform.gopherFilter.maxTopTokenPct",
-      "transform.repetitionFilter.textColumn",
-      "transform.repetitionFilter.topPcts", "transform.repetitionFilter.dupPcts",
-      "transform.blocklist.textColumn", "transform.blocklist.termsPath",
-      "transform.blocklist.maxTerms",
-      "transform.sessionize.keys", "transform.sessionize.tsColumn",
-      "transform.sessionize.gap", "transform.sessionize.tieBreak",
-      "transform.funnel.keyColumn", "transform.funnel.tsColumn",
-      "transform.funnel.typeColumn", "transform.funnel.steps",
-      "transform.retention.keyColumn", "transform.retention.tsColumn",
-      "transform.retention.bucketDays",
-      "transform.scd2History.keyColumn", "transform.scd2History.tsColumn",
-      "transform.scd2History.opColumn", "transform.scd2History.upsertOp",
-      "transform.scd2History.deleteOp", "transform.scd2History.valueColumns",
-      "transform.scd2History.tieBreak",
-      "transform.pitEnrich.historyPath", "transform.pitEnrich.keyColumn",
-      "transform.pitEnrich.tsColumn", "transform.pitEnrich.valueColumns",
-      "transform.mergeSnapshot.snapshotPath", "transform.mergeSnapshot.keys",
-      "transform.mergeSnapshot.deleteStale",
-      "transform.minhashDedup.keepLongest",
-      "transform.phashDedup.idColumn", "transform.phashDedup.payloadColumn",
-      "transform.phashDedup.decoder", "transform.phashDedup.maxDist",
-      "transform.phashDedup.lenient",
-      "transform.resampleByWeight.keyColumn",
-      "transform.resampleByWeight.rateColumn", "transform.resampleByWeight.denom",
-      "transform.scd2Append.historyPath", "transform.scd2Append.keyColumn",
-      "transform.scd2Append.tsColumn", "transform.scd2Append.opColumn",
-      "transform.scd2Append.upsertOp", "transform.scd2Append.deleteOp",
-      "transform.scd2Append.valueColumns", "transform.scd2Append.tieBreak",
-      "transform.constraintGate.notNull", "transform.constraintGate.uniqueKey",
-      "transform.constraintGate.minRows", "transform.constraintGate.maxRows",
-      "transform.constraintGate.fkColumn", "transform.constraintGate.fkRefPath",
-      "transform.constraintGate.fkRefColumn",
-      "transform.winsorize.groupColumns", "transform.winsorize.valueColumn",
-      "transform.winsorize.pct", "transform.winsorize.outColumn",
-      "transform.winsorize.tier",
-      "transform.anomaly.keyColumns", "transform.anomaly.orderColumns",
-      "transform.anomaly.valueColumn", "transform.anomaly.window",
-      "transform.anomaly.minPoints", "transform.anomaly.z",
-      "transform.anomaly.maxAbsValue",
-      "transform.lshDedup.indexPath", "transform.lshDedup.idColumn",
-      "transform.lshDedup.textColumn", "transform.lshDedup.thresholdNum",
-      "transform.lshDedup.thresholdDenom", "transform.lshDedup.minBands",
-      "transform.lshDedup.minMatchingHashes", "transform.lshDedup.advance",
-      "transform.lshDedup.maxPruneKeys", "transform.lshDedup.minPruneBytes",
-      "transform.annSearch.indexRoot", "transform.annSearch.idColumn",
-      "transform.annSearch.vecColumn", "transform.annSearch.k",
-      "transform.annSearch.nProbe", "transform.annSearch.versioned",
-      "transform.annSearch.filterPath", "transform.annSearch.filterColumn",
-      "transform.annSearch.rerankPath", "transform.annSearch.rerankKCand",
-      "transform.annIngest.indexRoot", "transform.annIngest.idColumn",
-      "transform.annIngest.vecColumn", "transform.annIngest.tag",
-      "transform.forget.store", "transform.forget.root",
-      "transform.forget.idColumn",
-      "transform.rfm.keyColumn", "transform.rfm.tsColumn",
-      "transform.rfm.valueColumn", "transform.rfm.asOf", "transform.rfm.buckets",
-      "transform.transitionMatrix.keyColumn", "transform.transitionMatrix.tsColumn",
-      "transform.transitionMatrix.typeColumn", "transform.transitionMatrix.tieBreak",
-      "transform.attribution.keyColumn", "transform.attribution.tsColumn",
-      "transform.attribution.typeColumn", "transform.attribution.conversionType",
-      "transform.attribution.touchTypes", "transform.attribution.tieBreak",
-      "transform.intervalJoin.rightPath", "transform.intervalJoin.leftLo",
-      "transform.intervalJoin.leftHi", "transform.intervalJoin.rightLo",
-      "transform.intervalJoin.rightHi", "transform.intervalJoin.keys",
-      "transform.intervalJoin.bandWidth",
-      "transform.components.srcColumn", "transform.components.dstColumn",
-      "transform.components.maxIters",
-      "transform.triangles.srcColumn", "transform.triangles.dstColumn",
-      "transform.reachable.srcColumn", "transform.reachable.dstColumn",
-      "transform.reachable.rootsPath", "transform.reachable.rootColumn",
-      "transform.reachable.maxDepth",
-      "transform.bitemporal.keyColumn", "transform.bitemporal.validTsColumn",
-      "transform.bitemporal.txTsColumn", "transform.bitemporal.opColumn",
-      "transform.bitemporal.upsertOp", "transform.bitemporal.deleteOp",
-      "transform.bitemporal.valueColumns", "transform.bitemporal.validAt",
-      "transform.bitemporal.txAt", "transform.bitemporal.tieBreak",
-      "transform.linkExtract.htmlColumn", "transform.linkExtract.hrefColumn",
-      "transform.lexSearch.indexRoot", "transform.lexSearch.queryIdColumn",
-      "transform.lexSearch.termColumn", "transform.lexSearch.k",
-      "transform.rrfFuse.otherPath", "transform.rrfFuse.queryIdColumn",
-      "transform.rrfFuse.idColumn", "transform.rrfFuse.rankColumn",
-      "transform.rrfFuse.k", "transform.rrfFuse.kRrf",
-      "transform.graphEpoch.root", "transform.graphEpoch.srcColumn",
-      "transform.graphEpoch.dstColumn", "transform.graphEpoch.tag",
-      "transform.pageRank.srcColumn", "transform.pageRank.dstColumn",
-      "transform.pageRank.iters", "transform.pageRank.dampingPct",
-      "transform.pageRank.dangling",
-      "transform.pageRank.seedsPath", "transform.pageRank.seedColumn",
-      "transform.hits.srcColumn", "transform.hits.dstColumn",
-      "transform.hits.iters",
-      "transform.mmrRerank.queryIdColumn", "transform.mmrRerank.idColumn",
-      "transform.mmrRerank.scoreColumn", "transform.mmrRerank.vecColumn",
-      "transform.mmrRerank.k", "transform.mmrRerank.lambdaPct",
-      "transform.evalRanking.truthPath", "transform.evalRanking.queryIdColumn",
-      "transform.evalRanking.idColumn", "transform.evalRanking.rankColumn",
-      "transform.evalRanking.k", "transform.evalRanking.relColumn",
-      "transform.htmlExtract.textColumn",
-      "transform.urlCanon.urlColumn", "transform.urlCanon.hostColumn",
-      "transform.urlCanon.domainColumn", "transform.urlCanon.trackedParams",
-      "transform.lineDedup.idColumn", "transform.lineDedup.textColumn",
-      "transform.lineDedup.minDupCount", "transform.lineDedup.minLineChars",
-      "transform.lineDedup.segmentWords", "transform.lineDedup.censusDir",
-      "transform.lineDedup.advance", "transform.lineDedup.advanceTag",
-      "transform.lineFilter.idColumn", "transform.lineFilter.textColumn",
-      "transform.lineFilter.minTokens", "transform.lineFilter.anchorWords",
-      "transform.lineFilter.minKeptLines", "transform.lineFilter.segmentWords",
-      "validation.primaryKey", "validation.compareColumns",
-      "validation.tolerance", "validation.failuresToFetch",
-      "stream.changesDir", "stream.checkpointDir", "stream.primaryKey",
-      "stream.opColumn", "stream.orderBy", "stream.triggerMs",
-      "stream.changesSchema")
-    map.keys.find(!known.contains(_)) match {
-      case Some(k) => return Left(s"unknown config key: $k")
-      case None    => ()
+  /** One section's field reader. Every accessor records the full key it
+    * reads, and turns a missing required value or a malformed one into
+    * the section's error — the first in read order wins, and later
+    * accessors still run (so a builder run over an empty map records
+    * every key it can read).
+    */
+  private final class Fields(map: Map[String, String], prefix: String) {
+    val keys = scala.collection.mutable.Set.empty[String]
+    private var error: Option[String] = None
+    def fail(msg: String): Unit = if (error.isEmpty) error = Some(msg)
+    def result[A](a: A): Either[String, A] = error.toLeft(a)
+    /** Runs `build` over the keys under `sub`, as its own section. */
+    def section[A](sub: String)(build: Fields => A): Either[String, A] = {
+      val s = new Fields(map, sub)
+      s.result(build(s))
     }
 
-    def list(key: String): List[String] =
-      map.get(key).map(_.split(",").map(_.trim).filter(_.nonEmpty).toList).getOrElse(Nil)
+    def opt(k: String): Option[String] = { keys += prefix + k; map.get(prefix + k) }
+    def has(k: String): Boolean = opt(k).isDefined
+    def str(k: String, default: String): String = opt(k).getOrElse(default)
+    def req(k: String, note: String = ""): String =
+      opt(k).getOrElse { fail(s"$prefix$k required$note"); "" }
+    private def as[A](k: String, what: String, conv: String => Option[A]): Option[A] =
+      opt(k).flatMap(v => conv(v).orElse { fail(s"$prefix$k not $what"); None })
+    def optInt(k: String): Option[Int] = as(k, "an int", _.toIntOption)
+    def int(k: String, default: Int): Int = optInt(k).getOrElse(default)
+    def long(k: String, default: Long): Long = as(k, "a long", _.toLongOption).getOrElse(default)
+    def double(k: String, default: Double): Double =
+      as(k, "a double", _.toDoubleOption).getOrElse(default)
+    def bool(k: String, default: Boolean): Boolean =
+      as(k, "a boolean", _.toBooleanOption).getOrElse(default)
+    def reqInt(k: String): Int = { req(k); int(k, 0) }
+    def reqLong(k: String, note: String = ""): Long = { req(k, note); long(k, 0L) }
 
-    val source: Either[String, SourceConfig] = map.get("source.type") match {
-      case Some("parquet") =>
-        for {
-          p <- map.get("source.path").toRight("source.path required")
-          versioned = map.getOrElse("source.versioned", "false").toBoolean
-          vAt <- map.get("source.versionAt") match {
-            case None => Right(None)
-            case Some(v) => v.toLongOption match {
-              case Some(n) if n > 0 && versioned => Right(Some(n))
-              case Some(n) if n > 0 =>
-                Left("source.versionAt requires source.versioned: true")
-              case _ => Left("source.versionAt must be a positive long")
-            }
-          }
-        } yield SourceConfig.Parquet(p, map.get("source.where"),
-          map.get("source.columns").map(_ => list("source.columns")),
-          versioned, vAt,
-          map.getOrElse("source.mergeSchema", "false").toBoolean)
-      case Some("jdbc") =>
-        for {
-          url <- map.get("source.url").toRight("source.url required")
-          table <- map.get("source.table").toRight("source.table required")
-        } yield SourceConfig.Jdbc(url, table, map.get("source.where"),
-          map.get("source.partitionColumn"),
-          map.getOrElse("source.numPartitions", "1").toInt,
-          map.get("source.lowerBound"), map.get("source.upperBound"))
-      case Some("dynamo-s3-export") =>
-        map.get("source.path").toRight("source.path required")
-          .map(SourceConfig.DynamoS3Export(_))
-      case Some("csv") =>
-        for {
-          p <- map.get("source.path").toRight("source.path required")
-          schema = map.get("source.schema")
-          infer = map.getOrElse("source.inferSchema", "false").toBoolean
-          _ <- if (schema.isEmpty && !infer)
-            Left("csv source requires source.schema (or source.inferSchema: true " +
-              "— inference scans the data twice, opt in explicitly)")
-          else Right(())
-        } yield SourceConfig.Csv(p, schema,
-          map.getOrElse("source.header", "true").toBoolean,
-          map.getOrElse("source.delimiter", ","), infer,
-          map.get("source.where"),
-          map.get("source.columns").map(_ => list("source.columns")))
-      case Some("json") =>
-        for {
-          p <- map.get("source.path").toRight("source.path required")
-          schema = map.get("source.schema")
-          infer = map.getOrElse("source.inferSchema", "false").toBoolean
-          _ <- if (schema.isEmpty && !infer)
-            Left("json source requires source.schema (or source.inferSchema: true " +
-              "— inference scans the data twice, opt in explicitly)")
-          else Right(())
-        } yield SourceConfig.Json(p, schema, infer,
-          map.get("source.where"),
-          map.get("source.columns").map(_ => list("source.columns")))
-      case Some("orc") =>
-        map.get("source.path").toRight("source.path required")
-          .map(p => SourceConfig.Orc(p, map.get("source.where"),
-            map.get("source.columns").map(_ => list("source.columns"))))
-      case other => Left(s"unsupported source.type: ${other.getOrElse("<missing>")}")
+    /** Comma list; blanks dropped. */
+    def optList(k: String): Option[List[String]] =
+      opt(k).map(_.split(",").map(_.trim).filter(_.nonEmpty).toList)
+    def list(k: String): List[String] = optList(k).getOrElse(Nil)
+    def longs(k: String, default: List[Long]): List[Long] = optList(k).fold(default) { parts =>
+      val longs = parts.flatMap(_.toLongOption)
+      if (longs.size != parts.size) fail(s"$prefix$k not a comma list of longs")
+      longs
     }
-
-    val target: Either[String, TargetConfig] = map.get("target.type") match {
-      case Some("parquet") =>
-        map.get("target.path").toRight("target.path required")
-          .flatMap(p => TargetConfig.Parquet(p,
-            map.getOrElse("target.mode", "errorifexists"),
-            map.getOrElse("target.compression", "snappy"),
-            list("target.partitionBy"),
-            list("target.sortBy"),
-            map.getOrElse("target.maxRecordsPerFile", "0").toLong,
-            list("target.globalSortBy"),
-            list("target.statsIndex"),
-            map.getOrElse("target.versioned", "false").toBoolean,
-            list("target.zorderBy"),
-            map.getOrElse("target.zorderFiles", "0").toInt,
-            map.getOrElse("target.compactTargetBytes", "0").toLong).validate)
-      case Some("dynamo-s3-export") =>
-        map.get("target.path").toRight("target.path required")
-          .map(TargetConfig.DynamoS3Export(_))
-      case Some("tar-shards") =>
-        for {
-          p <- map.get("target.path").toRight("target.path required")
-          key <- map.get("target.keyColumn").toRight("target.keyColumn required")
-          pay <- map.get("target.payloadColumn").toRight("target.payloadColumn required")
-          msb <- map.getOrElse("target.maxShardBytes", (128L * 1024 * 1024).toString)
-            .toLongOption.toRight("target.maxShardBytes not a long")
-          ns <- map.getOrElse("target.numShards", "32")
-            .toIntOption.toRight("target.numShards not an int")
-          t <- TargetConfig.TarShards(p, key, pay, msb, ns,
-            map.getOrElse("target.suffix", ".bin")).validate
-        } yield t
-      case Some("csv") =>
-        map.get("target.path").toRight("target.path required")
-          .map(p => TargetConfig.Csv(p,
-            map.getOrElse("target.mode", "errorifexists"),
-            map.getOrElse("target.header", "true").toBoolean,
-            map.getOrElse("target.delimiter", ","),
-            map.getOrElse("target.compression", "none")))
-      case Some("json") =>
-        map.get("target.path").toRight("target.path required")
-          .map(p => TargetConfig.Json(p,
-            map.getOrElse("target.mode", "errorifexists"),
-            map.getOrElse("target.compression", "none")))
-      case Some("orc") =>
-        map.get("target.path").toRight("target.path required")
-          .flatMap(p => TargetConfig.Orc(p,
-            map.getOrElse("target.mode", "errorifexists"),
-            map.getOrElse("target.compression", "snappy")).validate)
-      case other => Left(s"unsupported target.type: ${other.getOrElse("<missing>")}")
+    /** `name=int` list; `bad` words the error for a malformed entry. */
+    def pairs(k: String)(bad: String => String): List[(String, Int)] = list(k).flatMap { e =>
+      e.split("=") match {
+        case Array(nm, n) if n.trim.toIntOption.isDefined => Some(nm.trim -> n.trim.toInt)
+        case _ => fail(bad(e)); None
+      }
     }
+  }
 
-    val renames = list("renames").map { r =>
+  /** The top-level keys, then the source, target and stage sections
+    * they name.
+    */
+  private def pipeline(f: Fields): Either[String, PipelineConfig] = {
+    val sourceType = f.opt("source.type")
+    val targetType = f.opt("target.type")
+    val renames = f.list("renames").flatMap { r =>
       r.split("->") match {
-        case Array(from, to) => Rename(from.trim, to.trim)
-        case _ => return Left(s"malformed rename (want from->to): $r")
+        case Array(from, to) => Some(Rename(from.trim, to.trim))
+        case _ => f.fail(s"malformed rename (want from->to): $r"); None
       }
     }
+    val savepointsDir = f.opt("savepoints.dir")
+    val skipFiles = f.list("skipFiles").toSet
+    val validation = ValidationConfig(f.list("validation.primaryKey"),
+      f.list("validation.compareColumns"), f.double("validation.tolerance", 0),
+      f.int("validation.failuresToFetch", 100))
+    val stream = StreamConfig(f.str("stream.changesDir", ""),
+      f.str("stream.checkpointDir", ""), f.list("stream.primaryKey"),
+      f.str("stream.opColumn", "op"), f.list("stream.orderBy"),
+      f.long("stream.triggerMs", 5000L), f.opt("stream.changesSchema"))
+    if (f.has("stream.changesDir") && !f.has("stream.checkpointDir"))
+      f.fail("stream.checkpointDir required when stream.changesDir is set")
+    val transformNames = f.list("transforms")
 
-    val validation =
-      if (map.contains("validation.primaryKey"))
-        Some(ValidationConfig(
-          list("validation.primaryKey"), list("validation.compareColumns"),
-          map.getOrElse("validation.tolerance", "0").toDouble,
-          map.getOrElse("validation.failuresToFetch", "100").toInt))
-      else None
-
-    val stream: Either[String, Option[StreamConfig]] =
-      if (!map.contains("stream.changesDir")) Right(None)
-      else map.get("stream.checkpointDir")
-        .toRight("stream.checkpointDir required when stream.changesDir is set")
-        .map(ckpt => Some(StreamConfig(
-          map("stream.changesDir"), ckpt,
-          list("stream.primaryKey"),
-          map.getOrElse("stream.opColumn", "op"),
-          list("stream.orderBy"),
-          map.getOrElse("stream.triggerMs", "5000").toLong,
-          map.get("stream.changesSchema"))))
-
-    val transforms: Either[String, List[TransformConfig]] = {
-      def stage(n: String): Either[String, TransformConfig] = n match {
-        case "dedupExact" =>
-          for {
-            id <- map.get("transform.dedupExact.idColumn")
-              .toRight("transform.dedupExact.idColumn required")
-            text <- map.get("transform.dedupExact.textColumn")
-              .toRight("transform.dedupExact.textColumn required")
-          } yield TransformConfig.DedupExact(id, text)
-        case "sourceCap" =>
-          for {
-            id <- map.get("transform.sourceCap.idColumn")
-              .toRight("transform.sourceCap.idColumn required")
-            text <- map.get("transform.sourceCap.textColumn")
-              .toRight("transform.sourceCap.textColumn required")
-            k <- map.get("transform.sourceCap.k")
-              .toRight("transform.sourceCap.k required")
-              .flatMap(v => v.toIntOption.toRight(s"transform.sourceCap.k not an int: $v"))
-          } yield TransformConfig.SourceCap(
-            list("transform.sourceCap.groupColumns"), id, text, k)
-        case "split" =>
-          for {
-            key <- map.get("transform.split.keyColumn")
-              .toRight("transform.split.keyColumn required")
-            fracs <- list("transform.split.fractions").foldRight(
-              Right(Nil): Either[String, List[(String, Int)]]) { (f, acc) =>
-              acc.flatMap(rest => f.split("=") match {
-                case Array(nm, num) if num.trim.toIntOption.isDefined =>
-                  Right((nm.trim, num.trim.toInt) :: rest)
-                case _ => Left(s"malformed split fraction (want name=int): $f")
-              })
-            }
-            denom <- map.getOrElse("transform.split.denom", "100")
-              .toIntOption.toRight(
-                s"transform.split.denom not an int: ${map("transform.split.denom")}")
-          } yield TransformConfig.Split(key, fracs, denom)
-        case "normalize" =>
-          map.get("transform.normalize.textColumn")
-            .toRight("transform.normalize.textColumn required")
-            .map(TransformConfig.Normalize(_))
-        case "spanDedup" =>
-          for {
-            id <- map.get("transform.spanDedup.idColumn")
-              .toRight("transform.spanDedup.idColumn required")
-            text <- map.get("transform.spanDedup.textColumn")
-              .toRight("transform.spanDedup.textColumn required")
-            st <- map.getOrElse("transform.spanDedup.spanTokens", "3")
-              .toIntOption.toRight("transform.spanDedup.spanTokens not an int")
-            md <- map.getOrElse("transform.spanDedup.minDocs", "2")
-              .toIntOption.toRight("transform.spanDedup.minDocs not an int")
-          } yield TransformConfig.SpanDedup(id, text, st, md,
-            map.getOrElse("transform.spanDedup.keepFirst", "false").toBoolean)
-        case "dupSpanCut" =>
-          for {
-            id <- map.get("transform.dupSpanCut.idColumn")
-              .toRight("transform.dupSpanCut.idColumn required")
-            text <- map.get("transform.dupSpanCut.textColumn")
-              .toRight("transform.dupSpanCut.textColumn required")
-            k <- map.getOrElse("transform.dupSpanCut.gramTokens", "8")
-              .toIntOption.toRight("transform.dupSpanCut.gramTokens not an int")
-            mc <- map.getOrElse("transform.dupSpanCut.minCount", "2")
-              .toLongOption.toRight("transform.dupSpanCut.minCount not an int")
-          } yield TransformConfig.DupSpanCut(id, text, k, mc)
-        case "minhashDedup" =>
-          def num(key: String, default: String): Either[String, Int] =
-            map.getOrElse(s"transform.minhashDedup.$key", default)
-              .toIntOption.toRight(s"transform.minhashDedup.$key not an int")
-          for {
-            id <- map.get("transform.minhashDedup.idColumn")
-              .toRight("transform.minhashDedup.idColumn required")
-            text <- map.get("transform.minhashDedup.textColumn")
-              .toRight("transform.minhashDedup.textColumn required")
-            sh <- num("shingleSize", "3")
-            nh <- num("numHashes", "64")
-            b <- num("bands", "16")
-            r <- num("rowsPerBand", "4")
-            tn <- num("thresholdNum", "9")
-            td <- num("thresholdDenom", "10")
-            kl <- map.getOrElse("transform.minhashDedup.keepLongest", "false")
-              .toBooleanOption.toRight("transform.minhashDedup.keepLongest not a boolean")
-          } yield TransformConfig.MinhashDedup(id, text, sh, nh, b, r, tn, td, kl)
-        case "semanticDedup" =>
-          for {
-            id <- map.get("transform.semanticDedup.idColumn")
-              .toRight("transform.semanticDedup.idColumn required")
-            vec <- map.get("transform.semanticDedup.vecColumn")
-              .toRight("transform.semanticDedup.vecColumn required")
-            np <- map.getOrElse("transform.semanticDedup.numPlanes", "80")
-              .toIntOption.toRight("transform.semanticDedup.numPlanes not an int")
-            bb <- map.getOrElse("transform.semanticDedup.bandBits", "4")
-              .toIntOption.toRight("transform.semanticDedup.bandBits not an int")
-            th <- map.getOrElse("transform.semanticDedup.threshold", "0.9")
-              .toDoubleOption.toRight("transform.semanticDedup.threshold not a double")
-            sd <- map.getOrElse("transform.semanticDedup.seed", "42")
-              .toLongOption.toRight("transform.semanticDedup.seed not a long")
-          } yield TransformConfig.SemanticDedup(id, vec, np, bb, th, sd)
-        case "decontaminate" =>
-          for {
-            id <- map.get("transform.decontaminate.idColumn")
-              .toRight("transform.decontaminate.idColumn required")
-            text <- map.get("transform.decontaminate.textColumn")
-              .toRight("transform.decontaminate.textColumn required")
-            ref <- map.get("transform.decontaminate.referencePath")
-              .toRight("transform.decontaminate.referencePath required")
-            n <- map.getOrElse("transform.decontaminate.ngram", "8")
-              .toIntOption.toRight("transform.decontaminate.ngram not an int")
-            ms <- map.getOrElse("transform.decontaminate.minShared", "1")
-              .toLongOption.toRight("transform.decontaminate.minShared not a long")
-          } yield TransformConfig.Decontaminate(id, text, ref, n, ms)
-        case "semanticDecontaminate" =>
-          for {
-            vec <- map.get("transform.semanticDecontaminate.vecColumn")
-              .toRight("transform.semanticDecontaminate.vecColumn required")
-            ref <- map.get("transform.semanticDecontaminate.referencePath")
-              .toRight("transform.semanticDecontaminate.referencePath required")
-            md <- map.get("transform.semanticDecontaminate.minDot")
-              .toRight("transform.semanticDecontaminate.minDot required")
-              .flatMap(_.toLongOption
-                .toRight("transform.semanticDecontaminate.minDot not a long"))
-          } yield TransformConfig.SemanticDecontaminate(vec, ref, md)
-        case "piiScrub" =>
-          map.get("transform.piiScrub.textColumn")
-            .toRight("transform.piiScrub.textColumn required")
-            .map(TransformConfig.PiiScrub(_))
-        case "dsirFilter" =>
-          for {
-            id <- map.get("transform.dsirFilter.idColumn")
-              .toRight("transform.dsirFilter.idColumn required")
-            text <- map.get("transform.dsirFilter.textColumn")
-              .toRight("transform.dsirFilter.textColumn required")
-            tp <- map.get("transform.dsirFilter.targetPath")
-              .toRight("transform.dsirFilter.targetPath required")
-            b <- map.getOrElse("transform.dsirFilter.buckets", "64")
-              .toIntOption.toRight("transform.dsirFilter.buckets not an int")
-            kn <- map.getOrElse("transform.dsirFilter.keepNum", "1")
-              .toIntOption.toRight("transform.dsirFilter.keepNum not an int")
-            kd <- map.getOrElse("transform.dsirFilter.keepDenom", "2")
-              .toIntOption.toRight("transform.dsirFilter.keepDenom not an int")
-          } yield TransformConfig.DsirFilter(id, text, tp,
-            map.getOrElse("transform.dsirFilter.targetTextColumn", text), b, kn, kd)
-        case "pplFilter" =>
-          for {
-            id <- map.get("transform.pplFilter.idColumn")
-              .toRight("transform.pplFilter.idColumn required")
-            text <- map.get("transform.pplFilter.textColumn")
-              .toRight("transform.pplFilter.textColumn required")
-            lang <- map.get("transform.pplFilter.langColumn")
-              .toRight("transform.pplFilter.langColumn required")
-            buckets <- map.getOrElse("transform.pplFilter.buckets", "3")
-              .toIntOption.toRight("transform.pplFilter.buckets not an int")
-            keep <- list("transform.pplFilter.keep").foldRight(
-              Right(Nil): Either[String, List[Long]]) { (k, acc) =>
-              acc.flatMap(rest => k.toLongOption
-                .toRight(s"malformed pplFilter.keep bucket: $k").map(_ :: rest))
-            }
-            approx <- map.getOrElse("transform.pplFilter.approx", "true")
-              .toBooleanOption.toRight("transform.pplFilter.approx not a boolean")
-          } yield TransformConfig.PplFilter(id, text, lang, buckets, keep, approx)
-        case "tokenBudget" =>
-          for {
-            group <- map.get("transform.tokenBudget.groupColumn")
-              .toRight("transform.tokenBudget.groupColumn required")
-            key <- map.get("transform.tokenBudget.keyColumn")
-              .toRight("transform.tokenBudget.keyColumn required")
-            tok <- map.get("transform.tokenBudget.tokenColumn")
-              .toRight("transform.tokenBudget.tokenColumn required")
-            b <- map.get("transform.tokenBudget.budget")
-              .toRight("transform.tokenBudget.budget required")
-              .flatMap(_.toLongOption.toRight("transform.tokenBudget.budget not a long"))
-            sh <- map.getOrElse("transform.tokenBudget.shards", "256")
-              .toIntOption.toRight("transform.tokenBudget.shards not an int")
-          } yield TransformConfig.TokenBudget(group, key, tok, b, sh)
-        case "incrDedup" =>
-          for {
-            id <- map.get("transform.incrDedup.idColumn")
-              .toRight("transform.incrDedup.idColumn required")
-            text <- map.get("transform.incrDedup.textColumn")
-              .toRight("transform.incrDedup.textColumn required")
-            ref <- map.get("transform.incrDedup.referencePath")
-              .toRight("transform.incrDedup.referencePath required")
-          } yield TransformConfig.IncrDedup(id, text, ref,
-            map.getOrElse("transform.incrDedup.referenceTextColumn", text))
-        case "mixToTarget" =>
-          for {
-            key <- map.get("transform.mixToTarget.keyColumn")
-              .toRight("transform.mixToTarget.keyColumn required")
-            group <- map.get("transform.mixToTarget.groupColumn")
-              .toRight("transform.mixToTarget.groupColumn required")
-            weights <- list("transform.mixToTarget.weights").foldRight(
-              Right(Nil): Either[String, List[(String, Int)]]) { (w, acc) =>
-              acc.flatMap(rest => w.split("=") match {
-                case Array(nm, num) if num.trim.toIntOption.isDefined =>
-                  Right((nm.trim, num.trim.toInt) :: rest)
-                case _ => Left(s"malformed mixToTarget weight (want group=int): $w")
-              })
-            }
-            wd <- map.getOrElse("transform.mixToTarget.wDenom", "100")
-              .toIntOption.toRight("transform.mixToTarget.wDenom not an int")
-          } yield TransformConfig.MixToTarget(key, group, weights, wd)
-        case "outlierFilter" =>
-          for {
-            value <- map.get("transform.outlierFilter.valueColumn")
-              .toRight("transform.outlierFilter.valueColumn required")
-            group <- map.get("transform.outlierFilter.groupColumn")
-              .toRight("transform.outlierFilter.groupColumn required")
-            z <- map.getOrElse("transform.outlierFilter.z", "3.0")
-              .toDoubleOption.toRight("transform.outlierFilter.z not a double")
-          } yield TransformConfig.OutlierFilter(value, group, z)
-        case "qualityFilter" =>
-          def weight(key: String, default: Long): Either[String, Long] =
-            map.getOrElse(s"transform.qualityFilter.$key", default.toString)
-              .toLongOption.toRight(s"transform.qualityFilter.$key not a long")
-          for {
-            text <- map.get("transform.qualityFilter.textColumn")
-              .toRight("transform.qualityFilter.textColumn required")
-            ms <- map.get("transform.qualityFilter.minScore")
-              .toRight("transform.qualityFilter.minScore required")
-              .flatMap(_.toLongOption.toRight("transform.qualityFilter.minScore not a long"))
-            b <- weight("bias", 0L)
-            ws <- weight("wStop", 4L)
-            wp <- weight("wPunct", -2L)
-            wd <- weight("wDigit", -3L)
-            wt <- weight("wTokLen", 1L)
-          } yield TransformConfig.QualityFilter(text, ms, b, ws, wp, wd, wt)
-        case "gopherFilter" =>
-          def bound(key: String, default: Long): Either[String, Long] =
-            map.getOrElse(s"transform.gopherFilter.$key", default.toString)
-              .toLongOption.toRight(s"transform.gopherFilter.$key not a long")
-          for {
-            text <- map.get("transform.gopherFilter.textColumn")
-              .toRight("transform.gopherFilter.textColumn required")
-            minW <- bound("minWords", 50L)
-            maxW <- bound("maxWords", 100000L)
-            minL <- bound("minMeanLen", 3L)
-            maxL <- bound("maxMeanLen", 10L)
-            alpha <- bound("minAlphaPct", 80L)
-            sym <- bound("maxSymbolPct", 10L)
-            stop <- bound("minStopHits", 2L)
-            top <- bound("maxTopTokenPct", 20L)
-          } yield TransformConfig.GopherFilter(text, minW, maxW, minL, maxL,
-            alpha, sym, stop, top)
-        case "repetitionFilter" =>
-          def pcts(key: String, default: List[Long]): Either[String, List[Long]] =
-            map.get(s"transform.repetitionFilter.$key") match {
-              case None => Right(default)
-              case Some(raw) =>
-                val parts = raw.split(",").map(_.trim).filter(_.nonEmpty)
-                val longs = parts.flatMap(_.toLongOption)
-                if (longs.length != parts.length)
-                  Left(s"transform.repetitionFilter.$key: not a comma list of longs")
-                else Right(longs.toList)
-            }
-          for {
-            text <- map.get("transform.repetitionFilter.textColumn")
-              .toRight("transform.repetitionFilter.textColumn required")
-            top <- pcts("topPcts", List(20L, 18L, 16L))
-            dup <- pcts("dupPcts", List(15L, 14L, 13L, 12L, 11L, 10L))
-          } yield TransformConfig.RepetitionFilter(text, top, dup)
-        case "blocklist" =>
-          for {
-            text <- map.get("transform.blocklist.textColumn")
-              .toRight("transform.blocklist.textColumn required")
-            tp <- map.get("transform.blocklist.termsPath")
-              .toRight("transform.blocklist.termsPath required")
-            mt <- map.getOrElse("transform.blocklist.maxTerms", "0")
-              .toLongOption.toRight("transform.blocklist.maxTerms not a long")
-          } yield TransformConfig.BlocklistFilter(text, tp, mt)
-        case "sessionize" =>
-          for {
-            ts <- map.get("transform.sessionize.tsColumn")
-              .toRight("transform.sessionize.tsColumn required")
-            gap <- map.get("transform.sessionize.gap")
-              .toRight("transform.sessionize.gap required")
-          } yield TransformConfig.SessionizeStage(
-            list("transform.sessionize.keys"), ts, gap,
-            list("transform.sessionize.tieBreak"))
-        case "funnel" =>
-          for {
-            key <- map.get("transform.funnel.keyColumn")
-              .toRight("transform.funnel.keyColumn required")
-            ts <- map.get("transform.funnel.tsColumn")
-              .toRight("transform.funnel.tsColumn required")
-            typ <- map.get("transform.funnel.typeColumn")
-              .toRight("transform.funnel.typeColumn required")
-          } yield TransformConfig.FunnelStage(key, ts, typ,
-            list("transform.funnel.steps"))
-        case "retention" =>
-          for {
-            key <- map.get("transform.retention.keyColumn")
-              .toRight("transform.retention.keyColumn required")
-            ts <- map.get("transform.retention.tsColumn")
-              .toRight("transform.retention.tsColumn required")
-            bd <- map.getOrElse("transform.retention.bucketDays", "7")
-              .toIntOption.toRight("transform.retention.bucketDays not an int")
-          } yield TransformConfig.RetentionStage(key, ts, bd)
-        case "scd2History" =>
-          for {
-            key <- map.get("transform.scd2History.keyColumn")
-              .toRight("transform.scd2History.keyColumn required")
-            ts <- map.get("transform.scd2History.tsColumn")
-              .toRight("transform.scd2History.tsColumn required")
-            op <- map.get("transform.scd2History.opColumn")
-              .toRight("transform.scd2History.opColumn required")
-          } yield TransformConfig.Scd2HistoryStage(key, ts, op,
-            map.getOrElse("transform.scd2History.upsertOp", "upsert"),
-            map.getOrElse("transform.scd2History.deleteOp", "delete"),
-            list("transform.scd2History.valueColumns"),
-            list("transform.scd2History.tieBreak"))
-        case "pitEnrich" =>
-          for {
-            hp <- map.get("transform.pitEnrich.historyPath")
-              .toRight("transform.pitEnrich.historyPath required")
-            key <- map.get("transform.pitEnrich.keyColumn")
-              .toRight("transform.pitEnrich.keyColumn required")
-            ts <- map.get("transform.pitEnrich.tsColumn")
-              .toRight("transform.pitEnrich.tsColumn required")
-          } yield TransformConfig.PitEnrichStage(hp, key, ts,
-            list("transform.pitEnrich.valueColumns"))
-        case "mergeSnapshot" =>
-          for {
-            sp <- map.get("transform.mergeSnapshot.snapshotPath")
-              .toRight("transform.mergeSnapshot.snapshotPath required")
-            ds <- map.getOrElse("transform.mergeSnapshot.deleteStale", "false")
-              .toBooleanOption.toRight("transform.mergeSnapshot.deleteStale not a boolean")
-          } yield TransformConfig.MergeSnapshotStage(sp,
-            list("transform.mergeSnapshot.keys"), ds)
-        case "phashDedup" =>
-          for {
-            id <- map.get("transform.phashDedup.idColumn")
-              .toRight("transform.phashDedup.idColumn required")
-            pay <- map.get("transform.phashDedup.payloadColumn")
-              .toRight("transform.phashDedup.payloadColumn required")
-            md <- map.getOrElse("transform.phashDedup.maxDist", "8")
-              .toIntOption.toRight("transform.phashDedup.maxDist not an int")
-            ln <- map.getOrElse("transform.phashDedup.lenient", "false")
-              .toBooleanOption.toRight("transform.phashDedup.lenient not a boolean")
-          } yield TransformConfig.PhashDedupStage(id, pay,
-            map.getOrElse("transform.phashDedup.decoder", "stub"), md, ln)
-        case "scd2Append" =>
-          for {
-            hp <- map.get("transform.scd2Append.historyPath")
-              .toRight("transform.scd2Append.historyPath required")
-            key <- map.get("transform.scd2Append.keyColumn")
-              .toRight("transform.scd2Append.keyColumn required")
-            ts <- map.get("transform.scd2Append.tsColumn")
-              .toRight("transform.scd2Append.tsColumn required")
-            op <- map.get("transform.scd2Append.opColumn")
-              .toRight("transform.scd2Append.opColumn required")
-          } yield TransformConfig.Scd2AppendStage(hp, key, ts, op,
-            map.getOrElse("transform.scd2Append.upsertOp", "upsert"),
-            map.getOrElse("transform.scd2Append.deleteOp", "delete"),
-            list("transform.scd2Append.valueColumns"),
-            list("transform.scd2Append.tieBreak"))
-        case "constraintGate" =>
-          for {
-            minR <- map.getOrElse("transform.constraintGate.minRows", "0")
-              .toLongOption.toRight("transform.constraintGate.minRows not a long")
-            maxR <- map.getOrElse("transform.constraintGate.maxRows",
-              Long.MaxValue.toString)
-              .toLongOption.toRight("transform.constraintGate.maxRows not a long")
-          } yield TransformConfig.ConstraintGateStage(
-            list("transform.constraintGate.notNull"),
-            list("transform.constraintGate.uniqueKey"), minR, maxR,
-            map.getOrElse("transform.constraintGate.fkColumn", ""),
-            map.getOrElse("transform.constraintGate.fkRefPath", ""),
-            map.getOrElse("transform.constraintGate.fkRefColumn", ""))
-        case "seqPack" =>
-          for {
-            id <- map.get("transform.seqPack.idColumn")
-              .toRight("transform.seqPack.idColumn required")
-            text <- map.get("transform.seqPack.textColumn")
-              .toRight("transform.seqPack.textColumn required")
-            bu <- map.getOrElse("transform.seqPack.budget", "2048")
-              .toLongOption.toRight("transform.seqPack.budget not a long")
-            sw <- map.getOrElse("transform.seqPack.shardWidth", "100000")
-              .toLongOption.toRight("transform.seqPack.shardWidth not a long")
-          } yield TransformConfig.SeqPack(id, text, bu, sw)
-        case "resampleByWeight" =>
-          for {
-            key <- map.get("transform.resampleByWeight.keyColumn")
-              .toRight("transform.resampleByWeight.keyColumn required")
-            rate <- map.get("transform.resampleByWeight.rateColumn")
-              .toRight("transform.resampleByWeight.rateColumn required")
-            denom <- map.getOrElse("transform.resampleByWeight.denom", "1000000")
-              .toIntOption.toRight("transform.resampleByWeight.denom not an int")
-          } yield TransformConfig.ResampleStage(key, rate, denom)
-        case "lshDedup" =>
-          for {
-            ip <- map.get("transform.lshDedup.indexPath")
-              .toRight("transform.lshDedup.indexPath required")
-            id <- map.get("transform.lshDedup.idColumn")
-              .toRight("transform.lshDedup.idColumn required")
-            text <- map.get("transform.lshDedup.textColumn")
-              .toRight("transform.lshDedup.textColumn required")
-            tn <- map.getOrElse("transform.lshDedup.thresholdNum", "9")
-              .toIntOption.toRight("transform.lshDedup.thresholdNum not an int")
-            td <- map.getOrElse("transform.lshDedup.thresholdDenom", "10")
-              .toIntOption.toRight("transform.lshDedup.thresholdDenom not an int")
-            mb <- map.getOrElse("transform.lshDedup.minBands", "4")
-              .toIntOption.toRight("transform.lshDedup.minBands not an int")
-            mh <- map.getOrElse("transform.lshDedup.minMatchingHashes", "46")
-              .toIntOption.toRight("transform.lshDedup.minMatchingHashes not an int")
-            adv <- map.getOrElse("transform.lshDedup.advance", "false")
-              .toBooleanOption.toRight("transform.lshDedup.advance not a boolean")
-            mpk <- map.getOrElse("transform.lshDedup.maxPruneKeys", "2000000")
-              .toIntOption.toRight("transform.lshDedup.maxPruneKeys not an int")
-            mpb <- map.getOrElse("transform.lshDedup.minPruneBytes", "0")
-              .toLongOption.toRight("transform.lshDedup.minPruneBytes not a long")
-          } yield TransformConfig.LshDedupStage(ip, id, text, tn, td, mb, mh, adv,
-            mpk, mpb)
-        case "annSearch" =>
-          for {
-            root <- map.get("transform.annSearch.indexRoot")
-              .toRight("transform.annSearch.indexRoot required")
-            id <- map.get("transform.annSearch.idColumn")
-              .toRight("transform.annSearch.idColumn required")
-            vec <- map.get("transform.annSearch.vecColumn")
-              .toRight("transform.annSearch.vecColumn required")
-            k <- map.getOrElse("transform.annSearch.k", "10")
-              .toIntOption.toRight("transform.annSearch.k not an int")
-            np <- map.getOrElse("transform.annSearch.nProbe", "4")
-              .toIntOption.toRight("transform.annSearch.nProbe not an int")
-            ver <- map.getOrElse("transform.annSearch.versioned", "false")
-              .toBooleanOption.toRight("transform.annSearch.versioned not a boolean")
-            kc <- map.get("transform.annSearch.rerankKCand") match {
-              case None => Right(None)
-              case Some(v) => v.toIntOption.map(Some(_))
-                .toRight("transform.annSearch.rerankKCand not an int")
-            }
-          } yield TransformConfig.AnnSearchStage(root, id, vec, k, np, ver,
-            map.get("transform.annSearch.filterPath"),
-            map.get("transform.annSearch.filterColumn"),
-            map.get("transform.annSearch.rerankPath"), kc)
-        case "annIngest" =>
-          for {
-            root <- map.get("transform.annIngest.indexRoot")
-              .toRight("transform.annIngest.indexRoot required")
-            id <- map.get("transform.annIngest.idColumn")
-              .toRight("transform.annIngest.idColumn required")
-            vec <- map.get("transform.annIngest.vecColumn")
-              .toRight("transform.annIngest.vecColumn required")
-            tag <- map.get("transform.annIngest.tag")
-              .toRight("transform.annIngest.tag required")
-          } yield TransformConfig.AnnIngestStage(root, id, vec, tag)
-        case "forget" =>
-          for {
-            store <- map.get("transform.forget.store")
-              .toRight("transform.forget.store required " +
-                s"(${TransformConfig.ForgetStage.Stores.mkString("|")})")
-            root <- map.get("transform.forget.root")
-              .toRight("transform.forget.root required")
-            id <- map.get("transform.forget.idColumn")
-              .toRight("transform.forget.idColumn required")
-          } yield TransformConfig.ForgetStage(store, root, id)
-        case "rfm" =>
-          for {
-            key <- map.get("transform.rfm.keyColumn")
-              .toRight("transform.rfm.keyColumn required")
-            ts <- map.get("transform.rfm.tsColumn")
-              .toRight("transform.rfm.tsColumn required")
-            value <- map.get("transform.rfm.valueColumn")
-              .toRight("transform.rfm.valueColumn required")
-            asOf <- map.get("transform.rfm.asOf")
-              .toRight("transform.rfm.asOf required (ISO date)")
-            buckets <- map.getOrElse("transform.rfm.buckets", "5")
-              .toIntOption.toRight("transform.rfm.buckets not an int")
-          } yield TransformConfig.RfmStage(key, ts, value, asOf, buckets)
-        case "transitionMatrix" =>
-          for {
-            key <- map.get("transform.transitionMatrix.keyColumn")
-              .toRight("transform.transitionMatrix.keyColumn required")
-            ts <- map.get("transform.transitionMatrix.tsColumn")
-              .toRight("transform.transitionMatrix.tsColumn required")
-            tpe <- map.get("transform.transitionMatrix.typeColumn")
-              .toRight("transform.transitionMatrix.typeColumn required")
-          } yield TransformConfig.TransitionMatrixStage(key, ts, tpe,
-            list("transform.transitionMatrix.tieBreak"))
-        case "attribution" =>
-          for {
-            key <- map.get("transform.attribution.keyColumn")
-              .toRight("transform.attribution.keyColumn required")
-            ts <- map.get("transform.attribution.tsColumn")
-              .toRight("transform.attribution.tsColumn required")
-            tpe <- map.get("transform.attribution.typeColumn")
-              .toRight("transform.attribution.typeColumn required")
-            conv <- map.get("transform.attribution.conversionType")
-              .toRight("transform.attribution.conversionType required")
-          } yield TransformConfig.AttributionStage(key, ts, tpe, conv,
-            list("transform.attribution.touchTypes"),
-            list("transform.attribution.tieBreak"))
-        case "anomaly" =>
-          for {
-            value <- map.get("transform.anomaly.valueColumn")
-              .toRight("transform.anomaly.valueColumn required")
-            window <- map.getOrElse("transform.anomaly.window", "20")
-              .toIntOption.toRight("transform.anomaly.window not an int")
-            minPoints <- map.getOrElse("transform.anomaly.minPoints", "8")
-              .toIntOption.toRight("transform.anomaly.minPoints not an int")
-            z <- map.getOrElse("transform.anomaly.z", "3")
-              .toIntOption.toRight("transform.anomaly.z not an int")
-            maxAbs <- map.get("transform.anomaly.maxAbsValue")
-              .toRight("transform.anomaly.maxAbsValue required (the 64-bit " +
-                "overflow contract needs the caller's |value| bound)")
-              .flatMap(_.toLongOption.toRight("transform.anomaly.maxAbsValue not a long"))
-          } yield TransformConfig.AnomalyStage(
-            list("transform.anomaly.keyColumns"),
-            list("transform.anomaly.orderColumns"),
-            value, window, minPoints, z, maxAbs)
-        case "winsorize" =>
-          for {
-            value <- map.get("transform.winsorize.valueColumn")
-              .toRight("transform.winsorize.valueColumn required")
-            out <- map.get("transform.winsorize.outColumn")
-              .toRight("transform.winsorize.outColumn required")
-            pct <- map.getOrElse("transform.winsorize.pct", "5")
-              .toIntOption.toRight("transform.winsorize.pct not an int")
-          } yield TransformConfig.WinsorizeStage(
-            list("transform.winsorize.groupColumns"), value, pct, out,
-            map.getOrElse("transform.winsorize.tier", "exact"))
-        case "intervalJoin" =>
-          for {
-            rp <- map.get("transform.intervalJoin.rightPath")
-              .toRight("transform.intervalJoin.rightPath required")
-            lLo <- map.get("transform.intervalJoin.leftLo")
-              .toRight("transform.intervalJoin.leftLo required")
-            lHi <- map.get("transform.intervalJoin.leftHi")
-              .toRight("transform.intervalJoin.leftHi required")
-            rLo <- map.get("transform.intervalJoin.rightLo")
-              .toRight("transform.intervalJoin.rightLo required")
-            rHi <- map.get("transform.intervalJoin.rightHi")
-              .toRight("transform.intervalJoin.rightHi required")
-            bw <- map.getOrElse("transform.intervalJoin.bandWidth", "0")
-              .toDoubleOption.toRight("transform.intervalJoin.bandWidth not a double")
-            keys <- list("transform.intervalJoin.keys").foldRight(
-              Right(Nil): Either[String, List[(String, String)]]) { (p, acc) =>
-              acc.flatMap { rest =>
-                p.split("=") match {
-                  case Array(a, b) if a.trim.nonEmpty && b.trim.nonEmpty =>
-                    Right((a.trim, b.trim) :: rest)
-                  case _ => Left(
-                    s"transform.intervalJoin.keys entry '$p' is not left=right")
-                }
-              }
-            }
-          } yield TransformConfig.IntervalJoinStage(rp, lLo, lHi, rLo, rHi, keys, bw)
-        case "components" =>
-          for {
-            src <- map.get("transform.components.srcColumn")
-              .toRight("transform.components.srcColumn required")
-            dst <- map.get("transform.components.dstColumn")
-              .toRight("transform.components.dstColumn required")
-            mi <- map.getOrElse("transform.components.maxIters", "10")
-              .toIntOption.toRight("transform.components.maxIters not an int")
-          } yield TransformConfig.ComponentsStage(src, dst, mi)
-        case "triangles" =>
-          for {
-            src <- map.get("transform.triangles.srcColumn")
-              .toRight("transform.triangles.srcColumn required")
-            dst <- map.get("transform.triangles.dstColumn")
-              .toRight("transform.triangles.dstColumn required")
-          } yield TransformConfig.TrianglesStage(src, dst)
-        case "reachable" =>
-          for {
-            src <- map.get("transform.reachable.srcColumn")
-              .toRight("transform.reachable.srcColumn required")
-            dst <- map.get("transform.reachable.dstColumn")
-              .toRight("transform.reachable.dstColumn required")
-            rp <- map.get("transform.reachable.rootsPath")
-              .toRight("transform.reachable.rootsPath required")
-            rc <- map.get("transform.reachable.rootColumn")
-              .toRight("transform.reachable.rootColumn required")
-            md <- map.getOrElse("transform.reachable.maxDepth", "3")
-              .toIntOption.toRight("transform.reachable.maxDepth not an int")
-          } yield TransformConfig.ReachableStage(src, dst, rp, rc, md)
-        case "bitemporal" =>
-          for {
-            key <- map.get("transform.bitemporal.keyColumn")
-              .toRight("transform.bitemporal.keyColumn required")
-            vts <- map.get("transform.bitemporal.validTsColumn")
-              .toRight("transform.bitemporal.validTsColumn required")
-            tts <- map.get("transform.bitemporal.txTsColumn")
-              .toRight("transform.bitemporal.txTsColumn required")
-            op <- map.get("transform.bitemporal.opColumn")
-              .toRight("transform.bitemporal.opColumn required")
-            va <- map.get("transform.bitemporal.validAt")
-              .toRight("transform.bitemporal.validAt required")
-            ta <- map.get("transform.bitemporal.txAt")
-              .toRight("transform.bitemporal.txAt required")
-          } yield TransformConfig.BitemporalStage(key, vts, tts, op,
-            map.getOrElse("transform.bitemporal.upsertOp", "upsert"),
-            map.getOrElse("transform.bitemporal.deleteOp", "delete"),
-            list("transform.bitemporal.valueColumns"), va, ta,
-            list("transform.bitemporal.tieBreak"))
-        case "linkExtract" =>
-          for {
-            html <- map.get("transform.linkExtract.htmlColumn")
-              .toRight("transform.linkExtract.htmlColumn required")
-            href <- map.get("transform.linkExtract.hrefColumn")
-              .toRight("transform.linkExtract.hrefColumn required")
-          } yield TransformConfig.LinkExtract(html, href)
-        case "lexSearch" =>
-          for {
-            root <- map.get("transform.lexSearch.indexRoot")
-              .toRight("transform.lexSearch.indexRoot required")
-            qid <- map.get("transform.lexSearch.queryIdColumn")
-              .toRight("transform.lexSearch.queryIdColumn required")
-            term <- map.get("transform.lexSearch.termColumn")
-              .toRight("transform.lexSearch.termColumn required")
-            k <- map.getOrElse("transform.lexSearch.k", "10")
-              .toIntOption.toRight("transform.lexSearch.k not an int")
-          } yield TransformConfig.LexSearchStage(root, qid, term, k)
-        case "rrfFuse" =>
-          for {
-            other <- map.get("transform.rrfFuse.otherPath")
-              .toRight("transform.rrfFuse.otherPath required")
-            qid <- map.get("transform.rrfFuse.queryIdColumn")
-              .toRight("transform.rrfFuse.queryIdColumn required")
-            id <- map.get("transform.rrfFuse.idColumn")
-              .toRight("transform.rrfFuse.idColumn required")
-            rank = map.getOrElse("transform.rrfFuse.rankColumn", "rank")
-            k <- map.getOrElse("transform.rrfFuse.k", "10")
-              .toIntOption.toRight("transform.rrfFuse.k not an int")
-            kRrf <- map.getOrElse("transform.rrfFuse.kRrf", "60")
-              .toIntOption.toRight("transform.rrfFuse.kRrf not an int")
-          } yield TransformConfig.RrfFuseStage(other, qid, id, rank, k, kRrf)
-        case "graphEpoch" =>
-          for {
-            root <- map.get("transform.graphEpoch.root")
-              .toRight("transform.graphEpoch.root required")
-            src <- map.get("transform.graphEpoch.srcColumn")
-              .toRight("transform.graphEpoch.srcColumn required")
-            dst <- map.get("transform.graphEpoch.dstColumn")
-              .toRight("transform.graphEpoch.dstColumn required")
-            tag <- map.get("transform.graphEpoch.tag")
-              .toRight("transform.graphEpoch.tag required")
-          } yield TransformConfig.GraphEpochStage(root, src, dst, tag)
-        case "pageRank" =>
-          def num(key: String, default: Int): Either[String, Int] =
-            map.getOrElse(s"transform.pageRank.$key", default.toString)
-              .toIntOption.toRight(s"transform.pageRank.$key not an int")
-          for {
-            src <- map.get("transform.pageRank.srcColumn")
-              .toRight("transform.pageRank.srcColumn required")
-            dst <- map.get("transform.pageRank.dstColumn")
-              .toRight("transform.pageRank.dstColumn required")
-            it <- num("iters", 3)
-            dp <- num("dampingPct", 85)
-            dg <- map.getOrElse("transform.pageRank.dangling", "false")
-              .toBooleanOption
-              .toRight("transform.pageRank.dangling not a boolean")
-          } yield TransformConfig.PageRankStage(src, dst, it, dp, dg,
-            seedsPath = map.getOrElse("transform.pageRank.seedsPath", ""),
-            seedColumn = map.getOrElse("transform.pageRank.seedColumn", "id"))
-        case "hits" =>
-          for {
-            src <- map.get("transform.hits.srcColumn")
-              .toRight("transform.hits.srcColumn required")
-            dst <- map.get("transform.hits.dstColumn")
-              .toRight("transform.hits.dstColumn required")
-            it <- map.getOrElse("transform.hits.iters", "2")
-              .toIntOption.toRight("transform.hits.iters not an int")
-          } yield TransformConfig.HitsStage(src, dst, it)
-        case "mmrRerank" =>
-          for {
-            qid <- map.get("transform.mmrRerank.queryIdColumn")
-              .toRight("transform.mmrRerank.queryIdColumn required")
-            id <- map.get("transform.mmrRerank.idColumn")
-              .toRight("transform.mmrRerank.idColumn required")
-            score <- map.get("transform.mmrRerank.scoreColumn")
-              .toRight("transform.mmrRerank.scoreColumn required")
-            vec <- map.get("transform.mmrRerank.vecColumn")
-              .toRight("transform.mmrRerank.vecColumn required")
-            k <- map.getOrElse("transform.mmrRerank.k", "10")
-              .toIntOption.toRight("transform.mmrRerank.k not an int")
-            lam <- map.getOrElse("transform.mmrRerank.lambdaPct", "70")
-              .toIntOption.toRight("transform.mmrRerank.lambdaPct not an int")
-          } yield TransformConfig.MmrStage(qid, id, score, vec, k, lam)
-        case "evalRanking" =>
-          for {
-            tp <- map.get("transform.evalRanking.truthPath")
-              .toRight("transform.evalRanking.truthPath required")
-            qid <- map.get("transform.evalRanking.queryIdColumn")
-              .toRight("transform.evalRanking.queryIdColumn required")
-            id <- map.get("transform.evalRanking.idColumn")
-              .toRight("transform.evalRanking.idColumn required")
-            rank = map.getOrElse("transform.evalRanking.rankColumn", "rank")
-            k <- map.getOrElse("transform.evalRanking.k", "10")
-              .toIntOption.toRight("transform.evalRanking.k not an int")
-          } yield TransformConfig.EvalRankingStage(tp, qid, id, rank, k,
-            map.get("transform.evalRanking.relColumn"))
-        case "htmlExtract" =>
-          map.get("transform.htmlExtract.textColumn")
-            .toRight("transform.htmlExtract.textColumn required")
-            .map(TransformConfig.HtmlExtract(_))
-        case "urlCanon" =>
-          map.get("transform.urlCanon.urlColumn")
-            .toRight("transform.urlCanon.urlColumn required")
-            .map(u => TransformConfig.UrlCanon(u,
-              map.get("transform.urlCanon.hostColumn"),
-              map.get("transform.urlCanon.domainColumn"),
-              map.get("transform.urlCanon.trackedParams")
-                .map(_.split(",").map(_.trim).filter(_.nonEmpty).toList)))
-        case "lineDedup" =>
-          def num(key: String, default: Int): Either[String, Int] =
-            map.getOrElse(s"transform.lineDedup.$key", default.toString)
-              .toIntOption.toRight(s"transform.lineDedup.$key not an int")
-          for {
-            id <- map.get("transform.lineDedup.idColumn")
-              .toRight("transform.lineDedup.idColumn required")
-            text <- map.get("transform.lineDedup.textColumn")
-              .toRight("transform.lineDedup.textColumn required")
-            minDup <- num("minDupCount", 2)
-            minChars <- num("minLineChars", 2)
-            segWords <- num("segmentWords", 0)
-            adv <- map.getOrElse("transform.lineDedup.advance", "false")
-              .toBooleanOption
-              .toRight("transform.lineDedup.advance not a boolean")
-            census = map.get("transform.lineDedup.censusDir")
-            // the census pins eligibility in its own sidecar; accepting
-            // an explicit minLineChars alongside it would be a silently
-            // ignored knob — the failure shape the NearDupStore banding
-            // check exists for
-            _ <- if (census.isDefined &&
-                map.contains("transform.lineDedup.minLineChars"))
-              Left("transform.lineDedup.minLineChars is pinned by the " +
-                "census sidecar — remove it when censusDir is set")
-            else Right(())
-          } yield TransformConfig.LineDedup(id, text, minDup, minChars, segWords,
-            census, adv, map.get("transform.lineDedup.advanceTag"))
-        case "lineFilter" =>
-          def num(key: String, default: Int): Either[String, Int] =
-            map.getOrElse(s"transform.lineFilter.$key", default.toString)
-              .toIntOption.toRight(s"transform.lineFilter.$key not an int")
-          for {
-            id <- map.get("transform.lineFilter.idColumn")
-              .toRight("transform.lineFilter.idColumn required")
-            text <- map.get("transform.lineFilter.textColumn")
-              .toRight("transform.lineFilter.textColumn required")
-            minTok <- map.get("transform.lineFilter.minTokens")
-              .toRight("transform.lineFilter.minTokens required")
-              .flatMap(_.toIntOption.toRight("transform.lineFilter.minTokens not an int"))
-            minKept <- num("minKeptLines", 1)
-            segWords <- num("segmentWords", 0)
-          } yield TransformConfig.LineFilter(id, text, minTok,
-            list("transform.lineFilter.anchorWords"), minKept, segWords)
-        case other => Left(s"unknown transform stage: $other")
-      }
-      list("transforms").foldRight(
-        Right(Nil): Either[String, List[TransformConfig]]) { (n, acc) =>
-        acc.flatMap(rest => stage(n).map(_ :: rest))
-      }
-    }
-
+    def typed[A](kind: String, tpe: Option[String], builders: Map[String, Fields => A]) =
+      tpe.flatMap(builders.get)
+        .toRight(s"unsupported $kind.type: ${tpe.getOrElse("<missing>")}")
+        .flatMap(f.section(s"$kind.")(_))
     for {
-      s <- source
-      tg <- target
-      st <- stream
-      ts <- transforms
-      cfg <- PipelineConfig(s, tg, renames, map.get("savepoints.dir"),
-        list("skipFiles").toSet, validation, st, ts).validate
+      _ <- f.result(())
+      source <- typed("source", sourceType, sources)
+      target <- typed("target", targetType, targets).flatten
+      transforms <- transformNames.foldLeft(Right(Nil): Either[String, List[TransformConfig]]) {
+        (acc, n) => for {
+          done <- acc
+          build <- stages.get(n).toRight(s"unknown transform stage: $n")
+          t <- f.section(s"transform.$n.")(build)
+        } yield t :: done
+      }.map(_.reverse)
+      cfg <- PipelineConfig(source, target, renames, savepointsDir, skipFiles,
+        Option.when(f.has("validation.primaryKey"))(validation),
+        Option.when(f.has("stream.changesDir"))(stream), transforms).validate
     } yield cfg
   }
+
+  /** Text sources scan twice to infer a schema, so inference is opt-in. */
+  private def textSchema(f: Fields, kind: String): (Option[String], Boolean) = {
+    val schema = f.opt("schema")
+    val infer = f.bool("inferSchema", false)
+    if (schema.isEmpty && !infer)
+      f.fail(s"$kind source requires source.schema (or source.inferSchema: true " +
+        "— inference scans the data twice, opt in explicitly)")
+    (schema, infer)
+  }
+
+  private val sources: Map[String, Fields => SourceConfig] = Map(
+    ("parquet", { f =>
+      val path = f.req("path")
+      val versioned = f.bool("versioned", false)
+      val versionAt = f.opt("versionAt").map(_.toLongOption.filter(_ > 0) match {
+        case Some(n) =>
+          if (!versioned) f.fail("source.versionAt requires source.versioned: true")
+          n
+        case None => f.fail("source.versionAt must be a positive long"); 0L
+      })
+      SourceConfig.Parquet(path, f.opt("where"), f.optList("columns"), versioned, versionAt,
+        f.bool("mergeSchema", false))
+    }),
+    ("jdbc", f => SourceConfig.Jdbc(f.req("url"), f.req("table"), f.opt("where"),
+      f.opt("partitionColumn"), f.int("numPartitions", 1), f.opt("lowerBound"),
+      f.opt("upperBound"))),
+    ("dynamo-s3-export", f => SourceConfig.DynamoS3Export(f.req("path"))),
+    ("csv", { f =>
+      val path = f.req("path")
+      val (schema, infer) = textSchema(f, "csv")
+      SourceConfig.Csv(path, schema, f.bool("header", true), f.str("delimiter", ","), infer,
+        f.opt("where"), f.optList("columns"))
+    }),
+    ("json", { f =>
+      val path = f.req("path")
+      val (schema, infer) = textSchema(f, "json")
+      SourceConfig.Json(path, schema, infer, f.opt("where"), f.optList("columns"))
+    }),
+    ("orc", f => SourceConfig.Orc(f.req("path"), f.opt("where"), f.optList("columns"))))
+
+  private val targets: Map[String, Fields => Either[String, TargetConfig]] = Map(
+    ("parquet", f => TargetConfig.Parquet(f.req("path"), f.str("mode", "errorifexists"),
+      f.str("compression", "snappy"), f.list("partitionBy"), f.list("sortBy"),
+      f.long("maxRecordsPerFile", 0L), f.list("globalSortBy"), f.list("statsIndex"),
+      f.bool("versioned", false), f.list("zorderBy"), f.int("zorderFiles", 0),
+      f.long("compactTargetBytes", 0L)).validate),
+    ("dynamo-s3-export", f => Right(TargetConfig.DynamoS3Export(f.req("path")))),
+    ("tar-shards", f => TargetConfig.TarShards(f.req("path"), f.req("keyColumn"),
+      f.req("payloadColumn"), f.long("maxShardBytes", 128L * 1024 * 1024),
+      f.int("numShards", 32), f.str("suffix", ".bin")).validate),
+    ("csv", f => Right(TargetConfig.Csv(f.req("path"), f.str("mode", "errorifexists"),
+      f.bool("header", true), f.str("delimiter", ","), f.str("compression", "none")))),
+    ("json", f => Right(TargetConfig.Json(f.req("path"), f.str("mode", "errorifexists"),
+      f.str("compression", "none")))),
+    ("orc", f => TargetConfig.Orc(f.req("path"), f.str("mode", "errorifexists"),
+      f.str("compression", "snappy")).validate))
+
+  import TransformConfig._
+
+  /** One builder per transform stage, reading `transform.<name>.*`. */
+  private val stages: Map[String, Fields => TransformConfig] = Map(
+    ("dedupExact", f => DedupExact(f.req("idColumn"), f.req("textColumn"))),
+    ("sourceCap", f => SourceCap(f.list("groupColumns"), f.req("idColumn"),
+      f.req("textColumn"), f.reqInt("k"))),
+    ("split", f => Split(f.req("keyColumn"),
+      f.pairs("fractions")(e => s"malformed split fraction (want name=int): $e"),
+      f.int("denom", 100))),
+    ("normalize", f => Normalize(f.req("textColumn"))),
+    ("spanDedup", f => SpanDedup(f.req("idColumn"), f.req("textColumn"),
+      f.int("spanTokens", 3), f.int("minDocs", 2), f.bool("keepFirst", false))),
+    ("dupSpanCut", f => DupSpanCut(f.req("idColumn"), f.req("textColumn"),
+      f.int("gramTokens", 8), f.long("minCount", 2L))),
+    ("minhashDedup", f => MinhashDedup(f.req("idColumn"), f.req("textColumn"),
+      f.int("shingleSize", 3), f.int("numHashes", 64), f.int("bands", 16),
+      f.int("rowsPerBand", 4), f.int("thresholdNum", 9), f.int("thresholdDenom", 10),
+      f.bool("keepLongest", false))),
+    ("semanticDedup", f => SemanticDedup(f.req("idColumn"), f.req("vecColumn"),
+      f.int("numPlanes", 80), f.int("bandBits", 4), f.double("threshold", 0.9),
+      f.long("seed", 42L))),
+    ("decontaminate", f => Decontaminate(f.req("idColumn"), f.req("textColumn"),
+      f.req("referencePath"), f.int("ngram", 8), f.long("minShared", 1L))),
+    ("semanticDecontaminate", f => SemanticDecontaminate(f.req("vecColumn"),
+      f.req("referencePath"), f.reqLong("minDot"))),
+    ("piiScrub", f => PiiScrub(f.req("textColumn"))),
+    ("dsirFilter", { f =>
+      val (id, text) = (f.req("idColumn"), f.req("textColumn"))
+      DsirFilter(id, text, f.req("targetPath"), f.str("targetTextColumn", text),
+        f.int("buckets", 64), f.int("keepNum", 1), f.int("keepDenom", 2))
+    }),
+    ("pplFilter", f => PplFilter(f.req("idColumn"), f.req("textColumn"),
+      f.req("langColumn"), f.int("buckets", 3), f.longs("keep", Nil),
+      f.bool("approx", true))),
+    ("tokenBudget", f => TokenBudget(f.req("groupColumn"), f.req("keyColumn"),
+      f.req("tokenColumn"), f.reqLong("budget"), f.int("shards", 256))),
+    ("incrDedup", { f =>
+      val (id, text) = (f.req("idColumn"), f.req("textColumn"))
+      IncrDedup(id, text, f.req("referencePath"), f.str("referenceTextColumn", text))
+    }),
+    ("mixToTarget", f => MixToTarget(f.req("keyColumn"), f.req("groupColumn"),
+      f.pairs("weights")(e => s"malformed mixToTarget weight (want group=int): $e"),
+      f.int("wDenom", 100))),
+    ("outlierFilter", f => OutlierFilter(f.req("valueColumn"), f.req("groupColumn"),
+      f.double("z", 3.0))),
+    ("qualityFilter", f => QualityFilter(f.req("textColumn"), f.reqLong("minScore"),
+      f.long("bias", 0L), f.long("wStop", 4L), f.long("wPunct", -2L),
+      f.long("wDigit", -3L), f.long("wTokLen", 1L))),
+    ("gopherFilter", f => GopherFilter(f.req("textColumn"), f.long("minWords", 50L),
+      f.long("maxWords", 100000L), f.long("minMeanLen", 3L), f.long("maxMeanLen", 10L),
+      f.long("minAlphaPct", 80L), f.long("maxSymbolPct", 10L), f.long("minStopHits", 2L),
+      f.long("maxTopTokenPct", 20L))),
+    ("repetitionFilter", f => RepetitionFilter(f.req("textColumn"),
+      f.longs("topPcts", List(20L, 18L, 16L)),
+      f.longs("dupPcts", List(15L, 14L, 13L, 12L, 11L, 10L)))),
+    ("blocklist", f => BlocklistFilter(f.req("textColumn"), f.req("termsPath"),
+      f.long("maxTerms", 0L))),
+    ("sessionize", f => SessionizeStage(f.list("keys"), f.req("tsColumn"), f.req("gap"),
+      f.list("tieBreak"))),
+    ("funnel", f => FunnelStage(f.req("keyColumn"), f.req("tsColumn"), f.req("typeColumn"),
+      f.list("steps"))),
+    ("retention", f => RetentionStage(f.req("keyColumn"), f.req("tsColumn"),
+      f.int("bucketDays", 7))),
+    ("scd2History", f => Scd2HistoryStage(f.req("keyColumn"), f.req("tsColumn"),
+      f.req("opColumn"), f.str("upsertOp", "upsert"), f.str("deleteOp", "delete"),
+      f.list("valueColumns"), f.list("tieBreak"))),
+    ("pitEnrich", f => PitEnrichStage(f.req("historyPath"), f.req("keyColumn"),
+      f.req("tsColumn"), f.list("valueColumns"))),
+    ("mergeSnapshot", f => MergeSnapshotStage(f.req("snapshotPath"), f.list("keys"),
+      f.bool("deleteStale", false))),
+    ("phashDedup", f => PhashDedupStage(f.req("idColumn"), f.req("payloadColumn"),
+      f.str("decoder", "stub"), f.int("maxDist", 8), f.bool("lenient", false))),
+    ("scd2Append", f => Scd2AppendStage(f.req("historyPath"), f.req("keyColumn"),
+      f.req("tsColumn"), f.req("opColumn"), f.str("upsertOp", "upsert"),
+      f.str("deleteOp", "delete"), f.list("valueColumns"), f.list("tieBreak"))),
+    ("constraintGate", f => ConstraintGateStage(f.list("notNull"), f.list("uniqueKey"),
+      f.long("minRows", 0L), f.long("maxRows", Long.MaxValue), f.str("fkColumn", ""),
+      f.str("fkRefPath", ""), f.str("fkRefColumn", ""))),
+    ("seqPack", f => SeqPack(f.req("idColumn"), f.req("textColumn"),
+      f.long("budget", 2048L), f.long("shardWidth", 100000L))),
+    ("resampleByWeight", f => ResampleStage(f.req("keyColumn"), f.req("rateColumn"),
+      f.int("denom", 1000000))),
+    ("lshDedup", f => LshDedupStage(f.req("indexPath"), f.req("idColumn"),
+      f.req("textColumn"), f.int("thresholdNum", 9), f.int("thresholdDenom", 10),
+      f.int("minBands", 4), f.int("minMatchingHashes", 46), f.bool("advance", false),
+      f.int("maxPruneKeys", 2000000), f.long("minPruneBytes", 0L))),
+    ("annSearch", f => AnnSearchStage(f.req("indexRoot"), f.req("idColumn"),
+      f.req("vecColumn"), f.int("k", 10), f.int("nProbe", 4), f.bool("versioned", false),
+      f.opt("filterPath"), f.opt("filterColumn"), f.opt("rerankPath"),
+      f.optInt("rerankKCand"))),
+    ("annIngest", f => AnnIngestStage(f.req("indexRoot"), f.req("idColumn"),
+      f.req("vecColumn"), f.req("tag"))),
+    ("forget", f => ForgetStage(f.req("store", s" (${ForgetStage.Stores.mkString("|")})"),
+      f.req("root"), f.req("idColumn"))),
+    ("rfm", f => RfmStage(f.req("keyColumn"), f.req("tsColumn"), f.req("valueColumn"),
+      f.req("asOf", " (ISO date)"), f.int("buckets", 5))),
+    ("transitionMatrix", f => TransitionMatrixStage(f.req("keyColumn"), f.req("tsColumn"),
+      f.req("typeColumn"), f.list("tieBreak"))),
+    ("attribution", f => AttributionStage(f.req("keyColumn"), f.req("tsColumn"),
+      f.req("typeColumn"), f.req("conversionType"), f.list("touchTypes"),
+      f.list("tieBreak"))),
+    ("anomaly", f => AnomalyStage(f.list("keyColumns"), f.list("orderColumns"),
+      f.req("valueColumn"), f.int("window", 20), f.int("minPoints", 8), f.int("z", 3),
+      f.reqLong("maxAbsValue",
+        " (the 64-bit overflow contract needs the caller's |value| bound)"))),
+    ("winsorize", { f =>
+      val (value, out) = (f.req("valueColumn"), f.req("outColumn"))
+      WinsorizeStage(f.list("groupColumns"), value, f.int("pct", 5), out,
+        f.str("tier", "exact"))
+    }),
+    ("intervalJoin", f => IntervalJoinStage(f.req("rightPath"), f.req("leftLo"),
+      f.req("leftHi"), f.req("rightLo"), f.req("rightHi"),
+      f.list("keys").flatMap(p => p.split("=") match {
+        case Array(a, b) if a.trim.nonEmpty && b.trim.nonEmpty => Some(a.trim -> b.trim)
+        case _ => f.fail(s"transform.intervalJoin.keys entry '$p' is not left=right"); None
+      }),
+      f.double("bandWidth", 0))),
+    ("components", f => ComponentsStage(f.req("srcColumn"), f.req("dstColumn"),
+      f.int("maxIters", 10))),
+    ("triangles", f => TrianglesStage(f.req("srcColumn"), f.req("dstColumn"))),
+    ("reachable", f => ReachableStage(f.req("srcColumn"), f.req("dstColumn"),
+      f.req("rootsPath"), f.req("rootColumn"), f.int("maxDepth", 3))),
+    ("bitemporal", f => BitemporalStage(f.req("keyColumn"), f.req("validTsColumn"),
+      f.req("txTsColumn"), f.req("opColumn"), f.str("upsertOp", "upsert"),
+      f.str("deleteOp", "delete"), f.list("valueColumns"), f.req("validAt"),
+      f.req("txAt"), f.list("tieBreak"))),
+    ("linkExtract", f => LinkExtract(f.req("htmlColumn"), f.req("hrefColumn"))),
+    ("lexSearch", f => LexSearchStage(f.req("indexRoot"), f.req("queryIdColumn"),
+      f.req("termColumn"), f.int("k", 10))),
+    ("rrfFuse", f => RrfFuseStage(f.req("otherPath"), f.req("queryIdColumn"),
+      f.req("idColumn"), f.str("rankColumn", "rank"), f.int("k", 10), f.int("kRrf", 60))),
+    ("graphEpoch", f => GraphEpochStage(f.req("root"), f.req("srcColumn"),
+      f.req("dstColumn"), f.req("tag"))),
+    ("pageRank", f => PageRankStage(f.req("srcColumn"), f.req("dstColumn"),
+      f.int("iters", 3), f.int("dampingPct", 85), f.bool("dangling", false),
+      f.str("seedsPath", ""), f.str("seedColumn", "id"))),
+    ("hits", f => HitsStage(f.req("srcColumn"), f.req("dstColumn"), f.int("iters", 2))),
+    ("mmrRerank", f => MmrStage(f.req("queryIdColumn"), f.req("idColumn"),
+      f.req("scoreColumn"), f.req("vecColumn"), f.int("k", 10), f.int("lambdaPct", 70))),
+    ("evalRanking", f => EvalRankingStage(f.req("truthPath"), f.req("queryIdColumn"),
+      f.req("idColumn"), f.str("rankColumn", "rank"), f.int("k", 10),
+      f.opt("relColumn"))),
+    ("htmlExtract", f => HtmlExtract(f.req("textColumn"))),
+    ("urlCanon", f => UrlCanon(f.req("urlColumn"), f.opt("hostColumn"),
+      f.opt("domainColumn"), f.optList("trackedParams"))),
+    ("lineDedup", { f =>
+      val stage = LineDedup(f.req("idColumn"), f.req("textColumn"),
+        f.int("minDupCount", 2), f.int("minLineChars", 2), f.int("segmentWords", 0),
+        f.opt("censusDir"), f.bool("advance", false), f.opt("advanceTag"))
+      // the census pins eligibility in its own sidecar; accepting an
+      // explicit minLineChars alongside it would be a silently ignored
+      // knob — the failure shape the NearDupStore banding check exists for
+      if (stage.censusDir.isDefined && f.has("minLineChars"))
+        f.fail("transform.lineDedup.minLineChars is pinned by the " +
+          "census sidecar — remove it when censusDir is set")
+      stage
+    }),
+    ("lineFilter", f => LineFilter(f.req("idColumn"), f.req("textColumn"),
+      f.reqInt("minTokens"), f.list("anchorWords"), f.int("minKeptLines", 1),
+      f.int("segmentWords", 0))))
+
+  /** Every key some builder reads: each builder once over an empty map,
+    * once per JVM.
+    */
+  private[config] lazy val knownKeys: Set[String] = {
+    def keys(prefix: String)(build: Fields => Any): Iterable[String] = {
+      val f = new Fields(Map.empty, prefix)
+      build(f)
+      f.keys
+    }
+    (keys("")(pipeline) ++ sources.values.flatMap(keys("source.")) ++
+      targets.values.flatMap(keys("target.")) ++
+      stages.flatMap { case (n, b) => keys(s"transform.$n.")(b) }).toSet
+  }
+
+  /** Registered section names, for specs that walk every builder. */
+  private[config] def sourceTypes: Set[String] = sources.keySet
+  private[config] def targetTypes: Set[String] = targets.keySet
+  private[config] def stageNames: Set[String] = stages.keySet
 }

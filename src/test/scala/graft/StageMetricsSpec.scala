@@ -148,4 +148,33 @@ class StageMetricsSpec extends AnyFunSuite {
     assert(stats.count() == 1)
     assert(spark.read.parquet(out).count() == result.rowsCopied)
   }
+
+  test("validation reads the full source even when skipFiles names already-copied files") {
+    val base = Files.createTempDirectory("graft-sm8")
+    val src = base.resolve("src").toString
+    (0 until 3).foreach(i =>
+      spark.read.parquet(s"${TestSpark.sf}/nation.parquet")
+        .filter(pmod(col("n_nationkey"), lit(3)) === i).coalesce(1)
+        .write.mode("append").parquet(src))
+    val first = graft.sources.ParquetSource.listParquetFiles(
+      src, spark.sparkContext.hadoopConfiguration).head
+    // an earlier run already copied the first file into the append target
+    val out = base.resolve("out").toString
+    spark.read.parquet(first).write.parquet(out)
+    val c = cfg(
+      s"""source.type: parquet
+         |source.path: $src
+         |target.type: parquet
+         |target.path: $out
+         |target.mode: append
+         |skipFiles: $first
+         |validation.primaryKey: n_nationkey
+         |""".stripMargin)
+    val (result, _) = Pipeline.runWithStageMetrics(spark, c)
+    assert(result.rowsCopied ==
+      spark.read.parquet(src).count() - spark.read.parquet(first).count())
+    val diffs = result.validation.getOrElse(fail("validation block was skipped"))
+      .collect().map(_.getAs[String]("diff_kind"))
+    assert(diffs.isEmpty, s"a correct copy diffed: ${diffs.toSeq}")
+  }
 }
