@@ -3,6 +3,8 @@
 dumps written by graft.Verify plus oracle_sql.json, runs each oracle in
 DuckDB over the same source tables, and compares (rows, schema-ish,
 values) with columns sorted by name and rows sorted canonically.
+Every query named in the run's attempted.txt that left no dump (it threw,
+or the run died first) is a failure: `FAIL <name>: no dump`.
 Usage: localcheck.py <sfDir> <verifyOutDir>
 """
 import json, math, sys
@@ -45,7 +47,12 @@ def main(sf_dir, out_dir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
     failures, passes, skips = [], [], []
-    for name in sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir()):
+    dumps = sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir())
+    attempted = Path(out_dir, "attempted.txt")
+    if attempted.exists():
+        failures += [(name, "no dump") for name in attempted.read_text().split()
+                     if name not in dumps]
+    for name in dumps:
         got = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
         grows, gcols = got.fetchall(), [d[0] for d in got.description]
         # DECIMAL output columns are a driver-compare hazard: the driver

@@ -47,6 +47,59 @@ object SparkEntry {
                  by: String*): DataFrame =
     Tables.loadFanOut(spark, dir, name, by)
 
+  // ------------------------------------------------------------------
+  // gate fixtures
+  // ------------------------------------------------------------------
+
+  /** The rule for what a gate may keep between runs: a fixture may
+    * memoize a store or dataset the gate READS — a derived artifact,
+    * identical on every call, built on the gate's first run — never the
+    * gate's declared query work, which every run pays inside its timed
+    * region (a copy a run mutates, a layout build the gate measures).
+    *
+    * One memo per `<fixture>@<dataset dir>`, holding a lazy cell: the
+    * map's own update only installs the cell and the build runs outside
+    * it, so a build may read another fixture (the hybrid gate reads both
+    * persisted stores) — a build run inside `computeIfAbsent` that
+    * touched the same map would throw `Recursive update`. A failed build
+    * leaves its cell unset, and the next call builds again; a finished
+    * one drops its closure, so the frames the first run built it from
+    * (checkpointed inputs) can be cleaned up.
+    */
+  private final class Cell(private var build: () => Any) {
+    lazy val value: Any = { val v = build(); build = null; v }
+  }
+  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+
+  private def fixture[A](name: String, d: String)(build: => A): A =
+    fixtures.computeIfAbsent(s"$name@$d", _ => new Cell(() => build)).value.asInstanceOf[A]
+
+  /** A fresh path `leaf` under a new temp directory named `prefix…`. */
+  private def scratch(prefix: String, leaf: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve(leaf).toString
+
+  /** A config gate's pipeline config: parquet `src` through `body` (its
+    * transforms and any further keys, `|`-margined) into parquet `out`.
+    */
+  private def cfgOf(src: String, out: String, body: String,
+                    mode: String = "overwrite"): graft.config.PipelineConfig =
+    graft.config.PipelineConfig.parse(
+      s"""source.type: parquet
+         |source.path: $src
+         |target.type: parquet
+         |target.path: $out
+         |target.mode: $mode
+         |""".stripMargin + body.stripMargin)
+      .fold(e => throw new IllegalArgumentException(e), identity)
+
+  /** Run a config gate's pipeline ([[cfgOf]]) into a fresh scratch
+    * target and read the written target back.
+    */
+  private def cfgGate(s: SparkSession, src: String, body: String): DataFrame = {
+    val out = scratch("graft-cfg", "out")
+    graft.Pipeline.run(s, cfgOf(src, out, body)).readTarget(s, out)
+  }
+
   /** Flagship query: revenue-per-nation join+agg on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
     qJoinAgg(spark, "/root/testdata/sf0.001")
@@ -815,20 +868,17 @@ object SparkEntry {
     * the bench sweep; Bench's min-of-N then reads probe-only cost
     * from runs 2+. Probes are read-only, so sharing is safe.
     */
-  private val incrLshIx = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qIncrLsh(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").filter(col("doc_id") < 500)
     val sh = docs.select(col("doc_id"), Dedup.shingles("text", 1).as("sh"))
       .withColumn("sig", Dedup.minHashSignature(col("sh"), numHashes = 64))
       .localCheckpoint()
-    val ix = incrLshIx.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-lshix")
-        .resolve("ix").toString
+    val ix = fixture("incrLshIx", d) {
+      val p = scratch("graft-lshix", "ix")
       Dedup.BandIndex.write(sh.filter(col("doc_id") < 400), "doc_id", "sig",
         bands = 16, rowsPerBand = 4, path = p)
       p
-    })
+    }
     val cands = Dedup.BandIndex.probe(sh.filter(col("doc_id") >= 400),
         "doc_id", "sig", ix, minBands = 4)
       .select(col("id_corpus").as("id_a"), col("id_new").as("id_b"))
@@ -854,55 +904,33 @@ object SparkEntry {
     * shared advanced store would re-drop every survivor as its own
     * duplicate on run 2).
     */
-  private val ndStorePristine =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    val walk = java.nio.file.Files.walk(src)
-    try walk.forEach { p =>
-      val tgt = dst.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(tgt)
-      else {
-        java.nio.file.Files.createDirectories(tgt.getParent)
-        java.nio.file.Files.copy(p, tgt)
-      }
-    } finally walk.close()
-  }
-
   private def qCfgLshDedup(s: SparkSession, d: String): DataFrame = {
-    val (pristine, batchDir) = ndStorePristine.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-ndstore")
-      val store = base.resolve("store").toString
+    val (pristine, batchDir) = fixture("ndStorePristine", d) {
+      val store = scratch("graft-ndstore", "store")
       val docs = t(s, d, "documents")
       Dedup.NearDupStore.create(docs.filter(col("doc_id") < 400),
         "doc_id", "text", store)
-      val batch = base.resolve("batch").toString
+      val batch = scratch("graft-ndstore", "batch")
       docs.filter(col("doc_id") >= 400 && col("doc_id") < 500)
         .write.parquet(batch)
       (store, batch)
-    })
-    val run = java.nio.file.Files.createTempDirectory("graft-ndstore-run")
-    val store = run.resolve("store").toString
-    copyTree(java.nio.file.Paths.get(pristine), run.resolve("store"))
+    }
+    val store = scratch("graft-ndstore-run", "store")
+    val conf = s.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(pristine).getFileSystem(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(pristine),
+      fs, new org.apache.hadoop.fs.Path(store), false, conf)
     // the pristine store's tables may sit in this session's never-
     // expiring file-status cache from a previous run's copy at another
     // path — refresh the COPY's paths before the pipeline reads them
     s.catalog.refreshByPath(store)
-    val out = run.resolve("out").toString
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $batchDir
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: lshDedup
+    cfgGate(s, batchDir,
+      s"""transforms: lshDedup
          |transform.lshDedup.indexPath: $store
          |transform.lshDedup.idColumn: doc_id
          |transform.lshDedup.textColumn: text
          |transform.lshDedup.advance: true
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out).select(col("doc_id")).orderBy(col("doc_id"))
+         |""").select(col("doc_id")).orderBy(col("doc_id"))
   }
 
   /** Right-to-be-forgotten in the NEAR-DUP store, decision-gated: the
@@ -915,18 +943,14 @@ object SparkEntry {
     * docs flip to survivors (47 drops vs 54 pre-forget), so a store
     * that leaves residue in ANY table fails the gate.
     */
-  private val ndStoreForgotten =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qStoreForget(s: SparkSession, d: String): DataFrame = {
-    val store = ndStoreForgotten.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-nds-forget")
-        .resolve("s").toString
+    val store = fixture("ndStoreForgotten", d) {
+      val p = scratch("graft-nds-forget", "s")
       Dedup.NearDupStore.create(
         t(s, d, "documents").filter(col("doc_id") < 400), "doc_id", "text", p)
       Dedup.NearDupStore.forget(s, p, (0L until 200L).map(x => x: Any))
       p
-    })
+    }
     Dedup.NearDupStore.dropNearDups(
         t(s, d, "documents").filter(col("doc_id") >= 400 && col("doc_id") < 500),
         "doc_id", "text", store)
@@ -944,28 +968,19 @@ object SparkEntry {
     * oracle recomputes both stage predicates and the first-drop rule
     * in SQL.
     */
-  private val auditTermsFile =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qCfgAudit(s: SparkSession, d: String): DataFrame = {
-    val terms = auditTermsFile.computeIfAbsent(d, _ => {
-      val f = java.nio.file.Files.createTempDirectory("graft-audit")
-        .resolve("terms.txt")
-      java.nio.file.Files.writeString(f, "slow\nmerge batch\n")
-      f.toString
-    })
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: unused
-         |target.type: parquet
-         |target.path: unused
-         |target.mode: overwrite
-         |transforms: qualityFilter, blocklist
+    val terms = fixture("auditTermsFile", d) {
+      val f = scratch("graft-audit", "terms.txt")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), "slow\nmerge batch\n")
+      f
+    }
+    val cfg = cfgOf("unused", "unused",
+      s"""transforms: qualityFilter, blocklist
          |transform.qualityFilter.textColumn: text
          |transform.qualityFilter.minScore: 4750
          |transform.blocklist.textColumn: text
          |transform.blocklist.termsPath: $terms
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
+         |""")
     val (_, audit) = graft.Pipeline.transformAudited(t(s, d, "documents"), cfg, "doc_id")
     audit.select(col("doc_id"), col("stage_idx"), col("dropped_by"))
       .orderBy(col("doc_id"))
@@ -1499,23 +1514,15 @@ object SparkEntry {
     * verbatim, so the stage must reproduce the Scala tier exactly.
     */
   private def qCfgAttribution(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-cfga")
-      .resolve("out").toString
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $d/events.parquet
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: attribution
+    cfgGate(s, s"$d/events.parquet",
+      s"""transforms: attribution
          |transform.attribution.keyColumn: user_id
          |transform.attribution.tsColumn: ts
          |transform.attribution.typeColumn: event_type
          |transform.attribution.conversionType: purchase
          |transform.attribution.touchTypes: view, click, signup
          |transform.attribution.tieBreak: event_id
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out).orderBy(col("touch_type"))
+         |""").orderBy(col("touch_type"))
   }
 
   /** Config-driven RFM scoring, END TO END (q_cfg_attribution
@@ -1527,24 +1534,16 @@ object SparkEntry {
     * reproduce the Scala tier exactly.
     */
   private def qCfgRfm(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgr")
-    val src = base.resolve("events").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-cfgr", "events")
     t(s, d, "events").write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: rfm
+    cfgGate(s, src,
+      s"""transforms: rfm
          |transform.rfm.keyColumn: user_id
          |transform.rfm.tsColumn: ts
          |transform.rfm.valueColumn: value
          |transform.rfm.asOf: 2024-07-01
          |transform.rfm.buckets: 5
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out).orderBy(col("user_id"))
+         |""").orderBy(col("user_id"))
   }
 
   /** Config-driven transition matrix, END TO END: the
@@ -1553,21 +1552,13 @@ object SparkEntry {
     * pinned to q_transitions' oracle verbatim.
     */
   private def qCfgTransitions(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-cfgt")
-      .resolve("out").toString
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $d/events.parquet
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: transitionMatrix
+    cfgGate(s, s"$d/events.parquet",
+      s"""transforms: transitionMatrix
          |transform.transitionMatrix.keyColumn: user_id
          |transform.transitionMatrix.tsColumn: ts
          |transform.transitionMatrix.typeColumn: event_type
          |transform.transitionMatrix.tieBreak: event_id
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out).orderBy(col("from_type"), col("to_type"))
+         |""").orderBy(col("from_type"), col("to_type"))
   }
 
   /** Weekly cohort retention triangle in exact integer calendar math
@@ -1719,8 +1710,7 @@ object SparkEntry {
     import graft.sources.{FileStatsIndex, ParquetSource}
     // The declared query pays the full copy → index build → pruned read
     // every invocation (the layout build is part of what the gate times).
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stats-prune")
-      .resolve("li").toString
+    val tmp = scratch("graft-stats-prune", "li")
     val li = t(s, d, "lineitem")
     li.repartitionByRange(8, col("l_orderkey"))
       .sortWithinPartitions("l_orderkey")
@@ -1996,8 +1986,7 @@ object SparkEntry {
     * driver gate, not just the spec.
     */
   private def qJsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q-jsonl")
-      .resolve("docs").toString
+    val tmp = scratch("graft-q-jsonl", "docs")
     t(s, d, "documents").select("doc_id", "text", "lang", "source")
       .write.mode("overwrite").json(tmp)
     val (good, quarantine) = graft.sources.Jsonl.readWithQuarantine(s, tmp,
@@ -2019,8 +2008,7 @@ object SparkEntry {
     * against the original parquet table.
     */
   private def qOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q-orc")
-    val orcPath = tmp.resolve("nation").toString
+    val orcPath = scratch("graft-q-orc", "nation")
     val src = t(s, d, "nation")
     graft.Pipeline.write(src, graft.config.PipelineConfig(
       graft.config.SourceConfig.Parquet("unused", None, None),
@@ -2028,7 +2016,7 @@ object SparkEntry {
       Nil, None, Set.empty, None))
     graft.Pipeline.read(s, graft.config.PipelineConfig(
         graft.config.SourceConfig.Orc(orcPath, Some("n_nationkey >= 0"), None),
-        graft.config.TargetConfig.Orc(tmp.resolve("unused").toString, "overwrite", "zstd"),
+        graft.config.TargetConfig.Orc(scratch("graft-q-orc", "unused"), "overwrite", "zstd"),
         Nil, None, Set.empty, None))
       .orderBy(col("n_nationkey"))
   }
@@ -2157,20 +2145,15 @@ object SparkEntry {
     * time reopen+search — the costs a user of a PERSISTED index pays —
     * instead of re-timing codebook training). Search is read-only.
     */
-  private val annStoreIx =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.pipeline.AnnIndex.Handle]()
-
   /** The q_ann_store index over the full embeddings table — shared by
     * q_cfg_ann so the config stage is pinned against the SAME persisted
     * artifact the Scala-tier gate reads.
     */
   private def annStoreHandle(s: SparkSession, d: String): graft.pipeline.AnnIndex.Handle =
-    annStoreIx.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-annstore")
-        .resolve("ix").toString
+    fixture("annStoreIx", d) {
       graft.pipeline.AnnIndex.build(t(s, d, "embeddings"), "vec_id", "embedding",
-        root, kIvf = 10, m = 16, ksub = 16, iters = 2)
-    })
+        scratch("graft-annstore", "ix"), kIvf = 10, m = 16, ksub = 16, iters = 2)
+    }
 
   private def qAnnStore(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
@@ -2219,40 +2202,22 @@ object SparkEntry {
     * and every (query, rank) must land the identical neighbor at the
     * identical ADC distance.
     */
-  private val annQueriesDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qCfgAnn(s: SparkSession, d: String): DataFrame = {
     val h = annStoreHandle(s, d)
-    val qdir = annQueriesDir.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-annq")
-        .resolve("q").toString
-      t(s, d, "embeddings").filter(col("vec_id") < 5).write.parquet(p)
-      p
-    })
-    val out = java.nio.file.Files.createTempDirectory("graft-annq-out")
-      .resolve("out").toString
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $qdir
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: annSearch
+    val written = cfgGate(s, annQueriesDir(s, d),
+      s"""transforms: annSearch
          |transform.annSearch.indexRoot: ${h.root}
          |transform.annSearch.idColumn: vec_id
          |transform.annSearch.vecColumn: embedding
          |transform.annSearch.k: 10
          |transform.annSearch.nProbe: 4
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    val res = graft.Pipeline.run(s, cfg)
+         |""")
     val direct = graft.pipeline.AnnIndex.search(h,
         t(s, d, "embeddings").filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, nProbe = 4)
       .select(col("query_id"), col("rank"),
         col("neighbor_id").as("__n2"), col("adc_dist").as("__d2"))
-    res.readTarget(s, out)
-      .join(direct, Seq("query_id", "rank"))
+    written.join(direct, Seq("query_id", "rank"))
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         (col("neighbor_id") === col("__n2") &&
           abs(col("adc_dist") - col("__d2")) < 1e-12).as("same_as_library"))
@@ -2268,27 +2233,14 @@ object SparkEntry {
     */
   private def qCfgAnnRerank(s: SparkSession, d: String): DataFrame = {
     val h = annStoreHandle(s, d)
-    val qdir = annQueriesDir.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-annq")
-        .resolve("q").toString
-      t(s, d, "embeddings").filter(col("vec_id") < 5).write.parquet(p)
-      p
-    })
-    val corpusDir = annRerankCorpusDir.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-annrrc")
-        .resolve("c").toString
+    val qdir = annQueriesDir(s, d)
+    val corpusDir = fixture("annRerankCorpusDir", d) {
+      val p = scratch("graft-annrrc", "c")
       t(s, d, "embeddings").select("vec_id", "embedding").write.parquet(p)
       p
-    })
-    val out = java.nio.file.Files.createTempDirectory("graft-annrr-out")
-      .resolve("out").toString
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $qdir
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: annSearch
+    }
+    cfgGate(s, qdir,
+      s"""transforms: annSearch
          |transform.annSearch.indexRoot: ${h.root}
          |transform.annSearch.idColumn: vec_id
          |transform.annSearch.vecColumn: embedding
@@ -2296,14 +2248,18 @@ object SparkEntry {
          |transform.annSearch.nProbe: 10
          |transform.annSearch.rerankPath: $corpusDir
          |transform.annSearch.rerankKCand: 1048576
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"))
       .orderBy(col("query_id"), col("rank"))
   }
 
-  private val annRerankCorpusDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The five query vectors q_cfg_ann and q_cfg_annrerank pipe in. */
+  private def annQueriesDir(s: SparkSession, d: String): String =
+    fixture("annQueriesDir", d) {
+      val p = scratch("graft-annq", "q")
+      t(s, d, "embeddings").filter(col("vec_id") < 5).write.parquet(p)
+      p
+    }
 
   /** Exactly-once streaming-epoch ingest into the persisted ANN
     * index, end to end through the crash cases: the base index covers
@@ -2314,14 +2270,10 @@ object SparkEntry {
     * warehouse owner actually checks after any sequence of crashes and
     * retries: every corpus vector indexed EXACTLY once.
     */
-  private val annEpochIx =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.pipeline.AnnIndex.Handle]()
-
   private def qAnnEpoch(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
-    val h = annEpochIx.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-annepoch")
-        .resolve("ix").toString
+    val h = fixture("annEpochIx", d) {
+      val root = scratch("graft-annepoch", "ix")
       val built = graft.pipeline.AnnIndex.build(
         emb.filter(col("vec_id") < 350), "vec_id", "embedding", root,
         kIvf = 10, m = 16, ksub = 16, iters = 2)
@@ -2340,7 +2292,7 @@ object SparkEntry {
       graft.pipeline.AnnIndex.appendEpoch(built, delta, "vec_id", "embedding", "e1")
       graft.pipeline.AnnIndex.appendEpoch(built, delta, "vec_id", "embedding", "e1")
       built
-    })
+    }
     s.catalog.refreshByPath(h.indexPath)
     pread(s, h.indexPath)
       .groupBy(col("neighbor_id"))
@@ -2355,34 +2307,23 @@ object SparkEntry {
     * the delta anti-join admits only the 150 unseen rows, and the
     * second run retires-and-redoes instead of double-inserting.
     */
-  private val cfgIngestRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qCfgAnnIngest(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
-    val root = cfgIngestRoot.computeIfAbsent(d, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-cfgingest")
-        .resolve("idx").toString
+    val root = fixture("cfgIngestRoot", d) {
+      val r = scratch("graft-cfgingest", "idx")
       graft.pipeline.AnnIndex.build(emb.filter(col("vec_id") < 350),
         "vec_id", "embedding", r, kIvf = 10, m = 16, ksub = 16, iters = 2)
-      val out = java.nio.file.Files.createTempDirectory("graft-cfgingest-out")
-        .resolve("o").toString
-      val cfg = graft.config.PipelineConfig.parse(
-        s"""source.type: parquet
-           |source.path: $d/embeddings.parquet
-           |target.type: parquet
-           |target.path: $out
-           |target.mode: overwrite
-           |transforms: annIngest
+      val cfg = cfgOf(s"$d/embeddings.parquet", scratch("graft-cfgingest-out", "o"),
+        s"""transforms: annIngest
            |transform.annIngest.indexRoot: $r
            |transform.annIngest.idColumn: vec_id
            |transform.annIngest.vecColumn: embedding
            |transform.annIngest.tag: g1
-           |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
+           |""")
       graft.Pipeline.run(s, cfg)
       graft.Pipeline.run(s, cfg) // replay: retire-and-redo, same end state
       r
-    })
+    }
     s.catalog.refreshByPath(s"$root/index")
     pread(s, s"$root/index")
       .groupBy(col("neighbor_id"))
@@ -2427,20 +2368,16 @@ object SparkEntry {
     * while the immutable old version keeps answering exactly its own
     * 400 (the repro/audit read a live searcher is pinned to).
     */
-  private val annRetrainRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qAnnRetrain(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
-    val root = annRetrainRoot.computeIfAbsent(d, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-annver")
-        .resolve("idx").toString
+    val root = fixture("annRetrainRoot", d) {
+      val r = scratch("graft-annver", "idx")
       graft.pipeline.AnnIndex.buildVersioned(emb.filter(col("vec_id") < 400),
         "vec_id", "embedding", r, kIvf = 10, m = 16, ksub = 16, iters = 2)
       graft.pipeline.AnnIndex.buildVersioned(emb,
         "vec_id", "embedding", r, kIvf = 10, m = 16, ksub = 16, iters = 2)
       r
-    })
+    }
     def members(h: graft.pipeline.AnnIndex.Handle, name: String) =
       pread(s, h.indexPath)
         .select(col("neighbor_id").as("vec_id")).withColumn(name, lit(true))
@@ -2463,20 +2400,16 @@ object SparkEntry {
     * collateral damage (search results are rows of this frame, so
     * frame membership IS search reachability).
     */
-  private val annForgetIx =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.pipeline.AnnIndex.Handle]()
-
   private def qAnnForget(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
-    val h = annForgetIx.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-annforget")
-        .resolve("ix").toString
+    val h = fixture("annForgetIx", d) {
+      val root = scratch("graft-annforget", "ix")
       val built = graft.pipeline.AnnIndex.build(emb, "vec_id", "embedding", root,
         kIvf = 10, m = 16, ksub = 16, iters = 2)
       graft.pipeline.AnnIndex.forget(s, root,
         (450L until 500L).map(x => x: Any))
       built
-    })
+    }
     s.catalog.refreshByPath(h.indexPath)
     val indexed = pread(s, h.indexPath)
       .select(col("neighbor_id").as("vec_id")).withColumn("__in", lit(true))
@@ -2485,9 +2418,6 @@ object SparkEntry {
       .select(col("vec_id"), coalesce(col("__in"), lit(false)).as("in_index"))
       .orderBy(col("vec_id"))
   }
-
-  private val cfgForgetIx =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.pipeline.AnnIndex.Handle]()
 
   /** Right-to-be-forgotten DECLARATIVELY (q_cfg_audit discipline): the
     * RTBF batch (vec_ids 400-449) is a parquet source, `forget` is a
@@ -2498,31 +2428,23 @@ object SparkEntry {
     */
   private def qCfgForget(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
-    val h = cfgForgetIx.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft-cfgforget")
-      val root = base.resolve("ix").toString
+    val h = fixture("cfgForgetIx", d) {
+      val root = scratch("graft-cfgforget", "ix")
       val built = graft.pipeline.AnnIndex.build(emb, "vec_id", "embedding", root,
         kIvf = 10, m = 16, ksub = 16, iters = 2)
-      val src = base.resolve("batch").toString
-      val out = base.resolve("audit").toString
+      val src = scratch("graft-cfgforget", "batch")
       emb.filter(col("vec_id") >= 400 && col("vec_id") < 450)
         .select(col("vec_id")).write.parquet(src)
-      val cfg = graft.config.PipelineConfig.parse(
-        s"""source.type: parquet
-           |source.path: $src
-           |target.type: parquet
-           |target.path: $out
-           |target.mode: overwrite
-           |transforms: forget
+      val audit = cfgGate(s, src,
+        s"""transforms: forget
            |transform.forget.store: annIndex
            |transform.forget.root: $root
            |transform.forget.idColumn: vec_id
-           |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-      val res = graft.Pipeline.run(s, cfg)
+           |""")
       // the audit target must carry the batch through unchanged
-      require(res.readTarget(s, out).count() == 50L, "forget stage must pass rows through")
+      require(audit.count() == 50L, "forget stage must pass rows through")
       built
-    })
+    }
     s.catalog.refreshByPath(h.indexPath)
     val indexed = pread(s, h.indexPath)
       .select(col("neighbor_id").as("vec_id")).withColumn("__in", lit(true))
@@ -2720,8 +2642,7 @@ object SparkEntry {
     * classification from the same arithmetic with a full-outer join.
     */
   private def qVersionDiff(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-vdiff")
-      .resolve("t").toString
+    val root = scratch("graft-vdiff", "t")
     val o = t(s, d, "orders").select(col("o_orderkey"),
       col("o_orderstatus"),
       (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
@@ -2743,21 +2664,14 @@ object SparkEntry {
     * exactly the old snapshot even though `_LATEST` points at v2.
     */
   private def qTimetravel(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-tt")
-      .resolve("t").toString
+    val root = scratch("graft-tt", "t")
     val nation = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
     graft.sources.Versioned.publish(nation.filter(col("n_nationkey") < 13), root)
     graft.sources.Versioned.publish(nation, root)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $root
-         |source.versioned: true
-         |source.versionAt: 1
-         |target.type: parquet
-         |target.path: $root-unused-target
-         |target.mode: overwrite
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.read(s, cfg)
+    graft.Pipeline.read(s, cfgOf(root, s"$root-unused-target",
+      """source.versioned: true
+        |source.versionAt: 1
+        |"""))
       .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
       .orderBy(col("n_nationkey"))
   }
@@ -2773,9 +2687,8 @@ object SparkEntry {
     * from `nation` with `union_by_name` semantics spelled out.
     */
   private def qSchemaEvo(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-sevo")
-    val src = base.resolve("src").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-sevo", "src")
+    val out = scratch("graft-sevo", "out")
     val nation = t(s, d, "nation")
     nation.select(col("n_nationkey").cast("long").as("n_nationkey"),
         col("n_name"), lit(1L).as("gen"))
@@ -2784,15 +2697,10 @@ object SparkEntry {
         col("n_name"), lit(2L).as("gen"),
         col("n_regionkey").cast("long").as("n_regionkey"))
       .coalesce(1).write.mode("append").parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |source.mergeSchema: true
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: append
-         |savepoints.dir: ${base.resolve("sp")}
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
+    val cfg = cfgOf(src, out,
+      s"""source.mergeSchema: true
+         |savepoints.dir: ${scratch("graft-sevo", "sp")}
+         |""", mode = "append")
     graft.Pipeline.run(s, cfg, fileBatchSize = 1).readTarget(s, out)
       .select(col("n_nationkey"), col("n_name"), col("gen"), col("n_regionkey"))
       .orderBy(col("gen"), col("n_nationkey"))
@@ -2847,8 +2755,7 @@ object SparkEntry {
     * cross join (same lazy shape as q_jsonl_roundtrip).
     */
   private def qCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q-csv")
-      .resolve("supplier").toString
+    val tmp = scratch("graft-q-csv", "supplier")
     t(s, d, "supplier")
       .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       .write.mode("overwrite").option("header", "false").csv(tmp)
@@ -3095,24 +3002,15 @@ object SparkEntry {
     * so the oracle mirrors q_winsorize's integer form.
     */
   private def qCfgWinsorize(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-cfgw")
-      .resolve("out").toString
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $d/lineitem.parquet
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: winsorize
+    val written = cfgGate(s, s"$d/lineitem.parquet",
+      s"""transforms: winsorize
          |transform.winsorize.groupColumns: l_returnflag
          |transform.winsorize.valueColumn: l_extendedprice
          |transform.winsorize.pct: 5
          |transform.winsorize.outColumn: w_price
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    val res = graft.Pipeline.run(s, cfg)
+         |""")
     val cents = (col("w_price").cast(DecimalType(18, 2)) * 100).cast("long")
-    res.readTarget(s, out)
-      .groupBy(col("l_returnflag"))
+    written.groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
         sum(cents).cast("long").as("sum_clipped_cents"),
         min(cents).as("lo_cents"), max(cents).as("hi_cents"))
@@ -3253,6 +3151,14 @@ object SparkEntry {
       .orderBy(col("source"), col("dst_domain"))
   }
 
+  /** The q_pagerank graph over `docs`: two out-edges per doc, into a
+    * deterministic 500-node id space.
+    */
+  private def crawlEdges(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("src"), pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
+      .unionAll(docs.select(col("doc_id").as("src"),
+        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
+
   /** Integer-exact PageRank (3 rounds, d=0.85, fixed-point 1e-12
     * units) over a deterministic 500-node functional graph derived
     * from doc_id — in-degrees vary 0..20+ at sf0.1, the two edge
@@ -3262,11 +3168,7 @@ object SparkEntry {
     */
   private def qPagerank(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
-    val e1 = docs.select(col("doc_id").as("src"),
-      pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-    val e2 = docs.select(col("doc_id").as("src"),
-      pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst"))
-    graft.operators.Graphs.pageRank(e1.unionAll(e2), "src", "dst", iters = 3)
+    graft.operators.Graphs.pageRank(crawlEdges(docs), "src", "dst", iters = 3)
       .select(col("id").as("node_id"), col("rank_units"))
       .orderBy(col("node_id"))
   }
@@ -3280,11 +3182,7 @@ object SparkEntry {
     */
   private def qHits(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
-    val e1 = docs.select(col("doc_id").as("src"),
-      pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-    val e2 = docs.select(col("doc_id").as("src"),
-      pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst"))
-    graft.operators.Graphs.hits(e1.unionAll(e2), "src", "dst", iters = 2)
+    graft.operators.Graphs.hits(crawlEdges(docs), "src", "dst", iters = 2)
       .select(col("id").as("node_id"), col("auth_units"), col("hub_units"))
       .orderBy(col("node_id"))
   }
@@ -3298,10 +3196,7 @@ object SparkEntry {
     */
   private def qTrustrank(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
-    val edges = docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-      .unionAll(docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
+    val edges = crawlEdges(docs)
     val seeds = docs.filter(col("doc_id") < 25).select(col("doc_id").as("id"))
     graft.operators.Graphs.personalizedPageRank(edges, seeds, iters = 3)
       .select(col("id").as("node_id"), col("rank_units"))
@@ -3317,10 +3212,7 @@ object SparkEntry {
     */
   private def qPagerankIncr(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
-    val edges = docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-      .unionAll(docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
+    val edges = crawlEdges(docs)
     val oldE = edges.filter(col("src") < 250)
     val newE = edges.filter(col("src") >= 250)
     val levels = graft.operators.Graphs.pageRankLevels(oldE, "src", "dst", iters = 3)
@@ -3333,11 +3225,30 @@ object SparkEntry {
   /** Persisted link-graph store builds memoized per dataset dir (the
     * lexEpochIx discipline — artifacts are deterministic; the bench's
     * min-of-N then times the SERVE read, what a store user pays per
-    * refresh inspection, not the one-time build). The memoized state
-    * is the epoch's REPLAYED end state, so idempotence is inside the
-    * gate's pinned artifact.
+    * refresh inspection, not the one-time build): a store created on
+    * the crawl graph's `base` rows at `iters` rounds, then mutated by
+    * `build` (epochs, forgets, registrations). Where `build` absorbs an
+    * epoch the memoized state is its REPLAYED end state
+    * ([[absorbReplayed]]), so idempotence is inside the gate's pinned
+    * artifact.
     */
-  private val graphStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def graphStore(s: SparkSession, d: String, name: String, iters: Int,
+                         base: Column)(build: (String, DataFrame) => Unit): String =
+    fixture(name, d) {
+      val r = scratch("graft-lg", "g")
+      val edges = crawlEdges(t(s, d, "documents"))
+      graft.pipeline.LinkGraph.create(edges.filter(base), "src", "dst", r, iters = iters)
+      build(r, edges)
+      r
+    }
+
+  /** `slice` absorbed into the store at `r` as epoch e1, then replayed. */
+  private def absorbReplayed(r: String, slice: DataFrame): Unit =
+    (1 to 2).foreach(_ => graft.pipeline.LinkGraph.appendEpoch(slice, "src", "dst", r, "e1"))
+
+  /** The 100-source crawl slice the epochs absorb, and the graph outside it. */
+  private def crawlSlice: Column = col("src") >= 250 && col("src") < 350
+  private def outsideSlice: Column = col("src") < 250 || col("src") >= 350
 
   /** Persisted link-graph store pinned to the full-recompute oracle:
     * the q_pagerank functional graph minus a 100-source crawl slice is
@@ -3351,23 +3262,8 @@ object SparkEntry {
     * so the memoized build prices a refresh, not a rebuild).
     */
   private def qGraphRank(s: SparkSession, d: String): DataFrame = {
-    val root = graphStores.computeIfAbsent(d, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lg")
-        .resolve("g").toString
-      val docs = t(s, d, "documents")
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      graft.pipeline.LinkGraph.create(
-        edges.filter(col("src") < 250 || col("src") >= 350),
-        "src", "dst", r, iters = 3)
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      r
-    })
+    val root = graphStore(s, d, "graphRank", 3, outsideSlice)((r, e) =>
+      absorbReplayed(r, e.filter(crawlSlice)))
     graft.pipeline.LinkGraph.ranks(s, root)
       .select(col("id").as("node_id"), col("rank_units"))
       .orderBy(col("node_id"))
@@ -3384,23 +3280,10 @@ object SparkEntry {
     * persisted store).
     */
   private def qGraphComponents(s: SparkSession, d: String): DataFrame = {
-    val root = graphStores.computeIfAbsent(d + "#comp", _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lgc")
-        .resolve("g").toString
-      val docs = t(s, d, "documents")
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      graft.pipeline.LinkGraph.create(
-        edges.filter(col("src") < 250), "src", "dst", r, iters = 1)
+    val root = graphStore(s, d, "graphComp", 1, col("src") < 250) { (r, e) =>
       graft.pipeline.LinkGraph.createComponents(s, r)
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250), "src", "dst", r, "e1")
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250), "src", "dst", r, "e1")
-      r
-    })
+      absorbReplayed(r, e.filter(col("src") >= 250))
+    }
     graft.pipeline.LinkGraph.components(s, root)
       .select(col("id").as("node_id"), col("rep").as("component"))
       .orderBy(col("node_id"))
@@ -3415,23 +3298,19 @@ object SparkEntry {
     */
   private def qGraphForget(s: SparkSession, d: String): DataFrame = {
     val victims = Seq(7L, 107L, 207L, 307L, 407L)
-    val root = graphStores.computeIfAbsent(d + "#forget", _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lgf")
-        .resolve("g").toString
-      val docs = t(s, d, "documents")
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      graft.pipeline.LinkGraph.create(edges, "src", "dst", r, iters = 3)
+    val root = graphStore(s, d, "graphForget", 3, lit(true)) { (r, _) =>
       graft.pipeline.LinkGraph.forget(s, r, victims)
       graft.pipeline.LinkGraph.forget(s, r, victims)
-      r
-    })
+    }
     graft.pipeline.LinkGraph.ranks(s, root)
       .select(col("id").as("node_id"), col("rank_units"))
       .orderBy(col("node_id"))
   }
+
+  /** The store q_graph_hits and q_graph_trustrank share. */
+  private def hitsStore(s: SparkSession, d: String): String =
+    graphStore(s, d, "graphHits", 1, outsideSlice)((r, e) =>
+      absorbReplayed(r, e.filter(crawlSlice)))
 
   /** Store-served HITS on the link-graph store, pinned to the
     * whole-graph recurrence: the store is created minus a 100-source
@@ -3443,28 +3322,10 @@ object SparkEntry {
     * edge set, unit for unit (same oracle SQL verbatim — the
     * q_graph_rank discipline applied to the second link ranking).
     */
-  private def qGraphHits(s: SparkSession, d: String): DataFrame = {
-    val root = graphStores.computeIfAbsent(d + "#hits", _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lgh")
-        .resolve("g").toString
-      val docs = t(s, d, "documents")
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      graft.pipeline.LinkGraph.create(
-        edges.filter(col("src") < 250 || col("src") >= 350),
-        "src", "dst", r, iters = 1)
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      r
-    })
-    graft.pipeline.LinkGraph.hits(s, root, iters = 2)
+  private def qGraphHits(s: SparkSession, d: String): DataFrame =
+    graft.pipeline.LinkGraph.hits(s, hitsStore(s, d), iters = 2)
       .select(col("id").as("node_id"), col("auth_units"), col("hub_units"))
       .orderBy(col("node_id"))
-  }
 
   /** Store-served TrustRank on the link-graph store (sharing the
     * q_graph_hits store: created minus a 100-source slice, the slice
@@ -3475,23 +3336,7 @@ object SparkEntry {
     * source-selection prior).
     */
   private def qGraphTrustrank(s: SparkSession, d: String): DataFrame = {
-    val root = graphStores.computeIfAbsent(d + "#hits", _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lgh")
-        .resolve("g").toString
-      val docs = t(s, d, "documents")
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      graft.pipeline.LinkGraph.create(
-        edges.filter(col("src") < 250 || col("src") >= 350),
-        "src", "dst", r, iters = 1)
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      r
-    })
+    val root = hitsStore(s, d)
     val seeds = t(s, d, "documents").filter(col("doc_id") < 25)
       .select(col("doc_id").as("id"))
     graft.pipeline.LinkGraph.trustRank(s, root, seeds, iters = 3)
@@ -3511,25 +3356,11 @@ object SparkEntry {
     * coupling (see LinkGraph.registerTrustRank).
     */
   private def qGraphTrustrankM(s: SparkSession, d: String): DataFrame = {
-    val root = graphStores.computeIfAbsent(d + "#trustm", _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lgtm")
-        .resolve("g").toString
-      val docs = t(s, d, "documents")
-      val edges = docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      graft.pipeline.LinkGraph.create(
-        edges.filter(col("src") < 250 || col("src") >= 350),
-        "src", "dst", r, iters = 3)
+    val root = graphStore(s, d, "graphTrustm", 3, outsideSlice) { (r, e) =>
       graft.pipeline.LinkGraph.registerTrustRank(s, r,
-        docs.filter(col("doc_id") < 25).select(col("doc_id").as("id")))
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      graft.pipeline.LinkGraph.appendEpoch(
-        edges.filter(col("src") >= 250 && col("src") < 350), "src", "dst", r, "e1")
-      r
-    })
+        t(s, d, "documents").filter(col("doc_id") < 25).select(col("doc_id").as("id")))
+      absorbReplayed(r, e.filter(crawlSlice))
+    }
     val dg = graft.pipeline.LinkGraph.trustSets(s, root).head
     graft.pipeline.LinkGraph.maintainedTrustRank(s, root, dg)
       .select(col("id").as("node_id"), col("rank_units"))
@@ -3545,10 +3376,7 @@ object SparkEntry {
     */
   private def qPagerankDangling(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").filter(col("doc_id") < 300)
-    val edges = docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-      .unionAll(docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
+    val edges = crawlEdges(docs)
     graft.operators.Graphs.pageRank(edges, "src", "dst", iters = 3,
         danglingRedistribute = true)
       .select(col("id").as("node_id"), col("rank_units"))
@@ -3569,20 +3397,16 @@ object SparkEntry {
     * construction). Searches are read-only, so sharing is safe; the
     * epoch index memoizes its fully-appended-and-replayed END state.
     */
-  private val lexIx = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val lexEpochIx = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Full-corpus index — shared by q_cfg_lex so the config stage is
     * pinned against the SAME persisted artifact the Scala-tier gate
     * reads.
     */
   private def lexIndexRoot(s: SparkSession, d: String): String =
-    lexIx.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-lex")
-        .resolve("ix").toString
+    fixture("lexIx", d) {
+      val root = scratch("graft-lex", "ix")
       graft.pipeline.LexIndex.create(t(s, d, "documents"), "doc_id", "text", root)
       root
-    })
+    }
 
   /** Persisted lexical index search ≡ the in-plan postings join:
     * identical queries (and oracle SQL) as q_retrieval_join, but the
@@ -3602,16 +3426,15 @@ object SparkEntry {
     * equal the whole-corpus retrieval oracle.
     */
   private def qLexEpoch(s: SparkSession, d: String): DataFrame = {
-    val root = lexEpochIx.computeIfAbsent(d, _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-lexe")
-        .resolve("ix").toString
+    val root = fixture("lexEpochIx", d) {
+      val r = scratch("graft-lexe", "ix")
       val docs = t(s, d, "documents")
       graft.pipeline.LexIndex.create(
         docs.filter(col("doc_id") < 250), "doc_id", "text", r)
       graft.pipeline.LexIndex.appendEpoch(docs, "doc_id", "text", r, "e1")
       graft.pipeline.LexIndex.appendEpoch(docs, "doc_id", "text", r, "e1")
       r
-    })
+    }
     graft.pipeline.LexIndex.search(s, root, lexQueries(s), "query_id", "term", k = 10)
       .select(col("query_id"), col("rank"), col("id").as("doc_id"),
         col("n_matched"), col("sum_tf"), col("dl"))
@@ -3679,9 +3502,7 @@ object SparkEntry {
     * path declarative, the oracle replaying extraction + canon chains.
     */
   private def qCfgLinks(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgk")
-    val src = base.resolve("pages").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-cfgk", "pages")
     val html = concat(
       lit("<html><body><a href=\"https://WWW.ex"),
       pmod(col("doc_id") + 1, lit(20L)).cast("string"),
@@ -3689,20 +3510,14 @@ object SparkEntry {
       pmod(col("doc_id") * 3 + 7, lit(20L)).cast("string"),
       lit(".co.uk:80/b#x\">two</a><a name=\"nohref\">z</a></body></html>"))
     t(s, d, "documents").select(col("doc_id"), html.as("html")).write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: linkExtract, urlCanon
+    cfgGate(s, src,
+      s"""transforms: linkExtract, urlCanon
          |transform.linkExtract.htmlColumn: html
          |transform.linkExtract.hrefColumn: link
          |transform.urlCanon.urlColumn: link
          |transform.urlCanon.hostColumn: host
          |transform.urlCanon.domainColumn: domain
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("doc_id"), col("link"), col("host"), col("domain"))
       .orderBy(col("doc_id"), col("link"))
   }
@@ -3713,24 +3528,16 @@ object SparkEntry {
     * in-plan join.
     */
   private def qCfgLexSearch(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgl")
     val root = lexIndexRoot(s, d)
-    val src = base.resolve("queries").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-cfgl", "queries")
     lexQueries(s).write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: lexSearch
+    cfgGate(s, src,
+      s"""transforms: lexSearch
          |transform.lexSearch.indexRoot: $root
          |transform.lexSearch.queryIdColumn: query_id
          |transform.lexSearch.termColumn: term
          |transform.lexSearch.k: 10
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("query_id"), col("rank"), col("id").as("doc_id"),
         col("n_matched"), col("sum_tf"), col("dl"))
       .orderBy(col("query_id"), col("rank"))
@@ -3765,8 +3572,7 @@ object SparkEntry {
     * "it ran".
     */
   private def qIncrLineDedup(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lc")
-      .resolve("census").toString
+    val dir = scratch("graft-lc", "census")
     val docs = t(s, d, "documents")
       .withColumn("text8", graft.pipeline.Web.segmentLines(col("text"), 8))
       .select(col("doc_id"), col("text8"))
@@ -3807,27 +3613,14 @@ object SparkEntry {
     * q_pagerank's oracle verbatim.
     */
   private def qCfgPagerank(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgp")
-    val src = base.resolve("edges").toString
-    val out = base.resolve("out").toString
-    val docs = t(s, d, "documents")
-    docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-      .unionAll(docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      .write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: pageRank
+    val src = scratch("graft-cfgp", "edges")
+    crawlEdges(t(s, d, "documents")).write.parquet(src)
+    cfgGate(s, src,
+      s"""transforms: pageRank
          |transform.pageRank.srcColumn: src
          |transform.pageRank.dstColumn: dst
          |transform.pageRank.iters: 3
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("id").as("node_id"), col("rank_units"))
       .orderBy(col("node_id"))
   }
@@ -3898,27 +3691,14 @@ object SparkEntry {
     * edges through the config surface, identical integer units.
     */
   private def qCfgHits(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgh")
-    val src = base.resolve("edges").toString
-    val out = base.resolve("out").toString
-    val docs = t(s, d, "documents")
-    docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-      .unionAll(docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      .write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: hits
+    val src = scratch("graft-cfgh", "edges")
+    crawlEdges(t(s, d, "documents")).write.parquet(src)
+    cfgGate(s, src,
+      s"""transforms: hits
          |transform.hits.srcColumn: src
          |transform.hits.dstColumn: dst
          |transform.hits.iters: 2
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("id").as("node_id"), col("auth_units"), col("hub_units"))
       .orderBy(col("node_id"))
   }
@@ -3928,9 +3708,7 @@ object SparkEntry {
     * piped source and the stage must reproduce the full greedy replay.
     */
   private def qCfgMmr(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgmmr")
-    val src = base.resolve("cand").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-cfgmmr", "cand")
     val emb = t(s, d, "embeddings")
     Similarity.bruteForceTopK(
         emb.filter(col("vec_id") < 3), emb, "vec_id", "embedding", k = 20)
@@ -3938,21 +3716,15 @@ object SparkEntry {
         Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("embedding"))
       .write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: mmrRerank
+    cfgGate(s, src,
+      s"""transforms: mmrRerank
          |transform.mmrRerank.queryIdColumn: query_id
          |transform.mmrRerank.idColumn: neighbor_id
          |transform.mmrRerank.scoreColumn: cos
          |transform.mmrRerank.vecColumn: embedding
          |transform.mmrRerank.k: 5
          |transform.mmrRerank.lambdaPct: 70
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"))
       .orderBy(col("query_id"), col("rank"))
@@ -3964,10 +3736,8 @@ object SparkEntry {
     * and every metric double must land identically.
     */
   private def qCfgEvalRank(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgev")
-    val src = base.resolve("results").toString
-    val tp = base.resolve("truth").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-cfgev", "results")
+    val tp = scratch("graft-cfgev", "truth")
     val emb = t(s, d, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
     Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", k = 10)
@@ -3986,20 +3756,14 @@ object SparkEntry {
       .select(col("query_id"), col("neighbor_id"), sq.as("__d"))
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= 5)
       .select("query_id", "neighbor_id").write.parquet(tp)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: evalRanking
+    cfgGate(s, src,
+      s"""transforms: evalRanking
          |transform.evalRanking.truthPath: $tp
          |transform.evalRanking.queryIdColumn: query_id
          |transform.evalRanking.idColumn: neighbor_id
          |transform.evalRanking.rankColumn: rank
          |transform.evalRanking.k: 10
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out).orderBy(col("query_id"))
+         |""").orderBy(col("query_id"))
   }
 
   /** The declarative rrfFuse stage pinned to the q_hybrid_rrf oracle:
@@ -4008,10 +3772,8 @@ object SparkEntry {
     * nothing but the two hit-list round trips.
     */
   private def qCfgRrf(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgrrf")
-    val srcA = base.resolve("lex").toString
-    val srcB = base.resolve("dense").toString
-    val out = base.resolve("out").toString
+    val srcA = scratch("graft-cfgrrf", "lex")
+    val srcB = scratch("graft-cfgrrf", "dense")
     Text.retrievalTopK(tf(s, d, "documents", "doc_id"), "text", "doc_id",
         lexQueries(s), "query_id", "term", k = 10)
       .select(col("query_id"), col("rank"), col("doc_id").as("id"))
@@ -4022,19 +3784,13 @@ object SparkEntry {
       .select(concat(lit("q"), col("query_id").cast("string")).as("query_id"),
         col("rank"), col("neighbor_id").as("id"))
       .write.parquet(srcB)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $srcA
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: rrfFuse
+    cfgGate(s, srcA,
+      s"""transforms: rrfFuse
          |transform.rrfFuse.otherPath: $srcB
          |transform.rrfFuse.queryIdColumn: query_id
          |transform.rrfFuse.idColumn: id
          |transform.rrfFuse.k: 10
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("query_id"), col("rank"), col("id").as("doc_id"),
         col("rank_a"), col("rank_b"), col("rrf_score"))
       .orderBy(col("query_id"), col("rank"))
@@ -4061,14 +3817,12 @@ object SparkEntry {
     import s.implicits._
     val lexRoot = lexIndexRoot(s, d)
     val h = annStoreHandle(s, d)
-    val base = java.nio.file.Files.createTempDirectory("graft-cfghy")
-    val qLex = base.resolve("qlex").toString
-    val qDense = base.resolve("qdense").toString
-    val corpusDir = base.resolve("corpus").toString
-    val denseRaw = base.resolve("dense_raw").toString
-    val dense = base.resolve("dense").toString
-    val truthP = base.resolve("truth").toString
-    val out = base.resolve("out").toString
+    val qLex = scratch("graft-cfghy", "qlex")
+    val qDense = scratch("graft-cfghy", "qdense")
+    val corpusDir = scratch("graft-cfghy", "corpus")
+    val denseRaw = scratch("graft-cfghy", "dense_raw")
+    val dense = scratch("graft-cfghy", "dense")
+    val truthP = scratch("graft-cfghy", "truth")
     // the SAME query batch, both modalities: numeric ids 0..2 carry the
     // lexical terms; the dense run keys on the matching vec_ids
     Seq((0L, "spark"), (0L, "window"), (1L, "hash"), (1L, "join"),
@@ -4092,50 +3846,33 @@ object SparkEntry {
       .select(col("query_id"), col("neighbor_id"), sq.as("__d"))
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= 5)
       .select(col("query_id"), col("neighbor_id").as("id")).write.parquet(truthP)
-    def run(conf: String): graft.Pipeline.Result = graft.Pipeline.run(s,
-      graft.config.PipelineConfig.parse(conf)
-        .fold(e => throw new IllegalArgumentException(e), identity))
-    run(s"""source.type: parquet
-           |source.path: $qDense
-           |target.type: parquet
-           |target.path: $denseRaw
-           |target.mode: overwrite
-           |transforms: annSearch
-           |transform.annSearch.indexRoot: ${h.root}
-           |transform.annSearch.idColumn: vec_id
-           |transform.annSearch.vecColumn: embedding
-           |transform.annSearch.k: 10
-           |transform.annSearch.nProbe: 10
-           |transform.annSearch.rerankPath: $corpusDir
-           |transform.annSearch.rerankKCand: 1048576
-           |""".stripMargin)
-    run(s"""source.type: parquet
-           |source.path: $denseRaw
-           |target.type: parquet
-           |target.path: $dense
-           |target.mode: overwrite
-           |renames: neighbor_id->id
-           |""".stripMargin)
-    run(s"""source.type: parquet
-           |source.path: $qLex
-           |target.type: parquet
-           |target.path: $out
-           |target.mode: overwrite
-           |transforms: lexSearch, rrfFuse, evalRanking
-           |transform.lexSearch.indexRoot: $lexRoot
-           |transform.lexSearch.queryIdColumn: query_id
-           |transform.lexSearch.termColumn: term
-           |transform.lexSearch.k: 10
-           |transform.rrfFuse.otherPath: $dense
-           |transform.rrfFuse.queryIdColumn: query_id
-           |transform.rrfFuse.idColumn: id
-           |transform.rrfFuse.k: 10
-           |transform.evalRanking.truthPath: $truthP
-           |transform.evalRanking.queryIdColumn: query_id
-           |transform.evalRanking.idColumn: id
-           |transform.evalRanking.rankColumn: rank
-           |transform.evalRanking.k: 10
-           |""".stripMargin).readTarget(s, out)
+    graft.Pipeline.run(s, cfgOf(qDense, denseRaw,
+      s"""transforms: annSearch
+         |transform.annSearch.indexRoot: ${h.root}
+         |transform.annSearch.idColumn: vec_id
+         |transform.annSearch.vecColumn: embedding
+         |transform.annSearch.k: 10
+         |transform.annSearch.nProbe: 10
+         |transform.annSearch.rerankPath: $corpusDir
+         |transform.annSearch.rerankKCand: 1048576
+         |"""))
+    graft.Pipeline.run(s, cfgOf(denseRaw, dense, "renames: neighbor_id->id\n"))
+    cfgGate(s, qLex,
+      s"""transforms: lexSearch, rrfFuse, evalRanking
+         |transform.lexSearch.indexRoot: $lexRoot
+         |transform.lexSearch.queryIdColumn: query_id
+         |transform.lexSearch.termColumn: term
+         |transform.lexSearch.k: 10
+         |transform.rrfFuse.otherPath: $dense
+         |transform.rrfFuse.queryIdColumn: query_id
+         |transform.rrfFuse.idColumn: id
+         |transform.rrfFuse.k: 10
+         |transform.evalRanking.truthPath: $truthP
+         |transform.evalRanking.queryIdColumn: query_id
+         |transform.evalRanking.idColumn: id
+         |transform.evalRanking.rankColumn: rank
+         |transform.evalRanking.k: 10
+         |""")
       .select(col("query_id").cast("long").as("query_id"), col("n_rel"),
         col("n_hits"), col("recall"), col("mrr"), col("ap"), col("ndcg"))
       .orderBy(col("query_id"))
@@ -4150,36 +3887,16 @@ object SparkEntry {
     * equal the whole-graph recurrence.
     */
   private def qCfgGraphRank(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    def edges = docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-      .unionAll(docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-    val root = graphStores.computeIfAbsent(d + "#cfg", _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-cfglg")
-        .resolve("g").toString
-      graft.pipeline.LinkGraph.create(
-        edges.filter(col("src") < 250 || col("src") >= 350),
-        "src", "dst", r, iters = 3)
-      r
-    })
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgge")
-    val src = base.resolve("epoch").toString
-    val out = base.resolve("out").toString
-    edges.filter(col("src") >= 250 && col("src") < 350).write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: graphEpoch
+    val root = graphStore(s, d, "graphCfg", 3, outsideSlice)((_, _) => ())
+    val src = scratch("graft-cfgge", "epoch")
+    crawlEdges(t(s, d, "documents")).filter(crawlSlice).write.parquet(src)
+    cfgGate(s, src,
+      s"""transforms: graphEpoch
          |transform.graphEpoch.root: $root
          |transform.graphEpoch.srcColumn: src
          |transform.graphEpoch.dstColumn: dst
          |transform.graphEpoch.tag: e1
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("id").as("node_id"), col("rank_units"))
       .orderBy(col("node_id"))
   }
@@ -4189,32 +3906,20 @@ object SparkEntry {
     * parquet — config indirection must land identical integer units.
     */
   private def qCfgTrustrank(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgtr")
-    val src = base.resolve("edges").toString
-    val seedsP = base.resolve("seeds").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-cfgtr", "edges")
+    val seedsP = scratch("graft-cfgtr", "seeds")
     val docs = t(s, d, "documents")
-    docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 7 + 3, lit(500L)).as("dst"))
-      .unionAll(docs.select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 13 + 11, lit(500L)).as("dst")))
-      .write.parquet(src)
+    crawlEdges(docs).write.parquet(src)
     docs.filter(col("doc_id") < 25).select(col("doc_id").as("id"))
       .write.parquet(seedsP)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: pageRank
+    cfgGate(s, src,
+      s"""transforms: pageRank
          |transform.pageRank.srcColumn: src
          |transform.pageRank.dstColumn: dst
          |transform.pageRank.iters: 3
          |transform.pageRank.seedsPath: $seedsP
          |transform.pageRank.seedColumn: id
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("id").as("node_id"), col("rank_units"))
       .orderBy(col("node_id"))
   }
@@ -4226,15 +3931,8 @@ object SparkEntry {
     * replaced in place, schema preserved, disqualified docs dropped).
     */
   private def qCfgWebclean(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-cfgw")
-      .resolve("out").toString
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $d/documents.parquet
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: lineDedup, lineFilter
+    cfgGate(s, s"$d/documents.parquet",
+      s"""transforms: lineDedup, lineFilter
          |transform.lineDedup.idColumn: doc_id
          |transform.lineDedup.textColumn: text
          |transform.lineDedup.segmentWords: 8
@@ -4242,8 +3940,7 @@ object SparkEntry {
          |transform.lineFilter.textColumn: text
          |transform.lineFilter.minTokens: 4
          |transform.lineFilter.anchorWords: a, the
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
   }
@@ -4254,27 +3951,19 @@ object SparkEntry {
     * chains.
     */
   private def qCfgWebextract(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-cfgx")
-    val src = base.resolve("pages").toString
-    val out = base.resolve("out").toString
+    val src = scratch("graft-cfgx", "pages")
     t(s, d, "documents")
       .select(col("doc_id"),
         syntheticHtml(col("doc_id"), col("source"), col("text")).as("html"),
         syntheticUrl(col("doc_id"), col("source")).as("url"))
       .write.parquet(src)
-    val cfg = graft.config.PipelineConfig.parse(
-      s"""source.type: parquet
-         |source.path: $src
-         |target.type: parquet
-         |target.path: $out
-         |target.mode: overwrite
-         |transforms: htmlExtract, urlCanon
+    cfgGate(s, src,
+      s"""transforms: htmlExtract, urlCanon
          |transform.htmlExtract.textColumn: html
          |transform.urlCanon.urlColumn: url
          |transform.urlCanon.hostColumn: host
          |transform.urlCanon.domainColumn: domain
-         |""".stripMargin).fold(e => throw new IllegalArgumentException(e), identity)
-    graft.Pipeline.run(s, cfg).readTarget(s, out)
+         |""")
       .select(col("doc_id"), col("html").as("clean_text"),
         col("url").as("canon_url"), col("host"), col("domain"))
       .orderBy(col("doc_id"))

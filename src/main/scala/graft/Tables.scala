@@ -45,9 +45,13 @@ object Tables {
     * (`FilePartition.maxSplitBytes`): a compacted file that kept many
     * small row groups is still read by as many tasks as it has splits,
     * not row groups. Driver-side footer reads, cached per (path, file
-    * signature).
+    * signature). Bounded like [[graft.sources.KeyedReads]]' caches:
+    * cleared wholesale past 256 entries, since a long-lived session
+    * keeps meeting new paths (store epochs, per-run scratch tables).
     */
   private val unitsCache = scala.collection.concurrent.TrieMap[String, (String, Int)]()
+
+  private[graft] def unitsCached: Int = unitsCache.size
 
   def scanUnits(spark: SparkSession, path: String): Int =
     scanLayout(spark, path)._1
@@ -77,6 +81,7 @@ object Tables {
           val groups = graft.sources.ParquetSource.footerMeta(conf, st).getBlocks.size
           math.min(groups.toLong, math.max(1L, (st.getLen + split - 1) / split)).toInt
         }.sum
+        if (unitsCache.size > 256) unitsCache.clear()
         unitsCache(path) = (sig, n)
         (n, bytes)
     }

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. `attempted.txt`
+  * names every query the run sets out to dump, written before the first,
+  * so a query that threw (or a run that died) shows as a missing dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -13,9 +15,10 @@ object Verify {
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val attempted = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
+    Files.writeString(Paths.get(s"$outDir/attempted.txt"),
+      attempted.keys.toSeq.sorted.mkString("", "\n", "\n"))
+    attempted.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -48,13 +48,15 @@ object AnnIndex {
     * pinned granularity. Rows are delta-unique across tags (the census
     * anti-join), so both resolve by identity.
     */
-  def tables(spark: SparkSession, root: String): graft.sources.StoreTables.Store = {
-    val g = rowsPerFileOf(spark, root)
+  def tables(spark: SparkSession, root: String): graft.sources.StoreTables.Store =
+    layout(root, rowsPerFileOf(spark, root))
+
+  /** [[tables]] at granularity `g`. */
+  private def layout(root: String, g: Long): graft.sources.StoreTables.Store =
     graft.sources.StoreTables.Store(root, Seq(
       graft.sources.StoreTables.Table(s"$root/index", "bucket",
         rowsPerFile = g, shardRows = g),
       graft.sources.IdCensus.table(root, g)))
-  }
 
   /** Pin the tuner's chosen serve-time operating point into the index
     * meta — the knob [[tuneNProbe]] MEASURES but (until pinned) nothing
@@ -123,14 +125,12 @@ object AnnIndex {
     Pq.save(pq, spark, s"$root/pq_model")
     graft.sources.StoreTables.writeSmall(spark, annMetaPath(root),
       s"""{"rowsPerFile":$rowsPerFile}""")
-    encoded(corpus, idCol, vecCol, ivf, pq)
-      .repartition(col("bucket")).sortWithinPartitions("bucket")
-      .write.option("maxRecordsPerFile", rowsPerFile)
-      .mode("overwrite").parquet(s"$root/index")
+    // range-clustered on bucket like every fold of the index, with the
     // bucket stats artifact: planning-time file pruning for forget's
     // pair-deletes (and any probe pushing bucket predicates) —
     // advisory, unknown files always kept
-    graft.sources.FileStatsIndex.buildAndSave(spark, s"$root/index", Seq("bucket"))
+    graft.sources.StoreTables.create(spark, layout(root, rowsPerFile).tables.head,
+      encoded(corpus, idCol, vecCol, ivf, pq), "overwrite")
     // id census sidecar: the summary the delta anti-join probes instead
     // of the full index id column (IdCensus's batch-proportional read)
     graft.sources.IdCensus.create(spark, root, indexIds(spark, root), rowsPerFile)

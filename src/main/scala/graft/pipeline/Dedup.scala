@@ -364,16 +364,6 @@ object Dedup {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
-  /** Cluster a store table on its lookup key before writing: range
-    * sharding puts each key interval in one file, the in-file sort
-    * packs it into few row groups — the layout [[prunedRead]]'s
-    * pushed IN predicate skips against. (In-place [[graft.sources
-    * .Compaction]] preserves rows but NOT this clustering; re-create
-    * or re-sort after heavy compaction if probe I/O matters.)
-    */
-  private def clusteredOn(df: DataFrame, keyCol: String): DataFrame =
-    df.repartitionByRange(col(keyCol)).sortWithinPartitions(keyCol)
-
   object BandIndex {
     private def rowsPath(path: String) = new org.apache.hadoop.fs.Path(path, "rows")
     private def metaPath(path: String) = new org.apache.hadoop.fs.Path(path, "_banding.json")
@@ -401,20 +391,18 @@ object Dedup {
       // under corpus growth: sharding by session shuffle width alone
       // means the file covering a probe's bucket range grows with the
       // CORPUS and every point read sweeps the growth in.
-      clusteredOn(capped(df, idCol, signatureCol, bands, rowsPerBand, maxBucketSize),
-          "bucket")
-        .write.option("maxRecordsPerFile", rowsPerFile)
-        .mode("errorifexists").parquet(rowsPath(path).toString)
-      graft.sources.FileStatsIndex.buildAndSave(df.sparkSession,
-        rowsPath(path).toString, Seq("bucket"))
-      val fs = metaPath(path).getFileSystem(
-        df.sparkSession.sparkContext.hadoopConfiguration)
-      val out = fs.create(metaPath(path), false)
-      try out.write(
-        s"""{"bands":$bands,"rowsPerBand":$rowsPerBand,"numHashes":${bands * rowsPerBand},"rowsPerFile":$rowsPerFile}"""
-          .getBytes("UTF-8"))
-      finally out.close()
+      graft.sources.StoreTables.create(df.sparkSession, table(path, rowsPerFile),
+        capped(df, idCol, signatureCol, bands, rowsPerBand, maxBucketSize), "errorifexists")
+      graft.sources.StoreTables.writeSmall(df.sparkSession, metaPath(path).toString,
+        s"""{"bands":$bands,"rowsPerBand":$rowsPerBand,"numHashes":${bands * rowsPerBand},"rowsPerFile":$rowsPerFile}""")
     }
+
+    /** The index rows as a store table: bucket-clustered at granularity
+      * `g`, with a `_stats` artifact.
+      */
+    private[pipeline] def table(path: String, g: Long): graft.sources.StoreTables.Table =
+      graft.sources.StoreTables.Table(rowsPath(path).toString, "bucket",
+        rowsPerFile = g, shardRows = g)
 
     /** (bands, rowsPerBand) the index was built with. */
     def layout(spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) = {
@@ -443,8 +431,7 @@ object Dedup {
       // advances the stats artifact over EXACTLY the appended files
       // (one small job, the write-pass discipline)
       graft.sources.StoreTables.append(df.sparkSession,
-        graft.sources.StoreTables.Table(rowsPath(path).toString, "bucket",
-          rowsPerFile = rowsPerFileOf(df.sparkSession, path)),
+        table(path, rowsPerFileOf(df.sparkSession, path)),
         capped(df, idCol, signatureCol, bands, rowsPerBand, maxBucketSize))
     }
 
@@ -527,14 +514,16 @@ object Dedup {
       * table resolves by identity.
       */
     def tables(spark: org.apache.spark.sql.SparkSession,
-               path: String): graft.sources.StoreTables.Store = {
-      val g = BandIndex.rowsPerFileOf(spark, sub(path, "bands"))
-      def table(dir: String, key: String) =
-        graft.sources.StoreTables.Table(dir, key, rowsPerFile = g, shardRows = g)
+               path: String): graft.sources.StoreTables.Store =
+      layout(path, BandIndex.rowsPerFileOf(spark, sub(path, "bands")))
+
+    /** [[tables]] at granularity `g`. */
+    private def layout(path: String, g: Long): graft.sources.StoreTables.Store = {
+      def table(dir: String) =
+        graft.sources.StoreTables.Table(dir, "id", rowsPerFile = g, shardRows = g)
       graft.sources.StoreTables.Store(path, Seq(
-        table(sub(path, "bands") + "/rows", "bucket"),
-        table(sub(path, "sigs"), "id"),
-        table(sub(path, "shingles"), "id")))
+        BandIndex.table(sub(path, "bands"), g), table(sub(path, "sigs")),
+        table(sub(path, "shingles"))))
     }
 
     private def framed(df: DataFrame, idCol: String, textCol: String,
@@ -548,6 +537,10 @@ object Dedup {
                rowsPerFile: Long = 4000000L): Unit = {
       val f = framed(df, idCol, textCol, bands * rowsPerBand)
         .transform(graft.Checkpoints.materialize)
+      val store = layout(path, rowsPerFile)
+      def create(name: String, cols: String*): () => Unit = () =>
+        graft.sources.StoreTables.create(df.sparkSession, store.table(sub(path, name)),
+          f.select(cols.map(col): _*), "errorifexists")
       // three disjoint tables fed by the one materialized frame —
       // build them concurrently.
       // id-clustered: dropNearDups prunes these reads to candidate ids;
@@ -556,20 +549,7 @@ object Dedup {
       graft.Par.run(df.sparkSession)(
         () => BandIndex.write(f, "id", "sig", bands, rowsPerBand,
           sub(path, "bands"), maxBucketSize, rowsPerFile),
-        () => {
-          clusteredOn(f.select("id", "sig"), "id")
-            .write.option("maxRecordsPerFile", rowsPerFile)
-            .mode("errorifexists").parquet(sub(path, "sigs"))
-          graft.sources.FileStatsIndex.buildAndSave(df.sparkSession,
-            sub(path, "sigs"), Seq("id"))
-        },
-        () => {
-          clusteredOn(f.select("id", "sh"), "id")
-            .write.option("maxRecordsPerFile", rowsPerFile)
-            .mode("errorifexists").parquet(sub(path, "shingles"))
-          graft.sources.FileStatsIndex.buildAndSave(df.sparkSession,
-            sub(path, "shingles"), Seq("id"))
-        })
+        create("sigs", "id", "sig"), create("shingles", "id", "sh"))
       ()
     }
 

@@ -230,12 +230,10 @@ object LexIndex {
              rowsPerFile: Long = DefaultRowsPerFile): Unit = {
     val spark = docs.sparkSession
     require(rowsPerFile >= 1L, "rowsPerFile must be >= 1")
-    postingsTable(root, rowsPerFile).clustered(postingsOf(docs, idCol, textCol))
-      .write.option("maxRecordsPerFile", rowsPerFile)
-      .mode("errorifexists").parquet(postingsDir(root))
-    // term stats artifact: planning-time file pruning for forget's
-    // pair-deletes — advisory, unknown files always kept
-    graft.sources.FileStatsIndex.buildAndSave(spark, postingsDir(root), Seq("term"))
+    // with the term stats artifact: planning-time file pruning for
+    // forget's pair-deletes — advisory, unknown files always kept
+    graft.sources.StoreTables.create(spark, postingsTable(root, rowsPerFile),
+      postingsOf(docs, idCol, textCol), "errorifexists")
     // sidecars from the WRITTEN postings (the ground truth): id census
     // for batch-proportional delta checks, pinned (N, Σdl) for BM25
     graft.sources.IdCensus.create(spark, root,

@@ -137,16 +137,6 @@ object LinkGraph {
       .distinct()
       .transform(graft.Checkpoints.materialize)
 
-  private def writeClustered(df: DataFrame, dir: String, keyCol: String,
-                             rowsPerFile: Long): Unit = {
-    df.repartitionByRange(col(keyCol)).sortWithinPartitions(col(keyCol))
-      .write.option("maxRecordsPerFile", rowsPerFile)
-      .mode("overwrite").parquet(dir)
-    graft.sources.FileStatsIndex.buildAndSave(df.sparkSession, dir, Seq(keyCol),
-      schema = Some(df.schema))
-    df.sparkSession.catalog.refreshByPath(dir)
-  }
-
   private val ShardRows = 2000000L
 
   /** Publish `df` as the table at `dir`'s share of epoch `tag`
@@ -156,10 +146,16 @@ object LinkGraph {
     */
   private def publish(spark: SparkSession, store: graft.sources.StoreTables.Store,
                       dir: String, df: DataFrame, tag: String, rows: Long): Unit = {
-    graft.sources.StoreTables.publish(spark, store, store.tables.find(_.dir == dir).get,
-      df, tag, Some(rows))
+    graft.sources.StoreTables.publish(spark, store, store.table(dir), df, tag, Some(rows))
     ()
   }
+
+  /** Create the table at `dir` of `store` from `rows` (every base write
+    * of the store overwrites).
+    */
+  private def createTable(store: graft.sources.StoreTables.Store, dir: String,
+                          rows: DataFrame): Unit =
+    graft.sources.StoreTables.create(rows.sparkSession, store.table(dir), rows, "overwrite")
 
   /** Rows of `dir` whose `keyCol` matches a `probe.probeCol` value —
     * the two-layer pruned point lookup while the probe is bounded, a
@@ -219,19 +215,18 @@ object LinkGraph {
     require(rowsPerFile >= 1L, "rowsPerFile must be >= 1")
     val spark = edges.sparkSession
     val e = canon(edges, srcCol, dstCol)
+    val store = layout(root, rowsPerFile, labels = false, trusts = Nil)
     // all four tables derive from the one materialized edge frame and
     // write to disjoint dirs — fan the builds out
     graft.Par.run(spark)(
-      () => writeClustered(e, outDir(root), "src", rowsPerFile),
-      () => writeClustered(e, inDir(root), "dst", rowsPerFile),
-      () => writeClustered(
+      () => createTable(store, outDir(root), e),
+      () => createTable(store, inDir(root), e),
+      () => createTable(store, degDir(root),
         e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .withColumn("seq", lit(0L)),
-        degDir(root), "src", rowsPerFile),
-      () => writeClustered(
+          .withColumn("seq", lit(0L))),
+      () => createTable(store, levelsDir(root),
         graft.operators.Graphs.pageRankLevels(e, "src", "dst", iters, dampingPct, scale)
-          .withColumn("seq", lit(0L)),
-        levelsDir(root), "id", rowsPerFile))
+          .withColumn("seq", lit(0L))))
     graft.sources.StoreTables.writeSmall(spark, metaPath(root),
       s"""{"iters":$iters,"dampingPct":$dampingPct,"scale":$scale,""" +
         s""""rowsPerFile":$rowsPerFile}""")
@@ -672,14 +667,13 @@ object LinkGraph {
     val fs = hadoopFs(spark, root)
     fs.delete(trustMarker(root, digest), false)
     s.write.mode("overwrite").parquet(trustSeedsDir(root, digest))
-    writeClustered(
+    createTable(layout(root, meta.rowsPerFile, labels = false, trusts = Seq(digest)),
+      trustLevelsDir(root, digest),
       graft.operators.Graphs.personalizedPageRankLevels(
           edges(spark, root), s, "src", "dst", "id",
           meta.iters, meta.dampingPct, meta.scale)
-        .withColumn("seq", lit(0L)),
-      trustLevelsDir(root, digest), "id", meta.rowsPerFile)
-    val out = fs.create(trustMarker(root, digest), true)
-    try out.write("1".getBytes("UTF-8")) finally out.close()
+        .withColumn("seq", lit(0L)))
+    graft.sources.StoreTables.writeSmall(spark, trustMarker(root, digest).toString, "1")
     digest
   }
 
@@ -736,10 +730,10 @@ object LinkGraph {
       .connectedComponents(nodes, e, "id")
       .select(col("id"), col("rep"), lit(0L).as("seq"))
       .transform(graft.Checkpoints.materialize)
-    val g = readMeta(spark, root).rowsPerFile
+    val store = layout(root, readMeta(spark, root).rowsPerFile, labels = true, trusts = Nil)
     graft.Par.run(spark)(
-      () => writeClustered(labels, labIdDir(root), "id", g),
-      () => writeClustered(labels, labRepDir(root), "rep", g))
+      () => createTable(store, labIdDir(root), labels),
+      () => createTable(store, labRepDir(root), labels))
     ()
   }
 
@@ -1020,8 +1014,15 @@ object LinkGraph {
     * shard. The optional component-label pair and every registered
     * trust set join when present.
     */
-  def tables(spark: SparkSession, root: String): graft.sources.StoreTables.Store = {
-    val g = readMeta(spark, root).rowsPerFile
+  def tables(spark: SparkSession, root: String): graft.sources.StoreTables.Store =
+    layout(root, readMeta(spark, root).rowsPerFile, labelsExist(spark, root),
+      trustSets(spark, root))
+
+  /** [[tables]] for granularity `g`, with the component-label pair iff
+    * `labels` and one level table per trust digest in `trusts`.
+    */
+  private def layout(root: String, g: Long, labels: Boolean,
+                     trusts: Seq[String]): graft.sources.StoreTables.Store = {
     def latest(keys: Seq[String], v: String): DataFrame => DataFrame = df => df
       .groupBy(keys.map(col): _*)
       .agg(max_by(struct(col(v), col("seq")), col("seq")).as("v"))
@@ -1036,11 +1037,11 @@ object LinkGraph {
       table(inDir(root), "dst"),
       table(degDir(root), "src", latest(Seq("src"), "deg")),
       table(levelsDir(root), "id", levels)) ++
-      (if (labelsExist(spark, root)) Seq(
+      (if (labels) Seq(
         table(labIdDir(root), "id", latest(Seq("id"), "rep")),
         table(labRepDir(root), "rep", latest(Seq("id"), "rep")))
        else Seq.empty) ++
-      trustSets(spark, root).map(dg => table(trustLevelsDir(root, dg), "id", levels)))
+      trusts.map(dg => table(trustLevelsDir(root, dg), "id", levels)))
   }
 
   /** MAJOR fold of every table ([[graft.sources.StoreTables.recluster]]):

@@ -368,8 +368,8 @@ object Web {
   def createLineCensus(df: DataFrame, idCol: String, textCol: String,
                        dir: String, minLineChars: Int = 2): Unit = {
     val spark = df.sparkSession
-    censusTable(dir).clustered(lineStats(df, idCol, textCol, minLineChars))
-      .write.mode("errorifexists").parquet(censusRows(dir))
+    graft.sources.StoreTables.create(spark, censusTable(dir),
+      lineStats(df, idCol, textCol, minLineChars), "errorifexists")
     writeCensusMeta(spark, dir, minLineChars)
   }
 

@@ -71,12 +71,8 @@ object IdCensus {
     * probe never sweeps more than a granule, folded or not.
     */
   def create(spark: SparkSession, root: String, rows: DataFrame,
-             rowsPerFile: Long = 0L): Unit = {
-    val t = table(root, rowsPerFile)
-    t.capped(t.clustered(rows)).mode("overwrite").parquet(rowsDir(root))
-    FileStatsIndex.buildAndSave(spark, rowsDir(root), Seq("id"))
-    spark.catalog.refreshByPath(rowsDir(root))
-  }
+             rowsPerFile: Long = 0L): Unit =
+    StoreTables.create(spark, table(root, rowsPerFile), rows, "overwrite")
 
   /** Lazy migration/repair: derive and persist the census from the
     * index's ground truth iff no census exists yet. `derive` is only

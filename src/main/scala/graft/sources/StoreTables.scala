@@ -100,6 +100,24 @@ object StoreTables {
   final case class Store(root: String, tables: Seq[Table],
                          sidecarFold: SparkSession => Unit = _ => ()) {
     def dirs: Seq[String] = tables.map(_.dir)
+
+    /** The table at `dir`. */
+    def table(dir: String): Table =
+      tables.find(_.dir == dir).getOrElse(throw new NoSuchElementException(
+        s"no table $dir in the store at $root"))
+  }
+
+  /** Create `t` from `rows` in the layout `t` describes: range-clustered
+    * on its key, sorted, files capped at its `rowsPerFile`; then its
+    * `_stats` artifact when it keeps one (with the writer's schema, so
+    * no footer inference), and the listing refreshed. `mode` is the
+    * store's own: `errorifexists` where creating over an existing store
+    * is a mistake, `overwrite` where a create rebuilds.
+    */
+  def create(spark: SparkSession, t: Table, rows: DataFrame, mode: String): Unit = {
+    t.capped(t.clustered(rows)).mode(mode).parquet(t.dir)
+    if (t.stats) FileStatsIndex.buildAndSave(spark, t.dir, Seq(t.key), schema = Some(rows.schema))
+    spark.catalog.refreshByPath(t.dir)
   }
 
   /** Shard count for `nRows` rows at `shardRows` rows per shard — a
@@ -368,16 +386,18 @@ object StoreTables {
     * beside `path` and renames over it, so readers see the old or the
     * new body, never a torn one.
     */
-  def writeSmall(spark: SparkSession, path: String, body: String): Unit = {
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def writeSmall(spark: SparkSession, path: String, body: String): Unit =
+    writeSmall(spark.sparkContext.hadoopConfiguration, new Path(path), body)
+
+  def writeSmall(conf: org.apache.hadoop.conf.Configuration, dst: Path, body: String): Unit = {
+    val fs = dst.getFileSystem(conf)
     require(fs.mkdirs(dst.getParent) || fs.exists(dst.getParent),
       s"cannot create ${dst.getParent}")
     val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"atomic write failed for $path")
+    require(fs.rename(tmp, dst), s"atomic write failed for $dst")
   }
 
   def readSmall(spark: SparkSession, path: String): Option[String] = {

@@ -89,11 +89,7 @@ object Versioned {
     try stamp.write(
       s"""{"publishedAtMs":${System.currentTimeMillis()}}""".getBytes("UTF-8"))
     finally stamp.close()
-    val tmp = new Path(root, s"$Pointer.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(new Path(root, Pointer))) fs.delete(new Path(root, Pointer), false)
-    require(fs.rename(tmp, new Path(root, Pointer)), s"pointer swap failed for v$next")
+    StoreTables.writeSmall(spark, new Path(root, Pointer).toString, next.toString)
     next
   }
 

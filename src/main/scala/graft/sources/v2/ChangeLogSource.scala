@@ -169,17 +169,9 @@ private[v2] class ChangeLogMicroBatchStream(root: String, initialPosition: Strin
   private def manifestPath(hi: String): Path =
     new Path(manifestDir, java.net.URLEncoder.encode(hi, "UTF-8"))
 
-  private def writeManifest(hi: String, admitted: Seq[String]): Unit = {
-    val fs = manifestDir.getFileSystem(hadoopConf)
-    val tmp = new Path(manifestDir, s".${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(admitted.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = manifestPath(hi)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"failed to commit change-log manifest $dst")
-  }
+  private def writeManifest(hi: String, admitted: Seq[String]): Unit =
+    graft.sources.StoreTables.writeSmall(hadoopConf, manifestPath(hi),
+      admitted.mkString("", "\n", "\n"))
 
   private def readManifest(hi: String): Option[Seq[String]] = {
     val fs = manifestDir.getFileSystem(hadoopConf)

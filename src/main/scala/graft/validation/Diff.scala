@@ -49,7 +49,25 @@ object Diff {
     * `compareCols` are compared with null-safe equality.
     */
   def fullDiff(source: DataFrame, target: DataFrame, pk: Seq[String],
-               compareCols: Seq[String]): DataFrame = {
+               compareCols: Seq[String]): DataFrame =
+    outerDiff(source, target, pk, compareCols) { _ =>
+      val allEqual =
+        if (compareCols.isEmpty) lit(true)
+        else compareCols.map(c => col(s"s.$c") <=> col(s"t.$c")).reduce(_ && _)
+      ((allEqual, "match"), Nil)
+    }
+
+  /** The join both full-outer diffs share: `pk ++ compareCols` of each
+    * side with a presence marker, null-safe full-outer joined on `pk`
+    * (sides aliased `s` and `t`), then pk (coalesced across sides) ++
+    * `diff_kind` ++ the caller's columns. `classify` gets the
+    * both-sides-present test and returns the last rung of the
+    * `diff_kind` ladder — a test and the kind it selects, the other of
+    * match/mismatch being its else — plus the extra output columns.
+    */
+  private def outerDiff(source: DataFrame, target: DataFrame, pk: Seq[String],
+                        compareCols: Seq[String])(
+      classify: Column => ((Column, String), Seq[Column])): DataFrame = {
     // explicit presence markers: deriving presence from PK nullness
     // would misclassify rows that legitimately matched on a NULL key
     // component (the whole reason the join is null-safe)
@@ -59,15 +77,13 @@ object Diff {
       pk.map(k => col(s"s.$k") <=> col(s"t.$k")).reduce(_ && _), "full_outer")
     val srcPresent = col("s.__s_present").isNotNull
     val tgtPresent = col("t.__t_present").isNotNull
-    val allEqual =
-      if (compareCols.isEmpty) lit(true)
-      else compareCols.map(c => col(s"s.$c") <=> col(s"t.$c")).reduce(_ && _)
+    val ((test, kindIf), extra) = classify(srcPresent && tgtPresent)
     val kind = when(!tgtPresent, lit("missing_target"))
       .when(!srcPresent, lit("extra_target"))
-      .when(allEqual, lit("match"))
-      .otherwise(lit("mismatch"))
+      .when(test, lit(kindIf))
+      .otherwise(lit(if (kindIf == "match") "mismatch" else "match"))
     val pkOut = pk.map(k => coalesce(col(s"s.$k"), col(s"t.$k")).as(k))
-    joined.select(pkOut :+ kind.as("diff_kind"): _*)
+    joined.select(pkOut ++ (kind.as("diff_kind") +: extra): _*)
   }
 
   /** Sampled validation tier — the first-pass check for tables too
@@ -133,30 +149,21 @@ object Diff {
     val (ttls, rest) = sameFamily.partition(_.toLowerCase.endsWith("_ttl"))
     val (writetimes, plain) = rest.partition(_.toLowerCase.endsWith("_writetime"))
 
-    val s = source.select((pk ++ compareCols).map(col) :+ lit(true).as("__s_present"): _*)
-    val t = target.select((pk ++ compareCols).map(col) :+ lit(true).as("__t_present"): _*)
-    val joined = s.as("s").join(t.as("t"),
-      pk.map(k => col(s"s.$k") <=> col(s"t.$k")).reduce(_ && _), "full_outer")
-    val srcPresent = col("s.__s_present").isNotNull
-    val tgtPresent = col("t.__t_present").isNotNull
     def anyDiff(cols: Seq[String], cast: Boolean): Column =
       if (cols.isEmpty) lit(false)
       else cols.map { c =>
         if (cast) !(expr(s"try_cast(s.$c AS double)") <=> expr(s"try_cast(t.$c AS double)"))
         else !(col(s"s.$c") <=> col(s"t.$c"))
       }.reduce(_ || _)
-    val matched = srcPresent && tgtPresent
-    val fieldDiff = matched && anyDiff(plain, cast = false)
-    val ttlDiff = matched && anyDiff(ttls, cast = false)
-    val wtDiff = matched && anyDiff(writetimes, cast = false)
-    val typeDiff = matched && anyDiff(typeMismatch, cast = true)
-    val kind = when(!tgtPresent, lit("missing_target"))
-      .when(!srcPresent, lit("extra_target"))
-      .when(fieldDiff || ttlDiff || wtDiff || typeDiff, lit("mismatch"))
-      .otherwise(lit("match"))
-    val pkOut = pk.map(k => coalesce(col(s"s.$k"), col(s"t.$k")).as(k))
-    joined.select(pkOut ++ Seq(kind.as("diff_kind"), fieldDiff.as("field_diff"),
-      ttlDiff.as("ttl_diff"), wtDiff.as("writetime_diff"), typeDiff.as("type_diff")): _*)
+    outerDiff(source, target, pk, compareCols) { matched =>
+      val fieldDiff = matched && anyDiff(plain, cast = false)
+      val ttlDiff = matched && anyDiff(ttls, cast = false)
+      val wtDiff = matched && anyDiff(writetimes, cast = false)
+      val typeDiff = matched && anyDiff(typeMismatch, cast = true)
+      ((fieldDiff || ttlDiff || wtDiff || typeDiff, "mismatch"),
+        Seq(fieldDiff.as("field_diff"), ttlDiff.as("ttl_diff"),
+          wtDiff.as("writetime_diff"), typeDiff.as("type_diff")))
+    }
   }
 
   /** One-row category breakdown over a `categorizedDiff` frame — the
