@@ -538,7 +538,7 @@ object Dedup {
       val f = framed(df, idCol, textCol, bands * rowsPerBand)
         .transform(graft.Checkpoints.materialize)
       val store = layout(path, rowsPerFile)
-      def create(name: String, cols: String*): () => Unit = () =>
+      def table(name: String, cols: String*): () => Unit = () =>
         graft.sources.StoreTables.create(df.sparkSession, store.table(sub(path, name)),
           f.select(cols.map(col): _*), "errorifexists")
       // three disjoint tables fed by the one materialized frame —
@@ -549,7 +549,7 @@ object Dedup {
       graft.Par.run(df.sparkSession)(
         () => BandIndex.write(f, "id", "sig", bands, rowsPerBand,
           sub(path, "bands"), maxBucketSize, rowsPerFile),
-        create("sigs", "id", "sig"), create("shingles", "id", "sh"))
+        table("sigs", "id", "sig"), table("shingles", "id", "sh"))
       ()
     }
 
